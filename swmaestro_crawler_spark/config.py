@@ -173,18 +173,6 @@ class CrawlConfig:
     synth_work_iters: int = 0        # CPU stand-in for real fetch+parse cost
                                      # (see sources/synth_web.parse_work)
 
-    # overlap round r's deferred bookkeeping (crawl_order/dead/metrics/
-    # lineage/checkpoint) with round r+1's fetch; False serializes rounds
-    # (plans/crawl.py Crawl.run)
-    overlap_bookkeeping: bool = True
-
-    # write the round's fetch scratch parquet DIRECTLY from the Arrow
-    # batches in the Python workers (operators/fetch.fetch_stage_direct):
-    # the spans/links bytes never cross into the JVM. False routes
-    # through mapInArrow -> df.write (the A/B baseline; also the path
-    # custom pandas transports exercise in tests).
-    fetch_direct_write: bool = True
-
     # importance-first admission: spend each host's politeness budget on
     # the most-linked pending URLs first (PageRank over the round's
     # parent->url edges, operators/politeness.frontier_scores) instead of

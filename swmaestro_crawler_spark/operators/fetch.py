@@ -127,7 +127,11 @@ def synth_transport(cfg: CrawlConfig) -> BatchTransport:
 
 def fetch_stage(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
                 transport_factory: Callable[[CrawlConfig], BatchTransport] = synth_transport) -> DataFrame:
-    """admitted frontier rows -> FETCHED rows (ok, links, spans)."""
+    """admitted frontier rows -> FETCHED rows (ok, links, spans) as a
+    DataFrame. Not a production write path: the round and revisit
+    pipelines write through ``fetch_stage_direct``. This is the JVM-side
+    reference it is digest-pinned against (tests/test_direct_write.py)
+    and the plan ``tools/gen_plans.py`` prints."""
     import pyarrow as pa
 
     def run_partition(batches):
@@ -236,7 +240,7 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
     the JVM path's ``sortWithinPartitions`` and cast to the exact Arrow
     schema Spark's writer would produce, so the committed table is
     content- AND layout-identical (tests/test_direct_write.py pins the
-    content digest against the JVM path).
+    content digest against ``fetch_stage`` + ``df.write``).
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 

@@ -4,11 +4,15 @@ Replaces the reference supervisor's poll-queue-until-empty loop
 (supervisor.py:70-92,128-138,162-194) with a driver-side round loop whose
 termination aggregate is ``pending.count() == 0`` (SURVEY.md A3/C5).
 
+Rounds run strictly one after another: round r's bookkeeping (its six
+commit jobs run concurrently with each other) and its checkpoint are
+complete before round r+1 reads anything.
+
 Checkpoint protocol (per committed round):
   1. every table append/overwrite commits an atomic snapshot (catalog.py)
   2. the bloom bitmap is persisted to ``bloom-r{r}.npy``
   3. ``_crawl_checkpoint.json`` is replaced atomically LAST, recording the
-     round and each table's snapshot id
+     round and each table's current snapshot id
 Resume rolls every table back to the checkpoint's snapshot ids and re-runs
 from the next round. Because every stage is deterministic (pure-function
 transport, data-derived ordering, fixed partitioning), the re-run writes
@@ -128,21 +132,16 @@ class Crawl:
         self,
         r: int,
         bloom: np.ndarray,
-        sids: dict[str, int] | None = None,
         cuckoo_tables: np.ndarray | None = None,
     ) -> None:
-        """``sids`` pins per-table snapshot ids AS OF round r — required
-        when the round's deferred bookkeeping overlaps the next round
-        (current_snapshot would already be round r+1's); tables absent
-        from sids fall back to current (bootstrap/requeue paths, where
-        nothing runs concurrently)."""
-        sids = sids or {}
+        """Record round ``r`` as committed: every table's CURRENT snapshot
+        id plus the bloom (and cuckoo) arrays. Called only when nothing
+        else is committing — after a round's bookkeeping has been joined,
+        or from bootstrap/requeue."""
         np.save(self._bloom_path(r), bloom)
         ckpt = {
             "round": r,
-            "snapshots": {
-                t: sids.get(t, self.cat.current_snapshot(t)) for t in TABLES
-            },
+            "snapshots": {t: self.cat.current_snapshot(t) for t in TABLES},
             "bloom": os.path.basename(self._bloom_path(r)),
         }
         if cuckoo_tables is not None:
@@ -163,11 +162,12 @@ class Crawl:
         """SQL views over the last CHECKPOINTED round's per-table snapshot
         ids — a cross-table-consistent read of the warehouse. The plain
         ``Catalog.register_views`` pins each table independently at call
-        time, which can tear across the concurrently-committing deferred
-        bookkeeping of the next round (e.g. spans already shows round
-        r+1 while crawl_order still shows r); the checkpoint's sids were
-        captured atomically AS OF one round, so views registered from
-        them always agree. Returns the pinned {table: snapshot} map."""
+        time; a reader racing a running round can catch its concurrent
+        bookkeeping commits half done (e.g. spans and seen already show
+        round r while crawl_order still shows r-1). The checkpoint is
+        written only after a round's commits have all landed, so views
+        registered from it always agree. Returns the pinned {table:
+        snapshot} map."""
         ckpt = self._load_checkpoint()
         if ckpt is None:
             raise RuntimeError(
@@ -332,17 +332,11 @@ class Crawl:
     def run(self, seeds: DataFrame, rounds: int | None = None) -> list[RoundResult]:
         """Run (or resume) the crawl for up to ``rounds`` rounds.
 
-        Round r's DEFERRED bookkeeping (crawl_order, dead, metrics,
-        lineage, checkpoint — none of which round r+1 consumes) overlaps
-        round r+1's fetch (VERDICT r2 item 5): the critical phase
-        returns as soon as pending/seen/bloom are committed, and a
-        single-worker executor finishes rounds strictly in order, so
-        checkpoints are written oldest-first from each round's CAPTURED
-        snapshot ids and a kill can only lose the (deterministically
-        re-runnable) newest rounds. Set cfg.overlap_bookkeeping=False to
-        serialize (the pre-overlap behavior)."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        Each round runs its critical phase (fetch, spans, and the
+        pending/seen/bloom commits round r+1 consumes), then
+        ``finish_round`` joins the rest of its bookkeeping, then the
+        round's checkpoint is written. A kill can therefore lose only the
+        round in flight, which resume re-runs deterministically."""
         rounds = rounds if rounds is not None else self.cfg.max_rounds
         start, bloom, cuckoo = self.resume_or_bootstrap(seeds)
         robots = self.cat.read("robots", ROBOTS)
@@ -351,57 +345,51 @@ class Crawl:
         # loop pass to re-fetch — idempotent, the bodies are a pure
         # function of (host, epoch), and the dimension is tiny)
         robots_epoch = 0 if start == 0 else -1
+        results = []
+        for r in range(start, rounds):
+            if self.cat.row_count("pending") == 0:
+                break  # frontier drained — reference: queue len == 0
+                # (footer stats of the prior round's pending commit)
+            if self.cfg.robots_ttl_rounds:
+                epoch = r // self.cfg.robots_ttl_rounds
+                if epoch != robots_epoch:
+                    # TTL expired: re-fetch + re-parse every host's
+                    # robots.txt (the same body->parse chain as the
+                    # bootstrap) and overwrite the dimension — the
+                    # new rules/delays bind from THIS round on
+                    from ..operators.politeness import synth_robots
 
-        def _finish(h) -> RoundResult:
-            res = finish_round(self.cat, h)
-            self._write_checkpoint(h.round, h.bloom, h.sids, h.cuckoo_tables)
-            return res
-
-        futures = []
-        with ThreadPoolExecutor(max_workers=1, thread_name_prefix="bk-finish") as fin:
-            for r in range(start, rounds):
-                if self.cat.row_count("pending") == 0:
-                    break  # frontier drained — reference: queue len == 0
-                    # (footer stats; pending was committed by the prior
-                    # round's CRITICAL phase, so no wait is needed)
-                if self.cfg.robots_ttl_rounds:
-                    epoch = r // self.cfg.robots_ttl_rounds
-                    if epoch != robots_epoch:
-                        # TTL expired: re-fetch + re-parse every host's
-                        # robots.txt (the same body->parse chain as the
-                        # bootstrap) and overwrite the dimension — the
-                        # new rules/delays bind from THIS round on
-                        from ..operators.politeness import synth_robots
-
-                        self.cat.overwrite(
-                            "robots",
-                            synth_robots(self.spark, self.cfg, epoch)
-                            .repartition(1)
-                            .sortWithinPartitions("host"),
-                        )
-                        robots = self.cat.read("robots", ROBOTS)
-                        robots_epoch = epoch
-                h = run_round_critical(
-                    self.spark, self.cat, self.cfg, r, robots, bloom, cuckoo
+                    self.cat.overwrite(
+                        "robots",
+                        synth_robots(self.spark, self.cfg, epoch)
+                        .repartition(1)
+                        .sortWithinPartitions("host"),
+                    )
+                    robots = self.cat.read("robots", ROBOTS)
+                    robots_epoch = epoch
+            results.append(
+                finish_round(
+                    self.cat,
+                    run_round_critical(
+                        self.spark, self.cat, self.cfg, r, robots, bloom, cuckoo
+                    ),
                 )
-                if (
-                    self.cfg.score_admission
-                    and self.cfg.score_table
-                    and self.cfg.score_compact_every
-                    and (r + 1) % self.cfg.score_compact_every == 0
-                ):
-                    # The round's contribution append is CRITICAL (round
-                    # r+1 reads it), so the log is complete here. The
-                    # compacted snapshot is read-identical, so a crash
-                    # before the next checkpoint merely rolls current
-                    # back to the pre-compaction snapshot — compaction
-                    # re-runs, nothing is lost (scoretable docstring).
-                    from ..operators.scoretable import compact_scores
+            )
+            self._write_checkpoint(
+                r, bloom, cuckoo.tables if cuckoo is not None else None
+            )
+            if (
+                self.cfg.score_admission
+                and self.cfg.score_table
+                and self.cfg.score_compact_every
+                and (r + 1) % self.cfg.score_compact_every == 0
+            ):
+                # After the checkpoint, so it records the pre-compaction
+                # snapshot. The compacted snapshot is read-identical, so a
+                # crash before the next checkpoint merely rolls current
+                # back to the pre-compaction snapshot — compaction
+                # re-runs, nothing is lost (scoretable docstring).
+                from ..operators.scoretable import compact_scores
 
-                    compact_scores(self.cat)
-                if self.cfg.overlap_bookkeeping:
-                    futures.append(fin.submit(_finish, h))
-                else:
-                    futures.append(fin.submit(_finish, h))
-                    futures[-1].result()
-            return [f.result() for f in futures]
+                compact_scores(self.cat)
+        return results

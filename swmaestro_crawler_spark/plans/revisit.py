@@ -35,12 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import Catalog
 from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
-from ..operators.fetch import (
-    FETCHED,
-    fetch_stage,
-    fetch_stage_direct,
-    synth_transport,
-)
+from ..operators.fetch import FETCHED, fetch_stage_direct, synth_transport
 from ..operators.politeness import split_admitted, split_robots_excluded
 from ..operators.seen import as_seen_rows
 from ..schema import OBSERVATIONS, ROBOTS, SPANS_DOC
@@ -193,22 +188,14 @@ def run_revisit(
     admitted, deferred = split_admitted(allowed.select(*FRONTIER_COLS), robots, cfg)
     admitted = admitted.withColumn("fingerprint", F.hash(F.col("url")))
     meta = {"round": int(now_round), "revisit": True}
-    if cfg.fetch_direct_write:
-        # same executor-direct columnar write as the round pipeline:
-        # span/link bytes go Arrow -> parquet inside the Python workers,
-        # the JVM sees per-partition stats rows only (content- and
-        # layout-identical to the JVM path, digest-pinned there)
-        stage = cat.new_stage("fetched")
-        fetch_stage_direct(admitted, cfg, now_round, stage, transport_factory).agg(
-            F.sum("rows")
-        ).first()
-        sid = cat.overwrite_stage("fetched", stage, meta=meta)
-    else:
-        sid = cat.overwrite(
-            "fetched",
-            _sorted_fetch(fetch_stage(admitted, cfg, now_round, transport_factory)),
-            meta=meta,
-        )
+    # same executor-direct columnar write as the round pipeline: span/link
+    # bytes go Arrow -> parquet inside the Python workers, the JVM sees
+    # per-partition stats rows only
+    stage = cat.new_stage("fetched")
+    fetch_stage_direct(admitted, cfg, now_round, stage, transport_factory).agg(
+        F.sum("rows")
+    ).first()
+    sid = cat.overwrite_stage("fetched", stage, meta=meta)
     ok = cat.read("fetched", FETCHED, snapshot=sid).filter(F.col("ok"))
     tm.step("counts")
     res = {

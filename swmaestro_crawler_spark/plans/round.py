@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import Catalog
 from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
-from ..operators.fetch import FETCHED, fetch_stage, fetch_stage_direct
+from ..operators.fetch import FETCHED, fetch_stage_direct
 from ..operators.politeness import (
     cap_per_template,
     priority_order,
@@ -120,14 +120,11 @@ def with_global_ord(
 
 
 class _StepTimer:
-    """Per-step wall timing: always RECORDED into ``times`` (the scaling
-    bench reports per-stage efficiencies from it), printed when
-    SWM_PROFILE=1."""
+    """Per-step wall timing, RECORDED into ``times`` (``RoundResult.timings``
+    carries it to callers; the scaling bench reports per-stage efficiencies
+    from it)."""
 
     def __init__(self) -> None:
-        import os
-
-        self.on = os.environ.get("SWM_PROFILE") == "1"
         self.times: dict[str, float] = {}
         self._t = None
         self._name = None
@@ -138,8 +135,6 @@ class _StepTimer:
         now = time.perf_counter()
         if self._name is not None:
             self.times[self._name] = self.times.get(self._name, 0.0) + (now - self._t)
-            if self.on:
-                print(f"    [round-step] {self._name}: {now - self._t:.2f}s", flush=True)
         self._t, self._name = now, name
 
     def done(self) -> None:
@@ -162,40 +157,19 @@ class RoundResult:
 @dataclass
 class RoundHandle:
     """Everything ``finish_round`` needs after ``run_round_critical``
-    returned: the still-running deferred-job futures (all SIX bookkeeping
-    jobs were launched together — full r2-style concurrency — but only
-    the three the next round consumes were joined), the executor to shut
-    down, the snapshot ids committed so far, the cached frames to
-    unpersist, and a frozen copy of the bloom as of this round (the
-    caller's array keeps mutating)."""
+    returned: the still-running bookkeeping futures (all SIX bookkeeping
+    jobs were launched together, but only the three the next round
+    consumes were joined), the executor to shut down, the fetched/seen/
+    pending snapshot ids the metrics are derived from, and the cached
+    frames to unpersist."""
 
     round: int
-    cfg: CrawlConfig
-    bloom: np.ndarray
     sids: dict[str, int]
     futures: dict  # name -> Future: order, dead, counts (still running)
     executor: object  # ThreadPoolExecutor to shut down in finish_round
     unseen: DataFrame
     robots_joined: DataFrame
     tm: _StepTimer
-    cuckoo_tables: np.ndarray | None = None  # frozen (P,B,S) as of this round
-
-
-def run_round(
-    spark: SparkSession,
-    cat: Catalog,
-    cfg: CrawlConfig,
-    r: int,
-    robots: DataFrame,
-    bloom: np.ndarray,
-    cuckoo=None,
-) -> RoundResult:
-    """One full round, synchronous: critical phase + finish. The crawl
-    driver instead overlaps ``finish_round(r)`` with round r+1's fetch
-    (plans/crawl.py) when cfg.overlap_bookkeeping is on."""
-    return finish_round(
-        cat, run_round_critical(spark, cat, cfg, r, robots, bloom, cuckoo)
-    )
 
 
 def run_round_critical(
@@ -210,15 +184,12 @@ def run_round_critical(
     """The NEXT-ROUND-BLOCKING part of a round: fetch + span commit, then
     the three bookkeeping commits round r+1's own pipeline consumes —
     ``pending`` (its frontier), ``seen`` and the bloom increment (its
-    unseen filter). Everything else (crawl_order, dead letters, counts,
-    metrics, lineage, checkpoint) only observes round-r state and is
-    deferred to ``finish_round``, which the driver overlaps with round
-    r+1's fetch (VERDICT r2 item 5: bookkeeping stage-scaled at 0.546 —
-    fixed per-commit driver latency; hidden under the next fetch it
-    leaves the critical path entirely).
+    unseen filter). The other bookkeeping jobs (crawl_order, dead
+    letters, counts) are launched alongside and keep running;
+    ``finish_round`` joins them and derives metrics + lineage.
 
-    ``bloom`` is merged IN PLACE (round r+1 needs it); the handle keeps
-    a frozen copy for round r's checkpoint."""
+    ``bloom`` (and ``cuckoo``) are merged IN PLACE; the driver
+    checkpoints them after ``finish_round`` returns."""
     tm = _StepTimer()
     tm.step("read+plan")
     pending = cat.read("pending", FRONTIER)
@@ -313,24 +284,13 @@ def run_round_critical(
     #    deterministic regardless of shuffle arrival order
     #    (byte-identical resume, N-vs-4N equality).
     tm.step("fetch_scratch_write")
-    if cfg.fetch_direct_write:
-        # executor-direct columnar write: the span/link bytes go Arrow ->
-        # parquet inside the Python workers; the JVM sees 32 stats rows
-        # (operators/fetch.fetch_stage_direct — content- and layout-
-        # identical to the mapInArrow->df.write path, digest-pinned)
-        stage = cat.new_stage("fetched")
-        fetch_stage_direct(admitted_df, cfg, r, stage).agg(
-            F.sum("rows")
-        ).first()
-        sid_fetch = cat.overwrite_stage("fetched", stage, meta={"round": r})
-    else:
-        sid_fetch = cat.overwrite(
-            "fetched",
-            fetch_stage(admitted_df, cfg, r).sortWithinPartitions(
-                "host", F.col("depth").desc(), "seq", "url_hash"
-            ),
-            meta={"round": r},
-        )
+    # executor-direct columnar write: the span/link bytes go Arrow ->
+    # parquet inside the Python workers; the JVM sees 32 stats rows
+    # (operators/fetch.fetch_stage_direct — content- and layout-
+    # identical to the mapInArrow->df.write reference, digest-pinned)
+    stage = cat.new_stage("fetched")
+    fetch_stage_direct(admitted_df, cfg, r, stage).agg(F.sum("rows")).first()
+    sid_fetch = cat.overwrite_stage("fetched", stage, meta={"round": r})
     fetched = cat.read("fetched", FETCHED)
     ok = fetched.filter(F.col("ok"))
     failed = fetched.filter(~F.col("ok"))
@@ -348,7 +308,7 @@ def run_round_critical(
     #    and a row-filter predicate (ok only; the Iceberg delete-file
     #    analogue). No bytes are rewritten.
     tm.step("spans_write")
-    sid_spans = cat.append_files(
+    cat.append_files(
         "spans",
         "fetched",
         sid_fetch,
@@ -568,8 +528,7 @@ def run_round_critical(
     # ALL SIX bookkeeping jobs launch together (full r2-style
     # concurrency — their fixed driver latencies coincide), but only the
     # three round r+1 consumes are JOINED here; the other three keep
-    # running and finish_round collects them — with overlap on, under
-    # round r+1's fetch.
+    # running and finish_round collects them.
     tm.step("bookkeeping_critical")
     from concurrent.futures import ThreadPoolExecutor
 
@@ -610,51 +569,31 @@ def run_round_critical(
     futs = {name: ex.submit(_timed(name, fn)) for name, fn in jobs}
     sid_seen = futs["seen"].result()
     sid_pending = futs["pending"].result()
-    sid_scores = futs["scores"].result() if "scores" in futs else None
-    sid_hoststats = futs["hoststats"].result() if "hoststats" in futs else None
+    for name in ("scores", "hoststats"):
+        if name in futs:
+            futs[name].result()
     bloom |= futs["bloom"].result()
     if cuckoo is not None:
         # merged in place like the bloom: round r+1 probes the caller's
-        # object; the handle freezes a copy for round r's checkpoint
+        # object, and the driver checkpoints it after finish_round
         cuckoo.tables[...] = futs["cuckoo"].result()
 
-    # opens the interval finish_round closes: with overlap on, it
-    # measures how long the still-running deferred jobs trail the
-    # critical phase (they overlap round r+1's fetch)
-    tm.step("deferred_wait")
     return RoundHandle(
         round=r,
-        cfg=cfg,
-        bloom=bloom.copy(),
-        sids={
-            "fetched": sid_fetch,
-            "spans": sid_spans,
-            "seen": sid_seen,
-            "pending": sid_pending,
-            "robots": cat.current_snapshot("robots"),
-            **({"link_scores": sid_scores} if sid_scores is not None else {}),
-            **({"host_stats": sid_hoststats} if sid_hoststats is not None else {}),
-        },
+        sids={"fetched": sid_fetch, "seen": sid_seen, "pending": sid_pending},
         futures={k: futs[k] for k in ("order", "dead", "counts")},
         executor=ex,
         unseen=unseen,
         robots_joined=robots_joined,
         tm=tm,
-        cuckoo_tables=cuckoo.tables.copy() if cuckoo is not None else None,
     )
 
 
 def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
-    """Joins the deferred round-r bookkeeping (crawl_order, dead letters,
-    counts — already running since the critical phase) and derives
-    metrics + lineage. The deferred jobs read ONLY round-r state — the
-    scratch table read was file-bound eagerly (a later round's
-    ``fetched`` overwrite writes new files and old ones are retained)
-    and the cached intermediates (robots_joined/unseen) belong to this
-    round — and write only tables no critical phase touches, so they run
-    CONCURRENTLY with round r+1's fetch. The round checkpoint is written
-    by the caller after this returns, from ``h.sids`` (NOT current
-    snapshots — round r+2 may already have committed)."""
+    """Joins the rest of the round-r bookkeeping (crawl_order, dead
+    letters, counts — already running since the critical phase) and
+    derives metrics + lineage. The driver writes the round checkpoint
+    after this returns."""
     r, tm = h.round, h.tm
 
     tm.step("bookkeeping_deferred")
@@ -662,8 +601,6 @@ def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
     sid_dead = h.futures["dead"].result()
     excluded_n, unseen_n = h.futures["counts"].result()
     h.executor.shutdown(wait=False)
-    h.sids["crawl_order"] = sid_order
-    h.sids["dead"] = sid_dead
 
     # metrics + per-partition lineage. Every count is DERIVED — from
     # parquet footer stats recorded at commit time (rows_delta: the seen
@@ -691,7 +628,7 @@ def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
         "pending_next": pending_next_n,
     }
     tm.step("metrics_write")
-    h.sids["metrics"] = cat.append_rows(
+    cat.append_rows(
         "metrics",
         [("round", str(r), k, int(v), r) for k, v in counts.items()],
         METRICS,
@@ -711,7 +648,7 @@ def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
         )
         for pid, n in enumerate(cat.file_rows(stage, sid))
     ]
-    h.sids["lineage"] = cat.append_rows("lineage", lineage_rows, LINEAGE, meta={"round": r})
+    cat.append_rows("lineage", lineage_rows, LINEAGE, meta={"round": r})
     tm.done()
     for handle in (h.unseen, h.robots_joined):
         handle.unpersist()

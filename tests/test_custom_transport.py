@@ -1,15 +1,22 @@
 """The fetch stage's BatchTransport seam: production swaps the synthetic
 web for an HTTP client (or a rendering fetcher — the S9 capability) by
-passing a transport_factory; nothing else changes. This test drives
-fetch_stage with a custom transport and checks statuses, span documents,
-and links flow through the fused mapInArrow pass intact."""
+passing a transport_factory; nothing else changes. These tests drive a
+custom pandas transport through the fused mapInArrow pass — both the
+``fetch_stage`` reference and the executor-direct writer the engine
+commits with (``fetch_stage_direct`` + ``Catalog.overwrite_stage``) — and
+check that statuses and span documents come through intact."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from swmaestro_crawler_spark.operators.fetch import fetch_stage
+from swmaestro_crawler_spark.catalog import Catalog
+from swmaestro_crawler_spark.operators.fetch import (
+    FETCHED,
+    fetch_stage,
+    fetch_stage_direct,
+)
 from swmaestro_crawler_spark.plans.crawl import seeds_to_frontier
 from swmaestro_crawler_spark.sources.synth_web import FIELD, SPANSEP, make_seeds
 
@@ -36,12 +43,13 @@ def renderer_transport(cfg):
     return fetch
 
 
-def test_fetch_stage_accepts_custom_transport(spark, cfg):
-    frontier = seeds_to_frontier(
+def _frontier(spark, cfg):
+    return seeds_to_frontier(
         spark.createDataFrame(make_seeds(cfg, 40))
     ).withColumn("fingerprint", F.hash(F.col("url")))
-    fetched = fetch_stage(frontier, cfg, 0, transport_factory=renderer_transport)
-    rows = fetched.collect()
+
+
+def _check_rows(rows):
     assert rows
     for r in rows:
         if r.url_hash % 2 == 0:
@@ -53,3 +61,27 @@ def test_fetch_stage_accepts_custom_transport(spark, cfg):
         else:
             assert (not r.ok) and r.status_code == 500
             assert r.spans == []
+
+
+def test_fetch_stage_accepts_custom_transport(spark, cfg):
+    fetched = fetch_stage(
+        _frontier(spark, cfg), cfg, 0, transport_factory=renderer_transport
+    )
+    _check_rows(fetched.collect())
+
+
+def test_direct_writer_accepts_custom_transport(spark, cfg):
+    cat = Catalog(spark, cfg.warehouse)
+    stage = cat.new_stage("fetched")
+    written = (
+        fetch_stage_direct(
+            _frontier(spark, cfg), cfg, 0, stage, transport_factory=renderer_transport
+        )
+        .agg(F.sum("rows").alias("n"))
+        .first()
+        .n
+    )
+    sid = cat.overwrite_stage("fetched", stage, meta={"round": 0})
+    rows = cat.read("fetched", FETCHED, snapshot=sid).collect()
+    assert written == len(rows) == 40
+    _check_rows(rows)

@@ -8,8 +8,10 @@ cluster size (sandbox proxy: different shuffle parallelism).
 from __future__ import annotations
 
 import hashlib
+import json
+import os
 
-
+from swmaestro_crawler_spark.plans import crawl as crawl_mod
 from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.schema import CRAWL_ORDER
 from swmaestro_crawler_spark.sources.synth_web import make_seeds
@@ -53,6 +55,17 @@ def test_resume_is_byte_identical(spark, tmp_path):
 
     for t in TABLES:
         assert table_digest(a, t) == table_digest(b2, t), t
+
+    # the final checkpoint records every crawl table's current snapshot
+    with open(os.path.join(b2.cat.warehouse, "_crawl_checkpoint.json")) as f:
+        ckpt = json.load(f)
+    assert ckpt["round"] == 2
+    current = {t: b2.cat.current_snapshot(t) for t in crawl_mod.TABLES}
+    assert ckpt["snapshots"] == current
+
+    # a finished warehouse resumes into zero rounds and commits nothing
+    assert Crawl(spark, cfg_b).run(seeds, rounds=3) == []
+    assert {t: b2.cat.current_snapshot(t) for t in crawl_mod.TABLES} == current
 
 
 def test_results_independent_of_parallelism(spark, tmp_path):

@@ -321,119 +321,6 @@ def worker(cores: int) -> None:
     shutil.rmtree(shm, ignore_errors=True)
 
 
-def overlap_worker(cores: int, overlap: bool) -> None:
-    """One 3-round EXPANDING crawl (the bench.py flagship shape) with
-    deferred bookkeeping either overlapped under the next round's fetch
-    or serialized — the VERDICT r2 item 5 A/B. Prints wall seconds and
-    content digests of every round-written table (the correctness bar:
-    overlap must not change a byte)."""
-    from swmaestro_crawler_spark.config import CrawlConfig, spark_builder
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
-
-    shm = f"/dev/shm/overlap-{cores}-{int(overlap)}"
-    os.makedirs(shm, exist_ok=True)
-    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(shm, "local")
-    spark = (
-        spark_builder(f"overlap-{overlap}", master=f"local[{cores}]", shuffle_partitions=32)
-        .config("spark.local.dir", os.path.join(shm, "local"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    cfg = CrawlConfig(
-        round_seconds=120.0,
-        max_rounds=3,
-        max_depth=4,
-        per_host_cap=2000,
-        frontier_partitions=32,
-        seen_buckets=64,
-        bloom_bits=1 << 24,
-        synth_n_hosts=500,
-        synth_work_iters=WORK_ITERS,
-        warehouse=os.path.join(shm, "wh"),
-        overlap_bookkeeping=overlap,
-    )
-    crawl = Crawl(spark, cfg)
-    t0 = time.perf_counter()
-    results = crawl.run(spark.createDataFrame(make_seeds(cfg, 2000)), rounds=3)
-    wall = time.perf_counter() - t0
-    digests = {
-        t: crawl.cat.content_digest(t)
-        for t in ("crawl_order", "seen", "spans", "pending", "dead", "metrics")
-    }
-    print(
-        "WORKER_RESULT "
-        + json.dumps(
-            {
-                "cores": cores,
-                "overlap": overlap,
-                "wall_s": round(wall, 3),
-                "rounds": len(results),
-                "fetched_ok": sum(r.fetched_ok for r in results),
-                "digests": digests,
-            }
-        ),
-        flush=True,
-    )
-    spark.stop()
-    import shutil
-
-    shutil.rmtree(shm, ignore_errors=True)
-
-
-def run_overlap_ab(cores: int = 32, repeats: int = 2) -> dict:
-    """Overlap on/off at fixed cores; best-of-N walls, digests must match
-    across every run of both arms."""
-    arms = {}
-    for overlap in (False, True):
-        runs = []
-        for i in range(repeats):
-            print(
-                f"== overlap A/B: overlap={overlap} local[{cores}] "
-                f"(run {i + 1}/{repeats}) ==",
-                flush=True,
-            )
-            p = subprocess.run(
-                [
-                    sys.executable,
-                    os.path.abspath(__file__),
-                    "--overlap-worker",
-                    str(cores),
-                    "1" if overlap else "0",
-                ],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-            )
-            line = next(
-                (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")),
-                None,
-            )
-            if line is None:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-                raise SystemExit(f"overlap worker overlap={overlap} failed")
-            runs.append(json.loads(line[len("WORKER_RESULT "):]))
-            print(json.dumps(runs[-1]), flush=True)
-        arms[overlap] = {
-            "wall_s": min(r["wall_s"] for r in runs),
-            "all_walls": [r["wall_s"] for r in runs],
-            "fetched_ok": runs[0]["fetched_ok"],
-            "digests": runs[0]["digests"],
-        }
-        if len({json.dumps(r["digests"], sort_keys=True) for r in runs}) != 1:
-            raise SystemExit(f"nondeterministic digests at overlap={overlap}")
-    match = arms[False]["digests"] == arms[True]["digests"]
-    return {
-        "cores": cores,
-        "wall_serial_s": arms[False]["wall_s"],
-        "wall_overlap_s": arms[True]["wall_s"],
-        "all_walls": {"serial": arms[False]["all_walls"], "overlap": arms[True]["all_walls"]},
-        "speedup": round(arms[False]["wall_s"] / arms[True]["wall_s"], 3),
-        "digests_match": match,
-        "fetched_ok": arms[True]["fetched_ok"],
-    }
-
-
 REPEATS = int(os.environ.get("SCALING_REPEATS", 2))
 
 
@@ -883,12 +770,10 @@ def main() -> None:
         "seen_match": seen_match,
         "passes": bool(primary is not None and primary >= 0.8 and order_match and seen_match),
     }
-    if os.environ.get("SCALING_OVERLAP_AB", "1") != "0":
-        summary["overlap_ab"] = run_overlap_ab()
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     # carry forward auxiliary check blocks (written by --score-check /
-    # --score-table-check / one-off SCALING_CUCKOO runs / the overlap
-    # A/B / kill_resume_check) so a primary re-measure doesn't silently
+    # --score-table-check / one-off SCALING_CUCKOO runs /
+    # kill_resume_check) so a primary re-measure doesn't silently
     # drop them from the official record; they should still be re-run
     # after engine changes to refresh walls.
     if os.path.exists(path):
@@ -907,8 +792,6 @@ def main() -> None:
         ):
             if k in prior:
                 summary[k] = prior[k]
-        if "overlap_ab" not in summary and "overlap_ab" in prior:
-            summary["overlap_ab"] = prior["overlap_ab"]
     with open(path, "w") as f:
         json.dump(summary, f, indent=1)
 
@@ -1028,33 +911,6 @@ the reference's whole-system throughput, while honoring the same
 politeness semantics (budget-based, not sleep-based).
 """
         )
-        ab = summary.get("overlap_ab")
-        if ab:
-            f.write(
-                f"""
-## Bookkeeping/fetch overlap A/B (round r deferred commits under round r+1 fetch)
-
-Three EXPANDING rounds (2,000 seeds, 500 hosts, depth 4 — the bench.py
-flagship shape) at local[{ab['cores']}], deferred bookkeeping
-(crawl_order/dead/metrics/lineage/checkpoint) either serialized after
-each round or overlapped under the next round's fetch
-(cfg.overlap_bookkeeping; plans/crawl.py). Best of
-{len(ab['all_walls']['serial'])} runs per arm
-(all walls: {ab['all_walls']}):
-
-| arm | wall s |
-|---|---|
-| serialized (pre-r3 behavior) | {ab['wall_serial_s']} |
-| overlapped | {ab['wall_overlap_s']} |
-
-Speedup {ab['speedup']}×; content digests of
-crawl_order/seen/spans/pending/dead/metrics are
-{"IDENTICAL" if ab['digests_match'] else "DIFFERENT (BUG)"} across both
-arms and every repeat — overlap changes when commits happen, never what
-they contain. (The single-round scaling table above is overlap-neutral
-by construction: with one round there is no next fetch to hide under.)
-"""
-            )
         ck = summary.get("cuckoo_digest_check")
         if ck:
             f.write(
@@ -1345,10 +1201,6 @@ the N-vs-4N pair the record stands on.
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--worker":
         worker(int(sys.argv[2]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--overlap-worker":
-        overlap_worker(int(sys.argv[2]), sys.argv[3] == "1")
-    elif len(sys.argv) > 1 and sys.argv[1] == "--overlap-ab":
-        print(json.dumps(run_overlap_ab()))
     elif len(sys.argv) > 1 and sys.argv[1] == "--score-check":
         run_score_check()
     elif len(sys.argv) > 1 and sys.argv[1] == "--score-table-check":
