@@ -157,7 +157,6 @@ _STALE_FIRST = (
     "domain_mixture_sample",
     "dupspan_ngram_windows",
     "json_extract_agg",
-    "pagerank_purchase_graph",
     "party_counts_union",
     "pii_redact",
     "pivot_event_type_counts",

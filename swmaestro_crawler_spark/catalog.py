@@ -4,13 +4,20 @@ The sandbox has no Iceberg runtime jar and no network to fetch one
 (SURVEY.md §7.1), so this module emulates the subset the engine needs —
 append / overwrite with ATOMIC snapshot commit and snapshot-id time
 travel — over partitioned parquet plus a ``_snapshots.json`` manifest.
-Commit protocol: data files are written to a staging directory first,
-then the manifest is replaced via ``os.replace`` (atomic on POSIX), so a
-killed job never exposes a half-written snapshot — the property
-byte-identical resume depends on. In production, swap ``Catalog`` for a
-real Iceberg catalog (``spark.sql.catalog.crawl =
-org.apache.iceberg.spark.SparkCatalog``); engine code only talks to this
-API, never to paths.
+Commit protocol: every data commit (overwrite, overwrite_stage, append,
+append_rows, append_files, merge, delete_where) goes through one helper,
+``Catalog._commit``, in this order: stage (data files written to a
+staging directory), adopt (moved under ``data/``; stats and blooms
+computed), lock (per-table commit lock, manifest re-loaded), check
+(column set, planned base, zero-copy props), entry (files stamped,
+snapshot appended, ``current`` or the branch ref moved), ``os.replace``
+of the manifest (atomic on POSIX). A killed job therefore never exposes
+a half-written snapshot — the property byte-identical resume depends
+on. Every data-file read likewise goes through ``Catalog._scan``, which
+picks the schema-evolved, zero-copy or plain parquet path. In
+production, swap ``Catalog`` for a real Iceberg catalog
+(``spark.sql.catalog.crawl = org.apache.iceberg.spark.SparkCatalog``);
+engine code only talks to this API, never to paths.
 
 This replaces the reference's PostgreSQL persistence + per-unit
 transaction commit (autocommit=False ... conn.commit() at
@@ -25,6 +32,7 @@ import os
 import shutil
 import time
 import uuid
+from bisect import bisect_left
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -119,6 +127,16 @@ class Catalog:
             json.dump(manifest, f, indent=1, sort_keys=True)
         os.replace(tmp, self._manifest_path(table))  # atomic commit point
 
+    @staticmethod
+    def _snapshot(m: dict, sid: int) -> dict | None:
+        """Manifest entry of snapshot ``sid`` (None: absent or expired)."""
+        return next((s for s in m["snapshots"] if s["id"] == sid), None)
+
+    @staticmethod
+    def _snapshot_files(m: dict, sid: int) -> list[str]:
+        s = Catalog._snapshot(m, sid)
+        return s["files"] if s else []
+
     # -- branches (write-audit-publish) --------------------------------------
     # ``main`` is the manifest's ``current`` pointer; named branches live in
     # ``refs`` as extra snapshot pointers. Snapshot ids are unique across
@@ -172,7 +190,7 @@ class Catalog:
                     f"{tags[name]} — tags are immutable (drop_tag first)"
                 )
             at = m["current"] if snapshot is None else snapshot
-            if not any(s["id"] == at for s in m["snapshots"]):
+            if self._snapshot(m, at) is None:
                 raise KeyError(f"{table}@{at}: no such snapshot to tag")
             tags[name] = at
             return at
@@ -272,6 +290,77 @@ class Catalog:
         shutil.rmtree(stage, ignore_errors=True)
         return files, file_rows
 
+    def _commit(
+        self,
+        table: str,
+        files: list[str],
+        meta: dict,
+        *,
+        carry: list[str] | None = None,
+        expect_base: int | None = None,
+        branch: str | None = None,
+        cols: list[str] | None = None,
+        stat_cols: list[str] | None = None,
+        bloom_cols: list[str] | None = None,
+        props: dict | None = None,
+    ) -> int:
+        """The one commit path: make already-adopted data ``files`` (table
+        relative) a new snapshot; returns its id. Stats and blooms are
+        computed first, outside the lock. Then, under the lock on freshly
+        loaded manifest state:
+
+        - check: ``expect_base`` (read-dependent commits raise
+          :class:`CommitConflict` if main moved past their planned base),
+          ``cols`` (registry tables take only the current column set),
+          ``props`` (zero-copy table props: set once, never on a
+          schema-evolved table);
+        - entry: stamp the files' schema version, record stats/blooms,
+          append the snapshot ``carry + files`` — ``carry=None`` rebases
+          onto every file of the target ref's head (append), ``[]``
+          replaces (overwrite), a list keeps those files by name
+          (merge/delete) — and move ``current`` or the ``branch`` ref;
+        - ``os.replace`` the manifest (``_locked_commit``)."""
+        stats = self._compute_stats(table, files, stat_cols)
+        blooms = self._compute_blooms(table, files, bloom_cols)
+
+        def mutate(m: dict) -> int:
+            if expect_base is not None and m["current"] != expect_base:
+                raise CommitConflict(
+                    f"{meta['op']} planned against {table}@{expect_base} but "
+                    f"current is {m['current']} — re-plan against the new snapshot"
+                )
+            if cols is not None:
+                self._check_write_columns(m, table, cols)
+            if props is not None:
+                if m.get("schema") is not None:
+                    raise ValueError(
+                        f"{table}: zero-copy append_files is unsupported on "
+                        "schema-evolved tables (field-id mapping and column_map "
+                        "props cannot compose)"
+                    )
+                old = m.get("props", {})
+                if old and props and old != props:
+                    raise ValueError(f"conflicting table props for {table}")
+                m["props"] = old or props
+            self._stamp_files(m, files)
+            if stats:
+                m.setdefault("file_stats", {}).update(stats)
+            for f, per in blooms.items():
+                m.setdefault("file_blooms", {}).setdefault(f, {}).update(per)
+            base_sid = self._base_sid(m, branch)
+            base = self._snapshot_files(m, base_sid) if carry is None else carry
+            sid = self._next_sid(m)
+            m["snapshots"].append(
+                {"id": sid, "parent": base_sid, "files": base + files, "meta": meta}
+            )
+            if branch is None:
+                m["current"] = sid
+            else:
+                m["refs"][branch] = sid
+            return sid
+
+        return self._locked_commit(table, mutate)
+
     def overwrite_stage(
         self,
         table: str,
@@ -285,27 +374,14 @@ class Catalog:
         files as the table's next snapshot. Same commit/locking path as
         ``overwrite`` — only the producer of the staged bytes differs."""
         files, file_rows = self._adopt_stage(table, stage)
-        stats_d = self._compute_stats(table, files, stat_cols)
-        blooms_d = self._compute_blooms(table, files, bloom_cols)
-
-        def mutate(m: dict) -> int:
-            self._stamp_files(m, files)
-            self._merge_file_meta(m, stats_d, blooms_d)
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": m["current"],
-                    "files": files,
-                    "meta": dict(
-                        meta or {}, rows_delta=sum(file_rows), file_rows=file_rows
-                    ),
-                }
-            )
-            m["current"] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        return self._commit(
+            table,
+            files,
+            dict(meta or {}, rows_delta=sum(file_rows), file_rows=file_rows),
+            carry=[],
+            stat_cols=stat_cols,
+            bloom_cols=bloom_cols,
+        )
 
     def _compute_stats(
         self, table: str, files: list[str], stat_cols: list[str] | None
@@ -319,13 +395,6 @@ class Catalog:
             f: self._footer_stats(os.path.join(self._dir(table), f), stat_cols)
             for f in files
         }
-
-    @staticmethod
-    def _merge_file_meta(m: dict, stats_d: dict, blooms_d: dict) -> None:
-        if stats_d:
-            m.setdefault("file_stats", {}).update(stats_d)
-        for f, per in blooms_d.items():
-            m.setdefault("file_blooms", {}).setdefault(f, {}).update(per)
 
     # bloom sizing: ~10 bits/key, k=7 probes -> ~0.8% false-positive rate
     BLOOM_BITS_PER_KEY = 10
@@ -385,31 +454,57 @@ class Catalog:
         files are skipped (no false negatives by construction), then
         min/max stats cut what remains. Files with neither recorded are
         kept — pruning only ever skips files proven non-matching."""
+        m = self._load_manifest(table)
+        sid = m["current"] if snapshot is None else snapshot
+        return self._paths(table, self._split(m, sid, col, keys=[value])[0])
+
+    def _may_contain(
+        self, m: dict, f: str, col: str, lo=None, hi=None, keys=None
+    ) -> bool:
+        """False only when data file ``f`` PROVABLY holds no row with
+        ``col`` in [lo, hi] (None = unbounded) and, if ``keys`` (a sorted
+        list) is given, equal to one of ``keys``. Evidence: the field
+        postdating the file (only NULLs inside), the manifest min/max
+        stats, and the manifest bloom (integer keys). Files without
+        recorded evidence may always contain a match."""
         from .functions.hashing import bloom_positions_py
 
-        m = self._load_manifest(table)
-        blooms = m.get("file_blooms", {})
-        stats = m.get("file_stats", {})
-        sid = m["current"] if snapshot is None else snapshot
-        snaps = [s for s in m["snapshots"] if s["id"] == sid]
-        keep = []
-        for f in snaps[0]["files"] if snaps else []:
-            name = self._stat_name(m, f, col)
-            if name is None:
-                continue  # field postdates file -> only NULLs -> no match
-            s = stats.get(f, {}).get(name)
-            if s is not None and not (s[0] <= value <= s[1]):
-                continue
-            b = blooms.get(f, {}).get(name)
-            if b is not None:
-                buf = bytes.fromhex(b["hex"])
-                if any(
+        name = self._stat_name(m, f, col)
+        if name is None:
+            return lo is None and hi is None and keys is None
+        s = m.get("file_stats", {}).get(f, {}).get(name)
+        if s is not None:
+            if (hi is not None and s[0] > hi) or (lo is not None and s[1] < lo):
+                return False
+            if keys is not None:
+                i = bisect_left(keys, s[0])
+                if not (i < len(keys) and keys[i] <= s[1]):
+                    return False
+        b = m.get("file_blooms", {}).get(f, {}).get(name)
+        if b is not None and keys is not None and all(isinstance(v, int) for v in keys):
+            buf = bytes.fromhex(b["hex"])
+            if all(
+                any(
                     not (buf[p >> 3] >> (p & 7)) & 1
-                    for p in bloom_positions_py(int(value), b["k"], b["bits"])
-                ):
-                    continue
-            keep.append(os.path.join(self._dir(table), f))
-        return keep
+                    for p in bloom_positions_py(int(v), b["k"], b["bits"])
+                )
+                for v in keys
+            ):
+                return False
+        return True
+
+    def _split(
+        self, m: dict, sid: int, col: str, **bounds
+    ) -> tuple[list[str], list[str]]:
+        """Snapshot ``sid``'s files as (may contain, provably not), both in
+        manifest order; ``bounds`` are ``_may_contain``'s."""
+        may, cannot = [], []
+        for f in self._snapshot_files(m, sid):
+            (may if self._may_contain(m, f, col, **bounds) else cannot).append(f)
+        return may, cannot
+
+    def _paths(self, table: str, files: list[str]) -> list[str]:
+        return [os.path.join(self._dir(table), f) for f in files]
 
     def read_point(
         self,
@@ -421,19 +516,14 @@ class Catalog:
     ) -> DataFrame:
         """Point lookup with manifest bloom + stats file skipping; the
         equality predicate still applies row-level (parquet row-group
-        pushdown inside the surviving files)."""
+        pushdown inside the surviving files). ``col`` is a declared
+        column name (zero-copy tables: after ``column_map``)."""
         from pyspark.sql import functions as F
 
-        paths = self.prune_files_point(table, col, value, snapshot)
-        if not paths:
-            return self.spark.createDataFrame([], schema)
         m = self._load_manifest(table)
-        if m.get("schema") is not None:
-            rel = [os.path.relpath(p, self._dir(table)) for p in paths]
-            df = self._read_files_evolved(table, m, rel, schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*paths)
-        return df.filter(F.col(col) == value)
+        sid = m["current"] if snapshot is None else snapshot
+        files = self._split(m, sid, col, keys=[value])[0]
+        return self._scan(table, m, files, schema).filter(F.col(col) == value)
 
     def append(
         self,
@@ -457,36 +547,16 @@ class Catalog:
         outside the commit lock; the manifest entry rebases onto whatever
         the target ref points at by commit time, so concurrent appends to
         one table all land (tests/test_concurrent_commits.py)."""
-        cols_written = list(df.columns)
         files, file_rows = self._write_files(table, df)
-        stats_d = self._compute_stats(table, files, stat_cols)
-        blooms_d = self._compute_blooms(table, files, bloom_cols)
-
-        def mutate(m: dict) -> int:
-            self._check_write_columns(m, table, cols_written)
-            self._stamp_files(m, files)
-            self._merge_file_meta(m, stats_d, blooms_d)
-            base_sid = self._base_sid(m, branch)
-            prev = [s for s in m["snapshots"] if s["id"] == base_sid]
-            base = prev[0]["files"] if prev else []
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "files": base + files,
-                    "meta": dict(
-                        meta or {}, rows_delta=sum(file_rows), file_rows=file_rows
-                    ),
-                }
-            )
-            if branch is None:
-                m["current"] = sid
-            else:
-                m["refs"][branch] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        return self._commit(
+            table,
+            files,
+            dict(meta or {}, rows_delta=sum(file_rows), file_rows=file_rows),
+            branch=branch,
+            cols=list(df.columns),
+            stat_cols=stat_cols,
+            bloom_cols=bloom_cols,
+        )
 
     def append_rows(
         self, table: str, rows: list[tuple], schema: StructType, meta: dict | None = None
@@ -518,25 +588,12 @@ class Catalog:
         os.makedirs(data_dir, exist_ok=True)
         name = f"snap-{uuid.uuid4().hex}-local.parquet"
         pq.write_table(tbl, os.path.join(data_dir, name))
-
-        def mutate(m: dict) -> int:
-            self._check_write_columns(m, table, [f.name for f in schema.fields])
-            self._stamp_files(m, [os.path.join("data", name)])
-            prev = [s for s in m["snapshots"] if s["id"] == m["current"]]
-            base = prev[0]["files"] if prev else []
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": m["current"],
-                    "files": base + [os.path.join("data", name)],
-                    "meta": dict(meta or {}, rows_delta=len(rows)),
-                }
-            )
-            m["current"] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        return self._commit(
+            table,
+            [os.path.join("data", name)],
+            dict(meta or {}, rows_delta=len(rows)),
+            cols=[f.name for f in schema.fields],
+        )
 
     def overwrite(
         self,
@@ -548,30 +605,16 @@ class Catalog:
     ) -> int:
         """Replace table contents as a new snapshot (old files retained for
         time travel / resume)."""
-        cols_written = list(df.columns)
         files, file_rows = self._write_files(table, df)
-        stats_d = self._compute_stats(table, files, stat_cols)
-        blooms_d = self._compute_blooms(table, files, bloom_cols)
-
-        def mutate(m: dict) -> int:
-            self._check_write_columns(m, table, cols_written)
-            self._stamp_files(m, files)
-            self._merge_file_meta(m, stats_d, blooms_d)
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": m["current"],
-                    "files": files,
-                    "meta": dict(
-                        meta or {}, rows_delta=sum(file_rows), file_rows=file_rows
-                    ),
-                }
-            )
-            m["current"] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        return self._commit(
+            table,
+            files,
+            dict(meta or {}, rows_delta=sum(file_rows), file_rows=file_rows),
+            carry=[],
+            cols=list(df.columns),
+            stat_cols=stat_cols,
+            bloom_cols=bloom_cols,
+        )
 
     def merge(
         self,
@@ -595,11 +638,13 @@ class Catalog:
         handful of files, not the table. File-level pruning is manifest
         math on the driver (per-file interval probe against the sorted
         update-key list when the delta has ≤ ``key_probe_limit`` distinct
-        keys, else interval-vs-range overlap); the rewrite itself is one
-        distributed anti-join + union, update side broadcast when small.
-        Files without recorded stats are always rewritten (pruning may
-        only skip files PROVEN untouched). Old files remain readable for
-        time travel until expire+vacuum, like every other commit here.
+        keys — plus the manifest bloom for integer keys — else
+        interval-vs-range overlap; ``_may_contain``); the rewrite itself
+        is one distributed anti-join + union, update side broadcast when
+        small. Files without recorded stats or blooms are always
+        rewritten (pruning may only skip files PROVEN untouched). Old
+        files remain readable for time travel until expire+vacuum, like
+        every other commit here.
 
         ``updates`` must be key-unique (two updates for one key have no
         deterministic winner) — raises otherwise.
@@ -609,11 +654,12 @@ class Catalog:
         append it cannot rebase — if another writer commits between plan
         and commit it raises :class:`CommitConflict`; the caller
         re-plans against the new current snapshot (Iceberg's
-        validate-and-retry loop)."""
-        from bisect import bisect_left
-
+        validate-and-retry loop). Zero-copy tables (``append_files``)
+        raise ``ValueError``: their files belong to another table."""
         from pyspark.sql import functions as F
 
+        m = self._load_manifest(table)
+        self._refuse_zero_copy(m, table, "merge")
         n_upd = updates.count()
         n_keys = updates.select(key).distinct().count()
         if n_keys != n_upd:
@@ -622,45 +668,21 @@ class Catalog:
                 f"({n_upd} rows, {n_keys} distinct keys)"
             )
         if n_keys <= key_probe_limit:
-            keys = sorted(r[0] for r in updates.select(key).distinct().collect())
-            lo, hi = keys[0], keys[-1]
-
-            def touches(fmin, fmax) -> bool:
-                i = bisect_left(keys, fmin)
-                return i < len(keys) and keys[i] <= fmax
+            bounds = {
+                "keys": sorted(r[0] for r in updates.select(key).distinct().collect())
+            }
         else:
-            keys = None
             row = updates.agg(
                 F.min(key).alias("lo"), F.max(key).alias("hi")
             ).collect()[0]
-            lo, hi = row["lo"], row["hi"]
+            bounds = {"lo": row["lo"], "hi": row["hi"]}
 
-            def touches(fmin, fmax) -> bool:
-                return not (fmin > hi or fmax < lo)
-
-        m = self._load_manifest(table)
-        stats = m.get("file_stats", {})
         base_sid = m["current"]
-        cur = [s for s in m["snapshots"] if s["id"] == base_sid][0]
-        touched, kept = [], []
-        for f in cur["files"]:
-            name = self._stat_name(m, f, key)
-            if name is None:
-                # key field postdates this file: only NULL keys inside,
-                # and update keys are non-null -> provably untouched
-                kept.append(f)
-                continue
-            s = stats.get(f, {}).get(name)
-            (touched if s is None or touches(s[0], s[1]) else kept).append(f)
-
+        # a key field that postdates a file leaves only NULL keys inside,
+        # and update keys are non-null -> that file is provably untouched
+        touched, kept = self._split(m, base_sid, key, **bounds)
         if touched:
-            if m.get("schema") is not None:
-                old = self._read_files_evolved(table, m, touched, schema)
-            else:
-                old = self.spark.read.schema(schema).parquet(
-                    *[os.path.join(self._dir(table), f) for f in touched]
-                )
-            survivors = old.join(
+            survivors = self._scan(table, m, touched, schema).join(
                 F.broadcast(updates.select(key)) if n_keys <= key_probe_limit
                 else updates.select(key),
                 key,
@@ -670,38 +692,24 @@ class Catalog:
         else:
             rewrite = updates
         files, file_rows = self._write_files(table, rewrite)
-        stats_d = self._compute_stats(table, files, stat_cols)
-
-        def mutate(m: dict) -> int:
-            if m["current"] != base_sid:
-                raise CommitConflict(
-                    f"merge planned against {table}@{base_sid} but current "
-                    f"is {m['current']} — re-plan against the new snapshot"
-                )
-            self._check_write_columns(m, table, list(updates.columns))
-            self._stamp_files(m, files)
-            self._merge_file_meta(m, stats_d, {})
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "files": kept + files,
-                    "meta": {
-                        "op": "merge",
-                        "merge_key": key,
-                        "updates": n_upd,
-                        "files_rewritten": len(touched),
-                        "files_kept": len(kept),
-                        "rows_delta": sum(file_rows),
-                        "file_rows": file_rows,
-                    },
-                }
-            )
-            m["current"] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        meta = {
+            "op": "merge",
+            "merge_key": key,
+            "updates": n_upd,
+            "files_rewritten": len(touched),
+            "files_kept": len(kept),
+            "rows_delta": sum(file_rows),
+            "file_rows": file_rows,
+        }
+        return self._commit(
+            table,
+            files,
+            meta,
+            carry=kept,
+            expect_base=base_sid,
+            cols=list(updates.columns),
+            stat_cols=stat_cols,
+        )
 
     def delete_where(
         self,
@@ -734,98 +742,45 @@ class Catalog:
 
         Concurrency: read-dependent like merge — raises
         :class:`CommitConflict` if another writer commits between plan
-        and commit; the caller re-plans."""
-        from bisect import bisect_left
-
+        and commit; the caller re-plans. Zero-copy tables raise
+        ``ValueError`` like :meth:`merge`."""
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        from .functions.hashing import bloom_positions_py
-
         m = self._load_manifest(table)
-        stats = m.get("file_stats", {})
-        blooms = m.get("file_blooms", {})
+        self._refuse_zero_copy(m, table, "delete_where")
         base_sid = m["current"]
-        cur = [s for s in m["snapshots"] if s["id"] == base_sid][0]
-
-        def may_touch(f: str) -> bool:
-            if key is None or not key_values:
-                return True
-            kname = self._stat_name(m, f, key)
-            if kname is None:
-                # key field postdates this file: all NULLs, and an
-                # equality/IN predicate over non-null values cannot
-                # evaluate TRUE -> the file provably survives intact
-                return False
-            s = stats.get(f, {}).get(kname)
-            if s is not None:
-                vals = sorted(key_values)
-                i = bisect_left(vals, s[0])
-                if not (i < len(vals) and vals[i] <= s[1]):
-                    return False
-            b = blooms.get(f, {}).get(kname)
-            if b is not None and all(isinstance(v, int) for v in key_values):
-                buf = bytes.fromhex(b["hex"])
-                if all(
-                    any(
-                        not (buf[p >> 3] >> (p & 7)) & 1
-                        for p in bloom_positions_py(int(v), b["k"], b["bits"])
-                    )
-                    for v in key_values
-                ):
-                    return False
-            return True
-
-        touched = [f for f in cur["files"] if may_touch(f)]
-        kept = [f for f in cur["files"] if f not in set(touched)]
+        if key is None or not key_values:
+            touched, kept = self._snapshot_files(m, base_sid), []
+        else:
+            # a key field that postdates a file leaves only NULLs inside,
+            # where an equality/IN predicate over non-null values cannot
+            # evaluate TRUE -> that file provably survives intact
+            touched, kept = self._split(m, base_sid, key, keys=sorted(key_values))
 
         files: list[str] = []
         file_rows: list[int] = []
         rows_before = 0
         if touched:
-            paths = [os.path.join(self._dir(table), f) for f in touched]
-            import pyarrow.parquet as pq
-
-            rows_before = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-            if m.get("schema") is not None:
-                old = self._read_files_evolved(table, m, touched, schema)
-            else:
-                old = self.spark.read.schema(schema).parquet(*paths)
-            survivors = old.filter(
+            rows_before = sum(
+                pq.ParquetFile(p).metadata.num_rows for p in self._paths(table, touched)
+            )
+            survivors = self._scan(table, m, touched, schema).filter(
                 ~F.coalesce(F.expr(condition), F.lit(False))
             )
             files, file_rows = self._write_files(table, survivors)
-        stats_d = self._compute_stats(table, files, stat_cols)
-        n_deleted = rows_before - sum(file_rows)
-
-        def mutate(m: dict) -> int:
-            if m["current"] != base_sid:
-                raise CommitConflict(
-                    f"delete planned against {table}@{base_sid} but current "
-                    f"is {m['current']} — re-plan against the new snapshot"
-                )
-            self._stamp_files(m, files)
-            self._merge_file_meta(m, stats_d, {})
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": base_sid,
-                    "files": kept + files,
-                    "meta": {
-                        "op": "delete",
-                        "condition": condition,
-                        "rows_deleted": n_deleted,
-                        "files_rewritten": len(touched),
-                        "files_kept": len(kept),
-                        "rows_delta": sum(file_rows),
-                        "file_rows": file_rows,
-                    },
-                }
-            )
-            m["current"] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        meta = {
+            "op": "delete",
+            "condition": condition,
+            "rows_deleted": rows_before - sum(file_rows),
+            "files_rewritten": len(touched),
+            "files_kept": len(kept),
+            "rows_delta": sum(file_rows),
+            "file_rows": file_rows,
+        }
+        return self._commit(
+            table, files, meta, carry=kept, expect_base=base_sid, stat_cols=stat_cols
+        )
 
     def rows_delta(self, table: str, snapshot: int) -> int:
         """PHYSICAL rows written by snapshot ``snapshot`` (from footer
@@ -859,47 +814,25 @@ class Catalog:
         column; ``row_filter`` is a SQL predicate over source columns.
         Both are table-level properties (must be identical across
         appends)."""
-        src = self._load_manifest(src_table)
-        src_snap = [s for s in src["snapshots"] if s["id"] == src_snapshot]
-        if not src_snap:
+        src = self._snapshot(self._load_manifest(src_table), src_snapshot)
+        if src is None:
             raise KeyError(f"{src_table}@{src_snapshot}")
         # file paths are warehouse-relative via the source table dir
         rel = os.path.relpath(self._dir(src_table), self._dir(table))
-        files = [os.path.join(rel, f) for f in src_snap[0]["files"]]
-        rows = src_snap[0]["meta"].get("rows_delta", 0)
-        file_rows = src_snap[0]["meta"].get("file_rows", [])
-        new_props = {
-            k: v
-            for k, v in (("column_map", column_map), ("row_filter", row_filter))
-            if v is not None
-        }
-
-        def mutate(m: dict) -> int:
-            if m.get("schema") is not None:
-                raise ValueError(
-                    f"{table}: zero-copy append_files is unsupported on "
-                    "schema-evolved tables (field-id mapping and column_map "
-                    "props cannot compose)"
-                )
-            props = m.get("props", {})
-            if props and new_props and props != new_props:
-                raise ValueError(f"conflicting table props for {table}")
-            m["props"] = props or new_props
-            prev = [s for s in m["snapshots"] if s["id"] == m["current"]]
-            base = prev[0]["files"] if prev else []
-            sid = self._next_sid(m)
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "parent": m["current"],
-                    "files": base + files,
-                    "meta": dict(meta or {}, rows_delta=rows, file_rows=file_rows),
-                }
-            )
-            m["current"] = sid
-            return sid
-
-        return self._locked_commit(table, mutate)
+        return self._commit(
+            table,
+            [os.path.join(rel, f) for f in src["files"]],
+            dict(
+                meta or {},
+                rows_delta=src["meta"].get("rows_delta", 0),
+                file_rows=src["meta"].get("file_rows", []),
+            ),
+            props={
+                k: v
+                for k, v in (("column_map", column_map), ("row_filter", row_filter))
+                if v is not None
+            },
+        )
 
     def read(
         self,
@@ -925,37 +858,42 @@ class Catalog:
         and only those leaves are read."""
         m = self._load_manifest(table)
         sid = self._base_sid(m, branch) if snapshot is None else snapshot
-        snaps = [s for s in m["snapshots"] if s["id"] == sid]
-        files = snaps[0]["files"] if snaps else []
-        if not files:
-            return self.spark.createDataFrame([], project or schema)
-        if m.get("schema") is not None:
-            # field-id registry: name-map each file by its write version
-            return self._read_files_evolved(table, m, files, schema)
-        paths = [os.path.join(self._dir(table), f) for f in files]
-        return self._read_paths(paths, schema, m.get("props", {}), project)
+        return self._scan(table, m, self._snapshot_files(m, sid), schema, project)
 
-    def _read_paths(
+    def _scan(
         self,
-        paths: list[str],
+        table: str,
+        m: dict,
+        files: list[str],
         schema: StructType,
-        props: dict,
         project: StructType | None = None,
     ) -> DataFrame:
-        """Read data files under the declared schema, applying zero-copy
-        table props (``row_filter``/``column_map``) and an optional
-        projected schema. Prop tables read the SOURCE files (other column
-        names), so the declared schema is enforced by explicit per-column
-        casts after the name mapping rather than at scan time (the
-        row_filter may also reference source columns absent from the
-        declared schema). Casts are applied only where the
-        parquet-inferred type truly differs — nullability is erased for
-        the comparison, since Spark refuses nullable->non-null casts on
-        nested types yet the data is valid."""
+        """The one reader of a table's data ``files`` (table relative)
+        under manifest ``m``: no files -> empty DF with the declared
+        schema; a schema-evolved table name-maps each file by its write
+        version (``_read_files_evolved``); a zero-copy table applies its
+        ``row_filter``/``column_map`` props; else plain parquet under the
+        declared schema. ``project`` prunes the scan (not on evolved
+        tables).
+
+        Prop tables read the SOURCE files (other column names), so the
+        declared schema is enforced by explicit per-column casts after
+        the name mapping rather than at scan time (the row_filter may
+        also reference source columns absent from the declared schema).
+        Casts are applied only where the parquet-inferred type truly
+        differs — nullability is erased for the comparison, since Spark
+        refuses nullable->non-null casts on nested types yet the data is
+        valid."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import ArrayType, MapType, StructField
 
         want = project or schema
+        if not files:
+            return self.spark.createDataFrame([], want)
+        if m.get("schema") is not None:
+            return self._read_files_evolved(table, m, files, schema)
+        paths = self._paths(table, files)
+        props = m.get("props", {})
         if not props:
             return self.spark.read.schema(want).parquet(*paths)
         cmap = props.get("column_map", {})
@@ -1008,11 +946,11 @@ class Catalog:
         Applies zero-copy table props (row_filter/column_map) exactly
         like ``read``; ``project`` prunes the scan the same way."""
         m = self._load_manifest(table)
-        cur = [s for s in m["snapshots"] if s["id"] == snapshot]
-        prev = [s for s in m["snapshots"] if s["id"] == snapshot - 1]
-        if not cur:
+        cur = self._snapshot(m, snapshot)
+        prev = self._snapshot(m, snapshot - 1)
+        if cur is None:
             raise KeyError(f"{table}@{snapshot}")
-        if snapshot > 0 and not prev:
+        if snapshot > 0 and prev is None:
             # Snapshot ids are dense (append/overwrite assign current+1),
             # so a missing ``snapshot-1`` entry means expire_snapshots
             # dropped it. Falling through would return the snapshot's FULL
@@ -1024,14 +962,9 @@ class Catalog:
                 f"{table}@{snapshot}: predecessor snapshot {snapshot - 1} "
                 "was expired; incremental read is no longer possible"
             )
-        prev_files = set(prev[0]["files"]) if prev else set()
-        files = [f for f in cur[0]["files"] if f not in prev_files]
-        if not files:
-            return self.spark.createDataFrame([], project or schema)
-        if m.get("schema") is not None:
-            return self._read_files_evolved(table, m, files, schema)
-        paths = [os.path.join(self._dir(table), f) for f in files]
-        return self._read_paths(paths, schema, m.get("props", {}), project)
+        prev_files = set(prev["files"]) if prev else set()
+        files = [f for f in cur["files"] if f not in prev_files]
+        return self._scan(table, m, files, schema, project)
 
     def register_views(
         self, views: dict[str, StructType], prefix: str = ""
@@ -1062,17 +995,15 @@ class Catalog:
         )
 
     def snapshot_meta(self, table: str, snapshot: int) -> dict:
-        m = self._load_manifest(table)
-        for s in m["snapshots"]:
-            if s["id"] == snapshot:
-                return s["meta"]
-        raise KeyError(f"{table}@{snapshot}")
+        s = self._snapshot(self._load_manifest(table), snapshot)
+        if s is None:
+            raise KeyError(f"{table}@{snapshot}")
+        return s["meta"]
 
     def data_files(self, table: str, snapshot: int | None = None) -> list[str]:
         m = self._load_manifest(table)
         sid = m["current"] if snapshot is None else snapshot
-        snaps = [s for s in m["snapshots"] if s["id"] == sid]
-        return [os.path.join(self._dir(table), f) for f in (snaps[0]["files"] if snaps else [])]
+        return self._paths(table, self._snapshot_files(m, sid))
 
     def content_digest(self, table: str, snapshot: int | None = None) -> str:
         """Deterministic digest of the table's logical bytes: every data
@@ -1309,21 +1240,8 @@ class Catalog:
         [lo, hi] (None = unbounded). Files without recorded stats are
         always included — pruning can only skip files PROVEN disjoint."""
         m = self._load_manifest(table)
-        stats = m.get("file_stats", {})
         sid = m["current"] if snapshot is None else snapshot
-        snaps = [s for s in m["snapshots"] if s["id"] == sid]
-        keep = []
-        for f in snaps[0]["files"] if snaps else []:
-            name = self._stat_name(m, f, col)
-            if name is None and (lo is not None or hi is not None):
-                continue  # field postdates file -> only NULLs -> no match
-            s = stats.get(f, {}).get(name) if name is not None else None
-            if s is not None and (
-                (hi is not None and s[0] > hi) or (lo is not None and s[1] < lo)
-            ):
-                continue
-            keep.append(os.path.join(self._dir(table), f))
-        return keep
+        return self._paths(table, self._split(m, sid, col, lo=lo, hi=hi)[0])
 
     def read_range(
         self,
@@ -1339,18 +1257,15 @@ class Catalog:
         predicate still applies row-level (parquet row-group pushdown
         handles the rest). The 100-TB win: a recency-horizon frontier
         scan over a time-ordered append log opens only the recent files
-        instead of planning tasks for every file ever written."""
+        instead of planning tasks for every file ever written. ``col``
+        is a declared column name (zero-copy tables: after
+        ``column_map``)."""
         from pyspark.sql import functions as F
 
-        paths = self.prune_files(table, col, lo, hi, snapshot)
-        if not paths:
-            return self.spark.createDataFrame([], schema)
         m = self._load_manifest(table)
-        if m.get("schema") is not None:
-            rel = [os.path.relpath(p, self._dir(table)) for p in paths]
-            df = self._read_files_evolved(table, m, rel, schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*paths)
+        sid = m["current"] if snapshot is None else snapshot
+        files = self._split(m, sid, col, lo=lo, hi=hi)[0]
+        df = self._scan(table, m, files, schema)
         if lo is not None:
             df = df.filter(F.col(col) >= lo)
         if hi is not None:
@@ -1377,11 +1292,7 @@ class Catalog:
         commit; initializes the registry (version 0 = the current files'
         footer schema) on first use. Returns the new schema version."""
         def mutate(m: dict) -> int:
-            if m.get("props"):
-                raise ValueError(
-                    f"{table}: schema evolution is unsupported on zero-copy "
-                    "prop tables (their mapping is the column_map property)"
-                )
+            self._refuse_zero_copy(m, table, "schema evolution")
             reg = m.get("schema")
             if reg is None:
                 names = self._infer_current_names(table, m)
@@ -1404,8 +1315,7 @@ class Catalog:
     def _infer_current_names(self, table: str, m: dict) -> list[str]:
         import pyarrow.parquet as pq
 
-        cur = [s for s in m["snapshots"] if s["id"] == m["current"]]
-        files = cur[0]["files"] if cur else []
+        files = self._snapshot_files(m, m["current"])
         if not files:
             raise ValueError(
                 f"{table}: cannot initialize schema tracking on an empty "
@@ -1506,6 +1416,17 @@ class Catalog:
                 f"{table}: write columns {sorted(cols)} != schema "
                 f"v{reg['ver']} columns {sorted(want)} — evolve the schema "
                 "first (rename_column/add_column/drop_column)"
+            )
+
+    @staticmethod
+    def _refuse_zero_copy(m: dict, table: str, op: str) -> None:
+        """Zero-copy prop tables (``append_files``) read another table's
+        files through their ``column_map``/``row_filter``; operations
+        that rewrite or re-map those files are refused."""
+        if m.get("props"):
+            raise ValueError(
+                f"{table}: {op} is unsupported on zero-copy prop tables "
+                "(their files and column names belong to the source table)"
             )
 
     def _stat_name(self, m: dict, f: str, col: str) -> str | None:

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -74,16 +77,16 @@ def test_logical_digest_layout_invariant(spark, tmp_path):
     assert cat.logical_digest("nope") == "0/0"
 
 
-def test_read_delta_applies_zero_copy_props(spark, tmp_path):
-    """read_delta on a zero-copy prop table must honor row_filter and
-    column_map exactly like read — regression: it used to read raw
-    source columns (NULL mapped fields, unfiltered rows)."""
-    from pyspark.sql.types import BooleanType, StringType
+def _zero_copy_view(spark, tmp_path):
+    """A spans-shaped zero-copy table: ``view`` adopts ``src``'s files
+    with mapped names (doc_id, round) and a row filter (ok); ``k`` is
+    shared unmapped."""
+    from pyspark.sql.types import StringType
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     src = spark.createDataFrame(
-        [("u1", True, 10), ("u2", False, 11), ("u3", True, 12)],
-        "url string, ok boolean, fetch_round int",
+        [("u1", True, 10, 1), ("u2", False, 11, 2), ("u3", True, 12, 3)],
+        "url string, ok boolean, fetch_round int, k long",
     )
     s_src = cat.append("src", src)
     cat.append_files(
@@ -97,16 +100,50 @@ def test_read_delta_applies_zero_copy_props(spark, tmp_path):
         [
             StructField("doc_id", StringType(), False),
             StructField("round", LongType(), False),
+            StructField("k", LongType(), False),
         ]
     )
+    return cat, view_schema
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_read_delta_applies_zero_copy_props(spark, tmp_path):
+    """read_delta, read_range and read_point on a zero-copy prop table
+    must honor row_filter and column_map exactly like read — regression:
+    they used to read raw source columns (NULL mapped fields, unfiltered
+    rows)."""
+    cat, view_schema = _zero_copy_view(spark, tmp_path)
     sid = cat.current_snapshot("view")
     delta = cat.read_delta("view", view_schema, sid)
     rows = {(r.doc_id, r.round) for r in delta.collect()}
     assert rows == {("u1", 10), ("u3", 12)}  # mapped names, ok-filtered
-    full = {
-        (r.doc_id, r.round) for r in cat.read("view", view_schema).collect()
-    }
-    assert rows == full
+    full = cat.read("view", view_schema)
+    assert rows == {(r.doc_id, r.round) for r in full.collect()}
+    # range and point reads filter on the declared (mapped) names
+    got = _rows(cat.read_range("view", view_schema, "round", 11, 12))
+    assert got == _rows(full.filter("round BETWEEN 11 AND 12")) == [("u3", 12, 3)]
+    for k, want in ((1, [("u1", 10, 1)]), (2, []), (3, [("u3", 12, 3)])):  # 2: ok=False
+        got = _rows(cat.read_point("view", view_schema, "k", k))
+        assert got == _rows(full.filter(f"k = {k}")) == want
+
+
+def test_zero_copy_table_refuses_rewrites(spark, tmp_path):
+    """merge and delete_where would rewrite files that belong to the
+    source table: on a zero-copy table both raise before writing any
+    file, and the table stays readable at the same snapshot."""
+    cat, view_schema = _zero_copy_view(spark, tmp_path)
+    sid = cat.current_snapshot("view")
+    updates = spark.createDataFrame([("u9", 13, 30)], view_schema)
+    with pytest.raises(ValueError, match="zero-copy"):
+        cat.merge("view", view_schema, updates, key="k")
+    with pytest.raises(ValueError, match="zero-copy"):
+        cat.delete_where("view", view_schema, "k = 3")
+    assert cat.current_snapshot("view") == sid
+    assert os.listdir(cat._dir("view")) == ["_snapshots.json"]  # no file written
+    assert _rows(cat.read("view", view_schema)) == [("u1", 10, 1), ("u3", 12, 3)]
 
 
 def test_projected_read_prunes_nested_scan(spark, cfg):

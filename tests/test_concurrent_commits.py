@@ -26,16 +26,25 @@ APPENDS_EACH = 3
 ROWS_EACH = 50
 
 
-def test_concurrent_appends_all_land(spark, tmp_path):
+def _append_df(spark, cat, base, meta):
+    df = spark.range(base, base + ROWS_EACH).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    cat.append("t", df, meta=meta)
+
+
+def _append_rows(spark, cat, base, meta):
+    rows = [(k, k * 10) for k in range(base, base + ROWS_EACH)]
+    cat.append_rows("t", rows, SCHEMA, meta=meta)
+
+
+def _race_appends(spark, tmp_path, append):
     cat = Catalog(spark, str(tmp_path / "wh"))
 
     def writer(w: int):
         for a in range(APPENDS_EACH):
             base = (w * APPENDS_EACH + a) * ROWS_EACH
-            df = spark.range(base, base + ROWS_EACH).select(
-                F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-            )
-            cat.append("t", df, meta={"writer": w, "seq": a})
+            append(spark, cat, base, {"writer": w, "seq": a})
 
     with ThreadPoolExecutor(WRITERS) as ex:
         list(ex.map(writer, range(WRITERS)))
@@ -51,6 +60,16 @@ def test_concurrent_appends_all_land(spark, tmp_path):
     assert sorted(s["id"] for s in m["snapshots"]) == list(range(n_commits))
     sizes = [len(s["files"]) for s in sorted(m["snapshots"], key=lambda s: s["id"])]
     assert sizes == sorted(sizes)  # each commit rebases on the previous
+
+
+def test_concurrent_appends_all_land(spark, tmp_path):
+    _race_appends(spark, tmp_path, _append_df)
+
+
+def test_concurrent_append_rows_all_land(spark, tmp_path):
+    """The same race through append_rows (driver-side pyarrow writes),
+    which shares append's commit path and must rebase the same way."""
+    _race_appends(spark, tmp_path, _append_rows)
 
 
 def test_merge_conflict_raises(spark, tmp_path):
