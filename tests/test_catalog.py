@@ -37,15 +37,12 @@ def test_append_overwrite_rollback_timetravel(spark, tmp_path):
     assert cat.read("t", SCHEMA).count() == 4
 
 
-def test_read_delta_returns_only_snapshot_increment(spark, cfg):
+def test_read_delta_returns_only_snapshot_increment(cfg, crawled):
     """Incremental scan (Iceberg changelog analogue): per-round appends
     of crawl_order read back exactly, round by round."""
-    from swmaestro_crawler_spark.plans.crawl import Crawl
     from swmaestro_crawler_spark.schema import CRAWL_ORDER
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
 
-    crawl = Crawl(spark, cfg)
-    crawl.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=3)
+    _, crawl, _ = crawled(cfg.warehouse, 30, 3)
     cat = crawl.cat
     total = cat.read("crawl_order", CRAWL_ORDER).count()
     per_round = 0

@@ -14,10 +14,9 @@ import pyarrow as pa
 
 from swmaestro_crawler_spark.catalog import Catalog
 from swmaestro_crawler_spark.operators.fetch import synth_transport
-from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.plans.revisit import revisit_schedule, run_revisit
 from swmaestro_crawler_spark.schema import OBSERVATIONS, SPANS_DOC
-from swmaestro_crawler_spark.sources.synth_web import FIELD, SPANSEP, make_seeds
+from swmaestro_crawler_spark.sources.synth_web import FIELD, SPANSEP
 from tests.conftest import small_cfg
 
 MUT_MOD = 3  # mutate pages with url_hash % 3 == 0
@@ -43,11 +42,8 @@ def mutating_transport(cfg):
     return fetch
 
 
-def _crawl(spark, wh, rounds=2, seeds=30):
-    cfg = small_cfg(wh, max_rounds=rounds)
-    c = Crawl(spark, cfg)
-    c.run(spark.createDataFrame(make_seeds(cfg, seeds)), rounds=rounds)
-    return cfg, c
+def _crawl(crawled, wh, rounds=2, seeds=30):
+    return crawled(wh, seeds, rounds, max_rounds=rounds)[:2]
 
 
 def _sched(cat):
@@ -59,8 +55,8 @@ def _sched(cat):
     }
 
 
-def test_unchanged_pages_store_observations_not_spans(spark, tmp_path):
-    cfg, c = _crawl(spark, str(tmp_path / "wh"))
+def test_unchanged_pages_store_observations_not_spans(spark, tmp_path, crawled):
+    cfg, c = _crawl(crawled, str(tmp_path / "wh"))
     spans_before = c.cat.content_digest("spans")
     n_span_rows = c.cat.read("spans", SPANS_DOC).count()
 
@@ -79,8 +75,10 @@ def test_unchanged_pages_store_observations_not_spans(spark, tmp_path):
     assert all(r.n_changes == 0 and r.last_round == 100 for r in two)
 
 
-def test_changed_pages_restore_spans_and_estimator_sees_change(spark, tmp_path):
-    cfg, c = _crawl(spark, str(tmp_path / "wh"))
+def test_changed_pages_restore_spans_and_estimator_sees_change(
+    spark, tmp_path, crawled
+):
+    cfg, c = _crawl(crawled, str(tmp_path / "wh"))
     res = run_revisit(
         spark, c.cat, cfg, now_round=100,
         transport_factory=mutating_transport, conditional=True,
@@ -114,11 +112,11 @@ def test_changed_pages_restore_spans_and_estimator_sees_change(spark, tmp_path):
     assert res2["refetched_ok"] > 0 and res2["modified"] == 0
 
 
-def test_conditional_estimator_equals_full_restorage(spark, tmp_path):
+def test_conditional_estimator_equals_full_restorage(spark, tmp_path, crawled):
     """The storage optimization must not move the schedule: conditional
     and unconditional revisits over identical warehouses produce the
     SAME change-rate estimates for every URL."""
-    cfg, c = _crawl(spark, str(tmp_path / "wh1"), seeds=20)
+    cfg, c = _crawl(crawled, str(tmp_path / "wh1"), seeds=20)
     shutil.copytree(str(tmp_path / "wh1"), str(tmp_path / "wh2"))
     shutil.copytree(str(tmp_path / "wh1"), str(tmp_path / "wh3"))
     cat2 = Catalog(spark, str(tmp_path / "wh2"))

@@ -139,18 +139,13 @@ def test_in_batch_fingerprint_pair_collision_stores_one_copy():
     assert cuckoo_probe_np(one_call, keys).all()  # still FN-free for both
 
 
-def test_crawl_digests_identical_with_cuckoo_on(spark, tmp_path):
+def test_crawl_digests_identical_with_cuckoo_on(tmp_path, crawled):
     """The cuckoo tier is FN-free, so every committed table must be
     content-identical with the tier on vs off — it only changes how much
     work the exact anti-join sees."""
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
-
     digests = {}
     for tag, over in (("off", {}), ("on", {"cuckoo_buckets": 1 << 10})):
-        cfg = small_cfg(str(tmp_path / tag), **over)
-        crawl = Crawl(spark, cfg)
-        res = list(crawl.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=3))
+        _, crawl, res = crawled(tmp_path / tag, 30, 3, **over)
         assert len(res) == 3 and sum(r.fetched_ok for r in res) > 0
         digests[tag] = {
             t: crawl.cat.content_digest(t)
@@ -159,24 +154,20 @@ def test_crawl_digests_identical_with_cuckoo_on(spark, tmp_path):
     assert digests["on"] == digests["off"]
 
 
-def test_cuckoo_and_trap_guard_compose(spark, tmp_path):
+def test_cuckoo_and_trap_guard_compose(tmp_path, crawled):
     """Both opt-in features on together: the crawl completes, per-round
     (host, template) admissions respect the cap, and enabling the
     FN-free cuckoo tier on top changes no committed byte vs trap-only."""
     import pyspark.sql.functions as F
 
-    from swmaestro_crawler_spark.plans.crawl import Crawl
     from swmaestro_crawler_spark.schema import CRAWL_ORDER
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
 
     digests = {}
     for tag, over in (
         ("trap", {"trap_template_cap": 2}),
         ("both", {"trap_template_cap": 2, "cuckoo_buckets": 1 << 10}),
     ):
-        cfg = small_cfg(str(tmp_path / tag), **over)
-        crawl = Crawl(spark, cfg)
-        res = list(crawl.run(spark.createDataFrame(make_seeds(cfg, 20)), rounds=2))
+        _, crawl, res = crawled(tmp_path / tag, 20, 2, **over)
         assert len(res) == 2 and sum(r.fetched_ok for r in res) > 0
         order = crawl.cat.read("crawl_order", CRAWL_ORDER)
         tpl = F.regexp_replace(F.col("url"), "[0-9]+", "N")
@@ -193,20 +184,16 @@ def test_cuckoo_and_trap_guard_compose(spark, tmp_path):
     assert digests["both"] == digests["trap"]
 
 
-def test_cuckoo_resume_restores_tier(spark, tmp_path):
+def test_cuckoo_resume_restores_tier(spark, tmp_path, crawled):
     """Kill after round 1, resume with the tier on: the checkpointed
     tables reload and the finished crawl matches an uninterrupted one."""
     from swmaestro_crawler_spark.plans.crawl import Crawl
     from swmaestro_crawler_spark.sources.synth_web import make_seeds
 
-    cfg_a = small_cfg(str(tmp_path / "a"), cuckoo_buckets=1 << 10)
-    seeds = make_seeds(cfg_a, 30)
-    full = Crawl(spark, cfg_a)
-    full.run(spark.createDataFrame(seeds), rounds=3)
+    _, full, _ = crawled(tmp_path / "a", 30, 3, cuckoo_buckets=1 << 10)
 
-    cfg_b = small_cfg(str(tmp_path / "b"), cuckoo_buckets=1 << 10)
-    part = Crawl(spark, cfg_b)
-    part.run(spark.createDataFrame(seeds), rounds=1)
+    cfg_b, _, _ = crawled(tmp_path / "b", 30, 1, cuckoo_buckets=1 << 10)
+    seeds = make_seeds(cfg_b, 30)
     resumed = Crawl(spark, cfg_b)
     start, _bloom, cuckoo = resumed.resume_or_bootstrap(spark.createDataFrame(seeds))
     assert start == 1 and cuckoo is not None
@@ -215,7 +202,7 @@ def test_cuckoo_resume_restores_tier(spark, tmp_path):
         assert full.cat.content_digest(t) == resumed.cat.content_digest(t), t
 
 
-def test_cuckoo_resume_rebuilds_on_shape_change(spark, tmp_path):
+def test_cuckoo_resume_rebuilds_on_shape_change(spark, tmp_path, crawled):
     """Resuming with a RESIZED filter config must not silently load the
     old-shape checkpoint (ADVICE r3: a user who enlarges the filter
     after an over-capacity error would otherwise hit the same failure
@@ -228,9 +215,8 @@ def test_cuckoo_resume_rebuilds_on_shape_change(spark, tmp_path):
     from swmaestro_crawler_spark.schema import SEEN
     from swmaestro_crawler_spark.sources.synth_web import make_seeds
 
-    cfg_small = small_cfg(str(tmp_path / "wh"), cuckoo_buckets=1 << 10)
+    cfg_small, _, _ = crawled(tmp_path / "wh", 30, 1, cuckoo_buckets=1 << 10)
     seeds = make_seeds(cfg_small, 30)
-    Crawl(spark, cfg_small).run(spark.createDataFrame(seeds), rounds=1)
 
     cfg_big = small_cfg(str(tmp_path / "wh"), cuckoo_buckets=1 << 11)
     resumed = Crawl(spark, cfg_big)
@@ -253,7 +239,6 @@ def test_cuckoo_resume_rebuilds_on_shape_change(spark, tmp_path):
     )
     assert cuckoo.probe(seen_hashes).all()
     resumed.run(spark.createDataFrame(seeds), rounds=3)
-    full = Crawl(spark, small_cfg(str(tmp_path / "ref"), cuckoo_buckets=1 << 10))
-    full.run(spark.createDataFrame(seeds), rounds=3)
+    _, full, _ = crawled(tmp_path / "ref", 30, 3, cuckoo_buckets=1 << 10)
     for t in ("crawl_order", "seen", "spans"):
         assert full.cat.content_digest(t) == resumed.cat.content_digest(t), t

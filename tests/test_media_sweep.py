@@ -8,7 +8,6 @@ import hashlib
 from pyspark.sql import functions as F
 
 from swmaestro_crawler_spark.operators.multimodal import synth_blob
-from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.plans.media import (
     CONTENT_SPACE,
     MEDIA_BLOBS,
@@ -17,15 +16,10 @@ from swmaestro_crawler_spark.plans.media import (
     media_sweep,
 )
 from swmaestro_crawler_spark.schema import SPANS_DOC
-from swmaestro_crawler_spark.sources.synth_web import make_seeds
-from tests.conftest import small_cfg
 
 
-def _crawl(spark, tmp_path, rounds=2):
-    cfg = small_cfg(str(tmp_path / "wh"), max_rounds=rounds, max_depth=rounds)
-    c = Crawl(spark, cfg)
-    c.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=rounds)
-    return c
+def _crawl(crawled, tmp_path, rounds=2):
+    return crawled(tmp_path / "wh", 30, rounds, max_rounds=rounds, max_depth=rounds)[1]
 
 
 def _expected(spark, cat):
@@ -44,8 +38,8 @@ def _expected(spark, cat):
     return out
 
 
-def test_sweep_matches_scalar_oracle_and_dedups(spark, tmp_path):
-    c = _crawl(spark, tmp_path)
+def test_sweep_matches_scalar_oracle_and_dedups(spark, tmp_path, crawled):
+    c = _crawl(crawled, tmp_path)
     res = media_sweep(spark, c.cat)
     want = _expected(spark, c.cat)
     assert res.refs_seen == len(want) and res.refs_new == len(want)
@@ -66,8 +60,8 @@ def test_sweep_matches_scalar_oracle_and_dedups(spark, tmp_path):
         assert res.blobs_new < res.refs_new
 
 
-def test_second_sweep_is_noop(spark, tmp_path):
-    c = _crawl(spark, tmp_path)
+def test_second_sweep_is_noop(spark, tmp_path, crawled):
+    c = _crawl(crawled, tmp_path)
     media_sweep(spark, c.cat)
     s_refs = c.cat.current_snapshot("media_refs")
     s_blobs = c.cat.current_snapshot("media_blobs")
@@ -78,10 +72,10 @@ def test_second_sweep_is_noop(spark, tmp_path):
     assert c.cat.current_snapshot("media_blobs") == s_blobs
 
 
-def test_incremental_delta_sweep_equals_full(spark, tmp_path):
+def test_incremental_delta_sweep_equals_full(spark, tmp_path, crawled):
     """Sweep after round 1, then fold in round 2's spans via read_delta —
     final store equals a one-shot full sweep on a copied warehouse."""
-    c = _crawl(spark, tmp_path, rounds=3)
+    c = _crawl(crawled, tmp_path, rounds=3)
     spans_snaps = [
         s["id"] for s in c.cat._load_manifest("spans")["snapshots"]
     ]
@@ -128,11 +122,11 @@ def test_incremental_delta_sweep_equals_full(spark, tmp_path):
     assert ab == bb
 
 
-def test_crash_between_commits_recovers(spark, tmp_path):
+def test_crash_between_commits_recovers(spark, tmp_path, crawled):
     """Blobs commit before refs: simulate the crash window by sweeping,
     then dropping the refs table back to empty — the re-sweep re-resolves
     every ref but stores ZERO duplicate blobs."""
-    c = _crawl(spark, tmp_path)
+    c = _crawl(crawled, tmp_path)
     media_sweep(spark, c.cat)
     blobs_before = sorted(
         (r.content_key, bytes(r.blob))
@@ -149,8 +143,8 @@ def test_crash_between_commits_recovers(spark, tmp_path):
     assert c.cat.read("media_refs", MEDIA_REFS).count() == res.refs_new
 
 
-def test_media_lookup_roundtrip(spark, tmp_path):
-    c = _crawl(spark, tmp_path)
+def test_media_lookup_roundtrip(spark, tmp_path, crawled):
+    c = _crawl(crawled, tmp_path)
     media_sweep(spark, c.cat)
     some = (
         c.cat.read("media_refs", MEDIA_REFS)
@@ -226,7 +220,7 @@ def test_export_interleaved_unswept_refs_null_not_dropped(spark, cfg):
     assert media.filter(F.col("s.blob").isNotNull()).count() == 0
 
 
-def test_probe_mode_equals_legacy_fetch_all(spark, tmp_path):
+def test_probe_mode_equals_legacy_fetch_all(spark, tmp_path, crawled):
     """Probe-then-fetch (default) and the single-phase fetch-everything
     path (probe=None) must produce byte-identical MEDIA_REFS and
     MEDIA_BLOBS tables on the same warehouse."""
@@ -234,7 +228,7 @@ def test_probe_mode_equals_legacy_fetch_all(spark, tmp_path):
 
     from swmaestro_crawler_spark.catalog import Catalog
 
-    c = _crawl(spark, tmp_path)
+    c = _crawl(crawled, tmp_path)
     wh2 = str(tmp_path / "wh_legacy")
     shutil.copytree(c.cat.warehouse, wh2)
     cat2 = Catalog(spark, wh2)

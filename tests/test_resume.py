@@ -15,7 +15,6 @@ from swmaestro_crawler_spark.plans import crawl as crawl_mod
 from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.schema import CRAWL_ORDER
 from swmaestro_crawler_spark.sources.synth_web import make_seeds
-from tests.conftest import small_cfg
 
 TABLES = ("spans", "seen", "crawl_order", "dead", "pending")
 
@@ -33,17 +32,10 @@ def table_digest(crawl: Crawl, table: str) -> str:
     return h.hexdigest() + ":" + crawl.cat.content_digest(table)
 
 
-def test_resume_is_byte_identical(spark, tmp_path):
-    cfg_a = small_cfg(str(tmp_path / "a"), synth_fail_prob=0.15)
-    cfg_b = small_cfg(str(tmp_path / "b"), synth_fail_prob=0.15)
-    seeds_rows = make_seeds(cfg_a, 40)
-    seeds = spark.createDataFrame(seeds_rows)
-
-    a = Crawl(spark, cfg_a)
-    a.run(seeds, rounds=3)
-
-    b = Crawl(spark, cfg_b)
-    b.run(seeds, rounds=2)
+def test_resume_is_byte_identical(spark, tmp_path, crawled):
+    _, a, _ = crawled(tmp_path / "a", 40, 3, synth_fail_prob=0.15)
+    cfg_b, b, _ = crawled(tmp_path / "b", 40, 2, synth_fail_prob=0.15)
+    seeds = spark.createDataFrame(make_seeds(cfg_b, 40))
     # simulate a crash mid-round-2: some tables committed, checkpoint not
     junk = spark.createDataFrame([("http://x/", [], 99, "x")],
                                  "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, round int, host string")
@@ -68,20 +60,15 @@ def test_resume_is_byte_identical(spark, tmp_path):
     assert {t: b2.cat.current_snapshot(t) for t in crawl_mod.TABLES} == current
 
 
-def test_results_independent_of_parallelism(spark, tmp_path):
+def test_results_independent_of_parallelism(spark, tmp_path, crawled):
     """Same crawl at shuffle parallelism 3 vs 8 -> byte-identical tables
     (the sandbox stand-in for identical results at N vs 4N executors)."""
-    seeds = None
     digests = {}
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for par in ("3", "8"):
             spark.conf.set("spark.sql.shuffle.partitions", par)
-            cfg = small_cfg(str(tmp_path / f"p{par}"), synth_fail_prob=0.15)
-            if seeds is None:
-                seeds = spark.createDataFrame(make_seeds(cfg, 40))
-            c = Crawl(spark, cfg)
-            c.run(seeds, rounds=2)
+            _, c, _ = crawled(tmp_path / f"p{par}", 40, 2, synth_fail_prob=0.15)
             digests[par] = [table_digest(c, t) for t in TABLES]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

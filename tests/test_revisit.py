@@ -8,7 +8,6 @@ import shutil
 from pyspark.sql import functions as F
 
 from swmaestro_crawler_spark.catalog import Catalog
-from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.plans.revisit import (
     MAX_INTERVAL_ROUNDS,
     revisit_frontier,
@@ -16,19 +15,15 @@ from swmaestro_crawler_spark.plans.revisit import (
     run_revisit,
 )
 from swmaestro_crawler_spark.schema import SPANS_DOC
-from swmaestro_crawler_spark.sources.synth_web import make_seeds
 from tests.conftest import small_cfg
 
 
-def _crawl(spark, wh, rounds=2, seeds=30):
-    cfg = small_cfg(wh, max_rounds=rounds)
-    c = Crawl(spark, cfg)
-    c.run(spark.createDataFrame(make_seeds(cfg, seeds)), rounds=rounds)
-    return cfg, c
+def _crawl(crawled, wh, rounds=2, seeds=30):
+    return crawled(wh, seeds, rounds, max_rounds=rounds)[:2]
 
 
-def test_revisit_schedule_and_end_to_end(spark, tmp_path):
-    cfg, c = _crawl(spark, str(tmp_path / "wh"))
+def test_revisit_schedule_and_end_to_end(spark, tmp_path, crawled):
+    cfg, c = _crawl(crawled, str(tmp_path / "wh"))
     spans = c.cat.read("spans", SPANS_DOC)
     n_docs = spans.select("doc_id").distinct().count()
     assert n_docs > 50
@@ -66,8 +61,10 @@ def test_revisit_schedule_and_end_to_end(spark, tmp_path):
     assert revisit_frontier(c.cat, now_round=101).count() == n_docs - res["refetched_ok"]
 
 
-def test_revisit_is_deterministic_across_identical_warehouses(spark, tmp_path):
-    cfg, c = _crawl(spark, str(tmp_path / "wh1"), rounds=2, seeds=20)
+def test_revisit_is_deterministic_across_identical_warehouses(
+    spark, tmp_path, crawled
+):
+    cfg, c = _crawl(crawled, str(tmp_path / "wh1"), rounds=2, seeds=20)
     shutil.copytree(str(tmp_path / "wh1"), str(tmp_path / "wh2"))
     cat2 = Catalog(spark, str(tmp_path / "wh2"))
     run_revisit(spark, c.cat, cfg, now_round=50)

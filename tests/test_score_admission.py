@@ -91,33 +91,29 @@ def test_frontier_scores_rank_most_linked_first(spark):
     ).distinct().count()
 
 
-def _scored_crawl(spark, wh, par, score=True):
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
+def _scored_crawl(crawled, spark, wh, par, score=True):
     from tests.test_resume import TABLES, table_digest
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(par))
-        cfg = small_cfg(wh, per_host_cap=4, round_seconds=4.0,
-                        score_admission=score)
-        c = Crawl(spark, cfg)
-        c.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=3)
+        _, c, _ = crawled(wh, 30, 3, per_host_cap=4, round_seconds=4.0,
+                          score_admission=score)
         return [table_digest(c, t) for t in TABLES], c
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_scored_crawl_deterministic_across_parallelism(spark, tmp_path):
+def test_scored_crawl_deterministic_across_parallelism(spark, tmp_path, crawled):
     """End-to-end crawl with score_admission=True at shuffle parallelism
     3 vs 8 -> byte-identical tables (the sandbox stand-in for N vs 4N
     executors — VERDICT r3 item 6). The scored order must also actually
     CHANGE the crawl under a binding budget (else the flag is dead):
     crawl_order content differs from the LIFO run on the same seeds."""
-    d3, _ = _scored_crawl(spark, str(tmp_path / "p3"), 3)
-    d8, _ = _scored_crawl(spark, str(tmp_path / "p8"), 8)
+    d3, _ = _scored_crawl(crawled, spark, str(tmp_path / "p3"), 3)
+    d8, _ = _scored_crawl(crawled, spark, str(tmp_path / "p8"), 8)
     assert d3 == d8
-    lifo, _ = _scored_crawl(spark, str(tmp_path / "lifo"), 8, score=False)
+    lifo, _ = _scored_crawl(crawled, spark, str(tmp_path / "lifo"), 8, score=False)
     assert d8 != lifo
 
 

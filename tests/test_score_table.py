@@ -22,6 +22,12 @@ from swmaestro_crawler_spark.operators.scoretable import (
 from tests.conftest import small_cfg
 
 
+# the score-table crawl the end-to-end tests below share (binding budget)
+TABLE_CRAWL = dict(
+    per_host_cap=4, round_seconds=4.0, score_admission=True, score_table=True
+)
+
+
 def _edges(spark, pairs):
     return spark.createDataFrame(
         [(f"http://h/{d}", f"http://h/{s}") for s, d in pairs],
@@ -88,36 +94,26 @@ def test_contributions_are_layout_independent(spark):
     assert c == a
 
 
-def _table_crawl(spark, wh, par):
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
+def _table_crawl(crawled, spark, wh, par):
     from tests.test_resume import TABLES, table_digest
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(par))
-        cfg = small_cfg(
-            wh,
-            per_host_cap=4,
-            round_seconds=4.0,
-            score_admission=True,
-            score_table=True,
-        )
-        c = Crawl(spark, cfg)
-        c.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=3)
+        _, c, _ = crawled(wh, 30, 3, **TABLE_CRAWL)
         return [table_digest(c, t) for t in TABLES], c
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_table_backed_crawl_deterministic_and_consistent(spark, tmp_path):
+def test_table_backed_crawl_deterministic_and_consistent(spark, tmp_path, crawled):
     """End-to-end crawl on the standing score table: digest-identical
     across shuffle parallelism 3 vs 8 (including the link_scores table
     itself), the log's merged view is internally consistent, and the
     ranking provably changes the crawl vs LIFO under the binding
     budget."""
-    d3, _ = _table_crawl(spark, str(tmp_path / "p3"), 3)
-    d8, c = _table_crawl(spark, str(tmp_path / "p8"), 8)
+    d3, _ = _table_crawl(crawled, spark, str(tmp_path / "p3"), 3)
+    d8, c = _table_crawl(crawled, spark, str(tmp_path / "p8"), 8)
     assert d3 == d8
     # internal consistency: merge-on-read equals the sum of the per-round
     # deltas (every snapshot's rows), i.e. no append was lost or doubled
@@ -134,11 +130,11 @@ def test_table_backed_crawl_deterministic_and_consistent(spark, tmp_path):
     # change the crawl vs plain LIFO on the same seeds
     from tests.test_score_admission import _scored_crawl
 
-    lifo, _ = _scored_crawl(spark, str(tmp_path / "lifo"), 8, score=False)
+    lifo, _ = _scored_crawl(crawled, spark, str(tmp_path / "lifo"), 8, score=False)
     assert d8 != lifo
 
 
-def test_resume_rolls_back_score_table(spark, tmp_path):
+def test_resume_rolls_back_score_table(spark, tmp_path, crawled):
     """A killed-after-commit round must roll link_scores back with the
     other tables: resume from the round-1 checkpoint replays round 2's
     append exactly once (same final digests as the uninterrupted run)."""
@@ -146,25 +142,11 @@ def test_resume_rolls_back_score_table(spark, tmp_path):
     from swmaestro_crawler_spark.sources.synth_web import make_seeds
     from tests.test_resume import table_digest
 
-    cfg = small_cfg(
-        str(tmp_path / "wh"),
-        per_host_cap=4,
-        round_seconds=4.0,
-        score_admission=True,
-        score_table=True,
-    )
-    c = Crawl(spark, cfg)
+    cfg, c, _ = crawled(tmp_path / "wh", 30, 3, **TABLE_CRAWL)
     seeds = spark.createDataFrame(make_seeds(cfg, 30))
-    c.run(seeds, rounds=3)
     uninterrupted = table_digest(c, SCORES_TABLE)
 
-    cfg2 = small_cfg(
-        str(tmp_path / "wh2"),
-        per_host_cap=4,
-        round_seconds=4.0,
-        score_admission=True,
-        score_table=True,
-    )
+    cfg2 = small_cfg(str(tmp_path / "wh2"), **TABLE_CRAWL)
     c2 = Crawl(spark, cfg2)
     c2.run(seeds, rounds=2)
     # simulate a crash AFTER round 2's link_scores append but BEFORE its
@@ -177,27 +159,15 @@ def test_resume_rolls_back_score_table(spark, tmp_path):
     assert table_digest(c3, SCORES_TABLE) == uninterrupted
 
 
-def test_auto_compaction_is_read_invisible(spark, tmp_path):
+def test_auto_compaction_is_read_invisible(tmp_path, crawled):
     """cfg.score_compact_every: a crawl that compacts the contribution
     log every round must produce identical crawl_order/seen/spans (and
     every other table) digests as the compact-never crawl, an equal
     merged score view, and a strictly smaller contribution log."""
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
     from tests.test_resume import TABLES, table_digest
 
     def crawl(wh, every):
-        cfg = small_cfg(
-            wh,
-            per_host_cap=4,
-            round_seconds=4.0,
-            score_admission=True,
-            score_table=True,
-            score_compact_every=every,
-        )
-        c = Crawl(spark, cfg)
-        c.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=3)
-        return c
+        return crawled(wh, 30, 3, score_compact_every=every, **TABLE_CRAWL)[1]
 
     c_off = crawl(str(tmp_path / "off"), 0)
     c_on = crawl(str(tmp_path / "on"), 1)

@@ -6,19 +6,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from swmaestro_crawler_spark.plans.crawl import Crawl, warehouse_views
+from swmaestro_crawler_spark.plans.crawl import warehouse_views
 from swmaestro_crawler_spark.schema import CRAWL_ORDER, SPANS_DOC
-from swmaestro_crawler_spark.sources.synth_web import make_seeds
 
 
-def _crawl(spark, cfg, rounds=2):
-    c = Crawl(spark, cfg)
-    c.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=rounds)
-    return c
+def _crawl(crawled, cfg, rounds=2):
+    return crawled(cfg.warehouse, 30, rounds)[1]
 
 
-def test_sql_over_warehouse_matches_dataframe(spark, cfg):
-    c = _crawl(spark, cfg)
+def test_sql_over_warehouse_matches_dataframe(spark, cfg, crawled):
+    c = _crawl(crawled, cfg)
     names = c.cat.register_views(warehouse_views())
     assert set(names) >= {"spans", "crawl_order", "seen", "dead", "metrics"}
 
@@ -57,8 +54,8 @@ def test_sql_views_on_fresh_warehouse_parse(spark, cfg, tmp_path):
     assert "media_ref" in spark.sql("SELECT * FROM e_media_refs").columns
 
 
-def test_sql_views_pin_registration_snapshot(spark, cfg):
-    c = _crawl(spark, cfg, rounds=1)
+def test_sql_views_pin_registration_snapshot(spark, cfg, crawled):
+    c = _crawl(crawled, cfg, rounds=1)
     c.cat.register_views(warehouse_views(), prefix="v1_")
     before = spark.sql("SELECT count(*) AS n FROM v1_crawl_order").first().n
     # another round commits more rows; the registered view must still
@@ -70,12 +67,12 @@ def test_sql_views_pin_registration_snapshot(spark, cfg):
     assert after > before
 
 
-def test_consistent_views_pin_checkpointed_round(spark, cfg):
+def test_consistent_views_pin_checkpointed_round(spark, cfg, crawled):
     """register_consistent_views reads the checkpoint's atomically
     captured snapshot set — later commits (simulating the next round's
     in-flight bookkeeping) stay invisible, where plain register_views
     would tear."""
-    c = _crawl(spark, cfg, rounds=2)
+    c = _crawl(crawled, cfg, rounds=2)
     pinned = c.register_consistent_views(prefix="ck_")
     n_before = spark.sql("SELECT count(*) AS n FROM ck_crawl_order").first().n
     assert n_before > 0 and pinned["crawl_order"] >= 0

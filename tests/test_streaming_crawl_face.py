@@ -11,16 +11,13 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.schema import CRAWL_ORDER, METRICS
-from swmaestro_crawler_spark.sources.synth_web import make_seeds
 
 ORDER_DDL = "round int, ord long, url string, host string, depth int, ok boolean"
 
 
-def test_crawl_order_streams_to_per_round_counts(spark, cfg, tmp_path):
-    crawl = Crawl(spark, cfg)
-    results = crawl.run(spark.createDataFrame(make_seeds(cfg, 30)), rounds=3)
+def test_crawl_order_streams_to_per_round_counts(spark, cfg, tmp_path, crawled):
+    _, crawl, results = crawled(cfg.warehouse, 30, 3)
 
     data_dir = os.path.join(crawl.cat.warehouse, "crawl_order", "data")
     src = spark.readStream.schema(ORDER_DDL).parquet(data_dir)

@@ -68,15 +68,10 @@ def test_cap_is_deterministic_across_partitionings(spark, tmp_path):
     assert a == b
 
 
-def test_trap_guard_end_to_end_bounds_admissions(spark, tmp_path):
+def test_trap_guard_end_to_end_bounds_admissions(tmp_path, crawled):
     """A full crawl with the guard on still commits rounds and never
     admits more than cap per (host, template) in any round."""
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
-
-    cfg = small_cfg(str(tmp_path / "wh"), trap_template_cap=2)
-    crawl = Crawl(spark, cfg)
-    results = list(crawl.run(spark.createDataFrame(make_seeds(cfg, 20)), rounds=2))
+    _, crawl, results = crawled(tmp_path / "wh", 20, 2, trap_template_cap=2)
     assert len(results) == 2 and all(r.fetched_ok > 0 for r in results)
     from swmaestro_crawler_spark.schema import CRAWL_ORDER
 
