@@ -869,8 +869,10 @@ class Catalog:
         project: StructType | None = None,
     ) -> DataFrame:
         """The one reader of a table's data ``files`` (table relative)
-        under manifest ``m``: no files -> empty DF with the declared
-        schema; a schema-evolved table name-maps each file by its write
+        under manifest ``m``: no files -> an empty JVM ``LocalRelation``
+        with exactly the declared schema (non-null flags included; no
+        Python-RDD scan, and Catalyst can fold joins against it away);
+        a schema-evolved table name-maps each file by its write
         version (``_read_files_evolved``); a zero-copy table applies its
         ``row_filter``/``column_map`` props; else plain parquet under the
         declared schema. ``project`` prunes the scan (not on evolved
@@ -889,7 +891,13 @@ class Catalog:
 
         want = project or schema
         if not files:
-            return self.spark.createDataFrame([], want)
+            jss = self.spark._jsparkSession
+            return DataFrame(
+                jss.createDataFrame(
+                    self.spark._jvm.java.util.ArrayList(), jss.parseDataType(want.json())
+                ),
+                self.spark,
+            )
         if m.get("schema") is not None:
             return self._read_files_evolved(table, m, files, schema)
         paths = self._paths(table, files)

@@ -385,29 +385,6 @@ class PartitionedCuckoo:
         return out
 
 
-def cuckoo_probe_stage(
-    df: DataFrame,
-    tables_bc,
-    hash_col: str = "url_hash",
-    out_col: str = "cuckoo_seen",
-) -> DataFrame:
-    """Vectorized Arrow probe stage (the cuckoo twin of seen.bloom_probe):
-    adds a boolean ``out_col``. ``tables_bc`` broadcasts the (P, B, S)
-    uint16 array."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pc = PartitionedCuckoo(tables_bc.value)
-        for b in batches:
-            b[out_col] = pc.probe(b[hash_col].to_numpy(dtype=np.int64))
-            yield b
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, BooleanType(), False)]
-    )
-    return df.mapInPandas(probe, out_schema)
-
-
 def build_cuckoo_increment(
     df: DataFrame,
     current: PartitionedCuckoo,

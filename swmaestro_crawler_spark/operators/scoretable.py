@@ -84,9 +84,16 @@ def opic_contributions(links: DataFrame) -> DataFrame:
 
 def append_contributions(cat, links: DataFrame, round_no: int) -> int:
     """Append one round's contribution delta as a snapshot (O(delta)
-    write; no existing file touched)."""
+    write; no existing file touched). One file, sorted on the (unique)
+    url_hash: the aggregate's own output order follows its physical plan
+    — AQE's runtime choices, and whether the round's persisted outlinks
+    were already cached when the plan was made — so only an explicit
+    order makes the written bytes a function of the rows (byte-identical
+    resume, like every other bookkeeping write)."""
     return cat.append(
-        SCORES_TABLE, opic_contributions(links), meta={"round": round_no}
+        SCORES_TABLE,
+        opic_contributions(links).repartition(1).sortWithinPartitions("url_hash"),
+        meta={"round": round_no},
     )
 
 

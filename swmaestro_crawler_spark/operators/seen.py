@@ -7,9 +7,10 @@ insert (Utils/Insert_Nox_Data_to_DB.py:52), ``cid in ret_cids`` list scans
 (New_YouTube_Crawler_Comment.py:414-426) — with:
 
   tier 1  broadcast bloom bitmap, probed by a vectorized Arrow
-          ``mapInPandas`` stage (numpy bit ops, no row loop). No false
-          negatives: probe-negative rows are definitively unseen and skip
-          the shuffle entirely.
+          ``mapInPandas`` stage (numpy bit ops, no row loop; the optional
+          cuckoo tier re-probes the bloom positives in the same pass). No
+          false negatives: probe-negative rows are definitively unseen and
+          skip the shuffle entirely.
   tier 2  exact confirm for probe-positives only: left ANTI join against
           the ``seen`` table on url_hash. The table carries a murmur3_32
           ``fingerprint`` and a ``bucket = pmod(url_hash, B)`` column
@@ -102,13 +103,27 @@ def build_bloom_distributed(df: DataFrame, bits: int, k: int,
 
 
 def bloom_probe(df: DataFrame, bitmap_bc, k: int,
-                hash_col: str = "url_hash", out_col: str = "maybe_seen") -> DataFrame:
-    """Vectorized Arrow probe stage: adds a boolean ``out_col``."""
+                hash_col: str = "url_hash", out_col: str = "maybe_seen",
+                cuckoo_bc=None) -> DataFrame:
+    """Vectorized Arrow probe stage: adds a boolean ``out_col``, True where
+    every approximate tier says "maybe seen". With ``cuckoo_bc``
+    (broadcast (P, B, S) cuckoo tables) the bloom positives are
+    re-probed against the cuckoo in the SAME pass, so both tiers cost one
+    crossing into Python per row. Every tier is FN-free: False is
+    definitive."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bm = np.frombuffer(bitmap_bc.value, dtype=np.uint64)
+        if cuckoo_bc is not None:
+            from .cuckoo import PartitionedCuckoo
+
+            pc = PartitionedCuckoo(cuckoo_bc.value)
         for b in batches:
-            b[out_col] = _probe(bm, b[hash_col].to_numpy(dtype=np.int64), k)
+            h = b[hash_col].to_numpy(dtype=np.int64)
+            hit = _probe(bm, h, k)
+            if cuckoo_bc is not None:
+                hit[hit] = pc.probe(h[hit])
+            b[out_col] = hit
             yield b
 
     # fresh StructType — df.schema is cached on the DataFrame and .add mutates
@@ -116,33 +131,37 @@ def bloom_probe(df: DataFrame, bitmap_bc, k: int,
     return df.mapInPandas(probe, out_schema)
 
 
+def unseen_of_probed(probed: DataFrame, seen: DataFrame) -> DataFrame:
+    """Rows of an already-probed frame (``bloom_probe`` output) whose
+    url_hash is NOT in the seen set, without the ``maybe_seen`` column.
+
+    Probe-negative rows pass through with no shuffle; probe-positive rows
+    are confirmed by an anti-join on url_hash against the seen table.
+    Both branches read ``probed``, so a caller that persists it (the
+    round does, inside its dedup+robots node) runs the probe once."""
+    negatives = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+    confirmed_unseen = positives.join(seen.select("url_hash"), "url_hash", "left_anti")
+    return negatives.unionByName(confirmed_unseen)
+
+
 def filter_unseen(
     frontier: DataFrame, seen: DataFrame, bitmap_bc, k: int, cuckoo_bc=None
 ) -> DataFrame:
-    """frontier rows whose url_hash is NOT in the seen set.
+    """frontier rows whose url_hash is NOT in the seen set:
+    ``unseen_of_probed(bloom_probe(frontier, ...), seen)``.
 
-    bloom-negative rows pass through with no shuffle; bloom-positive rows
-    are confirmed by an anti-join on url_hash against the seen table.
     With the optional cuckoo tier on (``cuckoo_bc``: broadcast
     (P, B, S) fingerprint tables), bloom positives are re-probed at the
-    cuckoo's ~1e-4 FP rate first, so only its positives — truth plus a
-    sliver of double-FPs — reach the anti-join shuffle. Every tier is
-    FN-free, so the result is exactly ``frontier ANTI JOIN seen`` in all
-    configurations, just cheaper.
+    cuckoo's ~1e-4 FP rate in the same probe pass, so only its positives
+    — truth plus a sliver of double-FPs — reach the anti-join shuffle.
+    Every tier is FN-free, so the result is exactly
+    ``frontier ANTI JOIN seen`` in all configurations, just cheaper.
+    Nothing is persisted here, so both branches of ``unseen_of_probed``
+    re-run the probe; a pipeline that can cache the probed frame probes
+    once itself (``plans.round.unseen_frontier``).
     """
-    probed = bloom_probe(frontier, bitmap_bc, k)
-    negatives = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    if cuckoo_bc is not None:
-        from .cuckoo import cuckoo_probe_stage
-
-        cprobed = cuckoo_probe_stage(positives, cuckoo_bc)
-        negatives = negatives.unionByName(
-            cprobed.filter(~F.col("cuckoo_seen")).drop("cuckoo_seen")
-        )
-        positives = cprobed.filter(F.col("cuckoo_seen")).drop("cuckoo_seen")
-    confirmed_unseen = positives.join(seen.select("url_hash"), "url_hash", "left_anti")
-    return negatives.unionByName(confirmed_unseen)
+    return unseen_of_probed(bloom_probe(frontier, bitmap_bc, k, cuckoo_bc=cuckoo_bc), seen)
 
 
 def as_seen_rows(fetched_ok: DataFrame, buckets: int, round_: int) -> DataFrame:

@@ -4,9 +4,17 @@ The reference's round is a supervisor-gated stage sequence — seed the
 queue, spawn workers, poll queue depth to zero (supervisor.py:38-196).
 Here a round is:
 
-    pending --dedup--> --robots--> --bloom+anti-join seen-->
+    pending --dedup--> --bloom(+cuckoo) probe--> --robots-->
+            [persisted: robots_joined] --anti-join probe positives-->
             --politeness admit--> --salted-bucket fetch-->
             --span docs / seen / crawl-order / retries / outlinks-->
+
+A row crosses into Python once per kind of work per round: the
+seen-tier probe runs inside the persisted dedup+robots node, so both
+branches of the unseen filter read its cached ``maybe_seen``; outlinks
+are exploded and canonicalized once into a persisted frame that every
+pending branch reads. The crawl-order rank is a JVM projection, and an
+empty table reads as a JVM ``LocalRelation`` (``Catalog._scan``).
 
 Every ordering decision is derived from data (PRIORITY keys), never from
 task timing, so the crawl order is identical at local[8] and local[32]
@@ -32,7 +40,12 @@ from ..operators.politeness import (
     split_admitted,
     split_robots_excluded,
 )
-from ..operators.seen import as_seen_rows, build_bloom_distributed, filter_unseen
+from ..operators.seen import (
+    as_seen_rows,
+    bloom_probe,
+    build_bloom_distributed,
+    unseen_of_probed,
+)
 from ..sources.synth_web import SPANSEP as SPANSEP_LIT
 from ..schema import CRAWL_ORDER, DEAD, FRONTIER, LINEAGE, METRICS, SEEN, SPANS_DOC
 
@@ -57,14 +70,17 @@ def with_global_ord(
     one task — the serial stage that would cap scaling at 4N executors).
 
     Scalable zipWithIndex: (1) ``repartitionByRange`` + sort-within = a
-    fully parallel global sort whose partition ids follow key order;
-    (2) one tiny job collects per-partition row counts -> prefix offsets;
-    (3) an Arrow ``mapInPandas`` pass assigns ``offset[pid] + arange`` —
-    order-preserving, no shuffle. The RANK VALUES are deterministic for a
-    given input (``sort_cols`` is a total order, so the global position
-    of every row is boundary-independent). Returns
-    (ranked_df, persisted_handle); caller unpersists the handle after
-    consuming ranked_df.
+    fully parallel global sort whose partition ids follow key order,
+    persisted; (2) one tiny job collects per-partition row counts ->
+    prefix offsets; (3) a JVM projection over the persisted frame adds
+    ``offset[pid]`` and the row's position within its partition
+    (``monotonically_increasing_id`` minus ``pid << 33``) — no Python
+    worker, no shuffle, and no dependence on Arrow batch boundaries.
+    ``ord`` stays a non-null long: the offset lookup is ``coalesce``d
+    with a literal. The RANK VALUES are deterministic for a given input
+    (``sort_cols`` is a total order, so the global position of every row
+    is boundary-independent). Returns (ranked_df, persisted_handle);
+    caller unpersists the handle after consuming ranked_df.
 
     The range PARTITIONING itself is NOT run-reproducible at scale:
     Spark's RangePartitioner seeds its reservoir sampling with the
@@ -79,9 +95,6 @@ def with_global_ord(
     every row's file assignment (a contiguous ord block per file) is
     identical across runs regardless of sampling; writers whose output
     feeds byte-level digests (crawl_order) must use it."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
     s = (
         df.repartitionByRange(n_parts, *sort_cols)
         .sortWithinPartitions(*sort_cols)
@@ -89,34 +102,55 @@ def with_global_ord(
         .persist()
     )
     counts = {r["_pid"]: r["count"] for r in s.groupBy("_pid").count().collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
 
-    out_schema = StructType(
-        [f for f in s.schema.fields if f.name != "_pid"]
-        + [StructField(out_col, LongType(), False)]
+    # A projection straight over the cached scan runs one task per cached
+    # partition and sees its rows in their sorted order, so the
+    # monotonically_increasing_id row counter is the position in _pid.
+    pid = F.col("_pid")
+    offset = F.element_at(F.array(*[F.lit(o).cast("long") for o in offsets]), pid + 1)
+    pos = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    ranked = s.select(
+        *[c for c in s.columns if c != "_pid"],
+        (F.coalesce(offset, F.lit(0).cast("long")) + pos).alias(out_col),
     )
-
-    def add_ord(batches):
-        done = 0
-        for b in batches:
-            if len(b) == 0:
-                continue
-            base = offsets[int(b["_pid"].iloc[0])]
-            b = b.drop(columns=["_pid"])
-            b[out_col] = base + done + pd.RangeIndex(len(b))
-            done += len(b)
-            yield b
-
-    ranked = s.mapInPandas(add_ord, out_schema)
     if deterministic_layout:
         block = max(1, -(-acc // n_parts))  # ceil(total / n_parts)
         ranked = ranked.repartition(
             n_parts, F.floor(F.col(out_col) / F.lit(block)).cast("long")
         ).sortWithinPartitions(out_col)
     return ranked, s
+
+
+def unseen_frontier(
+    pending: DataFrame,
+    robots: DataFrame,
+    seen: DataFrame,
+    bitmap_bc,
+    k: int,
+    cuckoo_bc=None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Steps 1-3 of a round: (unseen, excluded, robots_joined).
+
+    1. frontier dedup (window, one row per url_hash);
+    2. seen-tier probe: one Arrow pass adds ``maybe_seen`` (bloom, then
+       the cuckoo re-probe of the bloom positives when ``cuckoo_bc`` is
+       given), then the robots exclusion (broadcast dim join);
+    3. exact confirm: probe positives anti-join ``seen``.
+
+    ``robots_joined`` is the dedup+probe+robots node, returned PERSISTED
+    (the caller releases it): the allowed chain (-> fetch), the excluded
+    chain (-> dead letters) and both branches of the unseen filter
+    (probe negatives, anti-join of probe positives) read the one cached
+    copy, so the dedup window shuffle and the probe each run once per
+    round, not once per consumer."""
+    probed = bloom_probe(dedup_frontier(pending), bitmap_bc, k, cuckoo_bc=cuckoo_bc)
+    allowed, excluded, robots_joined = split_robots_excluded(probed, robots)
+    robots_joined.persist()
+    return unseen_of_probed(allowed, seen), excluded, robots_joined
 
 
 class _StepTimer:
@@ -160,15 +194,15 @@ class RoundHandle:
     returned: the still-running bookkeeping futures (all SIX bookkeeping
     jobs were launched together, but only the three the next round
     consumes were joined), the executor to shut down, the fetched/seen/
-    pending snapshot ids the metrics are derived from, and the cached
-    frames to unpersist."""
+    pending snapshot ids the metrics are derived from, and the round's
+    persisted frames (robots_joined, unseen, the canonical outlinks),
+    which ``finish_round`` releases."""
 
     round: int
     sids: dict[str, int]
     futures: dict  # name -> Future: order, dead, counts (still running)
     executor: object  # ThreadPoolExecutor to shut down in finish_round
-    unseen: DataFrame
-    robots_joined: DataFrame
+    persisted: tuple[DataFrame, ...]
     tm: _StepTimer
 
 
@@ -207,26 +241,20 @@ def run_round_critical(
             cat.read("host_stats", HOST_STATS), cfg.backoff_max_exp
         )
 
-    # 1. frontier dedup (window, one row per url_hash)
-    deduped = dedup_frontier(pending)
-
-    # 2. robots exclusion (broadcast dim join). The dedup+robots prefix is
-    #    shared by the allowed chain (-> fetch) and the excluded chain
-    #    (-> dead letters); persisting the common node means the window
-    #    shuffle runs once per round, not once per consumer.
-    allowed, excluded, robots_joined = split_robots_excluded(deduped, robots)
-    robots_joined.persist()
-
-    # 3. two-tier unseen filter (bloom probe -> exact anti-join confirm).
-    #    Persisted: both the admitted chain (fetch) and the deferred chain
-    #    (next-round pending) hang off it.
+    # 1-3. frontier dedup, seen-tier probe (bloom, then cuckoo on its
+    #    positives) and robots exclusion in ONE persisted node
+    #    (robots_joined); the exact anti-join confirms only the probe
+    #    positives (unseen_frontier). ``unseen`` is persisted too: both
+    #    the admitted chain (fetch) and the deferred chain (next-round
+    #    pending) hang off it.
     bitmap_bc = spark.sparkContext.broadcast(bloom.tobytes())
     cuckoo_bc = (
         spark.sparkContext.broadcast(cuckoo.tables) if cuckoo is not None else None
     )
-    unseen = filter_unseen(
-        allowed, seen, bitmap_bc, cfg.bloom_hashes, cuckoo_bc
-    ).persist()
+    unseen, excluded, robots_joined = unseen_frontier(
+        pending, robots, seen, bitmap_bc, cfg.bloom_hashes, cuckoo_bc
+    )
+    unseen.persist()
 
     # 4. politeness admission (rank vs crawl-delay budget), optionally
     #    preceded by the spider-trap guard: at most trap_template_cap
@@ -369,7 +397,11 @@ def run_round_critical(
 
     # frontier expansion: outlinks -> next round's pending rows (LAZY —
     # built here so job_pending and the optional job_scores share one
-    # definition; nothing executes until those jobs run).
+    # definition; nothing executes until those jobs run). The exploded,
+    # canonicalized outlinks are PERSISTED (released in finish_round):
+    # the cut-parent, continuation and rest branches of job_pending and
+    # job_scores all read that one copy, so the canonicalization UDF
+    # runs once per outlink per round.
     # O5/V4 pagination cutoff: the reference kills a playlist's whole
     # pagination chain on the first already-seen video
     # (New_YouTube_Crawler.py:263-273, keep_going=False). Batch
@@ -393,10 +425,10 @@ def run_round_critical(
             ).alias("seq", "url"),
         )
         .transform(with_canonical)
+        .drop("fingerprint")
+        .persist()
     )
     if cfg.playlist_cutoff:
-        from ..operators.seen import bloom_probe
-
         is_pl_parent = F.col("parent").rlike("://[^/]*/pl/")
         is_pl_child = F.col("url").rlike("://[^/]*/pl/")
         watch_children = links_exploded.filter(is_pl_parent & ~is_pl_child).select(
@@ -583,8 +615,7 @@ def run_round_critical(
         sids={"fetched": sid_fetch, "seen": sid_seen, "pending": sid_pending},
         futures={k: futs[k] for k in ("order", "dead", "counts")},
         executor=ex,
-        unseen=unseen,
-        robots_joined=robots_joined,
+        persisted=(robots_joined, unseen, links_exploded),
         tm=tm,
     )
 
@@ -650,7 +681,7 @@ def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
     ]
     cat.append_rows("lineage", lineage_rows, LINEAGE, meta={"round": r})
     tm.done()
-    for handle in (h.unseen, h.robots_joined):
+    for handle in h.persisted:
         handle.unpersist()
 
     return RoundResult(

@@ -189,3 +189,19 @@ def test_projected_read_prunes_nested_scan(spark, cfg):
         for r in full.collect()
     )
     assert a == b and a
+
+
+@pytest.mark.parametrize("name", ["SEEN", "FETCHED", "SPANS_DOC", "CRAWL_ORDER"])
+def test_empty_table_reads_in_the_jvm(spark, tmp_path, name):
+    """A table with no snapshot reads as an empty JVM ``LocalTableScan``
+    with exactly the declared schema — nested types and non-null flags
+    included — not as a Python-RDD scan."""
+    from swmaestro_crawler_spark import schema as S
+    from swmaestro_crawler_spark.operators.fetch import FETCHED
+
+    declared = FETCHED if name == "FETCHED" else getattr(S, name)
+    df = Catalog(spark, str(tmp_path / "wh")).read(name.lower(), declared)
+    assert df.schema.json() == declared.json()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df.count() == 0

@@ -78,6 +78,54 @@ def test_global_ord_has_no_single_partition_exchange(spark):
     handle.unpersist()
 
 
+@pytest.mark.parametrize(
+    "in_parts,n_parts,batch,layout",
+    [
+        (1, 8, 10_000, False),
+        (8, 8, 7, False),
+        (3, 8, 7, True),
+        # more range partitions requested than rows: the partitions past
+        # the sampled range bounds receive no rows, and most of the
+        # deterministic-layout exchange's partitions are empty
+        (5, 256, 7, True),
+    ],
+)
+def test_global_ord_is_invariant_and_python_free(spark, in_parts, n_parts, batch, layout):
+    """The rank equals a driver-side sort of the same rows whatever the
+    input partitioning, the Arrow batch size or the number of empty
+    partitions, stays a non-null long, and is computed without a Python
+    worker (a JVM projection over the persisted range sort)."""
+    from pyspark.sql.types import LongType, StructField
+
+    from swmaestro_crawler_spark.plans.round import with_global_ord
+
+    n = 150
+    df = (
+        spark.range(0, n, 1, 4)
+        .select(
+            F.xxhash64("id").alias("url_hash"),
+            (F.col("id") % 4).cast("int").alias("depth"),
+            (F.col("id") % 11).alias("seq"),
+        )
+        .repartition(in_parts, "seq")
+    )
+    keys = [F.col("depth").desc(), F.col("seq").asc(), F.col("url_hash").asc()]
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+    try:
+        ranked, handle = with_global_ord(df, keys, n_parts, deterministic_layout=layout)
+        plan = plan_of(ranked)
+        got = {r.url_hash: r.ord for r in ranked.collect()}
+        handle.unpersist()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    for python_node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert python_node not in plan
+    assert ranked.schema["ord"] == StructField("ord", LongType(), False)
+    rows = sorted(df.collect(), key=lambda r: (-r.depth, r.seq, r.url_hash))
+    assert got == {r.url_hash: i for i, r in enumerate(rows)}
+
+
 def test_fetch_stage_partition_count_is_explicit(spark, cfg):
     """The fetch stage pins its partition count (frontier_partitions) so
     AQE cannot coalesce it below cluster parallelism, and spreads a host
@@ -334,3 +382,72 @@ def test_quantile_sketch_sample_is_salted_two_phase(spark):
         "full-table rows reached a plain (grp) exchange before the salted"
         " sub-bucket rank"
     )
+
+
+def _executed_nodes(df) -> list:
+    """Every distinct physical node an action over ``df`` ran, walking into
+    AQE query stages and the cached plans behind ``InMemoryTableScan``.
+    A cached plan read by several branches is the same JVM object, so it
+    is listed once."""
+    jvm = df._sc._jvm
+    todo, ids, out = [df._jdf.queryExecution().executedPlan()], set(), []
+    while todo:
+        node = todo.pop()
+        key = jvm.System.identityHashCode(node)
+        if key in ids:
+            continue
+        ids.add(key)
+        out.append(node)
+        for seq in (node.children(), node.innerChildren()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+    return out
+
+
+@pytest.mark.parametrize("with_cuckoo", [False, True])
+def test_round_unseen_filter_probes_each_row_once(spark, with_cuckoo):
+    """The round's unseen filter runs the seen-tier probe (bloom, plus the
+    cuckoo re-probe when that tier is on) in ONE executed Arrow stage,
+    inside the persisted dedup+robots node that both branches of the
+    filter read — not once per branch."""
+    import numpy as np
+
+    from swmaestro_crawler_spark.operators.cuckoo import PartitionedCuckoo
+    from swmaestro_crawler_spark.operators.seen import bloom_add, empty_bloom
+    from swmaestro_crawler_spark.plans.round import unseen_frontier
+    from swmaestro_crawler_spark.schema import FRONTIER, ROBOTS, SEEN
+
+    n = 400
+    pending = spark.createDataFrame(
+        [(f"http://h{i % 5}.test/p/{i}", i, f"h{i % 5}.test", 1, i, 0, 0, None)
+         for i in range(n)],
+        FRONTIER,
+    )
+    robots = spark.createDataFrame(
+        [(f"h{h}.test", 0.1, ["/p/1"] if h == 0 else [], [], 0) for h in range(5)],
+        ROBOTS,
+    )
+    seen_keys = np.arange(0, n, 3, dtype=np.int64)
+    seen = spark.createDataFrame(
+        [(int(k), 0, 0, 0) for k in seen_keys], SEEN
+    )
+    bitmap_bc = spark.sparkContext.broadcast(
+        bloom_add(empty_bloom(1 << 16), seen_keys, 5).tobytes()
+    )
+    cuckoo_bc = (
+        spark.sparkContext.broadcast(PartitionedCuckoo.empty(2, 64).insert(seen_keys).tables)
+        if with_cuckoo else None
+    )
+    unseen, excluded, joined = unseen_frontier(pending, robots, seen, bitmap_bc, 5, cuckoo_bc)
+    got = {r.url_hash for r in unseen.collect()}
+    blocked = {r.url_hash for r in excluded.collect()}
+    assert got == {i for i in range(n) if i % 3 and i not in blocked} and blocked
+
+    probes = [x for x in _executed_nodes(unseen) if x.nodeName() == "MapInPandas"]
+    joined.unpersist()
+    assert len(probes) == 1, [p.toString() for p in probes]
+    assert "maybe_seen" in probes[0].toString()

@@ -16,8 +16,9 @@ the OTHER regime directly:
 - the frontier is 2M URLs with 20% true duplicates (revisit/duplicate
   pressure — dup rows hit the confirm join under EVERY configuration;
   only the FP traffic is tier-avoidable);
-- both arms run the engine's own ``seen.filter_unseen`` (the exact path
-  ``plans/round.py`` executes), interleaved off/on, REPEATS per arm,
+- both arms run the engine's own ``seen.filter_unseen`` (the probe and
+  confirm ``plans/round.py`` executes, without the round's cache of the
+  probed frame), interleaved off/on, REPEATS per arm,
   all walls recorded, result counts asserted EQUAL across arms (the
   FN-free contract);
 - structures are built with the engine's own distributed builders
@@ -80,7 +81,6 @@ def main() -> None:
     from swmaestro_crawler_spark.operators.cuckoo import (
         PartitionedCuckoo,
         build_cuckoo_increment,
-        cuckoo_probe_stage,
     )
     from swmaestro_crawler_spark.operators.seen import (
         bloom_probe,
@@ -142,16 +142,12 @@ def main() -> None:
         n_frontier = frontier.count()
 
         # diagnostics (untimed): per-tier confirm-join input sizes
-        probed = bloom_probe(frontier, bitmap_bc, BLOOM_K).persist()
-        bloom_pos = probed.filter("maybe_seen").count()
+        bloom_pos = bloom_probe(frontier, bitmap_bc, BLOOM_K).filter("maybe_seen").count()
         cuckoo_pos = (
-            cuckoo_probe_stage(
-                probed.filter("maybe_seen").drop("maybe_seen"), cuckoo_bc
-            )
-            .filter("cuckoo_seen")
+            bloom_probe(frontier, bitmap_bc, BLOOM_K, cuckoo_bc=cuckoo_bc)
+            .filter("maybe_seen")
             .count()
         )
-        probed.unpersist()
         fp_rate = round((bloom_pos - n_dup) / (n_frontier - n_dup), 4)
 
         walls = {"off": [], "on": []}
