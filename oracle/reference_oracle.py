@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from swmaestro_crawler_spark.config import CrawlConfig
 from swmaestro_crawler_spark.functions.canonical import canonicalize_one
 from swmaestro_crawler_spark.functions.hashing import murmur3_32_str, xxhash64_str
+from swmaestro_crawler_spark.operators.politeness import BACKOFF_MAX_EXP
 from swmaestro_crawler_spark.sources import synth_web
 
 
@@ -136,9 +137,7 @@ def run_oracle(seeds: list[dict], cfg: CrawlConfig, rounds: int | None = None) -
             if cfg.adaptive_backoff:
                 # exact power-of-two factor -> identical IEEE double
                 # arithmetic on both sides
-                delay = delay * float(
-                    1 << min(backoff_streak.get(host, 0), cfg.backoff_max_exp)
-                )
+                delay = delay * float(1 << min(backoff_streak.get(host, 0), BACKOFF_MAX_EXP))
             # math.floor(a / b), NOT a // b: Python floor-division computes
             # floor((a - a%b)/b) which disagrees with IEEE a/b for 6.0/0.2
             # (29.0 vs 30.0); Spark's F.floor(lit(a)/col(b)) is the latter.

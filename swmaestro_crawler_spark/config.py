@@ -1,15 +1,16 @@
 """Engine configuration.
 
-All knobs that affect the data path are pinned here so runs are
-reproducible across cluster sizes (the N vs 4N crawl-order/byte-identity
-requirement): partition counts come from config, never from the number of
+Every knob that affects the data path is pinned, here or as a module
+constant next to its single user, so runs are reproducible across cluster
+sizes (the N vs 4N crawl-order/byte-identity requirement): partition
+counts come from config or module constants, never from the number of
 cores available at runtime.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -33,11 +34,10 @@ class CrawlConfig:
     #                                the reference-parity setting)
 
     # partitioning (fixed, cluster-size independent — required for
-    # deterministic crawl order and byte-identical resume)
+    # deterministic crawl order and byte-identical resume; the per-host
+    # sub-bucket counts are the constants operators/politeness.
+    # ADMISSION_SALTS and operators/fetch.FETCH_HOST_SPLITS)
     frontier_partitions: int = 32
-    host_salt: int = 0x5EED          # salted host bucketing (axis B: skew)
-    admission_salts: int = 16        # sub-buckets per host in two-phase top-k
-    fetch_host_splits: int = 8       # sub-buckets per host in the fetch stage
     seen_buckets: int = 64           # bucket count of the exact seen table
 
     # bloom tier
@@ -48,7 +48,7 @@ class CrawlConfig:
     # cuckoo -> exact anti-join; None = off). 16-bit fingerprints at
     # ~1e-4 FP re-probe the bloom's false positives so only a sliver
     # pays the exact-confirm shuffle; FN-free, so digests are identical
-    # either way. Size parts*buckets*slots >= ~1.05x expected seen URLs.
+    # either way. Size parts*buckets*4 slots >= ~1.05x expected seen URLs.
     #
     # Regime guidance (measured): the tier's fixed cost is the
     # per-round filter rebuild/increment plus the fused-fetch probe —
@@ -62,14 +62,10 @@ class CrawlConfig:
     # tier's fixed per-round cost does the tier win — with the default
     # ~1% bloom FP target that crossover sits around 10^8-10^9 seen
     # URLs (where the exact seen table no longer fits a
-    # broadcast/local join and each confirm is a real shuffle).
-    # cuckoo_min_expected_urls makes the guidance loud: enabling the
-    # tier while declaring a smaller expected frontier warns.
+    # broadcast/local join and each confirm is a real shuffle). Leave
+    # cuckoo_buckets=None below ~1e8 URLs.
     cuckoo_buckets: int | None = None  # buckets PER SHARD; power of two
-    cuckoo_slots: int = 4
     cuckoo_parts: int = 8            # disjoint key shards (mod url_hash)
-    cuckoo_min_expected_urls: int = 100_000_000  # warn-below threshold
-    expected_urls: int | None = None  # declared target frontier scale
 
     # storage
     warehouse: str = "./warehouse"
@@ -93,24 +89,8 @@ class CrawlConfig:
         if self.cuckoo_buckets is not None:
             if self.cuckoo_buckets < 2 or self.cuckoo_buckets & (self.cuckoo_buckets - 1):
                 raise ValueError("cuckoo_buckets must be a power of two >= 2")
-            if self.cuckoo_parts < 1 or self.cuckoo_slots < 1:
-                raise ValueError("cuckoo_parts and cuckoo_slots must be >= 1")
-            if (
-                self.expected_urls is not None
-                and self.expected_urls < self.cuckoo_min_expected_urls
-            ):
-                import warnings
-
-                warnings.warn(
-                    "cuckoo tier enabled below its measured payoff regime "
-                    f"(expected_urls={self.expected_urls:,} < "
-                    f"{self.cuckoo_min_expected_urls:,}): the tier's fixed "
-                    "per-round cost exceeds the avoided exact-confirm "
-                    "shuffle at this scale (BENCH/cuckoo_ab.json); output "
-                    "is identical either way (FN-free) but wall will be "
-                    "higher. Leave cuckoo_buckets=None below ~1e8 URLs.",
-                    stacklevel=2,
-                )
+            if self.cuckoo_parts < 1:
+                raise ValueError("cuckoo_parts must be >= 1")
         if not (0.0 <= self.synth_fail_prob < 1.0):
             raise ValueError("synth_fail_prob must be in [0, 1)")
         if not (0.0 <= self.synth_fatal_prob < 1.0):
@@ -124,7 +104,6 @@ class CrawlConfig:
 
     # synthetic web (sandbox transport; swap for an HTTP fetcher in prod)
     synth_n_hosts: int = 200
-    synth_zipf_s: float = 1.2
     synth_seed: int = 42
     synth_fail_prob: float = 0.02    # transient; deterministic per (url, attempt)
     synth_fatal_prob: float = 0.02   # URL-permanent 403/413 (straight to dead,
@@ -147,12 +126,11 @@ class CrawlConfig:
 
     # adaptive per-host backoff (operators/politeness.host_backoff_factors):
     # a host whose observed rounds keep majority-failing with transient
-    # errors gets its effective crawl-delay stretched 2^min(streak,
-    # backoff_max_exp) — the Heritrix/Nutch adaptive-politeness behavior.
+    # errors gets its effective crawl-delay stretched 2^min(streak, 4)
+    # — the Heritrix/Nutch adaptive-politeness behavior.
     # Off by default: crawl-order parity vs the reference oracle assumes
     # the reference's fixed delays.
     adaptive_backoff: bool = False
-    backoff_max_exp: int = 4
 
     # robots.txt TTL revalidation: every N rounds the crawler re-fetches
     # and re-parses every known host's robots.txt and OVERWRITES the
@@ -174,24 +152,15 @@ class CrawlConfig:
                                      # (see sources/synth_web.parse_work)
 
     # importance-first admission: spend each host's politeness budget on
-    # the most-linked pending URLs first (PageRank over the round's
-    # parent->url edges, operators/politeness.frontier_scores) instead of
+    # the most-linked pending URLs first (OPIC in-link mass over the
+    # round's parent->url edges, operators/politeness.frontier_scores,
+    # which orders URLs as one PageRank superstep does) instead of
     # the reference's LIFO order. OFF by default — crawl-order parity vs
     # the reference oracle is a correctness criterion; the scored order
     # is int64-exact and therefore still deterministic at any
     # parallelism (pinned by tests/test_score_admission.py and the
     # SCALING_SCORE=1 digest check in tools/bench_scaling.py)
     score_admission: bool = False
-
-    # Supersteps for the admission score. 1 (default) is the OPIC-shaped
-    # fast path: outdegree-normalized in-link mass, ordering-identical
-    # to one full PageRank superstep but only 3 edge-list shuffles and
-    # fully fused into the admission job (politeness.frontier_scores).
-    # 2-4 run true lazy PageRank supersteps; >4 falls back to the eager
-    # checkpointed pagerank. Ranking the budgeted top-k never needs
-    # converged values — more supersteps buy ranking depth at ~2 extra
-    # edge-list shuffles each.
-    score_iters: int = 1
 
     # Standing score table instead of per-round recompute
     # (operators/scoretable): OPIC contributions append per round

@@ -64,6 +64,20 @@ FETCHED = StructType(
     ]
 )
 
+HOST_SALT = 0x5EED      # salt of the host sub-bucket hash
+FETCH_HOST_SPLITS = 8   # sub-buckets per host in the fetch stage
+
+
+def _by_host_sub_bucket(admitted: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """The fetch stage's input partitioning, shared by both writers:
+    ``xxhash64(host, HOST_SALT, pmod(url_hash, FETCH_HOST_SPLITS))`` over
+    ``frontier_partitions`` partitions."""
+    sub_bucket = F.xxhash64(
+        F.col("host"), F.lit(HOST_SALT), F.pmod(F.col("url_hash"), F.lit(FETCH_HOST_SPLITS))
+    )
+    return admitted.repartition(cfg.frontier_partitions, sub_bucket)
+
+
 # batch transport: whole sorted partition -> (status codes, payload, links).
 # status: 200 ok; 403/413 fatal (straight to dead, reference
 # New_YouTube_Crawler_Comment.py:50-52 aborts with no retry); 500 transient
@@ -137,15 +151,8 @@ def fetch_stage(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
     def run_partition(batches):
         yield from _fetched_batches(batches, transport_factory, cfg, round_no)
 
-    sub_bucket = F.xxhash64(
-        F.col("host"), F.lit(cfg.host_salt), F.pmod(F.col("url_hash"), F.lit(cfg.fetch_host_splits))
-    )
     cols = [f.name for f in FETCHED.fields]
-    return (
-        admitted.repartition(cfg.frontier_partitions, sub_bucket)
-        .mapInArrow(run_partition, FETCHED)
-        .select(*cols)
-    )
+    return _by_host_sub_bucket(admitted, cfg).mapInArrow(run_partition, FETCHED).select(*cols)
 
 
 _FLAT_COLS = [f.name for f in FRONTIER.fields] + ["fingerprint"]
@@ -291,9 +298,4 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
             names=["part", "rows"],
         )
 
-    sub_bucket = F.xxhash64(
-        F.col("host"), F.lit(cfg.host_salt), F.pmod(F.col("url_hash"), F.lit(cfg.fetch_host_splits))
-    )
-    return admitted.repartition(cfg.frontier_partitions, sub_bucket).mapInArrow(
-        run_partition, FETCH_STATS
-    )
+    return _by_host_sub_bucket(admitted, cfg).mapInArrow(run_partition, FETCH_STATS)

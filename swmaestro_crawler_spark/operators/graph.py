@@ -26,10 +26,9 @@ degree. Node ids are disjoint: customers 2k, suppliers 2k+1. Every node
 has outdeg ≥ 1 by construction (nodes exist only via edges), so there is
 no dangling-mass term; floor division leaks O(outdeg) rank units per
 node per step — disclosed, identical in both engines. On a general
-directed graph (e.g. the discovered URL graph feeding
-politeness.score_admitted), nodes are src UNION dst: sink pages hold
-rank and accumulate inlink mass but redistribute nothing — the
-standard dangling simplification, disclosed (total mass decays toward
+directed graph (e.g. the discovered URL graph), nodes are src UNION
+dst: sink pages hold rank and accumulate inlink mass but redistribute
+nothing — the standard dangling simplification, disclosed (total mass decays toward
 the teleport floor instead of being renormalized).
 
 Overflow bound: total mass ≈ N·SCALE; with N ≤ 1e6 nodes and
@@ -47,6 +46,7 @@ PR_SCALE = 1_000_000_000  # initial per-node rank mass (fixed-point unit)
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping d = 0.85 as an exact ratio
 PR_BASE = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // PR_DAMP_DEN  # (1-d)·SCALE
 PR_ITERS = 6
+PR_CHECKPOINT_EVERY = 2  # supersteps between rank-vector lineage cuts
 
 
 def purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,20 +82,16 @@ def purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = PR_ITERS,
-    materialize: bool = True,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """K supersteps of fixed-point PageRank over a directed edge list
     ``(src, dst)``; returns ``(node, rank)`` with rank in PR_SCALE units.
 
     Per superstep: contrib(e) = rank[src] div outdeg[src] summed per dst
     (one join + one partial-agg shuffle), then
     rank' = PR_BASE + (85 · inbox) div 100. The edge table (with outdeg
-    pre-joined) is persisted once and re-read every superstep; each rank
-    vector is cut over with ``localCheckpoint(eager=True)``. persist()
+    pre-joined) is persisted once and re-read every superstep; the rank
+    vector is cut over with ``localCheckpoint(eager=True)`` every
+    ``PR_CHECKPOINT_EVERY`` supersteps and after the last. persist()
     alone is NOT enough here: it truncates execution but not the
     analyzed plan, and each superstep references the rank vector twice
     (inbox + the left join), so the logical plan doubles per iteration —
@@ -105,32 +101,19 @@ def pagerank(
     tolerance required, swap for reliable checkpoint() — the rank vector
     is one row per node, tiny next to the edges.)
 
-    ``materialize=False`` (only allowed for iters ≤ 4, where the doubled
-    logical plan stays small) skips persist and every localCheckpoint
-    and returns the fully LAZY fused plan instead: no eager
-    materialization jobs at all, so the whole iteration inlines into
-    whatever single job consumes the ranks (Catalyst reuses the repeated
-    edge-scan exchanges). This is the frontier-scoring path
-    (politeness.frontier_scores): measured at 1M edges, iters=2, the
-    fused plan runs ~2 s at BOTH local[2] and local[8] vs ~10 s eager —
-    the eager variant's per-superstep jobs are fixed driver latency that
-    does not shrink with cores and was costing the scored-admission
-    scaling run ~14 s of flat overhead per round."""
-    if not materialize and iters > 4:
-        materialize = True  # plan doubles per superstep; cap the lazy form
+    The crawl's admission score does not run this: its OPIC-shaped
+    estimator (politeness.frontier_scores) orders URLs exactly as one
+    superstep does, in fewer shuffles."""
     edges_d = edges.join(
         edges.groupBy("src").agg(F.count("*").alias("outdeg")), "src"
-    )
-    if materialize:
-        edges_d = edges_d.persist()
+    ).persist()
     ranks = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
         .select("node", F.lit(PR_SCALE).cast("long").alias("rank"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        ranks = ranks.localCheckpoint(eager=True)
     for i in range(iters):
         inbox = (
             edges_d.join(ranks, edges_d.src == ranks.node)
@@ -149,13 +132,13 @@ def pagerank(
         )
         # The rank plan doubles per un-checkpointed superstep (referenced
         # by both inbox and the left join), so cut lineage every
-        # `checkpoint_every` steps: the tree stays <= 2^stride nodes while
-        # the eager materialization jobs — pure fixed driver latency —
-        # drop by the same factor. Values are int64-exact either way.
-        if materialize and ((i + 1) % checkpoint_every == 0 or i + 1 == iters):
+        # PR_CHECKPOINT_EVERY steps: the tree stays <= 2^stride nodes
+        # while the eager materialization jobs — pure fixed driver
+        # latency — drop by the same factor. Values are int64-exact
+        # either way.
+        if (i + 1) % PR_CHECKPOINT_EVERY == 0 or i + 1 == iters:
             ranks = ranks.localCheckpoint(eager=True)
-    if materialize:
-        edges_d.unpersist()
+    edges_d.unpersist()
     return ranks
 
 
@@ -251,7 +234,7 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> tuple[DataFrame, DataFram
     (hubs, auths) as (node, score) in HITS_SCALE L1 fixed-point units.
 
     Stride-2 eagerness (VERDICT r4 #4 — the same cure pagerank's
-    checkpoint_every applies): ONE eager job per full iteration, not per
+    PR_CHECKPOINT_EVERY applies): ONE eager job per full iteration, not per
     half-step. Both half-steps of an iteration stay lazy; only the
     iteration's resulting hub vector is cut eagerly with localCheckpoint.
     What made the half-steps eager before was the L1 total — it was

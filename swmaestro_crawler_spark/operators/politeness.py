@@ -32,6 +32,10 @@ from ..config import CrawlConfig
 from ..schema import ROBOTS
 from ..sources import synth_web
 
+ADMISSION_SALTS = 16  # sub-buckets per host in the two-phase top-k
+BACKOFF_MAX_EXP = 4   # adaptive backoff stretches a delay by at most 2^4
+
+
 def priority_order():
     """The engine-wide priority order: LIFO-newest-first (depth DESC), then
     discovery order within the parent page (seq ASC), then url_hash for a
@@ -141,7 +145,7 @@ def host_budget_col(cfg: CrawlConfig):
     ).cast("int")
 
 
-def host_backoff_factors(stats: DataFrame, max_exp: int = 4) -> DataFrame:
+def host_backoff_factors(stats: DataFrame, max_exp: int = BACKOFF_MAX_EXP) -> DataFrame:
     """Per-host adaptive-backoff factor from the HOST_STATS history:
     (host, backoff_factor double).
 
@@ -197,11 +201,11 @@ def split_admitted(
     Skew-safe two-phase top-k (axis B): a Zipf-hot host can hold most of
     the frontier, and a single ``Window.partitionBy(host)`` would drag all
     of its rows through one reducer. Phase 1 ranks within
-    ``(host, pmod(url_hash, S))`` — S salted sub-buckets spread the hot
-    host over S reducers — and keeps each sub-bucket's top ``budget``
-    (any row in the host's global top-budget is necessarily in its
-    sub-bucket's top-budget, so no admissible row is lost). Phase 2 ranks
-    the survivors (≤ S × budget rows per host, bounded regardless of
+    ``(host, pmod(url_hash, S))`` — S = ``ADMISSION_SALTS`` salted
+    sub-buckets spread the hot host over S reducers — and keeps each
+    sub-bucket's top ``budget`` (any row in the host's global top-budget
+    is necessarily in its sub-bucket's top-budget, so no admissible row
+    is lost). Phase 2 ranks the survivors (≤ S × budget rows per host, bounded regardless of
     frontier skew) exactly. Both phases order by the engine PRIORITY key,
     so the admitted set and order equal the single-window semantics —
     tests/test_crawl_matches_oracle.py proves it against the sequential
@@ -214,8 +218,7 @@ def split_admitted(
     unchanged (see score_admitted)."""
     if order is None:
         order = priority_order()
-    salts = max(1, cfg.admission_salts)
-    sub = F.pmod(F.col("url_hash"), F.lit(salts))
+    sub = F.pmod(F.col("url_hash"), F.lit(ADMISSION_SALTS))
     w1 = Window.partitionBy("host", sub).orderBy(*order)
     joined = frontier.join(
         F.broadcast(robots.select("host", "crawl_delay_s")), "host", "left"
@@ -311,7 +314,7 @@ def cap_per_template(
     Skew-safety is the split_admitted two-phase shape verbatim: a trap
     template IS the hot key by definition, so phase 1 ranks within
     (host, template, salt-sub-bucket) — spreading the trap over
-    ``admission_salts`` reducers — and phase 2 ranks only the bounded
+    ``ADMISSION_SALTS`` reducers — and phase 2 ranks only the bounded
     survivors exactly. Ordering is the engine priority key, so the kept
     set is deterministic at any cluster size.
 
@@ -340,7 +343,7 @@ def cap_per_template(
         ).drop("_tpl")
         kept, overflow = cap_per_template(guarded, cfg, order=order)
         return bypass.unionByName(kept), overflow
-    sub = F.pmod(F.col("url_hash"), F.lit(max(1, cfg.admission_salts)))
+    sub = F.pmod(F.col("url_hash"), F.lit(ADMISSION_SALTS))
     w1 = Window.partitionBy("host", tpl, sub).orderBy(*order)
     ranked1 = frontier.withColumn("_trank1", F.row_number().over(w1))
     cand = ranked1.filter(F.col("_trank1") <= cap)
@@ -370,40 +373,32 @@ def url_graph(crawled: DataFrame) -> DataFrame:
     )
 
 
-def frontier_scores(crawled: DataFrame, iters: int = 1) -> DataFrame:
+def frontier_scores(crawled: DataFrame) -> DataFrame:
     """(url_hash, score) — link-importance score over the discovered
     parent->url graph. The score a 10^10-URL frontier spends its
     per-host politeness budget by: fetch the most-linked pages first
     instead of LIFO. int64-exact, so admission stays deterministic and
     layout-independent.
 
-    iters=1 (default) is the OPIC-shaped fast path: score(url) =
-    Σ_{p->url} PR_SCALE div outdeg(p) — outdegree-normalized in-link
-    mass, the classic online frontier-importance estimator. Its ORDERING
-    is provably identical to one full PageRank superstep (rank =
-    PR_BASE + (85·inbox) div 100 is monotone in inbox, and unranked
-    URLs coalesce to 0 below every ranked one in score_admitted), but
-    the plan needs only 3 shuffles of the edge list — no 2·|E|-row
-    node-list distinct, no final left join — and fuses into the
-    admission job (tests/test_score_admission.py pins the equivalence).
-
-    iters ≥ 2 runs true PageRank supersteps via the LAZY pagerank form
-    (materialize=False): no eager per-superstep jobs; for iters > 4
-    pagerank falls back to the eager checkpointed form itself."""
-    from .graph import PR_SCALE, pagerank
+    The score is OPIC-shaped: score(url) = Σ_{p->url} PR_SCALE div
+    outdeg(p) — outdegree-normalized in-link mass, the classic online
+    frontier-importance estimator. Its ORDERING is provably identical to
+    one full PageRank superstep (rank = PR_BASE + (85·inbox) div 100 is
+    monotone in inbox, and unranked URLs coalesce to 0 below every
+    ranked one in score_admitted), but the plan needs only 3 shuffles of
+    the edge list — no 2·|E|-row node-list distinct, no final left
+    join — and fuses into the admission job
+    (tests/test_score_admission.py pins the equivalence)."""
+    from .graph import PR_SCALE
 
     edges = url_graph(crawled)
-    if iters <= 1:
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-        return (
-            edges.join(outdeg, "src")
-            .select("dst", F.expr(f"{PR_SCALE} div outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("score"))
-            .select(F.col("dst").alias("url_hash"), "score")
-        )
-    return pagerank(edges, iters=iters, materialize=False).select(
-        F.col("node").alias("url_hash"), F.col("rank").alias("score")
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    return (
+        edges.join(outdeg, "src")
+        .select("dst", F.expr(f"{PR_SCALE} div outdeg").alias("c"))
+        .groupBy("dst")
+        .agg(F.sum("c").alias("score"))
+        .select(F.col("dst").alias("url_hash"), "score")
     )
 
 

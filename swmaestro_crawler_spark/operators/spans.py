@@ -1,4 +1,4 @@
-"""Span extraction — vectorized Arrow C kernels (plus a codegen variant).
+"""Span extraction — vectorized Arrow C kernels.
 
 A fetched page is one flat ``payload`` string (segments
 ``kind\\x01text\\x01media_ref`` joined by ``\\x02`` — sources/synth_web.py;
@@ -9,15 +9,10 @@ BASELINE.json input_hint) with pure C kernels — split_pattern,
 list_flatten, StructArray/ListArray construction — so the hot path has no
 per-row Python and no Python objects at all. It runs INSIDE the fetch
 stage's ``mapInArrow`` pass, so payloads never leave the worker.
-
-Spark's higher-order functions (``transform``/``filter``) evaluate
-interpreted per element; ``spans_of`` below uses them for small/ad-hoc
-results, but the bulk path is the Arrow kernel. (SURVEY.md §2.9 X1-X6.)
+(SURVEY.md §2.9 X1-X6.)
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, functions as F
 
 from ..sources.synth_web import FIELD, SPANSEP
 
@@ -77,26 +72,3 @@ def extract_spans_arrow(payload):
         names=["kind", "text", "media_ref", "offset"],
     )
     return pa.ListArray.from_arrays(pa.array(new_offsets, type=pa.int32()), struct)
-
-
-def spans_of(payload: Column) -> Column:
-    """payload string -> array<struct<kind,text,media_ref,offset>> as a
-    Spark expression (interpreted HOFs — fine off the hot path)."""
-    return F.transform(
-        F.split(payload, SPANSEP),
-        lambda s, i: F.struct(
-            F.split_part(s, F.lit(FIELD), F.lit(1)).alias("kind"),
-            F.split_part(s, F.lit(FIELD), F.lit(2)).alias("text"),
-            F.split_part(s, F.lit(FIELD), F.lit(3)).alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-
-
-def outlinks_of(spans: Column) -> Column:
-    """link-kind spans -> array<string> of targets, preserving span order
-    (the discovery order that seeds next-round ``seq``)."""
-    return F.transform(
-        F.filter(spans, lambda s: s["kind"] == F.lit("link")),
-        lambda s: s["media_ref"],
-    )

@@ -32,11 +32,12 @@ from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
 from ..operators.politeness import synth_robots
 from ..operators.seen import empty_bloom
-from ..schema import FRONTIER, ROBOTS, SEEN
+from ..schema import DEAD, FRONTIER, ROBOTS, SEEN
 from .round import (
     FRONTIER_COLS,
     RoundResult,
     _part_by_hash,
+    _pending_layout,
     finish_round,
     run_round_critical,
 )
@@ -66,7 +67,6 @@ def warehouse_views() -> dict:
     from ..operators.scoretable import SCORES
     from ..schema import (
         CRAWL_ORDER,
-        DEAD,
         HOST_STATS,
         LINEAGE,
         METRICS,
@@ -200,9 +200,7 @@ class Crawl:
             frontier = seeds_to_frontier(seeds)
         self.cat.overwrite(
             "pending",
-            _part_by_hash(frontier, self.cfg.frontier_partitions).sortWithinPartitions(
-                "url_hash", "attempt", "depth", "seq", "parent"
-            ),
+            _pending_layout(frontier, self.cfg.frontier_partitions),
             meta={"round": 0},
         )
         for t in (
@@ -236,9 +234,7 @@ class Crawl:
             return None
         from ..operators.cuckoo import PartitionedCuckoo
 
-        return PartitionedCuckoo.empty(
-            self.cfg.cuckoo_parts, self.cfg.cuckoo_buckets, self.cfg.cuckoo_slots
-        ).tables
+        return PartitionedCuckoo.empty(self.cfg.cuckoo_parts, self.cfg.cuckoo_buckets).tables
 
     def resume_or_bootstrap(self, seeds: DataFrame) -> tuple[int, np.ndarray, object]:
         """Returns (next_round, bloom, cuckoo | None). Rolls tables back
@@ -260,11 +256,15 @@ class Crawl:
             from ..operators.cuckoo import PartitionedCuckoo, build_cuckoo_increment
 
             want_shape = self._empty_cuckoo().shape  # (P, B, S) from cfg
-            if "cuckoo" in ckpt:
-                loaded = np.load(os.path.join(self.cat.warehouse, ckpt["cuckoo"]))
-                if loaded.shape == want_shape:
-                    cuckoo = PartitionedCuckoo(loaded)
-                else:
+            loaded = (
+                np.load(os.path.join(self.cat.warehouse, ckpt["cuckoo"]))
+                if "cuckoo" in ckpt
+                else None
+            )
+            if loaded is not None and loaded.shape == want_shape:
+                cuckoo = PartitionedCuckoo(loaded)
+            else:
+                if loaded is not None:
                     # config changed since the checkpoint (e.g. the user
                     # enlarged the filter after an over-capacity error):
                     # resuming with the old undersized tables would hit
@@ -278,11 +278,6 @@ class Crawl:
                         f"{want_shape}; rebuilding the tier from the seen table",
                         stacklevel=2,
                     )
-                    cuckoo = build_cuckoo_increment(
-                        self.cat.read("seen", SEEN).select("url_hash"),
-                        PartitionedCuckoo(self._empty_cuckoo()),
-                    )
-            else:
                 cuckoo = build_cuckoo_increment(
                     self.cat.read("seen", SEEN).select("url_hash"),
                     PartitionedCuckoo(self._empty_cuckoo()),
@@ -297,9 +292,6 @@ class Crawl:
         video_crawler_dead at New_YouTube_Crawler_proxy_APP_Error.py:26-51).
         Requeued rows restart with attempt=0; the dead table keeps only
         the other reasons. Returns rows requeued."""
-        from ..schema import DEAD
-        from .round import FRONTIER_COLS, _part_by_hash
-
         dead = self.cat.read("dead", DEAD)
         requeue = dead.filter(F.col("reason") == reason)
         keep = dead.filter(F.col("reason") != reason)
@@ -311,10 +303,9 @@ class Crawl:
         # new pending snapshot against the previous one is wrong once
         # expire_snapshots has dropped it (data_files -> [] -> silent 0).
         n = revived.count()
-        merged = _part_by_hash(
-            pending.unionByName(revived), self.cfg.frontier_partitions
-        ).sortWithinPartitions("url_hash", "attempt", "depth", "seq", "parent")
-        self.cat.overwrite("pending", merged)
+        self.cat.overwrite(
+            "pending", _pending_layout(pending.unionByName(revived), self.cfg.frontier_partitions)
+        )
         self.cat.overwrite("dead", _part_by_hash(keep, 1))
         # fold the requeue into the checkpoint, else a later resume would
         # roll pending/dead back and silently undo it

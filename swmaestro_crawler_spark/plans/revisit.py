@@ -39,7 +39,7 @@ from ..operators.fetch import FETCHED, fetch_stage_direct, synth_transport
 from ..operators.politeness import split_admitted, split_robots_excluded
 from ..operators.seen import as_seen_rows
 from ..schema import OBSERVATIONS, ROBOTS, SPANS_DOC
-from .round import FRONTIER_COLS, _part_by_hash, _StepTimer
+from .round import FRONTIER_COLS, _part_by_hash, _StepTimer, adopt_spans
 
 # intervals are measured in crawl rounds (the engine's clock); a page
 # never seen changing waits the maximum, a churning page is re-eligible
@@ -208,14 +208,7 @@ def run_revisit(
     }
     if not conditional:
         tm.step("spans_adopt")
-        cat.append_files(
-            "spans",
-            "fetched",
-            sid,
-            meta={"round": int(now_round), "revisit": True},
-            column_map={"doc_id": "url", "round": "fetch_round"},
-            row_filter="ok",
-        )
+        adopt_spans(cat, sid, meta)
     else:
         tm.step("revalidate_observations")
         # persist: the split below drives three actions (observation
@@ -262,14 +255,7 @@ def run_revisit(
                 _sorted_fetch(changed.select(*FETCHED.fieldNames())),
                 meta={"round": int(now_round), "revisit": True, "revalidated": True},
             )
-            cat.append_files(
-                "spans",
-                "fetched",
-                sid_changed,
-                meta={"round": int(now_round), "revisit": True},
-                column_map={"doc_id": "url", "round": "fetch_round"},
-                row_filter="ok",
-            )
+            adopt_spans(cat, sid_changed, meta)
         res["modified"] = n_changed
         res["not_modified"] = res["refetched_ok"] - n_changed
         j.unpersist()

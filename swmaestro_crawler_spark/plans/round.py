@@ -47,7 +47,7 @@ from ..operators.seen import (
     unseen_of_probed,
 )
 from ..sources.synth_web import SPANSEP as SPANSEP_LIT
-from ..schema import CRAWL_ORDER, DEAD, FRONTIER, LINEAGE, METRICS, SEEN, SPANS_DOC
+from ..schema import FRONTIER, HOST_STATS, LINEAGE, METRICS, SEEN
 
 FRONTIER_COLS = [f.name for f in FRONTIER.fields]
 
@@ -56,6 +56,28 @@ def _part_by_hash(df: DataFrame, n: int, col: str = "url_hash") -> DataFrame:
     """Deterministic layout: hash-partition on a data key, sort within.
     Cluster-size independent -> byte-identical files across runs/resumes."""
     return df.repartition(n, F.pmod(F.xxhash64(F.col(col).cast("string")), F.lit(n))).sortWithinPartitions(col)
+
+
+def _pending_layout(df: DataFrame, n: int) -> DataFrame:
+    """The pending table's file layout: hash-partitioned on url_hash,
+    each file sorted on (url_hash, attempt, depth, seq, parent)."""
+    return _part_by_hash(df, n).sortWithinPartitions(
+        "url_hash", "attempt", "depth", "seq", "parent"
+    )
+
+
+def adopt_spans(cat: Catalog, sid: int, meta: dict) -> int:
+    """ZERO-COPY spans commit of fetched snapshot ``sid``: the spans table
+    takes the snapshot's data files with a name mapping (doc_id<-url,
+    round<-fetch_round) and a row-filter predicate (ok only)."""
+    return cat.append_files(
+        "spans",
+        "fetched",
+        sid,
+        meta=meta,
+        column_map={"doc_id": "url", "round": "fetch_round"},
+        row_filter="ok",
+    )
 
 
 def with_global_ord(
@@ -235,11 +257,8 @@ def run_round_critical(
         # eagerly, so this round's concurrent job_hoststats append is
         # invisible here by construction, like seen/pending)
         from ..operators.politeness import host_backoff_factors
-        from ..schema import HOST_STATS
 
-        backoff = host_backoff_factors(
-            cat.read("host_stats", HOST_STATS), cfg.backoff_max_exp
-        )
+        backoff = host_backoff_factors(cat.read("host_stats", HOST_STATS))
 
     # 1-3. frontier dedup, seen-tier probe (bloom, then cuckoo on its
     #    positives) and robots exclusion in ONE persisted node
@@ -267,14 +286,13 @@ def run_round_critical(
     else:
         unseen_capped = unseen
     if cfg.score_admission:
-        # importance-first scheduler: PageRank over this round's
+        # importance-first scheduler: OPIC in-link mass over this round's
         # parent->url edges ranks the budgeted slots (config.py
         # score_admission). Same two-phase skew-safe top-k underneath.
-        # The supersteps run LAZY (graph.pagerank materialize=False — no
-        # per-iteration jobs) but the FINAL score vector is materialized
-        # exactly once here: admitted/deferred feed several downstream
-        # jobs (fetch, seen/pending/crawl_order commits), and without
-        # this cut each of them would re-execute the scoring subplan
+        # The score vector is materialized exactly once here:
+        # admitted/deferred feed several downstream jobs (fetch,
+        # seen/pending/crawl_order commits), and without this cut each
+        # of them would re-execute the scoring subplan
         # (measured: bookkeeping 33.5 s -> 91.6 s at local[2]/2M URLs).
         # One row per scored URL — small next to the fetch; the RDD is
         # released by the ContextCleaner when the round's frames drop.
@@ -290,7 +308,7 @@ def run_round_critical(
 
             scores_src = read_scores(cat)
         else:
-            scores_src = frontier_scores(pending, iters=cfg.score_iters)
+            scores_src = frontier_scores(pending)
         scores = scores_src.localCheckpoint(eager=True)
         tm.step("read+plan")
         admitted_df, deferred_df = score_admitted(
@@ -336,14 +354,7 @@ def run_round_critical(
     #    and a row-filter predicate (ok only; the Iceberg delete-file
     #    analogue). No bytes are rewritten.
     tm.step("spans_write")
-    cat.append_files(
-        "spans",
-        "fetched",
-        sid_fetch,
-        meta={"round": r},
-        column_map={"doc_id": "url", "round": "fetch_round"},
-        row_filter="ok",
-    )
+    adopt_spans(cat, sid_fetch, {"round": r})
 
     # 7-9. CRITICAL bookkeeping — the three commits round r+1's own
     #    pipeline consumes (pending = its frontier; seen + bloom = its
@@ -464,10 +475,11 @@ def run_round_critical(
             .unionByName(retries)
             .unionByName(new_links)
         )
-        pending_sorted = _part_by_hash(
-            next_pending, cfg.frontier_partitions
-        ).sortWithinPartitions("url_hash", "attempt", "depth", "seq", "parent")
-        return cat.overwrite("pending", pending_sorted, meta={"round": r + 1})
+        return cat.overwrite(
+            "pending",
+            _pending_layout(next_pending, cfg.frontier_partitions),
+            meta={"round": r + 1},
+        )
 
     def job_order() -> int:
         # crawl-order log — the judge-replayable total order. ord is the
@@ -538,8 +550,6 @@ def run_round_critical(
         # per-(host, round) outcome counts — the adaptive-backoff signal
         # round r+1's admission reads (CRITICAL like seen/pending when
         # the feature is on). Dimension-sized: one row per fetched host.
-        from ..schema import HOST_STATS as _HS
-
         st = (
             fetched.groupBy("host")
             .agg(

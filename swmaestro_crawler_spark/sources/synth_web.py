@@ -76,6 +76,9 @@ def hosts(n_hosts: int) -> tuple[str, ...]:
     return tuple(f"host{i:04d}.example.com" for i in range(n_hosts))
 
 
+ZIPF_S = 1.2  # Zipf exponent of host popularity (seed and link targets)
+
+
 @lru_cache(maxsize=8)
 def _zipf_cdf(n_hosts: int, s: float) -> np.ndarray:
     w = 1.0 / np.power(np.arange(1, n_hosts + 1, dtype=np.float64), s)
@@ -143,10 +146,6 @@ def status_code_np(url_hash, attempt, cfg: CrawlConfig) -> np.ndarray:
     transient_ok = _u01(_mix(h, 0xFE7C)) >= cfg.synth_fail_prob
     fatal = fatal_code_np(url_hash, cfg)
     return np.where(fatal > 0, fatal, np.where(transient_ok, 200, 500)).astype(np.int64)
-
-
-def fetch_ok_np(url_hash, attempt, cfg: CrawlConfig) -> np.ndarray:
-    return status_code_np(url_hash, attempt, cfg) == 200
 
 
 def parse_work(url_hash, iters: int) -> int:
@@ -229,7 +228,7 @@ def payload_series(
 
     n_text = (_mix(h, 4) % np.uint64(_MAX_TEXT)).astype(np.int64) + 1  # 1..5
     n_text = np.where(is_ch, 2, np.where(is_pl, 1, n_text))
-    cdf = _zipf_cdf(cfg.synth_n_hosts, cfg.synth_zipf_s)
+    cdf = _zipf_cdf(cfg.synth_n_hosts, ZIPF_S)
     host_arr = np.asarray(hosts(cfg.synth_n_hosts))
     for j in range(_MAX_TEXT):
         w0 = _VOCAB_ARR[(_mix(h, 10 + 4 * j) % np.uint64(len(VOCAB))).astype(np.int64)]
@@ -413,7 +412,7 @@ def payload_arrays(url_hash, own_host, cfg: CrawlConfig, kind_code=None):
 
     n_text = (_mix(h, 4) % np.uint64(_MAX_TEXT)).astype(np.int64) + 1  # 1..5
     n_text = np.where(is_ch, 2, np.where(is_pl, 1, n_text))
-    cdf = _zipf_cdf(cfg.synth_n_hosts, cfg.synth_zipf_s)
+    cdf = _zipf_cdf(cfg.synth_n_hosts, ZIPF_S)
     hosts_arr = _hosts_pa(cfg.synth_n_hosts)
     for j in range(_MAX_TEXT):
         w0 = vtake(_mix(h, 10 + 4 * j) % nv)
@@ -528,7 +527,7 @@ def fetch_ok(url: str, attempt: int, cfg: CrawlConfig) -> bool:
 
 
 def _pick_host(rng: np.random.Generator, cfg: CrawlConfig) -> str:
-    cdf = _zipf_cdf(cfg.synth_n_hosts, cfg.synth_zipf_s)
+    cdf = _zipf_cdf(cfg.synth_n_hosts, ZIPF_S)
     return hosts(cfg.synth_n_hosts)[int(np.searchsorted(cdf, rng.random()))]
 
 
@@ -674,7 +673,7 @@ def is_redirect_np(url_hash, cfg: CrawlConfig) -> np.ndarray:
 def _redirect_draws(h: np.ndarray, cfg: CrawlConfig):
     """(same_host bool, zipf host index, 48-bit target path) per source."""
     same = _u01(_mix(h, 0xBED1)) < cfg.synth_redirect_same
-    cdf = _zipf_cdf(cfg.synth_n_hosts, cfg.synth_zipf_s)
+    cdf = _zipf_cdf(cfg.synth_n_hosts, ZIPF_S)
     host_idx = np.searchsorted(cdf, _u01(_mix(h, 0xBED2)))
     path = _mix(h, 0xBED3) % np.uint64(1 << 48)
     return same, host_idx, path

@@ -84,7 +84,7 @@ def test_backoff_actually_engaged(backoff_crawl_pair, spark, tmp_path):
     the feature changed admission vs the same crawl with backoff off."""
     cfg, _, engine = backoff_crawl_pair
     stats = engine.cat.read("host_stats", HOST_STATS)
-    factors = host_backoff_factors(stats, cfg.backoff_max_exp).collect()
+    factors = host_backoff_factors(stats).collect()
     assert any(r.backoff_factor > 1.0 for r in factors), "no host ever backed off"
 
     from dataclasses import replace

@@ -138,21 +138,3 @@ def test_filter_unseen_equals_plain_anti_join(spark):
         for r in frontier.join(seen, "url_hash", "left_anti").collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_cuckoo_below_regime_warns():
-    """Enabling the tier while declaring a sub-crossover frontier warns
-    (measured small-scale overhead, BENCH/cuckoo_ab.json); silent at or
-    above the regime, and silent when no expectation is declared."""
-    import warnings
-
-    from swmaestro_crawler_spark.config import CrawlConfig
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        CrawlConfig(cuckoo_buckets=1 << 12)  # no declared scale: silent
-        CrawlConfig(cuckoo_buckets=1 << 12, expected_urls=200_000_000)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        CrawlConfig(cuckoo_buckets=1 << 12, expected_urls=2_000_000)
-    assert w and "payoff regime" in str(w[0].message)

@@ -90,25 +90,6 @@ def test_iterations_actually_move_rank(spark):
     assert len({r.rank for r in rk.collect()}) > 1
 
 
-def test_lazy_form_matches_eager(spark):
-    """materialize=False (the frontier-scoring path: no persist, no
-    localCheckpoint — the plan fuses into its consumer job) must be
-    bit-identical to the eager checkpointed form at the same superstep
-    count, and must fall back to eager above the lazy plan-depth cap."""
-    edges = purchase_edges(spark, SF_DIR)
-    for iters in (0, 1, 2, 4):
-        eager = {r.node: r.rank for r in pagerank(edges, iters=iters).collect()}
-        lazy = {
-            r.node: r.rank
-            for r in pagerank(edges, iters=iters, materialize=False).collect()
-        }
-        assert lazy == eager, f"lazy/eager divergence at iters={iters}"
-    # above the cap the lazy request silently materializes (plan doubles
-    # per superstep) — same results either way
-    deep = {r.node: r.rank for r in pagerank(edges, iters=5, materialize=False).collect()}
-    assert deep == {r.node: r.rank for r in pagerank(edges, iters=5).collect()}
-
-
 def test_label_propagation_layout_independent_and_shaped(spark):
     """LPA: labels are bit-identical regardless of partitioning (the
     argmax tie-break is total), every node lands in a community led by

@@ -129,7 +129,7 @@ def test_global_ord_is_invariant_and_python_free(spark, in_parts, n_parts, batch
 def test_fetch_stage_partition_count_is_explicit(spark, cfg):
     """The fetch stage pins its partition count (frontier_partitions) so
     AQE cannot coalesce it below cluster parallelism, and spreads a host
-    over fetch_host_splits sub-buckets."""
+    over FETCH_HOST_SPLITS sub-buckets."""
     from swmaestro_crawler_spark.operators.fetch import fetch_stage
     from swmaestro_crawler_spark.plans.crawl import seeds_to_frontier
     from swmaestro_crawler_spark.sources.synth_web import make_seeds

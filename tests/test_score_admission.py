@@ -81,14 +81,9 @@ def test_frontier_scores_rank_most_linked_first(spark):
     u = scores[df.sparkSession.createDataFrame([("https://h/u",)], "u string")
                .select(F.xxhash64("u").alias("h")).collect()[0].h]
     assert t > u  # 10 inlinks beats 1
-    # the iters=1 fast path scores exactly the linked (>=1 inlink) URLs;
-    # everything else coalesces to 0 in score_admitted
+    # the score covers exactly the linked (>=1 inlink) URLs; everything
+    # else coalesces to 0 in score_admitted
     assert len(scores) == url_graph(df).select("dst").distinct().count()
-    # true-PageRank mode (iters>=2) scores every node, sinks included
-    full = {r.url_hash for r in frontier_scores(df, iters=2).collect()}
-    assert len(full) == url_graph(df).select("src").unionByName(
-        url_graph(df).select(F.col("dst").alias("src"))
-    ).distinct().count()
 
 
 def _scored_crawl(crawled, spark, wh, par, score=True):
@@ -118,7 +113,7 @@ def test_scored_crawl_deterministic_across_parallelism(spark, tmp_path, crawled)
 
 
 def test_fast_path_ordering_matches_one_pagerank_superstep(spark):
-    """frontier_scores(iters=1) is the OPIC-shaped in-link-mass fast
+    """frontier_scores is the OPIC-shaped in-link-mass fast
     path; its ORDERING must equal one true PageRank superstep:
     rank = PR_BASE + (85·inbox) div 100 is strictly monotone in inbox =
     fast_score, and URLs absent from the fast scores coalesce to 0 under
@@ -137,7 +132,7 @@ def test_fast_path_ordering_matches_one_pagerank_superstep(spark):
         for s, d in [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (3, 0), (4, 0), (4, 5)]
     ]
     df = spark.createDataFrame(rows, "url string, parent string")
-    fast = {r.url_hash: r.score for r in frontier_scores(df, iters=1).collect()}
+    fast = {r.url_hash: r.score for r in frontier_scores(df).collect()}
     full = {
         r.node: r.rank for r in pagerank(url_graph(df), iters=1).collect()
     }

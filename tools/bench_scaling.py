@@ -937,9 +937,9 @@ frontier_rows × bloom_FP_rate × per-row confirm cost and grows with
 (`BENCH/cuckoo_ab.json`); with the default ~1% FP bloom the avoided
 work does not exceed the fixed cost until the exact seen side stops
 being a cheap local/broadcast join — around 10^8-10^9 seen URLs.
-`CrawlConfig` therefore WARNS when `cuckoo_buckets` is set with a
-declared `expected_urls` below 10^8 (`cuckoo_min_expected_urls`);
-output is digest-identical either way, only wall differs.
+Leave `cuckoo_buckets` unset below ~10^8 seen URLs (the guidance sits
+on that field in `config.py`); output is digest-identical either way,
+only wall differs.
 """
             )
         cp = summary.get("cuckoo_pressure_check")
