@@ -172,43 +172,29 @@ def _fetched_batches(batches, transport_factory, cfg: CrawlConfig, round_no: int
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    flat_cols, out_names, sort_keys = _FLAT_COLS, _OUT_NAMES, _SORT_KEYS
     transport = transport_factory(cfg)  # one session per partition
     arrow_native = getattr(transport, "arrow_native", False)
     for b in batches:
+        # the whole pass in Arrow: sort (unique url_hash key -> a total
+        # order), fetch, extract — no object-string materialization
+        b2 = b.take(pc.sort_indices(b, sort_keys=_SORT_KEYS))
         if arrow_native:
-            # whole pass in Arrow: sort (unique url_hash key -> same
-            # total order as the pandas path), fetch, extract — no
-            # object-string materialization anywhere
-            b2 = b.take(pc.sort_indices(b, sort_keys=sort_keys))
             code, payload, links = transport(b2)
-            spans = extract_spans_arrow(payload)
-            arrays = [b2.column(c) for c in flat_cols]
-            arrays += [
-                pa.array(code == 200),
-                pa.array(code.astype(np.int32)),
-                links,
-                spans,
-                pa.array(np.full(b2.num_rows, round_no, dtype=np.int32)),
-            ]
         else:
-            # legacy pandas-transport seam (custom/production
-            # transports return pandas Series; tests/test_custom_transport)
-            pdf = b.to_pandas()
-            pdf = pdf.sort_values(
-                ["host", "depth", "seq", "url_hash"], ascending=[True, False, True, True]
-            ).reset_index(drop=True)
-            code, payload, links = transport(pdf)
-            spans = extract_spans_arrow(pa.array(payload, type=pa.string()))
-            arrays = [pa.Array.from_pandas(pdf[c]) for c in flat_cols]
-            arrays += [
-                pa.Array.from_pandas(code == 200, type=pa.bool_()),
-                pa.Array.from_pandas(code, type=pa.int32()),
-                pa.array(links, type=pa.string()),
-                spans,
-                pa.array([round_no] * len(pdf), type=pa.int32()),
-            ]
-        yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+            # pandas transports (the custom/production seam) convert at
+            # the boundary
+            code, payload, links = transport(b2.to_pandas())
+            code = np.asarray(code, dtype=np.int64)
+            payload = pa.array(payload, type=pa.string())
+            links = pa.array(links, type=pa.string())
+        arrays = [b2.column(c) for c in _FLAT_COLS] + [
+            pa.array(code == 200),
+            pa.array(code.astype(np.int32)),
+            links,
+            extract_spans_arrow(payload),
+            pa.array(np.full(b2.num_rows, round_no, dtype=np.int32)),
+        ]
+        yield pa.RecordBatch.from_arrays(arrays, names=_OUT_NAMES)
 
 
 FETCH_STATS = StructType(

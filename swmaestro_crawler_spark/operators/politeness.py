@@ -196,30 +196,21 @@ def split_admitted(
     order: list | None = None,
     backoff: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(admitted, deferred) under the per-host crawl-delay budget.
-
-    Skew-safe two-phase top-k (axis B): a Zipf-hot host can hold most of
-    the frontier, and a single ``Window.partitionBy(host)`` would drag all
-    of its rows through one reducer. Phase 1 ranks within
-    ``(host, pmod(url_hash, S))`` — S = ``ADMISSION_SALTS`` salted
-    sub-buckets spread the hot host over S reducers — and keeps each
-    sub-bucket's top ``budget`` (any row in the host's global top-budget
-    is necessarily in its sub-bucket's top-budget, so no admissible row
-    is lost). Phase 2 ranks the survivors (≤ S × budget rows per host, bounded regardless of
-    frontier skew) exactly. Both phases order by the engine PRIORITY key,
+    """(admitted, deferred) under the per-host crawl-delay budget: the
+    skew-safe two-phase top-k (``_top_k``, axis B) with the host's
+    budget as its limit. A Zipf-hot host can hold most of the frontier,
+    and a single ``Window.partitionBy(host)`` would drag all of its rows
+    through one reducer. Both phases order by the engine PRIORITY key,
     so the admitted set and order equal the single-window semantics —
     tests/test_crawl_matches_oracle.py proves it against the sequential
     oracle.
 
     ``order`` overrides the priority key (default: the reference LIFO
-    order). The phase-1 argument — any row in the host's global
-    top-budget is in its sub-bucket's top-budget — holds for ANY total
-    order, so score-weighted admission reuses this skew-safe shape
-    unchanged (see score_admitted)."""
+    order). The phase-1 argument holds for ANY total order, so
+    score-weighted admission reuses this skew-safe shape unchanged (see
+    score_admitted)."""
     if order is None:
         order = priority_order()
-    sub = F.pmod(F.col("url_hash"), F.lit(ADMISSION_SALTS))
-    w1 = Window.partitionBy("host", sub).orderBy(*order)
     joined = frontier.join(
         F.broadcast(robots.select("host", "crawl_delay_s")), "host", "left"
     ).withColumn("crawl_delay_s", F.coalesce(F.col("crawl_delay_s"), F.lit(1.0)))
@@ -232,20 +223,40 @@ def split_admitted(
             "crawl_delay_s",
             F.col("crawl_delay_s") * F.coalesce(F.col("backoff_factor"), F.lit(1.0)),
         ).drop("backoff_factor")
-    ranked1 = joined.withColumn("host_budget", host_budget_col(cfg)).withColumn(
-        "sub_rank", F.row_number().over(w1)
+    admitted, deferred = _top_k(
+        joined.withColumn("host_budget", host_budget_col(cfg)),
+        [F.col("host")],
+        order,
+        F.col("host_budget"),
     )
-    cand = ranked1.filter(F.col("sub_rank") <= F.col("host_budget"))
-    over1 = ranked1.filter(F.col("sub_rank") > F.col("host_budget"))
+    return (
+        admitted.drop("crawl_delay_s", "host_budget"),
+        deferred.drop("crawl_delay_s", "host_budget"),
+    )
 
-    w2 = Window.partitionBy("host").orderBy(*order)
-    ranked2 = cand.withColumn("host_rank", F.row_number().over(w2))
-    admitted = ranked2.filter(F.col("host_rank") <= F.col("host_budget")).drop(
-        "crawl_delay_s", "host_budget", "sub_rank"
-    )
-    over2 = ranked2.filter(F.col("host_rank") > F.col("host_budget")).drop("host_rank")
-    deferred = over1.unionByName(over2).drop("crawl_delay_s", "host_budget", "sub_rank")
-    return admitted, deferred
+
+def _top_k(df: DataFrame, keys: list, order: list, limit) -> tuple[DataFrame, DataFrame]:
+    """(kept, over): the first ``limit`` rows of each ``keys`` group
+    under ``order`` (a total order), and the rest. ``limit`` is a
+    Column, constant within a group.
+
+    Skew-safe two-phase top-k: phase 1 ranks within ``keys`` plus
+    ``pmod(url_hash, ADMISSION_SALTS)``, spreading a hot group over that
+    many reducers, and keeps each sub-bucket's top ``limit`` (any row in
+    the group's top ``limit`` is in its sub-bucket's top ``limit``, so
+    none is lost); phase 2 ranks the survivors, at most ADMISSION_SALTS x
+    ``limit`` per group, exactly."""
+    sub = F.pmod(F.col("url_hash"), F.lit(ADMISSION_SALTS))
+    w1 = Window.partitionBy(*keys, sub).orderBy(*order)
+    ranked1 = df.withColumn("_rank1", F.row_number().over(w1))
+    cand = ranked1.filter(F.col("_rank1") <= limit)
+    over1 = ranked1.filter(F.col("_rank1") > limit).drop("_rank1")
+
+    w2 = Window.partitionBy(*keys).orderBy(*order)
+    ranked2 = cand.withColumn("_rank2", F.row_number().over(w2))
+    kept = ranked2.filter(F.col("_rank2") <= limit).drop("_rank1", "_rank2")
+    over2 = ranked2.filter(F.col("_rank2") > limit).drop("_rank1", "_rank2")
+    return kept, over1.unionByName(over2)
 
 
 def dedup_frontier(frontier: DataFrame) -> DataFrame:
@@ -311,10 +322,9 @@ def cap_per_template(
     mis-flagged template is throttled, never dropped — and a true trap
     is bounded to cap x rounds URLs instead of devouring the frontier).
 
-    Skew-safety is the split_admitted two-phase shape verbatim: a trap
-    template IS the hot key by definition, so phase 1 ranks within
-    (host, template, salt-sub-bucket) — spreading the trap over
-    ``ADMISSION_SALTS`` reducers — and phase 2 ranks only the bounded
+    Skew-safety is the same two-phase top-k as admission (``_top_k``):
+    a trap template IS the hot key by definition, so phase 1 spreads it
+    over ``ADMISSION_SALTS`` reducers and phase 2 ranks only the bounded
     survivors exactly. Ordering is the engine priority key, so the kept
     set is deterministic at any cluster size.
 
@@ -343,17 +353,7 @@ def cap_per_template(
         ).drop("_tpl")
         kept, overflow = cap_per_template(guarded, cfg, order=order)
         return bypass.unionByName(kept), overflow
-    sub = F.pmod(F.col("url_hash"), F.lit(ADMISSION_SALTS))
-    w1 = Window.partitionBy("host", tpl, sub).orderBy(*order)
-    ranked1 = frontier.withColumn("_trank1", F.row_number().over(w1))
-    cand = ranked1.filter(F.col("_trank1") <= cap)
-    over1 = ranked1.filter(F.col("_trank1") > cap).drop("_trank1")
-
-    w2 = Window.partitionBy("host", tpl).orderBy(*order)
-    ranked2 = cand.withColumn("_trank2", F.row_number().over(w2))
-    kept = ranked2.filter(F.col("_trank2") <= cap).drop("_trank1", "_trank2")
-    over2 = ranked2.filter(F.col("_trank2") > cap).drop("_trank1", "_trank2")
-    return kept, over1.unionByName(over2)
+    return _top_k(frontier, [F.col("host"), tpl], order, cap)
 
 
 # ---------------------------------------------------------------------------

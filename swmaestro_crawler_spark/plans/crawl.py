@@ -4,9 +4,10 @@ Replaces the reference supervisor's poll-queue-until-empty loop
 (supervisor.py:70-92,128-138,162-194) with a driver-side round loop whose
 termination aggregate is ``pending.count() == 0`` (SURVEY.md A3/C5).
 
-Rounds run strictly one after another: round r's bookkeeping (its six
-commit jobs run concurrently with each other) and its checkpoint are
-complete before round r+1 reads anything.
+Rounds run strictly one after another: ``run_round_critical`` joins
+every bookkeeping job of round r (they run concurrently with each
+other), ``finish_round`` writes its metrics and lineage, and its
+checkpoint is written before round r+1 reads anything.
 
 Checkpoint protocol (per committed round):
   1. every table append/overwrite commits an atomic snapshot (catalog.py)
@@ -194,8 +195,9 @@ class Crawl:
         Either ``seeds`` (rank-ordered seed rows) or a pre-built FRONTIER
         DataFrame may be supplied (the latter for bulk synthetic frontiers
         generated JVM-side, e.g. the scaling bench)."""
-        robots = robots if robots is not None else synth_robots(self.spark, self.cfg)
-        self.cat.overwrite("robots", robots.repartition(1).sortWithinPartitions("host"))
+        self._overwrite_robots(
+            robots if robots is not None else synth_robots(self.spark, self.cfg)
+        )
         if frontier is None:
             frontier = seeds_to_frontier(seeds)
         self.cat.overwrite(
@@ -228,6 +230,10 @@ class Crawl:
         self._write_checkpoint(
             -1, empty_bloom(self.cfg.bloom_bits), cuckoo_tables=self._empty_cuckoo()
         )
+
+    def _overwrite_robots(self, robots: DataFrame) -> None:
+        """Commit the robots dimension as one file sorted on host."""
+        self.cat.overwrite("robots", robots.repartition(1).sortWithinPartitions("host"))
 
     def _empty_cuckoo(self) -> np.ndarray | None:
         if self.cfg.cuckoo_buckets is None:
@@ -323,11 +329,11 @@ class Crawl:
     def run(self, seeds: DataFrame, rounds: int | None = None) -> list[RoundResult]:
         """Run (or resume) the crawl for up to ``rounds`` rounds.
 
-        Each round runs its critical phase (fetch, spans, and the
-        pending/seen/bloom commits round r+1 consumes), then
-        ``finish_round`` joins the rest of its bookkeeping, then the
-        round's checkpoint is written. A kill can therefore lose only the
-        round in flight, which resume re-runs deterministically."""
+        Each round runs its fetch, spans commit and every bookkeeping
+        job, joined together (``run_round_critical``), then its metrics
+        and lineage (``finish_round``), then the round's checkpoint is
+        written. A kill or a failed job can therefore lose only the round
+        in flight, which resume re-runs deterministically."""
         rounds = rounds if rounds is not None else self.cfg.max_rounds
         start, bloom, cuckoo = self.resume_or_bootstrap(seeds)
         robots = self.cat.read("robots", ROBOTS)
@@ -348,14 +354,7 @@ class Crawl:
                     # robots.txt (the same body->parse chain as the
                     # bootstrap) and overwrite the dimension — the
                     # new rules/delays bind from THIS round on
-                    from ..operators.politeness import synth_robots
-
-                    self.cat.overwrite(
-                        "robots",
-                        synth_robots(self.spark, self.cfg, epoch)
-                        .repartition(1)
-                        .sortWithinPartitions("host"),
-                    )
+                    self._overwrite_robots(synth_robots(self.spark, self.cfg, epoch))
                     robots = self.cat.read("robots", ROBOTS)
                     robots_epoch = epoch
             results.append(

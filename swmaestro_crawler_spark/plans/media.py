@@ -72,6 +72,7 @@ from pyspark.sql.types import (
 
 from ..catalog import Catalog
 from ..schema import SPANS_DOC
+from .round import _StepTimer
 
 MEDIA_REFS = StructType(
     [
@@ -177,10 +178,8 @@ def media_sweep(
     for every new ref, body bytes only for one representative ref per
     not-yet-stored content. ``probe=None``: single-phase, ``transport``
     downloads every new ref. Identical output tables either way."""
-    import time as _time
-
-    timings: dict = {}
-    t0 = _time.perf_counter()
+    tm = _StepTimer()
+    tm.step("refs_scan")
     # projected read: only the (kind, media_ref) span leaves + round are
     # decoded — never the text payload bytes (which dominate the table).
     spans_proj = StructType(
@@ -213,7 +212,7 @@ def media_sweep(
 
     if probe is not None:
         return _sweep_probe(
-            cat, refs, new_refs, probe, transport, ref_partitions, timings, t0
+            cat, refs, new_refs, probe, transport, ref_partitions, tm
         )
 
     out_schema = StructType(
@@ -234,18 +233,16 @@ def media_sweep(
     fetched.persist()
     try:
         n_seen = refs.count()  # materializes the persisted ref scan
-        timings["refs_scan"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
+        tm.step("fetch")
         n_new = fetched.count()
-        timings["fetch"] = round(_time.perf_counter() - t0, 3)
         if n_new == 0:
-            return MediaSweepResult(n_seen, 0, 0, 0, timings)
+            return MediaSweepResult(n_seen, 0, 0, 0, tm.rounded())
         # one blob row per distinct NEW content key: smallest ref is the
         # representative (deterministic). min_by is map-side combinable,
         # so duplicate contents collapse BEFORE the shuffle — only
         # ~|distinct contents| x cores combined rows cross the exchange,
         # never the per-ref blob bytes (a window would shuffle them all).
-        t0 = _time.perf_counter()
+        tm.step("blob_dedup")
         new_blobs = (
             fetched.groupBy("content_key")
             .agg(
@@ -271,8 +268,7 @@ def media_sweep(
             F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("b"),
         ).first()
         n_blobs, total = int(st.n), int(st.b)
-        timings["blob_dedup"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
+        tm.step("blob_commit")
         if n_blobs:
             cat.append(
                 "media_blobs",
@@ -282,8 +278,7 @@ def media_sweep(
                 bloom_cols=["content_key"],
             )
         new_blobs.unpersist()
-        timings["blob_commit"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
+        tm.step("refs_commit")
         cat.append(
             "media_refs",
             fetched.select("media_ref", "content_key", "round").repartition(
@@ -291,8 +286,7 @@ def media_sweep(
             ),
             meta={"op": "media_refs"},
         )
-        timings["refs_commit"] = round(_time.perf_counter() - t0, 3)
-        return MediaSweepResult(n_seen, n_new, n_blobs, total, timings)
+        return MediaSweepResult(n_seen, n_new, n_blobs, total, tm.rounded())
     finally:
         fetched.unpersist()
         refs.unpersist()
@@ -305,14 +299,11 @@ def _sweep_probe(
     probe: Callable[[pd.Series], pd.DataFrame],
     transport: Callable[[pd.Series], pd.DataFrame],
     ref_partitions: int,
-    timings: dict,
-    t0: float,
+    tm: _StepTimer,
 ) -> MediaSweepResult:
     """Probe-then-fetch sweep body (see module docstring): fingerprint
     every new reference, download bytes only for one representative per
     not-yet-stored content key."""
-    import time as _time
-
     probed_schema = StructType(
         [
             StructField("media_ref", StringType(), False),
@@ -334,13 +325,11 @@ def _sweep_probe(
     probed = new_refs.mapInPandas(probe_fn, probed_schema).persist()
     try:
         n_seen = refs.count()  # materializes the persisted ref scan
-        timings["refs_scan"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
+        tm.step("probe")
         n_new = probed.count()
-        timings["probe"] = round(_time.perf_counter() - t0, 3)
         if n_new == 0:
-            return MediaSweepResult(n_seen, 0, 0, 0, timings)
-        t0 = _time.perf_counter()
+            return MediaSweepResult(n_seen, 0, 0, 0, tm.rounded())
+        tm.step("rep_fetch")
         # one representative ref per NEW content key: min media_ref
         # (deterministic, same keeper rule as the single-phase path's
         # min_by). The agg is map-side combinable — only
@@ -390,8 +379,7 @@ def _sweep_probe(
             F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("b"),
         ).first()
         n_blobs, total = int(st.n), int(st.b)
-        timings["rep_fetch"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
+        tm.step("blob_commit")
         if n_blobs:
             cat.append(
                 "media_blobs",
@@ -401,8 +389,7 @@ def _sweep_probe(
                 bloom_cols=["content_key"],
             )
         new_blobs.unpersist()
-        timings["blob_commit"] = round(_time.perf_counter() - t0, 3)
-        t0 = _time.perf_counter()
+        tm.step("refs_commit")
         cat.append(
             "media_refs",
             probed.select("media_ref", "content_key", "round").repartition(
@@ -410,8 +397,7 @@ def _sweep_probe(
             ),
             meta={"op": "media_refs"},
         )
-        timings["refs_commit"] = round(_time.perf_counter() - t0, 3)
-        return MediaSweepResult(n_seen, n_new, n_blobs, total, timings)
+        return MediaSweepResult(n_seen, n_new, n_blobs, total, tm.rounded())
     finally:
         probed.unpersist()
         refs.unpersist()

@@ -35,11 +35,16 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import Catalog
 from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
-from ..operators.fetch import FETCHED, fetch_stage_direct, synth_transport
+from ..operators.fetch import FETCHED, synth_transport
 from ..operators.politeness import split_admitted, split_robots_excluded
-from ..operators.seen import as_seen_rows
 from ..schema import OBSERVATIONS, ROBOTS, SPANS_DOC
-from .round import FRONTIER_COLS, _part_by_hash, _StepTimer, adopt_spans
+from .round import (
+    FRONTIER_COLS,
+    _StepTimer,
+    adopt_spans,
+    append_seen,
+    fetch_and_commit,
+)
 
 # intervals are measured in crawl rounds (the engine's clock); a page
 # never seen changing waits the maximum, a churning page is re-eligible
@@ -186,16 +191,8 @@ def run_revisit(
     frontier = revisit_frontier(cat, now_round)
     allowed, _excluded, _ = split_robots_excluded(frontier, robots)
     admitted, deferred = split_admitted(allowed.select(*FRONTIER_COLS), robots, cfg)
-    admitted = admitted.withColumn("fingerprint", F.hash(F.col("url")))
     meta = {"round": int(now_round), "revisit": True}
-    # same executor-direct columnar write as the round pipeline: span/link
-    # bytes go Arrow -> parquet inside the Python workers, the JVM sees
-    # per-partition stats rows only
-    stage = cat.new_stage("fetched")
-    fetch_stage_direct(admitted, cfg, now_round, stage, transport_factory).agg(
-        F.sum("rows")
-    ).first()
-    sid = cat.overwrite_stage("fetched", stage, meta=meta)
+    sid = fetch_and_commit(cat, admitted, cfg, now_round, meta, transport_factory)
     ok = cat.read("fetched", FETCHED, snapshot=sid).filter(F.col("ok"))
     tm.step("counts")
     res = {
@@ -260,13 +257,6 @@ def run_revisit(
         res["not_modified"] = res["refetched_ok"] - n_changed
         j.unpersist()
     tm.step("seen_append")
-    cat.append(
-        "seen",
-        _part_by_hash(
-            as_seen_rows(ok, cfg.seen_buckets, now_round), cfg.frontier_partitions
-        ),
-        meta={"round": int(now_round), "revisit": True},
-    )
-    tm.done()
-    res["timings"] = {k: round(v, 3) for k, v in tm.times.items()}
+    append_seen(cat, ok, cfg, now_round, meta)
+    res["timings"] = tm.rounded()
     return res

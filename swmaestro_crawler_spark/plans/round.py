@@ -16,6 +16,13 @@ are exploded and canonicalized once into a persisted frame that every
 pending branch reads. The crawl-order rank is a JVM projection, and an
 empty table reads as a JVM ``LocalRelation`` (``Catalog._scan``).
 
+``run_round_critical`` runs the round up to its last data commit: the
+bookkeeping commits run concurrently on driver threads and are joined
+in one place, so a failing job leaves no thread behind.
+``finish_round`` derives metrics and lineage from the committed
+snapshots. The fetch commit and the seen append are shared with the
+revisit flow (``fetch_and_commit``, ``append_seen``).
+
 Every ordering decision is derived from data (PRIORITY keys), never from
 task timing, so the crawl order is identical at local[8] and local[32]
 (the N vs 4N correctness half of the scaling criterion), and every write
@@ -24,6 +31,8 @@ is deterministically partitioned + sorted so resume is byte-identical.
 
 from __future__ import annotations
 
+import concurrent.futures
+import time
 from dataclasses import dataclass
 
 import numpy as np
@@ -32,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import Catalog
 from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
-from ..operators.fetch import FETCHED, fetch_stage_direct
+from ..operators.fetch import FETCHED, fetch_stage_direct, synth_transport
 from ..operators.politeness import (
     cap_per_template,
     priority_order,
@@ -77,6 +86,45 @@ def adopt_spans(cat: Catalog, sid: int, meta: dict) -> int:
         meta=meta,
         column_map={"doc_id": "url", "round": "fetch_round"},
         row_filter="ok",
+    )
+
+
+def fetch_and_commit(
+    cat: Catalog,
+    admitted: DataFrame,
+    cfg: CrawlConfig,
+    r: int,
+    meta: dict,
+    transport_factory=synth_transport,
+) -> int:
+    """Fetch ``admitted`` into the fetched scratch table; returns the
+    committed snapshot id. One fused Arrow pass fetches AND extracts
+    spans and writes the span/link bytes Arrow -> parquet inside the
+    Python workers: the JVM sees one stats row per partition
+    (operators/fetch.fetch_stage_direct — content- and layout-identical
+    to the mapInArrow->df.write reference, digest-pinned). The sort
+    inside the pass makes the files deterministic regardless of shuffle
+    arrival order (byte-identical resume, N-vs-4N equality)."""
+    stage = cat.new_stage("fetched")
+    fetch_stage_direct(
+        admitted.withColumn("fingerprint", F.hash(F.col("url"))),
+        cfg,
+        r,
+        stage,
+        transport_factory,
+    ).agg(F.sum("rows")).first()
+    return cat.overwrite_stage("fetched", stage, meta=meta)
+
+
+def append_seen(
+    cat: Catalog, resolved: DataFrame, cfg: CrawlConfig, r: int, meta: dict
+) -> int:
+    """Seen-tier exact-table update: one row per resolved URL, in the
+    hash-partitioned, sorted layout of every seen snapshot."""
+    return cat.append(
+        "seen",
+        _part_by_hash(as_seen_rows(resolved, cfg.seen_buckets, r), cfg.frontier_partitions),
+        meta=meta,
     )
 
 
@@ -176,9 +224,10 @@ def unseen_frontier(
 
 
 class _StepTimer:
-    """Per-step wall timing, RECORDED into ``times`` (``RoundResult.timings``
-    carries it to callers; the scaling bench reports per-stage efficiencies
-    from it)."""
+    """Per-step wall timing, RECORDED into ``times`` (``RoundResult.timings``,
+    the revisit summary and ``MediaSweepResult.timings`` carry it to
+    callers; the scaling bench reports per-stage efficiencies from the
+    round's)."""
 
     def __init__(self) -> None:
         self.times: dict[str, float] = {}
@@ -186,8 +235,6 @@ class _StepTimer:
         self._name = None
 
     def step(self, name: str) -> None:
-        import time
-
         now = time.perf_counter()
         if self._name is not None:
             self.times[self._name] = self.times.get(self._name, 0.0) + (now - self._t)
@@ -195,6 +242,25 @@ class _StepTimer:
 
     def done(self) -> None:
         self.step("_end")
+
+    def rounded(self) -> dict[str, float]:
+        """Ends the current step; every step's wall rounded to ms."""
+        self.done()
+        return {k: round(v, 3) for k, v in self.times.items()}
+
+    def timed(self, name: str, fn):
+        """``fn`` wrapped to record its own wall (rounded to ms) under
+        ``name`` — for jobs that run concurrently, outside the step
+        sequence."""
+
+        def run():
+            t0 = time.perf_counter()
+            try:
+                return fn()
+            finally:
+                self.times[name] = round(time.perf_counter() - t0, 3)
+
+        return run
 
 
 @dataclass
@@ -212,19 +278,15 @@ class RoundResult:
 
 @dataclass
 class RoundHandle:
-    """Everything ``finish_round`` needs after ``run_round_critical``
-    returned: the still-running bookkeeping futures (all SIX bookkeeping
-    jobs were launched together, but only the three the next round
-    consumes were joined), the executor to shut down, the fetched/seen/
-    pending snapshot ids the metrics are derived from, and the round's
-    persisted frames (robots_joined, unseen, the canonical outlinks),
-    which ``finish_round`` releases."""
+    """What ``finish_round`` needs once ``run_round_critical`` has joined
+    every bookkeeping job: the snapshot ids of the round's five committed
+    tables (fetched, seen, pending, crawl_order, dead), the two cached
+    counts and the step timer."""
 
     round: int
     sids: dict[str, int]
-    futures: dict  # name -> Future: order, dead, counts (still running)
-    executor: object  # ThreadPoolExecutor to shut down in finish_round
-    persisted: tuple[DataFrame, ...]
+    excluded: int
+    unseen: int
     tm: _StepTimer
 
 
@@ -237,15 +299,17 @@ def run_round_critical(
     bloom: np.ndarray,
     cuckoo=None,
 ) -> RoundHandle:
-    """The NEXT-ROUND-BLOCKING part of a round: fetch + span commit, then
-    the three bookkeeping commits round r+1's own pipeline consumes —
-    ``pending`` (its frontier), ``seen`` and the bloom increment (its
-    unseen filter). The other bookkeeping jobs (crawl_order, dead
-    letters, counts) are launched alongside and keep running;
-    ``finish_round`` joins them and derives metrics + lineage.
+    """Round ``r`` up to its last data commit: fetch + span commit, then
+    every bookkeeping job (seen, bloom and cuckoo increments, pending,
+    crawl_order, dead letters, counts, host stats, scores) run
+    concurrently and joined here, in one place. The round's persisted
+    frames are released before this returns, also when a job fails;
+    ``finish_round`` then derives metrics + lineage from the committed
+    snapshots.
 
-    ``bloom`` (and ``cuckoo``) are merged IN PLACE; the driver
-    checkpoints them after ``finish_round`` returns."""
+    ``bloom`` (and ``cuckoo``) are merged IN PLACE once every job has
+    succeeded; the driver checkpoints them after ``finish_round``
+    returns."""
     tm = _StepTimer()
     tm.step("read+plan")
     pending = cat.read("pending", FRONTIER)
@@ -321,24 +385,13 @@ def run_round_critical(
     deferred_df = deferred_df.select(*FRONTIER_COLS)
     if trap_overflow is not None:
         deferred_df = deferred_df.unionByName(trap_overflow.select(*FRONTIER_COLS))
-    admitted_df = admitted_df.withColumn("fingerprint", F.hash(F.col("url")))
 
-    # 5. salted-bucket batch fetch -> ROUND SCRATCH TABLE. One fused
-    #    Arrow pass fetches AND extracts spans (operators/fetch.py), and
-    #    its output is written ONCE to parquet; every downstream consumer
-    #    reads it back column-pruned. The explicit sort makes the files
-    #    deterministic regardless of shuffle arrival order
-    #    (byte-identical resume, N-vs-4N equality).
+    # 5. salted-bucket batch fetch -> ROUND SCRATCH TABLE, written ONCE
+    #    to parquet (fetch_and_commit); every downstream consumer reads it
+    #    back column-pruned.
     tm.step("fetch_scratch_write")
-    # executor-direct columnar write: the span/link bytes go Arrow ->
-    # parquet inside the Python workers; the JVM sees 32 stats rows
-    # (operators/fetch.fetch_stage_direct — content- and layout-
-    # identical to the mapInArrow->df.write reference, digest-pinned)
-    stage = cat.new_stage("fetched")
-    fetch_stage_direct(admitted_df, cfg, r, stage).agg(F.sum("rows")).first()
-    sid_fetch = cat.overwrite_stage("fetched", stage, meta={"round": r})
+    sid_fetch = fetch_and_commit(cat, admitted_df, cfg, r, {"round": r})
     fetched = cat.read("fetched", FETCHED)
-    ok = fetched.filter(F.col("ok"))
     failed = fetched.filter(~F.col("ok"))
     # "resolved" = conclusively fetched: ok pages PLUS cross-host 301
     # handoffs (the URL itself never needs refetching — its single
@@ -356,26 +409,19 @@ def run_round_critical(
     tm.step("spans_write")
     adopt_spans(cat, sid_fetch, {"round": r})
 
-    # 7-9. CRITICAL bookkeeping — the three commits round r+1's own
-    #    pipeline consumes (pending = its frontier; seen + bloom = its
-    #    unseen filter), run CONCURRENTLY from driver threads (VERDICT
-    #    r1 task 1: serial small commits each pay a fixed
-    #    driver/scheduling latency that does not shrink with cores;
-    #    overlapped, the latencies coincide). Every job reads only the
-    #    committed fetch scratch or round-start state and writes its OWN
-    #    table (separate manifest files -> commit isolation), so
-    #    concurrency cannot change any output byte: each write keeps its
-    #    deterministic repartition+sortWithinPartitions layout.
+    # 7. bookkeeping, run CONCURRENTLY from driver threads (VERDICT r1
+    #    task 1: serial small commits each pay a fixed driver/scheduling
+    #    latency that does not shrink with cores; overlapped, the
+    #    latencies coincide). Every job reads only the committed fetch
+    #    scratch or round-start state and writes its OWN table (separate
+    #    manifest files -> commit isolation), so concurrency cannot
+    #    change any output byte: each write keeps its deterministic
+    #    repartition+sortWithinPartitions layout.
     def job_seen() -> int:
-        # seen tier exact-table update; one row per RESOLVED URL (fetched
-        # ok + 301 handoffs — identical to fetched-ok when redirects are
-        # off), so
-        # this commit's rows_delta IS ok_n (no separate count job)
-        return cat.append(
-            "seen",
-            _part_by_hash(as_seen_rows(resolved, cfg.seen_buckets, r), cfg.frontier_partitions),
-            meta={"round": r},
-        )
+        # one row per RESOLVED URL (fetched ok + 301 handoffs — identical
+        # to fetched-ok when redirects are off), so this commit's
+        # rows_delta IS ok_n (no separate count job)
+        return append_seen(cat, resolved, cfg, r, {"round": r})
 
     def job_bloom() -> np.ndarray:
         # bloom increment: per-partition bitmaps over a url_hash-only
@@ -409,7 +455,8 @@ def run_round_critical(
     # frontier expansion: outlinks -> next round's pending rows (LAZY —
     # built here so job_pending and the optional job_scores share one
     # definition; nothing executes until those jobs run). The exploded,
-    # canonicalized outlinks are PERSISTED (released in finish_round):
+    # canonicalized outlinks are PERSISTED (released once the
+    # bookkeeping is joined):
     # the cut-parent, continuation and rest branches of job_pending and
     # job_scores all read that one copy, so the canonicalization UDF
     # runs once per outlink per round.
@@ -548,8 +595,8 @@ def run_round_critical(
 
     def job_hoststats() -> int:
         # per-(host, round) outcome counts — the adaptive-backoff signal
-        # round r+1's admission reads (CRITICAL like seen/pending when
-        # the feature is on). Dimension-sized: one row per fetched host.
+        # round r+1's admission reads. Dimension-sized: one row per
+        # fetched host.
         st = (
             fetched.groupBy("host")
             .agg(
@@ -567,104 +614,81 @@ def run_round_critical(
             "host_stats", _part_by_hash(st, 1, col="host"), meta={"round": r}
         )
 
-    # ALL SIX bookkeeping jobs launch together (full r2-style
-    # concurrency — their fixed driver latencies coincide), but only the
-    # three round r+1 consumes are JOINED here; the other three keep
-    # running and finish_round collects them.
-    tm.step("bookkeeping_critical")
-    from concurrent.futures import ThreadPoolExecutor
-
-    ex = ThreadPoolExecutor(max_workers=9, thread_name_prefix=f"bk-r{r}")
-    jobs = [
-        ("seen", job_seen),
-        ("bloom", job_bloom),
-        ("pending", job_pending),
-        ("order", job_order),
-        ("dead", job_dead),
-        ("counts", job_counts),
-    ]
+    tm.step("bookkeeping")
+    jobs = {
+        "seen": job_seen,
+        "bloom": job_bloom,
+        "pending": job_pending,
+        "order": job_order,
+        "dead": job_dead,
+        "counts": job_counts,
+    }
     if cuckoo is not None:
-        jobs.append(("cuckoo", job_cuckoo))
+        jobs["cuckoo"] = job_cuckoo
     if cfg.adaptive_backoff:
-        jobs.append(("hoststats", job_hoststats))
+        jobs["hoststats"] = job_hoststats
     if cfg.score_admission and cfg.score_table:
-        # O(delta) contribution append — round r+1's admission reads it,
-        # so it is a CRITICAL commit like seen/pending
+        # O(delta) contribution append — round r+1's admission reads it
         from ..operators.scoretable import append_contributions
 
-        jobs.append(("scores", lambda: append_contributions(cat, new_links, r)))
-    # per-job walls (submit->finish, concurrent so they overlap): the
-    # scaling bench's stage table records only the aggregate
-    # bookkeeping_critical join; these name its tail job
-    def _timed(name, fn):
-        import time as _time
-
-        def run():
-            t0 = _time.perf_counter()
-            try:
-                return fn()
-            finally:
-                tm.times[f"bk_{name}"] = round(_time.perf_counter() - t0, 3)
-
-        return run
-
-    futs = {name: ex.submit(_timed(name, fn)) for name, fn in jobs}
-    sid_seen = futs["seen"].result()
-    sid_pending = futs["pending"].result()
-    for name in ("scores", "hoststats"):
-        if name in futs:
-            futs[name].result()
-    bloom |= futs["bloom"].result()
+        jobs["scores"] = lambda: append_contributions(cat, new_links, r)
+    # the with block waits for EVERY job, failed or not, so no job's
+    # thread outlives this round; each job's own wall is bk_<name>
+    try:
+        with concurrent.futures.ThreadPoolExecutor(
+            len(jobs), thread_name_prefix=f"bk-r{r}"
+        ) as ex:
+            futs = {n: ex.submit(tm.timed(f"bk_{n}", fn)) for n, fn in jobs.items()}
+        out = {n: f.result() for n, f in futs.items()}
+    finally:
+        for handle in (robots_joined, unseen, links_exploded):
+            handle.unpersist()
+    bloom |= out["bloom"]
     if cuckoo is not None:
         # merged in place like the bloom: round r+1 probes the caller's
         # object, and the driver checkpoints it after finish_round
-        cuckoo.tables[...] = futs["cuckoo"].result()
-
+        cuckoo.tables[...] = out["cuckoo"]
+    excluded_n, unseen_n = out["counts"]
     return RoundHandle(
         round=r,
-        sids={"fetched": sid_fetch, "seen": sid_seen, "pending": sid_pending},
-        futures={k: futs[k] for k in ("order", "dead", "counts")},
-        executor=ex,
-        persisted=(robots_joined, unseen, links_exploded),
+        sids={
+            "fetched": sid_fetch,
+            "seen": out["seen"],
+            "pending": out["pending"],
+            "crawl_order": out["order"],
+            "dead": out["dead"],
+        },
+        excluded=excluded_n,
+        unseen=unseen_n,
         tm=tm,
     )
 
 
 def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
-    """Joins the rest of the round-r bookkeeping (crawl_order, dead
-    letters, counts — already running since the critical phase) and
-    derives metrics + lineage. The driver writes the round checkpoint
-    after this returns."""
-    r, tm = h.round, h.tm
-
-    tm.step("bookkeeping_deferred")
-    sid_order = h.futures["order"].result()
-    sid_dead = h.futures["dead"].result()
-    excluded_n, unseen_n = h.futures["counts"].result()
-    h.executor.shutdown(wait=False)
+    """Metrics + lineage of round ``h.round``, derived from its committed
+    snapshots. The driver writes the round checkpoint after this
+    returns."""
+    r, tm, sids = h.round, h.tm, h.sids
 
     # metrics + per-partition lineage. Every count is DERIVED — from
     # parquet footer stats recorded at commit time (rows_delta: the seen
     # commit is 1:1 with fetched-ok rows, so ok_n needs no job) plus the
-    # two cached counts above — the metrics step runs no further Spark
-    # job over round data and writes via a direct pyarrow commit.
+    # two cached counts — the metrics step runs no further Spark job
+    # over round data and writes via a direct pyarrow commit.
     tm.step("metrics_counts")
-    sid_fetch = h.sids["fetched"]
-    sid_seen = h.sids["seen"]
-    sid_pending = h.sids["pending"]
-    admitted_n = cat.rows_delta("fetched", sid_fetch)
-    ok_n = cat.rows_delta("seen", sid_seen)
+    admitted_n = cat.rows_delta("fetched", sids["fetched"])
+    ok_n = cat.rows_delta("seen", sids["seen"])
     failed_n = admitted_n - ok_n
-    dead_fetch_n = cat.rows_delta("dead", sid_dead) - excluded_n
+    dead_fetch_n = cat.rows_delta("dead", sids["dead"]) - h.excluded
     retries_n = failed_n - dead_fetch_n
-    pending_next_n = cat.rows_delta("pending", sid_pending)
-    deferred_n = unseen_n - admitted_n               # unseen = admitted + deferred
+    pending_next_n = cat.rows_delta("pending", sids["pending"])
+    deferred_n = h.unseen - admitted_n               # unseen = admitted + deferred
     counts = {
         "admitted": admitted_n,
         "fetched_ok": ok_n,
         "failed": failed_n,
         "deferred": deferred_n,
-        "excluded": excluded_n,
+        "excluded": h.excluded,
         "new_links": pending_next_n - deferred_n - retries_n,
         "pending_next": pending_next_n,
     }
@@ -680,19 +704,11 @@ def finish_round(cat: Catalog, h: RoundHandle) -> RoundResult:
     # footer stats, no Spark job
     lineage_rows = [
         (r, stage, pid, int(n))
-        for stage, sid in (
-            ("fetched", sid_fetch),
-            ("seen", sid_seen),
-            ("crawl_order", sid_order),
-            ("dead", sid_dead),
-            ("pending", sid_pending),
-        )
-        for pid, n in enumerate(cat.file_rows(stage, sid))
+        for stage in ("fetched", "seen", "crawl_order", "dead", "pending")
+        for pid, n in enumerate(cat.file_rows(stage, sids[stage]))
     ]
     cat.append_rows("lineage", lineage_rows, LINEAGE, meta={"round": r})
     tm.done()
-    for handle in h.persisted:
-        handle.unpersist()
 
     return RoundResult(
         round=r,

@@ -10,11 +10,17 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 
+import pytest
+
+from swmaestro_crawler_spark.catalog import Catalog
 from swmaestro_crawler_spark.plans import crawl as crawl_mod
 from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.schema import CRAWL_ORDER
 from swmaestro_crawler_spark.sources.synth_web import make_seeds
+
+from tests.conftest import small_cfg
 
 TABLES = ("spans", "seen", "crawl_order", "dead", "pending")
 
@@ -73,3 +79,33 @@ def test_results_independent_of_parallelism(spark, tmp_path, crawled):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert digests["3"] == digests["8"]
+
+
+def test_failed_bookkeeping_job_leaves_no_thread_and_resumes(
+    spark, tmp_path, crawled, monkeypatch
+):
+    """One bookkeeping job (the dead-letter append) raises while its
+    siblings commit: the run fails loudly, no ``bk-r`` thread survives
+    it, and re-running the same warehouse reproduces an uninterrupted
+    crawl."""
+    _, a, _ = crawled(tmp_path / "a", 40, 1)
+    cfg = small_cfg(str(tmp_path / "b"))
+    seeds = spark.createDataFrame(make_seeds(cfg, 40))
+    append = Catalog.append
+
+    def failing_append(self, table, *args, **kwargs):
+        if table == "dead":
+            raise RuntimeError("injected dead-letter commit failure")
+        return append(self, table, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "append", failing_append)
+    with pytest.raises(RuntimeError, match="injected"):
+        Crawl(spark, cfg).run(seeds, rounds=1)
+    alive = [t.name for t in threading.enumerate() if t.name.startswith("bk-r")]
+    assert alive == []
+
+    monkeypatch.undo()
+    b = Crawl(spark, cfg)
+    assert len(b.run(seeds, rounds=1)) == 1
+    for t in TABLES:
+        assert table_digest(a, t) == table_digest(b, t), t
