@@ -206,8 +206,8 @@ def crawl_worker(cuckoo: bool) -> None:
     JVM, tmpfs scratch). Round 3 proved the shared bench session degrades
     position-dependently, and the crawl ran last, after 79 queries: its
     recorded wall hit 76-170 s while the same job in a fresh process runs
-    ~35-80 s (BENCH/crawl_ab.json). Isolation protocol matches
-    tools/bench_scaling.py."""
+    ~35-80 s (historical record BENCH/crawl_ab.json). Isolation protocol
+    matches tools/bench_scaling.py."""
     from swmaestro_crawler_spark.config import spark_builder
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -291,7 +291,7 @@ def main() -> None:
     # host drift hits both equally (VERDICT r4 #3: the r4 headline ran
     # the cuckoo arm as a single sample under a weaker protocol and
     # disagreed with BENCH/cuckoo_ab.json by +27 s; protocol now
-    # identical for both arms and matches tools/cuckoo_ab.py)
+    # identical for both arms)
     runs, ck_runs = [], []
     for _ in range(3):
         runs.append(_crawl_subprocess())

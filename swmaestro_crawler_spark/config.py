@@ -56,7 +56,7 @@ class CrawlConfig:
     # exact-confirm shuffle of bloom false positives, which grows with
     # |seen|. At 2M URLs / 8 cores the tier cost +42% wall
     # (BENCH/scaling.json cuckoo_digest_check); at 30k URLs best-of-3
-    # it costs ~+2.4 s over a ~30 s crawl (BENCH/cuckoo_ab.json). The
+    # it cost ~+2.4 s over a ~30 s crawl (BENCH/cuckoo_ab.json). The
     # bloom's FP count is n_frontier_rows x bloom_FP_rate; only when
     # that times the per-row exact-confirm shuffle cost exceeds the
     # tier's fixed per-round cost does the tier win — with the default
@@ -158,8 +158,7 @@ class CrawlConfig:
     # the reference's LIFO order. OFF by default — crawl-order parity vs
     # the reference oracle is a correctness criterion; the scored order
     # is int64-exact and therefore still deterministic at any
-    # parallelism (pinned by tests/test_score_admission.py and the
-    # SCALING_SCORE=1 digest check in tools/bench_scaling.py)
+    # parallelism (pinned by tests/test_score_admission.py)
     score_admission: bool = False
 
     # Standing score table instead of per-round recompute

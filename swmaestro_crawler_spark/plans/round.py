@@ -303,7 +303,7 @@ def run_round_critical(
     every bookkeeping job (seen, bloom and cuckoo increments, pending,
     crawl_order, dead letters, counts, host stats, scores) run
     concurrently and joined here, in one place. The round's persisted
-    frames are released before this returns, also when a job fails;
+    frames are released before this returns, also when any step fails;
     ``finish_round`` then derives metrics + lineage from the committed
     snapshots.
 
@@ -337,304 +337,308 @@ def run_round_critical(
     unseen, excluded, robots_joined = unseen_frontier(
         pending, robots, seen, bitmap_bc, cfg.bloom_hashes, cuckoo_bc
     )
-    unseen.persist()
-
-    # 4. politeness admission (rank vs crawl-delay budget), optionally
-    #    preceded by the spider-trap guard: at most trap_template_cap
-    #    rows per (host, URL template) enter admission this round, the
-    #    overflow stays pending (operators/politeness.py cap_per_template;
-    #    off by default — reference parity has no adversarial URL space)
-    trap_overflow = None
-    if cfg.trap_template_cap is not None:
-        unseen_capped, trap_overflow = cap_per_template(unseen, cfg)
-    else:
-        unseen_capped = unseen
-    if cfg.score_admission:
-        # importance-first scheduler: OPIC in-link mass over this round's
-        # parent->url edges ranks the budgeted slots (config.py
-        # score_admission). Same two-phase skew-safe top-k underneath.
-        # The score vector is materialized exactly once here:
-        # admitted/deferred feed several downstream jobs (fetch,
-        # seen/pending/crawl_order commits), and without this cut each
-        # of them would re-execute the scoring subplan
-        # (measured: bookkeeping 33.5 s -> 91.6 s at local[2]/2M URLs).
-        # One row per scored URL — small next to the fetch; the RDD is
-        # released by the ContextCleaner when the round's frames drop.
-        from ..operators.politeness import frontier_scores, score_admitted
-
-        tm.step("admission_scores")
-        if cfg.score_table:
-            # standing merge-on-read score table (operators/scoretable):
-            # accumulated over every discovered edge, bound to the
-            # round-start snapshot (this round's job_scores append is
-            # invisible here by construction, like seen/pending)
-            from ..operators.scoretable import read_scores
-
-            scores_src = read_scores(cat)
-        else:
-            scores_src = frontier_scores(pending)
-        scores = scores_src.localCheckpoint(eager=True)
-        tm.step("read+plan")
-        admitted_df, deferred_df = score_admitted(
-            unseen_capped, scores, robots, cfg, backoff=backoff
-        )
-    else:
-        admitted_df, deferred_df = split_admitted(
-            unseen_capped, robots, cfg, backoff=backoff
-        )
-    deferred_df = deferred_df.select(*FRONTIER_COLS)
-    if trap_overflow is not None:
-        deferred_df = deferred_df.unionByName(trap_overflow.select(*FRONTIER_COLS))
-
-    # 5. salted-bucket batch fetch -> ROUND SCRATCH TABLE, written ONCE
-    #    to parquet (fetch_and_commit); every downstream consumer reads it
-    #    back column-pruned.
-    tm.step("fetch_scratch_write")
-    sid_fetch = fetch_and_commit(cat, admitted_df, cfg, r, {"round": r})
-    fetched = cat.read("fetched", FETCHED)
-    failed = fetched.filter(~F.col("ok"))
-    # "resolved" = conclusively fetched: ok pages PLUS cross-host 301
-    # handoffs (the URL itself never needs refetching — its single
-    # outlink, the redirect target, re-enters the frontier below and the
-    # target host's politeness budget applies there). With redirects off
-    # (synth_redirect_prob=0, the reference-parity default) no 301 rows
-    # exist and resolved == ok, so every pinned digest is unchanged.
-    resolved = fetched.filter(F.col("ok") | (F.col("status_code") == 301))
-
-    # 6. span documents (the interleaved text+media payload): a ZERO-COPY
-    #    manifest append — the spans table commits the scratch snapshot's
-    #    data files with a name mapping (doc_id<-url, round<-fetch_round)
-    #    and a row-filter predicate (ok only; the Iceberg delete-file
-    #    analogue). No bytes are rewritten.
-    tm.step("spans_write")
-    adopt_spans(cat, sid_fetch, {"round": r})
-
-    # 7. bookkeeping, run CONCURRENTLY from driver threads (VERDICT r1
-    #    task 1: serial small commits each pay a fixed driver/scheduling
-    #    latency that does not shrink with cores; overlapped, the
-    #    latencies coincide). Every job reads only the committed fetch
-    #    scratch or round-start state and writes its OWN table (separate
-    #    manifest files -> commit isolation), so concurrency cannot
-    #    change any output byte: each write keeps its deterministic
-    #    repartition+sortWithinPartitions layout.
-    def job_seen() -> int:
-        # one row per RESOLVED URL (fetched ok + 301 handoffs — identical
-        # to fetched-ok when redirects are off), so this commit's
-        # rows_delta IS ok_n (no separate count job)
-        return append_seen(cat, resolved, cfg, r, {"round": r})
-
-    def job_bloom() -> np.ndarray:
-        # bloom increment: per-partition bitmaps over a url_hash-only
-        # scan — the driver never sees individual hashes
-        return build_bloom_distributed(
-            resolved.select("url_hash"), bloom.shape[0] * 64, cfg.bloom_hashes
-        )
-
-    def job_cuckoo() -> np.ndarray:
-        # cuckoo increment: each key shard's table updates in its own
-        # task (disjoint shards — the cuckoo analogue of the bloom's
-        # OR-reduce; same "driver never sees hashes" property)
-        from ..operators.cuckoo import build_cuckoo_increment
-
-        return build_cuckoo_increment(resolved.select("url_hash"), cuckoo).tables
-
-    # retries + dead letters (at-least-once semantics; reference nack ->
-    # dead queue, New_YouTube_Crawler_Channel_Updater.py:41-46).
-    # Failure CLASSIFICATION (C6/P5): fatal codes — the 403/413 analogue
-    # the reference aborts on with NO retry
-    # (New_YouTube_Crawler_Comment.py:50-52) and the permanent
-    # private/blocked page dispositions (view_count_crawler.py:51-70) —
-    # go straight to dead with reason 'fatal_<code>' at their current
-    # attempt; only transient failures (500) enter the bounded-retry path.
-    transient = failed.filter(F.col("status_code") == 500)
-    retry_base = transient.withColumn("attempt", F.col("attempt") + 1).withColumn(
-        "round", F.lit(r + 1).cast("int")
-    )
-    retries = retry_base.filter(F.col("attempt") < cfg.max_attempts).select(*FRONTIER_COLS)
-
-    # frontier expansion: outlinks -> next round's pending rows (LAZY —
-    # built here so job_pending and the optional job_scores share one
-    # definition; nothing executes until those jobs run). The exploded,
-    # canonicalized outlinks are PERSISTED (released once the
-    # bookkeeping is joined):
-    # the cut-parent, continuation and rest branches of job_pending and
-    # job_scores all read that one copy, so the canonicalization UDF
-    # runs once per outlink per round.
-    # O5/V4 pagination cutoff: the reference kills a playlist's whole
-    # pagination chain on the first already-seen video
-    # (New_YouTube_Crawler.py:263-273, keep_going=False). Batch
-    # adaptation: a playlist page whose video items include a URL
-    # seen AS OF ROUND START does not enqueue its next-page
-    # continuation. Membership reuses the two-tier structure:
-    # round-start bloom probe (bitmap_bc) filters to the maybe-seen
-    # slice, an exact SEMI join against the round-start seen table
-    # confirms — no seen-set shuffle for the overwhelmingly-unseen
-    # case. ``seen`` was bound to the round-start snapshot at step 1
-    # (catalog.read resolves files eagerly), so the concurrent
-    # job_seen append is invisible here by construction.
-    links_exploded = (
-        resolved.filter(F.col("depth") < cfg.max_depth)
-        .select(
-            F.col("url").alias("parent"),
-            F.col("depth").alias("parent_depth"),
-            F.posexplode(
-                F.when(F.col("links") == "", F.array().cast("array<string>"))
-                .otherwise(F.split(F.col("links"), SPANSEP_LIT))
-            ).alias("seq", "url"),
-        )
-        .transform(with_canonical)
-        .drop("fingerprint")
-        .persist()
-    )
-    if cfg.playlist_cutoff:
-        is_pl_parent = F.col("parent").rlike("://[^/]*/pl/")
-        is_pl_child = F.col("url").rlike("://[^/]*/pl/")
-        watch_children = links_exploded.filter(is_pl_parent & ~is_pl_child).select(
-            "parent", "url_hash"
-        )
-        cut_parents = (
-            bloom_probe(watch_children, bitmap_bc, cfg.bloom_hashes)
-            .filter(F.col("maybe_seen"))
-            .join(seen.select("url_hash"), "url_hash", "left_semi")
-            .select("parent")
-            .distinct()
-        )
-        cont = links_exploded.filter(is_pl_parent & is_pl_child)
-        rest = links_exploded.filter(~(is_pl_parent & is_pl_child))
-        kept_cont = cont.join(cut_parents, "parent", "left_anti")
-        links = rest.unionByName(kept_cont)
-    else:
-        links = links_exploded
-    new_links = links.select(
-        "url",
-        "url_hash",
-        "host",
-        (F.col("parent_depth") + 1).cast("int").alias("depth"),
-        F.col("seq").cast("long").alias("seq"),
-        F.lit(r + 1).cast("int").alias("round"),
-        F.lit(0).cast("int").alias("attempt"),
-        "parent",
-    )
-
-    def job_pending() -> int:
-        next_pending = (
-            deferred_df.select(*FRONTIER_COLS)
-            .unionByName(retries)
-            .unionByName(new_links)
-        )
-        return cat.overwrite(
-            "pending",
-            _pending_layout(next_pending, cfg.frontier_partitions),
-            meta={"round": r + 1},
-        )
-
-    def job_order() -> int:
-        # crawl-order log — the judge-replayable total order. ord is the
-        # dense rank over the PRIORITY key within the round, computed by
-        # the scalable range-sort + prefix-offset rank (no single-reducer
-        # window). deterministic_layout pins every row's FILE assignment
-        # to a pure function of ord (one contiguous ord block per file),
-        # so the written bytes are identical across runs even though the
-        # rank's internal range sampling races under the concurrent
-        # bookkeeping jobs — the byte-identical-resume contract of this
-        # table. Reads only the flat key columns (column pruning hits
-        # the scratch parquet).
-        ranked, ranked_handle = with_global_ord(
-            fetched.select("url", "host", "depth", "seq", "url_hash", "ok"),
-            priority_order(),
-            cfg.frontier_partitions,
-            deterministic_layout=True,
-        )
-        order_rows = ranked.select(
-            F.lit(r).cast("int").alias("round"),
-            F.col("ord"),
-            "url",
-            "host",
-            "depth",
-            "ok",
-        )
-        sid = cat.append("crawl_order", order_rows, meta={"round": r})
-        ranked_handle.unpersist()
-        return sid
-
-    def job_dead() -> int:
-        # retries + dead letters (at-least-once semantics; reference
-        # nack -> dead queue,
-        # New_YouTube_Crawler_Channel_Updater.py:41-46)
-        dead_fetch = (
-            retry_base.filter(F.col("attempt") >= cfg.max_attempts)
-            .select(*FRONTIER_COLS)
-            .withColumn("reason", F.lit("max_attempts"))
-            .withColumn("dead_round", F.lit(r).cast("int"))
-        )
-        dead_fatal = (
-            # 500 retries; 301 handoffs resolve via the frontier — neither
-            # is dead. Everything else (403/413 fatal, 508 redirect loop)
-            # aborts with no retry.
-            failed.filter(~F.col("status_code").isin(500, 301))
-            .withColumn(
-                "reason", F.concat(F.lit("fatal_"), F.col("status_code").cast("string"))
-            )
-            .select(*FRONTIER_COLS, "reason")
-            .withColumn("dead_round", F.lit(r).cast("int"))
-        )
-        dead_robots = (
-            excluded.select(*FRONTIER_COLS)
-            .withColumn("reason", F.lit("robots"))
-            .withColumn("dead_round", F.lit(r).cast("int"))
-        )
-        return cat.append(
-            "dead",
-            _part_by_hash(dead_robots.unionByName(dead_fetch).unionByName(dead_fatal), 1),
-            meta={"round": r},
-        )
-
-    def job_counts() -> tuple[int, int]:
-        # two O(1) counts on cached intermediates (robots_joined/unseen)
-        return excluded.count(), unseen.count()
-
-    def job_hoststats() -> int:
-        # per-(host, round) outcome counts — the adaptive-backoff signal
-        # round r+1's admission reads. Dimension-sized: one row per
-        # fetched host.
-        st = (
-            fetched.groupBy("host")
-            .agg(
-                F.sum(F.col("ok").cast("long")).alias("ok_n"),
-                F.sum((F.col("status_code") == 500).cast("long")).alias("transient_n"),
-            )
-            .select(
-                "host",
-                F.lit(r).cast("int").alias("round"),
-                "ok_n",
-                "transient_n",
-            )
-        )
-        return cat.append(
-            "host_stats", _part_by_hash(st, 1, col="host"), meta={"round": r}
-        )
-
-    tm.step("bookkeeping")
-    jobs = {
-        "seen": job_seen,
-        "bloom": job_bloom,
-        "pending": job_pending,
-        "order": job_order,
-        "dead": job_dead,
-        "counts": job_counts,
-    }
-    if cuckoo is not None:
-        jobs["cuckoo"] = job_cuckoo
-    if cfg.adaptive_backoff:
-        jobs["hoststats"] = job_hoststats
-    if cfg.score_admission and cfg.score_table:
-        # O(delta) contribution append — round r+1's admission reads it
-        from ..operators.scoretable import append_contributions
-
-        jobs["scores"] = lambda: append_contributions(cat, new_links, r)
-    # the with block waits for EVERY job, failed or not, so no job's
-    # thread outlives this round; each job's own wall is bk_<name>
+    # the round's persisted frames (robots_joined, unseen and, once built,
+    # the canonical outlinks) are released however the round ends
+    links_exploded = None
     try:
+        unseen.persist()
+
+        # 4. politeness admission (rank vs crawl-delay budget), optionally
+        #    preceded by the spider-trap guard: at most trap_template_cap
+        #    rows per (host, URL template) enter admission this round, the
+        #    overflow stays pending (operators/politeness.py cap_per_template;
+        #    off by default — reference parity has no adversarial URL space)
+        trap_overflow = None
+        if cfg.trap_template_cap is not None:
+            unseen_capped, trap_overflow = cap_per_template(unseen, cfg)
+        else:
+            unseen_capped = unseen
+        if cfg.score_admission:
+            # importance-first scheduler: OPIC in-link mass over this round's
+            # parent->url edges ranks the budgeted slots (config.py
+            # score_admission). Same two-phase skew-safe top-k underneath.
+            # The score vector is materialized exactly once here:
+            # admitted/deferred feed several downstream jobs (fetch,
+            # seen/pending/crawl_order commits), and without this cut each
+            # of them would re-execute the scoring subplan
+            # (measured: bookkeeping 33.5 s -> 91.6 s at local[2]/2M URLs).
+            # One row per scored URL — small next to the fetch; the RDD is
+            # released by the ContextCleaner when the round's frames drop.
+            from ..operators.politeness import frontier_scores, score_admitted
+
+            tm.step("admission_scores")
+            if cfg.score_table:
+                # standing merge-on-read score table (operators/scoretable):
+                # accumulated over every discovered edge, bound to the
+                # round-start snapshot (this round's job_scores append is
+                # invisible here by construction, like seen/pending)
+                from ..operators.scoretable import read_scores
+
+                scores_src = read_scores(cat)
+            else:
+                scores_src = frontier_scores(pending)
+            scores = scores_src.localCheckpoint(eager=True)
+            tm.step("read+plan")
+            admitted_df, deferred_df = score_admitted(
+                unseen_capped, scores, robots, cfg, backoff=backoff
+            )
+        else:
+            admitted_df, deferred_df = split_admitted(
+                unseen_capped, robots, cfg, backoff=backoff
+            )
+        deferred_df = deferred_df.select(*FRONTIER_COLS)
+        if trap_overflow is not None:
+            deferred_df = deferred_df.unionByName(trap_overflow.select(*FRONTIER_COLS))
+
+        # 5. salted-bucket batch fetch -> ROUND SCRATCH TABLE, written ONCE
+        #    to parquet (fetch_and_commit); every downstream consumer reads it
+        #    back column-pruned.
+        tm.step("fetch_scratch_write")
+        sid_fetch = fetch_and_commit(cat, admitted_df, cfg, r, {"round": r})
+        fetched = cat.read("fetched", FETCHED)
+        failed = fetched.filter(~F.col("ok"))
+        # "resolved" = conclusively fetched: ok pages PLUS cross-host 301
+        # handoffs (the URL itself never needs refetching — its single
+        # outlink, the redirect target, re-enters the frontier below and the
+        # target host's politeness budget applies there). With redirects off
+        # (synth_redirect_prob=0, the reference-parity default) no 301 rows
+        # exist and resolved == ok, so every pinned digest is unchanged.
+        resolved = fetched.filter(F.col("ok") | (F.col("status_code") == 301))
+
+        # 6. span documents (the interleaved text+media payload): a ZERO-COPY
+        #    manifest append — the spans table commits the scratch snapshot's
+        #    data files with a name mapping (doc_id<-url, round<-fetch_round)
+        #    and a row-filter predicate (ok only; the Iceberg delete-file
+        #    analogue). No bytes are rewritten.
+        tm.step("spans_write")
+        adopt_spans(cat, sid_fetch, {"round": r})
+
+        # 7. bookkeeping, run CONCURRENTLY from driver threads (serial
+        #    small commits each pay a fixed driver/scheduling latency that
+        #    does not shrink with cores; overlapped, the latencies
+        #    coincide). Every job reads only the committed fetch
+        #    scratch or round-start state and writes its OWN table (separate
+        #    manifest files -> commit isolation), so concurrency cannot
+        #    change any output byte: each write keeps its deterministic
+        #    repartition+sortWithinPartitions layout.
+        def job_seen() -> int:
+            # one row per RESOLVED URL (fetched ok + 301 handoffs — identical
+            # to fetched-ok when redirects are off), so this commit's
+            # rows_delta IS ok_n (no separate count job)
+            return append_seen(cat, resolved, cfg, r, {"round": r})
+
+        def job_bloom() -> np.ndarray:
+            # bloom increment: per-partition bitmaps over a url_hash-only
+            # scan — the driver never sees individual hashes
+            return build_bloom_distributed(
+                resolved.select("url_hash"), bloom.shape[0] * 64, cfg.bloom_hashes
+            )
+
+        def job_cuckoo() -> np.ndarray:
+            # cuckoo increment: each key shard's table updates in its own
+            # task (disjoint shards — the cuckoo analogue of the bloom's
+            # OR-reduce; same "driver never sees hashes" property)
+            from ..operators.cuckoo import build_cuckoo_increment
+
+            return build_cuckoo_increment(resolved.select("url_hash"), cuckoo).tables
+
+        # retries + dead letters (at-least-once semantics; reference nack ->
+        # dead queue, New_YouTube_Crawler_Channel_Updater.py:41-46).
+        # Failure CLASSIFICATION (C6/P5): fatal codes — the 403/413 analogue
+        # the reference aborts on with NO retry
+        # (New_YouTube_Crawler_Comment.py:50-52) and the permanent
+        # private/blocked page dispositions (view_count_crawler.py:51-70) —
+        # go straight to dead with reason 'fatal_<code>' at their current
+        # attempt; only transient failures (500) enter the bounded-retry path.
+        transient = failed.filter(F.col("status_code") == 500)
+        retry_base = transient.withColumn("attempt", F.col("attempt") + 1).withColumn(
+            "round", F.lit(r + 1).cast("int")
+        )
+        retries = retry_base.filter(F.col("attempt") < cfg.max_attempts).select(*FRONTIER_COLS)
+
+        # frontier expansion: outlinks -> next round's pending rows (LAZY —
+        # built here so job_pending and the optional job_scores share one
+        # definition; nothing executes until those jobs run). The exploded,
+        # canonicalized outlinks are PERSISTED (released once the
+        # bookkeeping is joined):
+        # the cut-parent, continuation and rest branches of job_pending and
+        # job_scores all read that one copy, so the canonicalization UDF
+        # runs once per outlink per round.
+        # O5/V4 pagination cutoff: the reference kills a playlist's whole
+        # pagination chain on the first already-seen video
+        # (New_YouTube_Crawler.py:263-273, keep_going=False). Batch
+        # adaptation: a playlist page whose video items include a URL
+        # seen AS OF ROUND START does not enqueue its next-page
+        # continuation. Membership reuses the two-tier structure:
+        # round-start bloom probe (bitmap_bc) filters to the maybe-seen
+        # slice, an exact SEMI join against the round-start seen table
+        # confirms — no seen-set shuffle for the overwhelmingly-unseen
+        # case. ``seen`` was bound to the round-start snapshot at step 1
+        # (catalog.read resolves files eagerly), so the concurrent
+        # job_seen append is invisible here by construction.
+        links_exploded = (
+            resolved.filter(F.col("depth") < cfg.max_depth)
+            .select(
+                F.col("url").alias("parent"),
+                F.col("depth").alias("parent_depth"),
+                F.posexplode(
+                    F.when(F.col("links") == "", F.array().cast("array<string>"))
+                    .otherwise(F.split(F.col("links"), SPANSEP_LIT))
+                ).alias("seq", "url"),
+            )
+            .transform(with_canonical)
+            .drop("fingerprint")
+            .persist()
+        )
+        if cfg.playlist_cutoff:
+            is_pl_parent = F.col("parent").rlike("://[^/]*/pl/")
+            is_pl_child = F.col("url").rlike("://[^/]*/pl/")
+            watch_children = links_exploded.filter(is_pl_parent & ~is_pl_child).select(
+                "parent", "url_hash"
+            )
+            cut_parents = (
+                bloom_probe(watch_children, bitmap_bc, cfg.bloom_hashes)
+                .filter(F.col("maybe_seen"))
+                .join(seen.select("url_hash"), "url_hash", "left_semi")
+                .select("parent")
+                .distinct()
+            )
+            cont = links_exploded.filter(is_pl_parent & is_pl_child)
+            rest = links_exploded.filter(~(is_pl_parent & is_pl_child))
+            kept_cont = cont.join(cut_parents, "parent", "left_anti")
+            links = rest.unionByName(kept_cont)
+        else:
+            links = links_exploded
+        new_links = links.select(
+            "url",
+            "url_hash",
+            "host",
+            (F.col("parent_depth") + 1).cast("int").alias("depth"),
+            F.col("seq").cast("long").alias("seq"),
+            F.lit(r + 1).cast("int").alias("round"),
+            F.lit(0).cast("int").alias("attempt"),
+            "parent",
+        )
+
+        def job_pending() -> int:
+            next_pending = (
+                deferred_df.select(*FRONTIER_COLS)
+                .unionByName(retries)
+                .unionByName(new_links)
+            )
+            return cat.overwrite(
+                "pending",
+                _pending_layout(next_pending, cfg.frontier_partitions),
+                meta={"round": r + 1},
+            )
+
+        def job_order() -> int:
+            # crawl-order log — the judge-replayable total order. ord is the
+            # dense rank over the PRIORITY key within the round, computed by
+            # the scalable range-sort + prefix-offset rank (no single-reducer
+            # window). deterministic_layout pins every row's FILE assignment
+            # to a pure function of ord (one contiguous ord block per file),
+            # so the written bytes are identical across runs even though the
+            # rank's internal range sampling races under the concurrent
+            # bookkeeping jobs — the byte-identical-resume contract of this
+            # table. Reads only the flat key columns (column pruning hits
+            # the scratch parquet).
+            ranked, ranked_handle = with_global_ord(
+                fetched.select("url", "host", "depth", "seq", "url_hash", "ok"),
+                priority_order(),
+                cfg.frontier_partitions,
+                deterministic_layout=True,
+            )
+            order_rows = ranked.select(
+                F.lit(r).cast("int").alias("round"),
+                F.col("ord"),
+                "url",
+                "host",
+                "depth",
+                "ok",
+            )
+            try:
+                return cat.append("crawl_order", order_rows, meta={"round": r})
+            finally:
+                ranked_handle.unpersist()
+
+        def job_dead() -> int:
+            # retries + dead letters (at-least-once semantics; reference
+            # nack -> dead queue,
+            # New_YouTube_Crawler_Channel_Updater.py:41-46)
+            dead_fetch = (
+                retry_base.filter(F.col("attempt") >= cfg.max_attempts)
+                .select(*FRONTIER_COLS)
+                .withColumn("reason", F.lit("max_attempts"))
+                .withColumn("dead_round", F.lit(r).cast("int"))
+            )
+            dead_fatal = (
+                # 500 retries; 301 handoffs resolve via the frontier — neither
+                # is dead. Everything else (403/413 fatal, 508 redirect loop)
+                # aborts with no retry.
+                failed.filter(~F.col("status_code").isin(500, 301))
+                .withColumn(
+                    "reason", F.concat(F.lit("fatal_"), F.col("status_code").cast("string"))
+                )
+                .select(*FRONTIER_COLS, "reason")
+                .withColumn("dead_round", F.lit(r).cast("int"))
+            )
+            dead_robots = (
+                excluded.select(*FRONTIER_COLS)
+                .withColumn("reason", F.lit("robots"))
+                .withColumn("dead_round", F.lit(r).cast("int"))
+            )
+            return cat.append(
+                "dead",
+                _part_by_hash(dead_robots.unionByName(dead_fetch).unionByName(dead_fatal), 1),
+                meta={"round": r},
+            )
+
+        def job_counts() -> tuple[int, int]:
+            # two O(1) counts on cached intermediates (robots_joined/unseen)
+            return excluded.count(), unseen.count()
+
+        def job_hoststats() -> int:
+            # per-(host, round) outcome counts — the adaptive-backoff signal
+            # round r+1's admission reads. Dimension-sized: one row per
+            # fetched host.
+            st = (
+                fetched.groupBy("host")
+                .agg(
+                    F.sum(F.col("ok").cast("long")).alias("ok_n"),
+                    F.sum((F.col("status_code") == 500).cast("long")).alias("transient_n"),
+                )
+                .select(
+                    "host",
+                    F.lit(r).cast("int").alias("round"),
+                    "ok_n",
+                    "transient_n",
+                )
+            )
+            return cat.append(
+                "host_stats", _part_by_hash(st, 1, col="host"), meta={"round": r}
+            )
+
+        tm.step("bookkeeping")
+        jobs = {
+            "seen": job_seen,
+            "bloom": job_bloom,
+            "pending": job_pending,
+            "order": job_order,
+            "dead": job_dead,
+            "counts": job_counts,
+        }
+        if cuckoo is not None:
+            jobs["cuckoo"] = job_cuckoo
+        if cfg.adaptive_backoff:
+            jobs["hoststats"] = job_hoststats
+        if cfg.score_admission and cfg.score_table:
+            # O(delta) contribution append — round r+1's admission reads it
+            from ..operators.scoretable import append_contributions
+
+            jobs["scores"] = lambda: append_contributions(cat, new_links, r)
+        # the with block waits for EVERY job, failed or not, so no job's
+        # thread outlives this round; each job's own wall is bk_<name>
         with concurrent.futures.ThreadPoolExecutor(
             len(jobs), thread_name_prefix=f"bk-r{r}"
         ) as ex:
@@ -642,7 +646,8 @@ def run_round_critical(
         out = {n: f.result() for n, f in futs.items()}
     finally:
         for handle in (robots_joined, unseen, links_exploded):
-            handle.unpersist()
+            if handle is not None:
+                handle.unpersist()
     bloom |= out["bloom"]
     if cuckoo is not None:
         # merged in place like the bloom: round r+1 probes the caller's

@@ -16,6 +16,7 @@ import pytest
 
 from swmaestro_crawler_spark.catalog import Catalog
 from swmaestro_crawler_spark.plans import crawl as crawl_mod
+from swmaestro_crawler_spark.plans import round as round_mod
 from swmaestro_crawler_spark.plans.crawl import Crawl
 from swmaestro_crawler_spark.schema import CRAWL_ORDER
 from swmaestro_crawler_spark.sources.synth_web import make_seeds
@@ -109,3 +110,39 @@ def test_failed_bookkeeping_job_leaves_no_thread_and_resumes(
     assert len(b.run(seeds, rounds=1)) == 1
     for t in TABLES:
         assert table_digest(a, t) == table_digest(b, t), t
+
+
+_append = Catalog.append
+
+
+def _failing_fetch(*args, **kwargs):
+    raise RuntimeError("injected fetch failure")
+
+
+def _failing_order_append(self, table, *args, **kwargs):
+    if table == "crawl_order":
+        raise RuntimeError("injected crawl_order commit failure")
+    return _append(self, table, *args, **kwargs)
+
+
+@pytest.mark.parametrize(
+    "target, name, failing",
+    [
+        (round_mod, "fetch_and_commit", _failing_fetch),
+        (Catalog, "append", _failing_order_append),
+    ],
+    ids=["fetch", "crawl_order"],
+)
+def test_failed_round_leaves_nothing_cached(
+    spark, tmp_path, monkeypatch, target, name, failing
+):
+    """A round that fails before its bookkeeping (the fetch) or inside
+    one job (the crawl_order append, after the job's ranked frame is
+    persisted) leaves no frame in Spark's cache manager."""
+    spark.catalog.clearCache()
+    cfg = small_cfg(str(tmp_path / "wh"))
+    seeds = spark.createDataFrame(make_seeds(cfg, 40))
+    monkeypatch.setattr(target, name, failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        Crawl(spark, cfg).run(seeds, rounds=1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -19,6 +19,9 @@ it) and writes ``BENCH/BASELINE.md`` + ``BENCH/scaling.json``
 Usage:
     python tools/bench_scaling.py                # full: 8 then 32, report
     python tools/bench_scaling.py --worker 8     # one level (internal)
+    python tools/bench_scaling.py --revisit-check  # post-round checks at 2 and 8
+    python tools/bench_scaling.py --media-check
+    python tools/bench_scaling.py --render       # BASELINE.md from scaling.json
 """
 
 from __future__ import annotations
@@ -27,7 +30,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,38 +66,9 @@ def synth_frontier(spark, n_urls: int, n_hosts: int, parts: int):
     host = F.concat_ws(
         "", F.lit("host"), F.lpad(hidx.cast("string"), 4, "0"), F.lit(".example.com")
     )
-    def url_of(idcol):
-        return F.concat_ws(
-            "", F.lit("http://"), host, F.lit("/p/"), F.lower(F.lpad(F.hex(idcol), 12, "0"))
-        )
-
-    url = url_of(F.col("id"))
-    # SCALING_SCORE=1: give the frontier a deterministic link graph
-    # (node id's parent is node id div 16 -> a 16-ary tree, hot heads)
-    # so the PageRank-scored admission path has real scores to rank by.
-    # NOTE: parent URL format must match url_of but the parent's HOST
-    # differs per id — a parent url must be the EXACT url of that parent
-    # id, so recompute host from the parent id.
-    if os.environ.get("SCALING_SCORE") == "1":
-        pid = F.expr("id div 16").cast("long")
-        pu = (F.pmod(F.xxhash64(pid, F.lit(7)), F.lit(1 << 48)).cast("double") + 0.5) / float(
-            1 << 48
-        )
-        phidx = F.least(
-            F.lit(n_hosts - 1),
-            (F.floor(F.exp(pu * float(__import__("math").log(n_hosts)))) - 1).cast("long"),
-        ).cast("int")
-        phost = F.concat_ws(
-            "", F.lit("host"), F.lpad(phidx.cast("string"), 4, "0"), F.lit(".example.com")
-        )
-        parent = F.when(
-            F.col("id") >= 16,
-            F.concat_ws(
-                "", F.lit("http://"), phost, F.lit("/p/"), F.lower(F.lpad(F.hex(pid), 12, "0"))
-            ),
-        ).cast("string")
-    else:
-        parent = F.lit(None).cast("string")
+    url = F.concat_ws(
+        "", F.lit("http://"), host, F.lit("/p/"), F.lower(F.lpad(F.hex(F.col("id")), 12, "0"))
+    )
     return df.select(
         url.alias("url"),
         F.xxhash64(url).alias("url_hash"),
@@ -104,7 +77,7 @@ def synth_frontier(spark, n_urls: int, n_hosts: int, parts: int):
         F.pmod(F.xxhash64(F.col("id"), F.lit(3)), F.lit(100_000)).alias("seq"),
         F.lit(0).cast("int").alias("round"),
         F.lit(0).cast("int").alias("attempt"),
-        parent.alias("parent"),
+        F.lit(None).cast("string").alias("parent"),
     )
 
 
@@ -128,19 +101,9 @@ def worker(cores: int) -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     wh = os.path.join(shm, "wh")
-    # SCALING_SCORE=1 uses a BINDING per-host budget (2,000 slots: ~119
-    # of the 5,000 zipf hosts overflow, ~44% of the frontier defers):
-    # with the budget binding, the link-scored order decides WHICH URLs
-    # are admitted, so the run exercises the production scheduler for
-    # real — digests are pinned across levels and intentionally differ
-    # from the LIFO runs. (A non-binding budget admits everything and
-    # provably reproduces the LIFO output bit-identically: measured
-    # crawl_order digest -8605676412215837558492/1976245 == the primary
-    # LIFO digest, with the scoring joins adding only ~2 s of read+plan.)
-    score_on = os.environ.get("SCALING_SCORE") == "1"
     cfg = CrawlConfig(
         round_seconds=1e6,          # huge budget window: admission bounded by
-        per_host_cap=2_000 if score_on else 10_000_000,  # frontier unless scored
+        per_host_cap=10_000_000,    # the frontier, not the budget
         max_rounds=1,
         max_depth=1,                # no expansion: one steady-state round
         frontier_partitions=32,
@@ -149,35 +112,6 @@ def worker(cores: int) -> None:
         synth_n_hosts=N_HOSTS,
         synth_work_iters=WORK_ITERS,
         warehouse=wh,
-        # SCALING_CUCKOO=1 turns the seen stack's cuckoo tier on for the
-        # digest-equality check at frontier scale (32 shards x 2^15
-        # buckets x 4 slots = 4.2M-key capacity, ~0.47 load at 2M URLs)
-        cuckoo_buckets=(1 << 15) if os.environ.get("SCALING_CUCKOO") == "1" else None,
-        cuckoo_parts=32,
-        # SCALING_SCORE=1: importance-first admission (PageRank over the
-        # frontier's parent->url edges) replaces LIFO — the production
-        # scheduler path. Digests are pinned to THEMSELVES across levels
-        # (they intentionally differ from the LIFO oracle ordering).
-        score_admission=score_on,
-        # SCALING_REDIRECTS=1: 10% of the frontier are 3xx redirect
-        # sources (same-host chains followed inline in the fetch,
-        # cross-host targets recorded as 301 handoffs) — the digest-
-        # equality check proves the chain resolver is deterministic at
-        # frontier scale and across core counts. Digests intentionally
-        # differ from the redirect-off runs.
-        synth_redirect_prob=(
-            0.1 if os.environ.get("SCALING_REDIRECTS") == "1" else 0.0
-        ),
-        # SCALING_SCORE_TABLE=1 (with SCALING_SCORE=1): admission reads
-        # the STANDING contribution log (bootstrapped from the injected
-        # frontier's parent edges) instead of recomputing scores from
-        # pending — the O(delta) production scheduler. On this
-        # one-parent-per-URL frontier the edge sets coincide, so the
-        # digests must reproduce the recompute-scheduler run exactly.
-        score_table=score_on and os.environ.get("SCALING_SCORE_TABLE") == "1",
-        score_compact_every=(
-            1 if os.environ.get("SCALING_SCORE_TABLE") == "1" else 0
-        ),
     )
     crawl = Crawl(spark, cfg)
     frontier = synth_frontier(spark, N_URLS, N_HOSTS, 32)
@@ -322,222 +256,96 @@ def worker(cores: int) -> None:
 
 
 REPEATS = int(os.environ.get("SCALING_REPEATS", 2))
+SCALING_JSON = os.path.join(REPO, "BENCH", "scaling.json")
+# Test that now pins each property a deleted frontier-scale check showed;
+# the check's block stays in scaling.json as its historical record.
+HISTORICAL = {
+    "cuckoo_digest_check": (
+        "cuckoo tier on: crawl_order and seen digests equal to tier off",
+        "tests/test_cuckoo.py::test_crawl_digests_identical_with_cuckoo_on and "
+        "::test_no_false_negatives_up_to_high_load",
+    ),
+    "score_admission_check": (
+        "scored crawl order identical across parallelism",
+        "tests/test_score_admission.py::test_scored_crawl_deterministic_across_parallelism "
+        "(shuffle parallelism 3 vs 8)",
+    ),
+    "score_table_check": (
+        "score-table crawl identical to the recompute scheduler and across parallelism",
+        "tests/test_score_table.py::test_table_backed_crawl_deterministic_and_consistent "
+        "(3 vs 8) and ::test_incremental_equals_batch",
+    ),
+    "redirect_digest_check": (
+        "redirect crawl order identical across parallelism",
+        "tests/test_redirects.py::test_redirect_crawl_order_identical "
+        "(against the sequential oracle)",
+    ),
+}
+# blocks a primary re-measure keeps: the checks below, the blocks other
+# tools write, and the historical records
+CARRY_FORWARD = (
+    "revisit_check",
+    "media_check",
+    "cuckoo_pressure_check",
+    "kill_resume_check",
+    "host_probe",
+    *HISTORICAL,
+)
 
 
-def run_score_check(levels=(2, 8), table: bool = False) -> dict:
-    """VERDICT r3 item 6: the PageRank-scored admission path (config
-    score_admission) at frontier scale. Same 2M-URL job, SCALING_SCORE=1
-    (parent links synthesized -> real scores), run at N and 4N cores:
-    digests must be identical across levels (determinism of the scored
-    order — it intentionally differs from the LIFO oracle), efficiency
-    computed on the same protocol as the primary pair. Merges a
-    ``score_admission_check`` block into BENCH/scaling.json."""
-    results, all_walls = {}, {}
-    for cores in levels:
-        runs = []
-        for i in range(REPEATS):
-            print(
-                f"== score-admission run local[{cores}] over {N_URLS:,} URLs "
-                f"(run {i + 1}/{REPEATS}) ==",
-                flush=True,
-            )
-            env = dict(os.environ, SCALING_SCORE="1")
-            if table:
-                env["SCALING_SCORE_TABLE"] = "1"
-            p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-                env=env,
-            )
-            line = next(
-                (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
-            )
-            if line is None:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-                raise SystemExit(f"score worker local[{cores}] failed")
-            runs.append(json.loads(line[len("WORKER_RESULT "):]))
-            print(json.dumps(runs[-1]), flush=True)
-        if len({tuple(r["crawl_order_digest"]) for r in runs}) != 1:
-            raise SystemExit(f"nondeterministic scored crawl order at local[{cores}]")
-        # best-of-N per level, same disclosed protocol as the primary pair
-        results[cores] = min(runs, key=lambda r: r["wall_s"])
-        all_walls[cores] = [r["wall_s"] for r in runs]
-    a, b = levels
-    eff = round((results[b]["urls_per_sec"] / results[a]["urls_per_sec"]) / (b / a), 3)
-    block = {
-        "n_urls": N_URLS,
-        "levels": {str(c): results[c] for c in levels},
-        "all_walls": {str(c): all_walls[c] for c in levels},
-        "efficiency": {f"{a}->{b}": eff},
-        "digests_match_across_levels": (
-            results[a]["crawl_order_digest"] == results[b]["crawl_order_digest"]
-            and results[a]["seen_digest"] == results[b]["seen_digest"]
-        ),
-        "note": (
-            "SCALING_SCORE=1: importance-first admission (PageRank over the "
-            "synthesized 16-ary parent tree) replacing LIFO. Digests pinned "
-            "across core counts; they differ from the LIFO runs above by design."
-        ),
-    }
-    path = os.path.join(REPO, "BENCH", "scaling.json")
-    summary = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            summary = json.load(f)
-    if table:
-        # the standing-table scheduler must reproduce the recompute
-        # scheduler exactly on this one-parent-per-URL frontier: same
-        # edges -> same Σ PR_SCALE div outdeg scores -> same admissions
-        prior = summary.get("score_admission_check", {}).get("levels", {})
-        ref = next(iter(prior.values()), None)
-        block["note"] = (
-            "SCALING_SCORE_TABLE=1: admission reads the STANDING O(delta) "
-            "contribution log (bootstrap append + per-round auto-compaction) "
-            "instead of recomputing scores from pending. One parent per URL "
-            "on this frontier, so digests must equal the recompute-scheduler "
-            "run's."
-        )
-        block["digests_match_recompute_scheduler"] = bool(
-            ref
-            and ref["crawl_order_digest"] == results[a]["crawl_order_digest"]
-            and ref["seen_digest"] == results[a]["seen_digest"]
-        )
-        summary["score_table_check"] = block
-    else:
-        summary["score_admission_check"] = block
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=1)
-    print(json.dumps(block, indent=1))
-    return block
-
-
-def run_redirect_check(levels=(2, 8)) -> dict:
-    """Redirect semantics at frontier scale: the same 2M-URL job with
-    SCALING_REDIRECTS=1 (10% of URLs are 3xx sources — same-host chains
-    followed inline by the vectorized resolver, cross-host 301
-    handoffs), run at N and 4N cores. Digests must be identical across
-    levels and repeats (the chain resolver is pure data, never timing);
-    they intentionally differ from the redirect-off record. Merges a
-    ``redirect_digest_check`` block into BENCH/scaling.json."""
-    results, all_walls = {}, {}
-    for cores in levels:
-        runs = []
-        for i in range(REPEATS):
-            print(
-                f"== redirect run local[{cores}] over {N_URLS:,} URLs "
-                f"(run {i + 1}/{REPEATS}) ==",
-                flush=True,
-            )
-            p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-                env=dict(os.environ, SCALING_REDIRECTS="1"),
-            )
-            line = next(
-                (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
-            )
-            if line is None:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-                raise SystemExit(f"redirect worker local[{cores}] failed")
-            runs.append(json.loads(line[len("WORKER_RESULT "):]))
-            print(json.dumps(runs[-1]), flush=True)
-        if len({tuple(r["crawl_order_digest"]) for r in runs}) != 1:
-            raise SystemExit(f"nondeterministic redirect crawl order at local[{cores}]")
-        results[cores] = min(runs, key=lambda r: r["wall_s"])
-        all_walls[cores] = [r["wall_s"] for r in runs]
-    a, b = levels
-    eff = round((results[b]["urls_per_sec"] / results[a]["urls_per_sec"]) / (b / a), 3)
-    block = {
-        "n_urls": N_URLS,
-        "redirect_prob": 0.1,
-        "levels": {str(c): results[c] for c in levels},
-        "all_walls": {str(c): all_walls[c] for c in levels},
-        "efficiency": {f"{a}->{b}": eff},
-        "digests_match_across_levels": (
-            results[a]["crawl_order_digest"] == results[b]["crawl_order_digest"]
-            and results[a]["seen_digest"] == results[b]["seen_digest"]
-        ),
-        "note": (
-            "SCALING_REDIRECTS=1: 10% of the frontier are permanent 3xx "
-            "sources; same-host chains resolve inline (vectorized XXH64 "
-            "chain follower), cross-host targets come back as 301 handoffs "
-            "that join seen. Digests pinned across core counts; they differ "
-            "from the redirect-off runs above by design."
-        ),
-    }
-    path = os.path.join(REPO, "BENCH", "scaling.json")
-    summary = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            summary = json.load(f)
-    summary["redirect_digest_check"] = block
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=1)
-    print(json.dumps(block, indent=1))
-    return block
-
-
-def run_revisit_check(levels=(2, 8)) -> dict:
-    """Conditional revalidation at frontier scale: crawl one steady-state
-    round, then a conditional revisit sweep over the full span history at
-    N and 4N cores. The deterministic web means every refetch
-    revalidates UNCHANGED, so the sweep must commit zero span rows
-    (logical digest pinned) and exactly one observation row per
-    refetched page — identically across core counts. Merges a
-    ``revisit_check`` block into BENCH/scaling.json."""
-    results, all_walls = {}, {}
-    for cores in levels:
-        runs = []
-        for i in range(REPEATS):
-            print(
-                f"== revisit run local[{cores}] over {N_URLS:,} URLs "
-                f"(run {i + 1}/{REPEATS}) ==",
-                flush=True,
-            )
-            p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-                env=dict(os.environ, SCALING_REVISIT="1"),
-            )
-            line = next(
-                (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
-            )
-            if line is None:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-                raise SystemExit(f"revisit worker local[{cores}] failed")
-            runs.append(json.loads(line[len("WORKER_RESULT "):]))
-            print(json.dumps(runs[-1]), flush=True)
-        for r in runs:
-            if r["revisit"]["modified"] != 0 or not r["revisit"]["spans_digest_unchanged"]:
-                raise SystemExit(
-                    f"revalidation stored spans on an unchanged web at local[{cores}]"
-                )
-        if len({tuple(r["revisit"]["observations_digest"]) for r in runs}) != 1:
-            raise SystemExit(f"nondeterministic observations at local[{cores}]")
-        results[cores] = min(runs, key=lambda r: r["revisit"]["wall_s"])
-        all_walls[cores] = [r["revisit"]["wall_s"] for r in runs]
-    a, b = levels
-    eff = round(
-        (results[b]["revisit"]["revisits_per_sec"] / results[a]["revisit"]["revisits_per_sec"])
-        / (b / a),
-        3,
+def run_worker(cores: int, label: str, i: int, env: dict | None = None) -> dict:
+    """Run ``i`` of REPEATS of ``--worker cores`` in a fresh process, with
+    ``env`` added to the environment; its WORKER_RESULT record."""
+    print(
+        f"== {label} run local[{cores}] over {N_URLS:,} URLs (run {i + 1}/{REPEATS}) ==",
+        flush=True,
     )
-    block = {
-        "n_urls": N_URLS,
-        "levels": {str(c): results[c]["revisit"] for c in levels},
-        "all_walls": {str(c): all_walls[c] for c in levels},
-        "efficiency": {f"{a}->{b}": eff},
-        "digests_match_across_levels": (
-            results[a]["revisit"]["observations_digest"]
-            == results[b]["revisit"]["observations_digest"]
-        ),
-        "note": (
+    p = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        env=dict(os.environ, **(env or {})),
+    )
+    line = next(
+        (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
+    )
+    if line is None:
+        sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
+        raise SystemExit(f"{label} worker local[{cores}] failed")
+    res = json.loads(line[len("WORKER_RESULT "):])
+    print(json.dumps(res), flush=True)
+    return res
+
+
+def merge_scaling(blocks: dict, keep: tuple | None = None) -> dict:
+    """Write ``blocks`` into BENCH/scaling.json over its current record (of
+    which only the ``keep`` keys survive, when given); returns the record."""
+    prior = {}
+    if os.path.exists(SCALING_JSON):
+        with open(SCALING_JSON) as f:
+            prior = json.load(f)
+    if keep is None:
+        summary = {**prior, **blocks}
+    else:
+        summary = {**blocks, **{k: prior[k] for k in keep if k in prior}}
+    os.makedirs(os.path.dirname(SCALING_JSON), exist_ok=True)
+    with open(SCALING_JSON, "w") as f:
+        json.dump(summary, f, indent=1)
+    return summary
+
+
+# Post-round checks at frontier scale, each switched on in the worker by
+# its env var: the rate its efficiency is computed on, the digests that
+# must not vary across repeats and levels, and what every run must show.
+CHECKS = {
+    "revisit": dict(
+        env="SCALING_REVISIT",
+        rate="revisits_per_sec",
+        digests=("observations_digest",),
+        holds=lambda b: b["modified"] == 0 and b["spans_digest_unchanged"],
+        failure="revalidation stored spans on an unchanged web",
+        note=(
             "SCALING_REVISIT=1: after the crawl round, run_revisit "
             "conditional=True sweeps everything due. Deterministic web -> "
             "every page revalidates unchanged: zero span rows committed "
@@ -545,73 +353,14 @@ def run_revisit_check(levels=(2, 8)) -> dict:
             "row per refetched page, observation digests identical across "
             "core counts and repeats."
         ),
-    }
-    path = os.path.join(REPO, "BENCH", "scaling.json")
-    summary = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            summary = json.load(f)
-    summary["revisit_check"] = block
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=1)
-    print(json.dumps(block, indent=1))
-    return block
-
-
-def run_media_check(levels=(2, 8)) -> dict:
-    """Media pipeline at frontier scale: crawl one steady-state round,
-    then resolve every media_ref into the content-addressed store at N
-    and 4N cores. Mapping + blob digests must be identical across core
-    counts and repeats, and the immediate re-sweep must be a no-op.
-    Merges a ``media_check`` block into BENCH/scaling.json."""
-    results, all_walls = {}, {}
-    for cores in levels:
-        runs = []
-        for i in range(REPEATS):
-            print(
-                f"== media run local[{cores}] over {N_URLS:,} URLs "
-                f"(run {i + 1}/{REPEATS}) ==",
-                flush=True,
-            )
-            p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-                capture_output=True,
-                text=True,
-                cwd=REPO,
-                env=dict(os.environ, SCALING_MEDIA="1"),
-            )
-            line = next(
-                (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
-            )
-            if line is None:
-                sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-                raise SystemExit(f"media worker local[{cores}] failed")
-            runs.append(json.loads(line[len("WORKER_RESULT "):]))
-            print(json.dumps(runs[-1]), flush=True)
-        for r in runs:
-            if not r["media"]["second_sweep_noop"]:
-                raise SystemExit(f"media re-sweep not idempotent at local[{cores}]")
-        for key in ("refs_digest", "blobs_digest"):
-            if len({tuple(r["media"][key]) for r in runs}) != 1:
-                raise SystemExit(f"nondeterministic media {key} at local[{cores}]")
-        results[cores] = min(runs, key=lambda r: r["media"]["wall_s"])
-        all_walls[cores] = [r["media"]["wall_s"] for r in runs]
-    a, b = levels
-    eff = round(
-        (results[b]["media"]["refs_per_sec"] / results[a]["media"]["refs_per_sec"])
-        / (b / a),
-        3,
-    )
-    block = {
-        "n_urls": N_URLS,
-        "levels": {str(c): results[c]["media"] for c in levels},
-        "all_walls": {str(c): all_walls[c] for c in levels},
-        "efficiency": {f"{a}->{b}": eff},
-        "digests_match_across_levels": all(
-            results[a]["media"][k] == results[b]["media"][k]
-            for k in ("refs_digest", "blobs_digest")
-        ),
-        "note": (
+    ),
+    "media": dict(
+        env="SCALING_MEDIA",
+        rate="refs_per_sec",
+        digests=("refs_digest", "blobs_digest"),
+        holds=lambda b: b["second_sweep_noop"],
+        failure="media re-sweep not idempotent",
+        note=(
             "SCALING_MEDIA=1: after the crawl round, media_sweep resolves "
             "every span media_ref into the content-addressed store "
             "(MEDIA_REFS mapping + MEDIA_BLOBS one-row-per-content) via "
@@ -637,47 +386,46 @@ def run_media_check(levels=(2, 8)) -> dict:
             "compute); per-node DRAM on a real 2-vs-8-executor cluster "
             "is what this one-box emulation cannot grant."
         ),
+    ),
+}
+
+
+def run_check(kind: str, levels=(2, 8)) -> dict:
+    """The ``kind`` post-round check (CHECKS) at N and 4N cores, REPEATS
+    runs each: every run must show its property and the digests must be
+    identical across repeats; best-of walls per level. Merges a
+    ``<kind>_check`` block into BENCH/scaling.json."""
+    c = CHECKS[kind]
+    best, all_walls = {}, {}
+    for cores in levels:
+        runs = [run_worker(cores, kind, i, {c["env"]: "1"})[kind] for i in range(REPEATS)]
+        for r in runs:
+            if not c["holds"](r):
+                raise SystemExit(f"{c['failure']} at local[{cores}]")
+        for key in c["digests"]:
+            if len({tuple(r[key]) for r in runs}) != 1:
+                raise SystemExit(f"nondeterministic {kind} {key} at local[{cores}]")
+        best[cores] = min(runs, key=lambda r: r["wall_s"])
+        all_walls[cores] = [r["wall_s"] for r in runs]
+    a, b = levels
+    rate = c["rate"]
+    block = {
+        "n_urls": N_URLS,
+        "levels": {str(n): best[n] for n in levels},
+        "all_walls": {str(n): all_walls[n] for n in levels},
+        "efficiency": {f"{a}->{b}": round(best[b][rate] / best[a][rate] / (b / a), 3)},
+        "digests_match_across_levels": all(best[a][k] == best[b][k] for k in c["digests"]),
+        "note": c["note"],
     }
-    path = os.path.join(REPO, "BENCH", "scaling.json")
-    summary = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            summary = json.load(f)
-    summary["media_check"] = block
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=1)
+    merge_scaling({f"{kind}_check": block})
     print(json.dumps(block, indent=1))
     return block
-
-
-def _run_worker(cores: int) -> dict:
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-        capture_output=True,
-        text=True,
-        cwd=REPO,
-    )
-    line = next(
-        (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
-    )
-    if line is None:
-        sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-        raise SystemExit(f"worker local[{cores}] failed")
-    return json.loads(line[len("WORKER_RESULT "):])
 
 
 def main() -> None:
     results, all_walls = {}, {}
     for cores in LEVELS:
-        runs = []
-        for i in range(REPEATS):
-            print(
-                f"== running local[{cores}] over {N_URLS:,} URLs "
-                f"(run {i + 1}/{REPEATS}) ==",
-                flush=True,
-            )
-            runs.append(_run_worker(cores))
-            print(json.dumps(runs[-1]), flush=True)
+        runs = [run_worker(cores, "scaling", i) for i in range(REPEATS)]
         # digests must agree across repeats too (determinism within level)
         if len({tuple(r["crawl_order_digest"]) for r in runs}) != 1:
             raise SystemExit(f"nondeterministic crawl order at local[{cores}]")
@@ -687,7 +435,6 @@ def main() -> None:
         results[cores] = min(runs, key=lambda r: r["wall_s"])
         all_walls[cores] = [r["wall_s"] for r in runs]
 
-    path = os.path.join(REPO, "BENCH", "scaling.json")
     # SCALING_MERGE_PRIOR=1: accumulate best-of across harness
     # invocations. Walls from the prior official record merge into this
     # invocation's ONLY when the prior run measured the same frontier
@@ -695,8 +442,8 @@ def main() -> None:
     # level — i.e. identical engine output, the guard against merging
     # walls from different code or input. All merged walls stay listed
     # in all_walls so the best-of-N population is fully disclosed.
-    if os.environ.get("SCALING_MERGE_PRIOR") == "1" and os.path.exists(path):
-        with open(path) as f:
+    if os.environ.get("SCALING_MERGE_PRIOR") == "1" and os.path.exists(SCALING_JSON):
+        with open(SCALING_JSON) as f:
             prior_rec = json.load(f)
         # the fresh runs' digests (identical across levels — asserted
         # below) are the guard for EVERY prior level, including levels
@@ -770,31 +517,9 @@ def main() -> None:
         "seen_match": seen_match,
         "passes": bool(primary is not None and primary >= 0.8 and order_match and seen_match),
     }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # carry forward auxiliary check blocks (written by --score-check /
-    # --score-table-check / one-off SCALING_CUCKOO runs /
-    # kill_resume_check) so a primary re-measure doesn't silently
-    # drop them from the official record; they should still be re-run
-    # after engine changes to refresh walls.
-    if os.path.exists(path):
-        with open(path) as f:
-            prior = json.load(f)
-        for k in (
-            "cuckoo_digest_check",
-            "cuckoo_pressure_check",
-            "score_admission_check",
-            "score_table_check",
-            "kill_resume_check",
-            "host_probe",
-            "redirect_digest_check",
-            "revisit_check",
-            "media_check",
-        ):
-            if k in prior:
-                summary[k] = prior[k]
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=1)
-
+    # a primary re-measure keeps the auxiliary blocks; re-run their checks
+    # after engine changes to refresh their walls
+    summary = merge_scaling(summary, keep=CARRY_FORWARD)
     write_baseline_md(summary)
     print(json.dumps(summary))
 
@@ -803,7 +528,7 @@ def main() -> None:
 def write_baseline_md(summary: dict) -> None:
     """Render BENCH/BASELINE.md from the official scaling.json summary —
     also reachable as ``--render`` so auxiliary checks (kill/resume,
-    score-table) can refresh the md without re-measuring the sweep."""
+    revisit, media) can refresh the md without re-measuring the sweep."""
     results = {int(k): v for k, v in summary["levels"].items()}
     all_walls = {int(k): v for k, v in summary["all_walls"].items()}
     levels_all = tuple(sorted(results))
@@ -919,7 +644,8 @@ politeness semantics (budget-based, not sleep-based).
 
 The same {ck['n_urls']:,}-URL frontier run once more at
 local[{ck['cores']}] with the optional cuckoo tier ON
-(`SCALING_CUCKOO=1`: bloom → 32-shard cuckoo filter → exact anti-join):
+(bloom → 32-shard cuckoo filter → exact anti-join; a historical record,
+see below):
 crawl_order and URL-seen digests are
 {"IDENTICAL" if ck['digests_match_tier_off'] else "DIFFERENT (BUG)"} to
 every tier-off level and repeat above
@@ -934,8 +660,8 @@ revisit/duplicate pressure is high).
 the avoided exact-confirm shuffle of BLOOM FALSE POSITIVES, which is
 frontier_rows × bloom_FP_rate × per-row confirm cost and grows with
 |seen|. At 2M URLs the tier costs +42% wall here and +~2.4 s at 30k
-(`BENCH/cuckoo_ab.json`); with the default ~1% FP bloom the avoided
-work does not exceed the fixed cost until the exact seen side stops
+(`BENCH/cuckoo_ab.json`, historical); with the default ~1% FP bloom the
+avoided work does not exceed the fixed cost until the exact seen side stops
 being a cheap local/broadcast join — around 10^8-10^9 seen URLs.
 Leave `cuckoo_buckets` unset below ~10^8 seen URLs (the guidance sits
 on that field in `config.py`); output is digest-identical either way,
@@ -976,69 +702,27 @@ box cannot reproduce. The row-reduction column is the scale-transfer
 number; the walls are the honest single-node disclosure.
 """
             )
-        sc = summary.get("score_admission_check")
-        if sc:
-            lv = sorted(sc["levels"], key=int)
-            a2, b2 = lv[0], lv[-1]
-            la = sc["levels"][a2]
-            sc_pair, sc_eff = next(iter(sc["efficiency"].items()))
-            srows = "\n".join(
-                f"| local[{c}] | {sc['levels'][c]['wall_s']} "
-                f"| {sc['levels'][c]['processed']:,} "
-                f"| {sc['levels'][c]['urls_per_sec']:,} "
-                f"| {sc['levels'][c]['stages'].get('admission_scores', 0)} |"
-                for c in lv
+        hist = [k for k in HISTORICAL if k in summary]
+        if hist:
+            items = "\n".join(
+                f"- `{k}`, {HISTORICAL[k][0]} (recorded: "
+                + ("held" if all(v for n, v in summary[k].items() if n.startswith("digests_match"))
+                   else "FAILED")
+                + f"): {HISTORICAL[k][1]}."
+                for k in hist
             )
             f.write(
                 f"""
-## Scored-admission (importance-first scheduler) scaling check
+## Historical records of deleted checks
 
-The same {sc['n_urls']:,}-URL frontier with `score_admission=True`: a
-deterministic 16-ary parent tree is synthesized into the frontier
-(`SCALING_SCORE=1`) and each host's politeness budget (per_host_cap
-2,000 — BINDING: {la['processed'] - la['admitted']:,} of the frontier's
-URLs defer) is spent on the highest link-scored URLs first. Score =
-OPIC-shaped in-link mass (Σ PR_SCALE div outdeg(parent),
-ordering-identical to one PageRank superstep —
-tests/test_score_admission.py). Best of
-{len(sc['all_walls'][a2])} runs per level (all walls: {sc['all_walls']}):
+These `BENCH/scaling.json` blocks record frontier-scale digest checks
+that this script no longer runs. A tier-1 test now pins each property:
 
-| level | wall s | URLs disposed | URLs/s | scheduler stage s |
-|---|---|---|---|---|
-{srows}
+{items}
 
-- **{sc_pair} cores: efficiency {sc_eff}**
-  ({"PASS" if sc_eff >= 0.8 else "below"} ≥0.8).
-- crawl_order + URL-seen digests
-  {"IDENTICAL" if sc['digests_match_across_levels'] else "DIFFERENT (BUG)"}
-  across levels and every repeat — the scored order is data-derived
-  (int64-exact scores, total tie-break), never timing-derived. It
-  intentionally differs from the LIFO runs above (the budget binds, so
-  ranking decides WHICH URLs are admitted); with a non-binding budget
-  the scored run reproduces the LIFO output bit-identically
-  (order-neutral when it does not bind, like the FN-free seen tiers).
-"""
-            )
-        st = summary.get("score_table_check")
-        if st:
-            f.write(
-                f"""
-## Standing score-table scheduler check (O(delta) contribution log)
-
-The scored-admission run repeated with `score_table=True`
-(`SCALING_SCORE_TABLE=1`): admission reads the STANDING contribution
-log (bootstrap append + per-round auto-compaction) instead of
-recomputing scores from pending. Digests
-{"MATCH" if st.get('digests_match_recompute_scheduler') else "DIFFER (BUG)"}
-the recompute-scheduler run exactly (one-parent-per-URL frontier: the
-edge sets coincide by construction), and are identical across core
-counts ({"yes" if st.get('digests_match_across_levels') else "NO (BUG)"}).
-Best walls: {
-    ", ".join(
-        f"local[{c}] {st['levels'][c]['wall_s']} s"
-        for c in sorted(st.get('levels', {}), key=int)
-    )
-} (all walls: {st.get('all_walls')}).
+Likewise, `BENCH/crawl_ab.json` and `BENCH/cuckoo_ab.json` record the
+deleted `tools/crawl_ab.py` and `tools/cuckoo_ab.py`. An interleaved A/B
+of two revisions now runs through `tools/ab.py`.
 """
             )
         kr = summary.get("kill_resume_check")
@@ -1056,44 +740,6 @@ back partial commits and re-runs the round; content digests of
 {"MATCH the uninterrupted run byte-for-byte" if kr['all_match'] else "DIVERGE (BUG)"}
 (uninterrupted {kr['ref_wall_s']} s; kill+resume {kr['resume_wall_s']} s;
 {kr['rounds_rerun']} round re-run).
-"""
-            )
-        rd = summary.get("redirect_digest_check")
-        if rd:
-            lv = sorted(rd["levels"], key=int)
-            rd_pair, rd_eff = next(iter(rd["efficiency"].items()))
-            rrows = "\n".join(
-                f"| local[{c}] | {rd['levels'][c]['wall_s']} "
-                f"| {rd['levels'][c]['processed']:,} "
-                f"| {rd['levels'][c]['urls_per_sec']:,} |"
-                for c in lv
-            )
-            f.write(
-                f"""
-## Redirect-semantics digest check at frontier scale
-
-The same {rd['n_urls']:,}-URL frontier with
-`synth_redirect_prob={rd['redirect_prob']}` (`SCALING_REDIRECTS=1`):
-~{int(rd['n_urls'] * rd['redirect_prob']):,} URLs are permanent 3xx
-sources — same-host chains resolved INLINE by the vectorized XXH64
-chain follower inside the fetch stage, cross-host targets recorded as
-301 handoffs that join the seen set. Best of
-{len(rd['all_walls'][lv[0]])} runs per level
-(all walls: {rd['all_walls']}):
-
-| level | wall s | URLs disposed | URLs/s |
-|---|---|---|---|
-{rrows}
-
-- **{rd_pair} cores: efficiency {rd_eff}**
-  ({"PASS" if rd_eff >= 0.8 else "below"} ≥0.8) — chain resolution adds
-  no scaling penalty.
-- crawl_order + URL-seen digests
-  {"IDENTICAL" if rd['digests_match_across_levels'] else "DIFFERENT (BUG)"}
-  across levels and every repeat — redirect resolution is a pure
-  function of the URL set (they differ from the redirect-off runs above
-  by design: 301 rows are ok=false in the order log and present in
-  seen).
 """
             )
         rv = summary.get("revisit_check")
@@ -1201,18 +847,12 @@ the N-vs-4N pair the record stands on.
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--worker":
         worker(int(sys.argv[2]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--score-check":
-        run_score_check()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--score-table-check":
-        run_score_check(table=True)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--redirect-check":
-        run_redirect_check()
     elif len(sys.argv) > 1 and sys.argv[1] == "--revisit-check":
-        run_revisit_check()
+        run_check("revisit")
     elif len(sys.argv) > 1 and sys.argv[1] == "--media-check":
-        run_media_check()
+        run_check("media")
     elif len(sys.argv) > 1 and sys.argv[1] == "--render":
-        with open(os.path.join(REPO, "BENCH", "scaling.json")) as fh:
+        with open(SCALING_JSON) as fh:
             write_baseline_md(json.load(fh))
     else:
         main()

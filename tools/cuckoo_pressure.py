@@ -187,12 +187,9 @@ def main() -> None:
         ),
         "rows": rows,
     }
-    path = os.path.join(REPO, "BENCH", "scaling.json")
-    with open(path) as f:
-        rec = json.load(f)
-    rec["cuckoo_pressure_check"] = summary
-    with open(path, "w") as f:
-        json.dump(rec, f, indent=1)
+    from bench_scaling import merge_scaling
+
+    merge_scaling({"cuckoo_pressure_check": summary})
     print("merged into BENCH/scaling.json cuckoo_pressure_check")
 
 

@@ -44,7 +44,6 @@ import time
 
 import numpy as np
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 LEVELS = tuple(int(x) for x in os.environ.get("HOST_PROBE_LEVELS", "1,2,8,32").split(","))
 REPEATS = int(os.environ.get("HOST_PROBE_REPEATS", "3"))
@@ -154,15 +153,11 @@ def measure() -> dict:
 
 
 def main() -> None:
+    from bench_scaling import merge_scaling
+
     summary = measure()
-    path = os.path.join(REPO, "BENCH", "scaling.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            rec = json.load(f)
-        rec["host_probe"] = summary
-        with open(path, "w") as f:
-            json.dump(rec, f, indent=1)
-        print(f"merged host_probe into {path}", flush=True)
+    merge_scaling({"host_probe": summary})
+    print("merged host_probe into BENCH/scaling.json", flush=True)
     print(json.dumps(summary))
 
 

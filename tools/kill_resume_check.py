@@ -221,16 +221,9 @@ def main() -> None:
                 "equal the uninterrupted run's."
             ),
         }
-        # cross-check against the official scaling record: same frontier +
-        # config ⇒ the resumed crawl_order/seen row-hash digests there
-        # must cover the same logical rows this run produced
-        path = os.path.join(REPO, "BENCH", "scaling.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                summary = json.load(f)
-            summary["kill_resume_check"] = block
-            with open(path, "w") as f:
-                json.dump(summary, f, indent=1)
+        from bench_scaling import merge_scaling
+
+        merge_scaling({"kill_resume_check": block})
         print(json.dumps(block, indent=1))
         if finished_anyway:
             raise SystemExit(
