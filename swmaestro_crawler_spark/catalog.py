@@ -419,7 +419,7 @@ class Catalog:
         import numpy as np
         import pyarrow.parquet as pq
 
-        from .functions.hashing import bloom_positions_np
+        from .operators.seen import bloom_add, empty_bloom
 
         blooms: dict[str, dict] = {}
         for f in files:
@@ -436,13 +436,10 @@ class Catalog:
                 v = col.to_numpy(zero_copy_only=False).astype(np.int64)
                 n = max(1, len(v))
                 bits = 1 << max(6, int(n * self.BLOOM_BITS_PER_KEY).bit_length())
-                pos = bloom_positions_np(v, self.BLOOM_K, bits).ravel()
-                arr = np.zeros(bits >> 3, dtype=np.uint8)
-                np.bitwise_or.at(
-                    arr,
-                    (pos >> np.uint64(3)).astype(np.int64),
-                    (np.uint64(1) << (pos & np.uint64(7))).astype(np.uint8),
-                )
+                # the seen tier's bitmap as little-endian bytes: bit p is
+                # bit p & 7 of byte p >> 3
+                bitmap = bloom_add(empty_bloom(bits), v, self.BLOOM_K)
+                arr = bitmap.astype("<u8", copy=False).view(np.uint8)
                 per[c] = {"bits": bits, "k": self.BLOOM_K, "hex": arr.tobytes().hex()}
             blooms[f] = per
         return blooms

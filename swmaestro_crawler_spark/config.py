@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from typing import Literal
 
 
 @dataclass(frozen=True)
@@ -48,7 +49,7 @@ class CrawlConfig:
     # cuckoo -> exact anti-join; None = off). 16-bit fingerprints at
     # ~1e-4 FP re-probe the bloom's false positives so only a sliver
     # pays the exact-confirm shuffle; FN-free, so digests are identical
-    # either way. Size parts*buckets*4 slots >= ~1.05x expected seen URLs.
+    # either way. Size CUCKOO_PARTS*buckets*4 slots >= ~1.05x expected seen URLs.
     #
     # Regime guidance (measured): the tier's fixed cost is the
     # per-round filter rebuild/increment plus the fused-fetch probe —
@@ -64,8 +65,8 @@ class CrawlConfig:
     # URLs (where the exact seen table no longer fits a
     # broadcast/local join and each confirm is a real shuffle). Leave
     # cuckoo_buckets=None below ~1e8 URLs.
-    cuckoo_buckets: int | None = None  # buckets PER SHARD; power of two
-    cuckoo_parts: int = 8            # disjoint key shards (mod url_hash)
+    cuckoo_buckets: int | None = None  # buckets PER SHARD (operators/cuckoo.
+    #                                CUCKOO_PARTS shards); power of two
 
     # storage
     warehouse: str = "./warehouse"
@@ -89,8 +90,6 @@ class CrawlConfig:
         if self.cuckoo_buckets is not None:
             if self.cuckoo_buckets < 2 or self.cuckoo_buckets & (self.cuckoo_buckets - 1):
                 raise ValueError("cuckoo_buckets must be a power of two >= 2")
-            if self.cuckoo_parts < 1:
-                raise ValueError("cuckoo_parts must be >= 1")
         if not (0.0 <= self.synth_fail_prob < 1.0):
             raise ValueError("synth_fail_prob must be in [0, 1)")
         if not (0.0 <= self.synth_fatal_prob < 1.0):
@@ -101,6 +100,10 @@ class CrawlConfig:
             raise ValueError("synth_redirect_same must be in [0, 1]")
         if self.max_redirect_hops < 1:
             raise ValueError("max_redirect_hops must be >= 1")
+        if self.score_admission not in (None, "round", "table"):
+            raise ValueError("score_admission must be None, 'round' or 'table'")
+        if self.score_compact_every > 0 and self.score_admission != "table":
+            raise ValueError("score_compact_every needs score_admission='table'")
 
     # synthetic web (sandbox transport; swap for an HTTP fetcher in prod)
     synth_n_hosts: int = 200
@@ -152,31 +155,31 @@ class CrawlConfig:
                                      # (see sources/synth_web.parse_work)
 
     # importance-first admission: spend each host's politeness budget on
-    # the most-linked pending URLs first (OPIC in-link mass over the
-    # round's parent->url edges, operators/politeness.frontier_scores,
-    # which orders URLs as one PageRank superstep does) instead of
-    # the reference's LIFO order. OFF by default — crawl-order parity vs
-    # the reference oracle is a correctness criterion; the scored order
-    # is int64-exact and therefore still deterministic at any
-    # parallelism (pinned by tests/test_score_admission.py)
-    score_admission: bool = False
-
-    # Standing score table instead of per-round recompute
-    # (operators/scoretable): OPIC contributions append per round
-    # (O(delta) — outdeg(parent) is final at emission because a parent is
-    # fetched exactly once), read merge-on-read (groupBy sum), compacted
-    # on demand. Semantics upgrade over the per-round recompute: a
-    # deferred URL keeps the in-link mass frontier dedup would otherwise
-    # drop with its duplicate rows. Requires score_admission.
-    score_table: bool = False
+    # the most-linked pending URLs first (OPIC in-link mass,
+    # operators/scoretable.opic_contributions, which orders URLs as one
+    # PageRank superstep does) instead of the reference's LIFO order.
+    # None (default) keeps LIFO — crawl-order parity vs the reference
+    # oracle is a correctness criterion; the scored order is int64-exact
+    # and therefore still deterministic at any parallelism (pinned by
+    # tests/test_score_admission.py and tests/test_score_table.py).
+    #   "round": recompute the score from the round's pending parent->url
+    #            edges.
+    #   "table": standing score table (operators/scoretable): OPIC
+    #            contributions append per round (O(delta) — outdeg(parent)
+    #            is final at emission because a parent is fetched exactly
+    #            once), read merge-on-read (groupBy sum), compacted on
+    #            demand. A deferred URL keeps the in-link mass frontier
+    #            dedup would otherwise drop with its duplicate rows.
+    score_admission: Literal["round", "table"] | None = None
 
     # Auto-compact the score-contribution log every N rounds (0 = only
-    # on demand via scoretable.compact_scores). The log otherwise grows
-    # one snapshot per round forever; compaction collapses it to one
-    # pre-summed row per URL. Read-invariant (sum is associative), so
-    # any admission decision — and therefore every crawl digest other
-    # than the link_scores file bytes themselves — is unchanged at any
-    # setting (pinned by tests/test_score_table.py).
+    # on demand via scoretable.compact_scores; > 0 needs
+    # score_admission="table"). The log otherwise grows one snapshot per
+    # round forever; compaction collapses it to one pre-summed row per
+    # URL. Read-invariant (sum is associative), so any admission decision
+    # — and therefore every crawl digest other than the link_scores file
+    # bytes themselves — is unchanged at any setting (pinned by
+    # tests/test_score_table.py).
     score_compact_every: int = 0
 
 

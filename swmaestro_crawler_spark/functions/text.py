@@ -32,6 +32,22 @@ def words(c: Column) -> Column:
 
 SQL_WORDS = "list_filter(string_split({c}, ' '), w -> w <> '')"
 
+
+def word_ngrams(ws: Column, n: int) -> Column:
+    """Every word n-gram window of the token array ``ws`` in position
+    order, each the n words joined by single spaces (duplicates kept).
+    An array shorter than n yields ``[]``: ``sequence`` is never asked to
+    count down."""
+    return F.when(
+        F.size(ws) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(ws) - n),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(ws, (i + j + 1).cast("int")) for j in range(n)]
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
 # BPE-ish regex tokens: letter runs, digit runs, single other symbols
 BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 

@@ -50,6 +50,7 @@ FP_BITS = 16
 _FP_MASK = np.uint64((1 << FP_BITS) - 1)
 _MIX = np.uint64(0x5BD1E995)  # odd multiplier: fp -> alt-bucket delta
 MAX_WAVES = 500
+CUCKOO_PARTS = 8  # the crawl's disjoint key shards (url_hash mod P)
 
 
 def _as_u64(hashes: np.ndarray) -> np.ndarray:

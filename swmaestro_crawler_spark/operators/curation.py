@@ -36,28 +36,23 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash, words
+from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash, word_ngrams, words
 from ..sources.testdata import load
 
 # ---------------------------------------------------------------------------
-# shared kernel: position-preserving word n-gram windows
+# position-preserving word n-gram windows
 # ---------------------------------------------------------------------------
 
 
-def ngram_windows(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, pos, g): every word n-gram window of ``text``, one row
-    per position (duplicates kept — unlike dedup.shingles_of, which
-    dedups because MinHash is set-semantics; span detection needs
-    positions)."""
+def ngram_windows(docs: DataFrame, n: int, *keep: str) -> DataFrame:
+    """(doc_id, *keep, pos, g): every word n-gram window of ``text``
+    (``functions.text.word_ngrams``), one row per position. Duplicates
+    are kept: span detection and boilerplate fractions count positions;
+    set-semantics callers (dedup.shingles_of) distinct the grams."""
     docs = docs.withColumn("ws", words(F.col("text"))).filter(F.size("ws") >= n)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("ws")) - n),
-        lambda i: F.concat_ws(
-            " ",
-            *[F.element_at(F.col("ws"), (i + j + 1).cast("int")) for j in range(n)],
-        ),
+    return docs.select(
+        "doc_id", *keep, F.posexplode(word_ngrams(F.col("ws"), n)).alias("pos", "g")
     )
-    return docs.select("doc_id", F.posexplode(grams).alias("pos", "g"))
 
 
 def _sql_ngram_windows(n: int) -> str:
@@ -216,12 +211,15 @@ def dup_removal_positions(w: DataFrame, n: int) -> DataFrame:
         .filter(F.col("nd") >= 2)
         .select("gh", "keeper")
     )
-    remw = (
-        w.join(dup, "gh")
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select("doc_id", "pos")
+    return covered_positions(
+        w.join(dup, "gh").filter(F.col("doc_id") != F.col("keeper")), n
     )
-    return remw.select(
+
+
+def covered_positions(w: DataFrame, n: int) -> DataFrame:
+    """(doc_id, q): the distinct word positions the n-word windows
+    ``w`` (doc_id, pos, ...) cover — what ``remove_spans`` cuts."""
+    return w.select(
         "doc_id",
         F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))).alias("q"),
     ).distinct()
@@ -629,9 +627,6 @@ DSIR_TOPK = 200
 
 
 def q_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shared bigram window expression (same tokens as the LM scorer)
-    from .text_analysis import _bigrams
-
     d = load(spark, sf_dir, "documents")
     ws = words(F.col("text"))
     # ONE corpus scan and ONE regex tokenize: unigram and bigram streams
@@ -639,7 +634,7 @@ def q_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explodes would scan + tokenize the corpus twice)
     feats = (
         d.select(
-            "doc_id", "source", F.explode(F.concat(ws, _bigrams(ws))).alias("g")
+            "doc_id", "source", F.explode(F.concat(ws, word_ngrams(ws, 2))).alias("g")
         )
         .withColumn("b", F.pmod(word_hash(F.col("g")), F.lit(DSIR_BUCKETS)))
         .drop("g")

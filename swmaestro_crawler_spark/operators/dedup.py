@@ -29,8 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash, words
+from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash, word_ngrams, words
 from ..sources.testdata import load
+from .curation import ngram_windows
 
 # MinHash: k hash functions h_j(w) = (A[j]*wh + B[j]) mod P over the
 # 32-bit word hash. A[j] < 2^27 keeps A*wh < 2^59 — no 64-bit overflow in
@@ -72,17 +73,11 @@ def shingles_of(docs: DataFrame) -> DataFrame:
     """(doc_id, w) distinct word-3-gram shingles of an arbitrary
     (doc_id, text, ...) frame — the reusable core of ``_doc_shingles``,
     so incremental consumers can shingle ONLY a delta batch."""
-    docs = docs.withColumn("ws", words(F.col("text"))).filter(
-        F.size(F.col("ws")) >= JACCARD_NGRAM
+    return (
+        ngram_windows(docs, JACCARD_NGRAM)
+        .select("doc_id", F.col("g").alias("w"))
+        .distinct()
     )
-    shingle = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("ws")) - JACCARD_NGRAM),
-        lambda i: F.concat_ws(
-            " ",
-            *[F.element_at(F.col("ws"), (i + j + 1).cast("int")) for j in range(JACCARD_NGRAM)],
-        ),
-    )
-    return docs.select("doc_id", F.explode(shingle).alias("w")).distinct()
 
 
 def _sql_doc_shingles() -> str:
@@ -431,25 +426,18 @@ SQL_SIMHASH = _sql_simhash()
 # ---------------------------------------------------------------------------
 # n-gram Jaccard — exact verify over LSH candidate pairs (the scale path)
 # ---------------------------------------------------------------------------
-def _shingle_expr():
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("ws")) - JACCARD_NGRAM),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(F.col("ws"), (i + j + 1).cast("int")) for j in range(JACCARD_NGRAM)],
-            ),
-        )
-    )
-
-
 def _shingle_sets(spark: SparkSession, sf_dir: str, *extra_cols: str) -> DataFrame:
     """(doc_id[, extra...], sh) — the distinct word-3-gram shingle SET per
-    document, as an array column (guarded: sequence() must not descend)."""
+    document, as an array column; documents under JACCARD_NGRAM words are
+    dropped."""
     docs = load(spark, sf_dir, "documents").withColumn("ws", words(F.col("text"))).filter(
         F.size(F.col("ws")) >= JACCARD_NGRAM
     )
-    return docs.select("doc_id", *extra_cols, _shingle_expr().alias("sh"))
+    return docs.select(
+        "doc_id",
+        *extra_cols,
+        F.array_distinct(word_ngrams(F.col("ws"), JACCARD_NGRAM)).alias("sh"),
+    )
 
 
 def _jaccard_cols():

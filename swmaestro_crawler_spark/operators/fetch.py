@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 from ..config import CrawlConfig
 from ..schema import FRONTIER, SPAN
 from ..sources import synth_web
+from .politeness import PRIORITY
 from .spans import extract_spans_arrow
 
 FETCHED = StructType(
@@ -157,11 +158,10 @@ def fetch_stage(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
 
 _FLAT_COLS = [f.name for f in FRONTIER.fields] + ["fingerprint"]
 _OUT_NAMES = _FLAT_COLS + ["ok", "status_code", "links", "spans", "fetch_round"]
-_SORT_KEYS = [
-    ("host", "ascending"),
-    ("depth", "descending"),
-    ("seq", "ascending"),
-    ("url_hash", "ascending"),
+# fetch-file row order, Arrow form: host, then the admission priority
+# (the Spark form is sortWithinPartitions("host", *priority_order()))
+_SORT_KEYS = [("host", "ascending")] + [
+    (c, "ascending" if asc else "descending") for c, asc in PRIORITY
 ]
 
 
@@ -253,7 +253,6 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
     arrow_schema = pa.schema(
         [pa.field(f.name, _nullable(f.type)) for f in to_arrow_schema(FETCHED)]
     )
-    sort_keys = _SORT_KEYS
 
     def run_partition(batches):
         import os
@@ -271,7 +270,7 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
             rows += rb.num_rows
         if rows:
             tbl = pa.Table.from_batches(out, schema=out[0].schema)
-            tbl = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys))
+            tbl = tbl.take(pc.sort_indices(tbl, sort_keys=_SORT_KEYS))
             tbl = tbl.cast(arrow_schema).combine_chunks()
             tmp = os.path.join(stage_dir, f".tmp-part-{pid:05d}.parquet")
             pq.write_table(tbl, tmp, compression="snappy")

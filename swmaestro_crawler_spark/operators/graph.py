@@ -102,7 +102,7 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     is one row per node, tiny next to the edges.)
 
     The crawl's admission score does not run this: its OPIC-shaped
-    estimator (politeness.frontier_scores) orders URLs exactly as one
+    estimator (scoretable.opic_contributions) orders URLs exactly as one
     superstep does, in fewer shuffles."""
     edges_d = edges.join(
         edges.groupBy("src").agg(F.count("*").alias("outdeg")), "src"

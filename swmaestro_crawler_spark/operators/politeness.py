@@ -36,11 +36,16 @@ ADMISSION_SALTS = 16  # sub-buckets per host in the two-phase top-k
 BACKOFF_MAX_EXP = 4   # adaptive backoff stretches a delay by at most 2^4
 
 
+# The engine-wide priority order as (column, ascending) pairs:
+# LIFO-newest-first (depth DESC), then discovery order within the parent
+# page (seq ASC), then url_hash for a total, cluster-size-independent
+# order. Admission ranks by it; fetch files are sorted by host, then it.
+PRIORITY = (("depth", False), ("seq", True), ("url_hash", True))
+
+
 def priority_order():
-    """The engine-wide priority order: LIFO-newest-first (depth DESC), then
-    discovery order within the parent page (seq ASC), then url_hash for a
-    total, cluster-size-independent order."""
-    return [F.col("depth").desc(), F.col("seq").asc(), F.col("url_hash").asc()]
+    """``PRIORITY`` as Spark sort columns."""
+    return [F.col(c).asc() if asc else F.col(c).desc() for c, asc in PRIORITY]
 
 
 def synth_robots(spark: SparkSession, cfg: CrawlConfig, epoch: int = 0) -> DataFrame:
@@ -287,9 +292,9 @@ TEMPLATE_PLACEHOLDER = "N"
 def url_template(url):
     """Digit runs collapsed to a placeholder — calendar pages, session-id
     query strings, and paginated facets all collapse onto one template
-    (the same definition as the offline analytics in
-    operators/urlspace.py, so the trap flags that operator mines on the
-    standing crawl_order table apply directly to admission)."""
+    (the offline analytics in operators/urlspace.py template with it
+    too, so the trap flags mined on the standing crawl_order table apply
+    directly to admission)."""
     return F.regexp_replace(url, "[0-9]+", TEMPLATE_PLACEHOLDER)
 
 
@@ -359,49 +364,6 @@ def cap_per_template(
 # ---------------------------------------------------------------------------
 # Importance-weighted admission (opt-in; reference parity needs LIFO)
 # ---------------------------------------------------------------------------
-def url_graph(crawled: DataFrame) -> DataFrame:
-    """(src, dst) int64 edge list of the discovered parent->url link graph,
-    from any frame carrying (url, parent) — pending, crawl_order, or their
-    union. Node ids are xxhash64(url), the engine's standing URL key."""
-    return (
-        crawled.filter(F.col("parent").isNotNull())
-        .select(
-            F.xxhash64(F.col("parent")).alias("src"),
-            F.xxhash64(F.col("url")).alias("dst"),
-        )
-        .distinct()
-    )
-
-
-def frontier_scores(crawled: DataFrame) -> DataFrame:
-    """(url_hash, score) — link-importance score over the discovered
-    parent->url graph. The score a 10^10-URL frontier spends its
-    per-host politeness budget by: fetch the most-linked pages first
-    instead of LIFO. int64-exact, so admission stays deterministic and
-    layout-independent.
-
-    The score is OPIC-shaped: score(url) = Σ_{p->url} PR_SCALE div
-    outdeg(p) — outdegree-normalized in-link mass, the classic online
-    frontier-importance estimator. Its ORDERING is provably identical to
-    one full PageRank superstep (rank = PR_BASE + (85·inbox) div 100 is
-    monotone in inbox, and unranked URLs coalesce to 0 below every
-    ranked one in score_admitted), but the plan needs only 3 shuffles of
-    the edge list — no 2·|E|-row node-list distinct, no final left
-    join — and fuses into the admission job
-    (tests/test_score_admission.py pins the equivalence)."""
-    from .graph import PR_SCALE
-
-    edges = url_graph(crawled)
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    return (
-        edges.join(outdeg, "src")
-        .select("dst", F.expr(f"{PR_SCALE} div outdeg").alias("c"))
-        .groupBy("dst")
-        .agg(F.sum("c").alias("score"))
-        .select(F.col("dst").alias("url_hash"), "score")
-    )
-
-
 def score_admitted(
     frontier: DataFrame,
     scores: DataFrame,

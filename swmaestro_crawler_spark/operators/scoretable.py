@@ -1,8 +1,10 @@
 """Incremental link-score maintenance: the frontier scheduler's state as
 a merge-on-read catalog table.
 
-``politeness.frontier_scores`` recomputes the OPIC score from the
-pending table every round. That has two limits at 10^10-URL scale:
+The OPIC score is score(url) = Σ_{p->url} PR_SCALE div outdeg(p), the
+outdegree-normalized in-link mass (``opic_contributions``). With
+``score_admission="round"`` the round recomputes it from the pending
+table every round. That has two limits at 10^10-URL scale:
 
 1. **Deferral loses mass.** Admission dedups the frontier to one row per
    URL (plans/round.dedup_frontier), so a URL that defers re-enters the
@@ -71,15 +73,29 @@ def opic_contributions_keyed(edges: DataFrame) -> DataFrame:
     )
 
 
-def opic_contributions(links: DataFrame) -> DataFrame:
-    """``opic_contributions_keyed`` over discovered ``(url, parent)``
-    string pairs, keyed by the engine's canonical xxhash64 URL ids."""
-    return opic_contributions_keyed(
-        links.filter(F.col("parent").isNotNull()).select(
+def url_graph(crawled: DataFrame) -> DataFrame:
+    """(src, dst) int64 edge list of the discovered parent->url link graph,
+    from any frame carrying (url, parent) — pending, crawl_order, or their
+    union. Node ids are xxhash64(url), the engine's standing URL key."""
+    return (
+        crawled.filter(F.col("parent").isNotNull())
+        .select(
             F.xxhash64(F.col("parent")).alias("src"),
             F.xxhash64(F.col("url")).alias("dst"),
         )
+        .distinct()
     )
+
+
+def opic_contributions(links: DataFrame) -> DataFrame:
+    """(url_hash, score): ``opic_contributions_keyed`` over the
+    ``url_graph`` of discovered ``(url, parent)`` pairs. Over one round's
+    pending table this is the per-round admission score. Its ORDERING is
+    that of one full PageRank superstep (rank = PR_BASE + (85·inbox)
+    div 100 is monotone in inbox, and unscored URLs coalesce to 0 below
+    every scored one in score_admitted), in 3 shuffles of the edge list
+    (tests/test_score_admission.py pins the equivalence)."""
+    return opic_contributions_keyed(url_graph(links))
 
 
 def append_contributions(cat, links: DataFrame, round_no: int) -> int:

@@ -21,6 +21,7 @@ from ..functions.text import (
     lang_guess,
     sql_lang_guess,
     word_hash,
+    word_ngrams,
     words,
 )
 from ..sources.testdata import load
@@ -394,22 +395,10 @@ WHERE rn <= {TFIDF_TOPN}
 LM_SCALE = 1_000_000
 
 
-def _bigrams(ws) -> Column:
-    return F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 1),
-            lambda i: F.concat(
-                F.element_at(ws, i), F.lit(" "), F.element_at(ws, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     occ = d.select(
-        "doc_id", F.explode(_bigrams(words(F.col("text")))).alias("bg")
+        "doc_id", F.explode(word_ngrams(words(F.col("text")), 2)).alias("bg")
     ).withColumn("w1", F.split(F.col("bg"), " ", 2)[0])
     # collapse the occurrence stream to per-(doc, bigram) counts FIRST and
     # persist: the regex tokenization + explode run once instead of three

@@ -36,8 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash, words
+from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash
 from ..sources.testdata import load
+from .curation import covered_positions, ngram_windows, remove_spans
+from .politeness import url_template
 
 # ---------------------------------------------------------------------------
 # spider-trap URL templates
@@ -101,7 +103,7 @@ def q_url_trap_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed template ever shuffles."""
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     urls = e.select(
-        F.regexp_replace(_synth_url(), "[0-9]+", "N").alias("template"),
+        url_template(_synth_url()).alias("template"),
         F.concat(
             F.lit("h"), (F.col("user_id") % N_HOSTS).cast("string"), F.lit(".example.com")
         ).alias("host"),
@@ -147,20 +149,35 @@ BP_MIN_DF = 4  # ... and in at least this many documents absolutely
 
 
 def _doc_windows(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, gh): every word BP_N-gram window, hashed —
-    positions kept (duplicates count toward the boilerplate fraction),
-    text dropped before anything shuffles."""
-    docs = docs.withColumn("ws", words(F.col("text"))).filter(F.size("ws") >= BP_N)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("ws")) - BP_N),
-        lambda i: F.concat_ws(
-            " ",
-            *[F.element_at(F.col("ws"), (i + j + 1).cast("int")) for j in range(BP_N)],
-        ),
+    """(doc_id, source, pos, gh): every word BP_N-gram window, hashed —
+    positions kept (duplicates count toward the boilerplate fraction;
+    removal cuts covered words), text dropped before anything shuffles."""
+    return ngram_windows(docs, BP_N, "source").select(
+        "doc_id", "source", "pos", word_hash(F.col("g")).alias("gh")
     )
-    return docs.select(
-        "doc_id", "source", F.explode(grams).alias("g")
-    ).select("doc_id", "source", word_hash(F.col("g")).alias("gh"))
+
+
+def _boilerplate_set(docs: DataFrame, w: DataFrame) -> DataFrame:
+    """(source, gh) of the template grams: windows ``w`` of ``docs`` whose
+    per-source document frequency is >= max(BP_MIN_DF, BP_PERMILLE
+    per-mille of the source's documents). The doc-frequency table is a
+    distinct + map-side-combinable groupBy on (source, gh) integer keys;
+    source doc counts (tiny) broadcast onto it."""
+    n_docs = docs.groupBy("source").agg(F.countDistinct("doc_id").alias("n_docs"))
+    df_tbl = (
+        w.select("source", "gh", "doc_id")
+        .distinct()
+        .groupBy("source", "gh")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    return (
+        df_tbl.join(F.broadcast(n_docs), "source")
+        .filter(
+            (F.col("df") * 1000 >= F.lit(BP_PERMILLE) * F.col("n_docs"))
+            & (F.col("df") >= BP_MIN_DF)
+        )
+        .select("source", "gh")
+    )
 
 
 def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,30 +187,14 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's documents)).
 
     Plan shape: windows are a zero-shuffle codegen projection; the
-    doc-frequency table is distinct + map-side-combinable groupBy on
-    (source, gh) integer keys; source doc counts (tiny) broadcast onto
-    it; the boilerplate set joins back to the window stream on
-    (source, gh) — AQE elects broadcast when the set is small. One
-    final groupBy(doc_id) folds count and boilerplate count in a
+    boilerplate set (``_boilerplate_set``) joins back to the window
+    stream on (source, gh) — AQE elects broadcast when the set is small.
+    One final groupBy(doc_id) folds count and boilerplate count in a
     single pass. Documents shorter than BP_N words are excluded (no
     windows exist), identically in both engines."""
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     w = _doc_windows(d)
-    n_docs = d.groupBy("source").agg(F.countDistinct("doc_id").alias("n_docs"))
-    df_tbl = (
-        w.select("source", "gh", "doc_id")
-        .distinct()
-        .groupBy("source", "gh")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    boiler = (
-        df_tbl.join(F.broadcast(n_docs), "source")
-        .filter(
-            (F.col("df") * 1000 >= F.lit(BP_PERMILLE) * F.col("n_docs"))
-            & (F.col("df") >= BP_MIN_DF)
-        )
-        .select("source", "gh", F.lit(1).alias("is_b"))
-    )
+    boiler = _boilerplate_set(d, w).withColumn("is_b", F.lit(1))
     return (
         w.join(boiler, ["source", "gh"], "left")
         .groupBy("doc_id")
@@ -248,23 +249,6 @@ GROUP BY w.doc_id
 # ---------------------------------------------------------------------------
 
 
-def _doc_windows_pos(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, pos, gh): position-preserving BP_N-gram windows
-    — the same zero-shuffle codegen projection as ``_doc_windows`` with
-    the word position kept so covered words can be cut."""
-    docs = docs.withColumn("ws", words(F.col("text"))).filter(F.size("ws") >= BP_N)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("ws")) - BP_N),
-        lambda i: F.concat_ws(
-            " ",
-            *[F.element_at(F.col("ws"), (i + j + 1).cast("int")) for j in range(BP_N)],
-        ),
-    )
-    return docs.select(
-        "doc_id", "source", F.posexplode(grams).alias("pos", "g")
-    ).select("doc_id", "source", "pos", word_hash(F.col("g")).alias("gh"))
-
-
 def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cut every per-source template BP_N-gram from the corpus; emits
     (doc_id, n_words, n_removed_words, cleaned_text).
@@ -275,35 +259,10 @@ def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by template density, not corpus size); the cut itself is
     ``curation.remove_spans``'s codegen indexed array filter — corpus
     text crosses exactly one join, keyed on doc_id."""
-    from .curation import remove_spans
-
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    w = _doc_windows_pos(d)
-    n_docs = d.groupBy("source").agg(F.countDistinct("doc_id").alias("n_docs"))
-    df_tbl = (
-        w.select("source", "gh", "doc_id")
-        .distinct()
-        .groupBy("source", "gh")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    boiler = (
-        df_tbl.join(F.broadcast(n_docs), "source")
-        .filter(
-            (F.col("df") * 1000 >= F.lit(BP_PERMILLE) * F.col("n_docs"))
-            & (F.col("df") >= BP_MIN_DF)
-        )
-        .select("source", "gh")
-    )
-    covered = (
-        w.join(boiler, ["source", "gh"])
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(BP_N - 1))
-            ).alias("q"),
-        )
-        .distinct()
-    )
+    w = _doc_windows(d)
+    boiler = _boilerplate_set(d, w)
+    covered = covered_positions(w.join(boiler, ["source", "gh"]), BP_N)
     return remove_spans(d.select("doc_id", "text"), covered)
 
 

@@ -138,7 +138,7 @@ class Crawl:
         """Record round ``r`` as committed: every table's CURRENT snapshot
         id plus the bloom (and cuckoo) arrays. Called only when nothing
         else is committing — after a round's bookkeeping has been joined,
-        or from bootstrap/requeue."""
+        or from bootstrap."""
         np.save(self._bloom_path(r), bloom)
         ckpt = {
             "round": r,
@@ -148,6 +148,10 @@ class Crawl:
         if cuckoo_tables is not None:
             np.save(self._cuckoo_path(r), cuckoo_tables)
             ckpt["cuckoo"] = os.path.basename(self._cuckoo_path(r))
+        self._replace_checkpoint(ckpt)
+
+    def _replace_checkpoint(self, ckpt: dict) -> None:
+        """Atomically replace the checkpoint JSON with ``ckpt``."""
         tmp = self._ckpt_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(ckpt, f, indent=1, sort_keys=True)
@@ -220,7 +224,7 @@ class Crawl:
             self.cat._commit_manifest(
                 t, {"snapshots": [{"id": 0, "files": [], "meta": {}}], "current": 0}
             )
-        if self.cfg.score_admission and self.cfg.score_table:
+        if self.cfg.score_admission == "table":
             # edges injected with the bootstrap frontier are discoveries
             # too: log their OPIC contributions so round 0's admission
             # already ranks by them (operators/scoretable)
@@ -238,9 +242,9 @@ class Crawl:
     def _empty_cuckoo(self) -> np.ndarray | None:
         if self.cfg.cuckoo_buckets is None:
             return None
-        from ..operators.cuckoo import PartitionedCuckoo
+        from ..operators.cuckoo import CUCKOO_PARTS, PartitionedCuckoo
 
-        return PartitionedCuckoo.empty(self.cfg.cuckoo_parts, self.cfg.cuckoo_buckets).tables
+        return PartitionedCuckoo.empty(CUCKOO_PARTS, self.cfg.cuckoo_buckets).tables
 
     def resume_or_bootstrap(self, seeds: DataFrame) -> tuple[int, np.ndarray, object]:
         """Returns (next_round, bloom, cuckoo | None). Rolls tables back
@@ -314,16 +318,13 @@ class Crawl:
         )
         self.cat.overwrite("dead", _part_by_hash(keep, 1))
         # fold the requeue into the checkpoint, else a later resume would
-        # roll pending/dead back and silently undo it
+        # roll pending/dead back and silently undo it. Only the snapshot
+        # ids change: the filter files the checkpoint names stay as they
+        # are, so a kill here leaves the old or the new JSON, both loadable
         ckpt = self._load_checkpoint()
         if ckpt is not None:
-            bloom = np.load(os.path.join(self.cat.warehouse, ckpt["bloom"]))
-            cuckoo_tables = (
-                np.load(os.path.join(self.cat.warehouse, ckpt["cuckoo"]))
-                if "cuckoo" in ckpt
-                else None
-            )
-            self._write_checkpoint(ckpt["round"], bloom, cuckoo_tables=cuckoo_tables)
+            ckpt["snapshots"] = {t: self.cat.current_snapshot(t) for t in TABLES}
+            self._replace_checkpoint(ckpt)
         return n
 
     def run(self, seeds: DataFrame, rounds: int | None = None) -> list[RoundResult]:
@@ -369,9 +370,7 @@ class Crawl:
                 r, bloom, cuckoo.tables if cuckoo is not None else None
             )
             if (
-                self.cfg.score_admission
-                and self.cfg.score_table
-                and self.cfg.score_compact_every
+                self.cfg.score_compact_every
                 and (r + 1) % self.cfg.score_compact_every == 0
             ):
                 # After the checkpoint, so it records the pre-compaction

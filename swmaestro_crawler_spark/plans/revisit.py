@@ -36,7 +36,11 @@ from ..catalog import Catalog
 from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
 from ..operators.fetch import FETCHED, synth_transport
-from ..operators.politeness import split_admitted, split_robots_excluded
+from ..operators.politeness import (
+    priority_order,
+    split_admitted,
+    split_robots_excluded,
+)
 from ..schema import OBSERVATIONS, ROBOTS, SPANS_DOC
 from .round import (
     FRONTIER_COLS,
@@ -159,10 +163,6 @@ def last_fingerprints(cat: Catalog) -> DataFrame:
     )
 
 
-def _sorted_fetch(df: DataFrame) -> DataFrame:
-    return df.sortWithinPartitions("host", F.col("depth").desc(), "seq", "url_hash")
-
-
 def run_revisit(
     spark: SparkSession,
     cat: Catalog,
@@ -249,7 +249,9 @@ def run_revisit(
         if n_changed:
             sid_changed = cat.overwrite(
                 "fetched",
-                _sorted_fetch(changed.select(*FETCHED.fieldNames())),
+                changed.select(*FETCHED.fieldNames()).sortWithinPartitions(
+                    "host", *priority_order()
+                ),
                 meta={"round": int(now_round), "revisit": True, "revalidated": True},
             )
             adopt_spans(cat, sid_changed, meta)

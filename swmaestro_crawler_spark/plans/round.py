@@ -364,19 +364,18 @@ def run_round_critical(
             # (measured: bookkeeping 33.5 s -> 91.6 s at local[2]/2M URLs).
             # One row per scored URL — small next to the fetch; the RDD is
             # released by the ContextCleaner when the round's frames drop.
-            from ..operators.politeness import frontier_scores, score_admitted
+            from ..operators.politeness import score_admitted
+            from ..operators.scoretable import opic_contributions, read_scores
 
             tm.step("admission_scores")
-            if cfg.score_table:
+            if cfg.score_admission == "table":
                 # standing merge-on-read score table (operators/scoretable):
                 # accumulated over every discovered edge, bound to the
                 # round-start snapshot (this round's job_scores append is
                 # invisible here by construction, like seen/pending)
-                from ..operators.scoretable import read_scores
-
                 scores_src = read_scores(cat)
             else:
-                scores_src = frontier_scores(pending)
+                scores_src = opic_contributions(pending)
             scores = scores_src.localCheckpoint(eager=True)
             tm.step("read+plan")
             admitted_df, deferred_df = score_admitted(
@@ -632,7 +631,7 @@ def run_round_critical(
             jobs["cuckoo"] = job_cuckoo
         if cfg.adaptive_backoff:
             jobs["hoststats"] = job_hoststats
-        if cfg.score_admission and cfg.score_table:
+        if cfg.score_admission == "table":
             # O(delta) contribution append — round r+1's admission reads it
             from ..operators.scoretable import append_contributions
 

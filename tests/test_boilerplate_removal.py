@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from swmaestro_crawler_spark.operators.urlspace import (
     BP_MIN_DF,
-    _doc_windows_pos,
+    _doc_windows,
     q_boilerplate_removal,
 )
 
@@ -71,5 +71,5 @@ def test_windows_plan_is_shuffle_free(spark, corpus):
     from swmaestro_crawler_spark.sources.testdata import load
 
     d = load(spark, corpus, "documents").select("doc_id", "source", "text")
-    plan = _doc_windows_pos(d)._jdf.queryExecution().executedPlan().toString()
+    plan = _doc_windows(d)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # windows are a pure codegen projection

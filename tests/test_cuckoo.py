@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from swmaestro_crawler_spark.operators.cuckoo import (
+    CUCKOO_PARTS,
     PartitionedCuckoo,
     build_cuckoo_increment,
     cuckoo_insert,
@@ -227,7 +228,7 @@ def test_cuckoo_resume_rebuilds_on_shape_change(spark, tmp_path, crawled):
         )
     assert start == 1
     assert cuckoo.tables.shape == (
-        cfg_big.cuckoo_parts,
+        CUCKOO_PARTS,
         cfg_big.cuckoo_buckets,
         4,  # PartitionedCuckoo.empty's default slots per bucket
     )

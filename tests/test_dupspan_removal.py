@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from swmaestro_crawler_spark.functions.text import word_hash
+from swmaestro_crawler_spark.functions.text import word_hash, word_ngrams, words
 from swmaestro_crawler_spark.operators.curation import (
     dup_removal_positions,
     ngram_windows,
@@ -68,3 +68,20 @@ def test_whole_doc_duplicate_leaves_empty_string(spark):
     assert got[21]["cleaned_text"] == text
     assert got[22]["cleaned_text"] == ""
     assert got[22]["n_removed_words"] == W
+
+
+def test_word_ngrams_positions_text_and_short_docs(spark):
+    """Window i joins words i..i+n-1 with single spaces; a doc shorter
+    than n yields [] (never a descending sequence) and no window rows."""
+    ten = " ".join(f"w{i}" for i in range(10))
+    docs = spark.createDataFrame(
+        [(1, ten), (2, "only  three words")], "doc_id long, text string"
+    )
+    for n, short in ((2, ["only three", "three words"]), (W, [])):
+        want = [" ".join(f"w{i + j}" for j in range(n)) for i in range(10 - n + 1)]
+        arrays = docs.select("doc_id", word_ngrams(words(F.col("text")), n).alias("g"))
+        assert {r.doc_id: r.g for r in arrays.collect()} == {1: want, 2: short}
+        rows = ngram_windows(docs, n).collect()
+        assert sorted((r.doc_id, r.pos, r.g) for r in rows) == sorted(
+            [(1, i, g) for i, g in enumerate(want)] + [(2, i, g) for i, g in enumerate(short)]
+        )

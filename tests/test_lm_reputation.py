@@ -7,10 +7,9 @@ from pyspark.sql import functions as F
 from swmaestro_crawler_spark.operators.curation import q_host_reputation
 from swmaestro_crawler_spark.operators.text_analysis import (
     LM_SCALE,
-    _bigrams,
     q_bigram_lm_score,
 )
-from swmaestro_crawler_spark.functions.text import words
+from swmaestro_crawler_spark.functions.text import word_ngrams, words
 from tests.test_plans import SF_DIR, plan_of
 
 
@@ -27,7 +26,7 @@ def test_bigram_lm_semantics(spark):
     df = spark.createDataFrame(
         [(1, "a b a b"), (2, "a b"), (3, "solo")], "doc_id long, text string"
     )
-    bg = df.select("doc_id", F.explode(_bigrams(words(F.col("text")))).alias("bg"))
+    bg = df.select("doc_id", F.explode(word_ngrams(words(F.col("text")), 2)).alias("bg"))
     got = sorted((r.doc_id, r.bg) for r in bg.collect())
     # doc 3 has one token -> no bigrams; doc 1 emits overlapping windows
     assert got == [(1, "a b"), (1, "a b"), (1, "b a"), (2, "a b")]

@@ -8,12 +8,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from swmaestro_crawler_spark.operators.politeness import (
-    frontier_scores,
     score_admitted,
     split_admitted,
     synth_robots,
-    url_graph,
 )
+from swmaestro_crawler_spark.operators.scoretable import opic_contributions, url_graph
 from swmaestro_crawler_spark.schema import FRONTIER
 from tests.conftest import small_cfg
 
@@ -68,14 +67,14 @@ def test_zero_scores_degrade_to_lifo(spark, tmp_path):
     assert {r.url for r in a1.collect()} == {r.url for r in a2.collect()}
 
 
-def test_frontier_scores_rank_most_linked_first(spark):
+def test_opic_scores_rank_most_linked_first(spark):
     """A URL with many distinct parents must outscore one with one
     parent; sink URLs (no outlinks) still receive scores."""
     rows = [(f"https://h/t", f"https://h/p{i}") for i in range(10)]
     rows += [("https://h/u", "https://h/p0")]
     rows += [(f"https://h/p{i}", "https://h/seed") for i in range(10)]
     df = spark.createDataFrame(rows, "url string, parent string")
-    scores = {r.url_hash: r.score for r in frontier_scores(df).collect()}
+    scores = {r.url_hash: r.score for r in opic_contributions(df).collect()}
     t = scores[df.sparkSession.createDataFrame([("https://h/t",)], "u string")
                .select(F.xxhash64("u").alias("h")).collect()[0].h]
     u = scores[df.sparkSession.createDataFrame([("https://h/u",)], "u string")
@@ -93,14 +92,14 @@ def _scored_crawl(crawled, spark, wh, par, score=True):
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(par))
         _, c, _ = crawled(wh, 30, 3, per_host_cap=4, round_seconds=4.0,
-                          score_admission=score)
+                          score_admission="round" if score else None)
         return [table_digest(c, t) for t in TABLES], c
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_scored_crawl_deterministic_across_parallelism(spark, tmp_path, crawled):
-    """End-to-end crawl with score_admission=True at shuffle parallelism
+    """End-to-end crawl with score_admission="round" at shuffle parallelism
     3 vs 8 -> byte-identical tables (the sandbox stand-in for N vs 4N
     executors — VERDICT r3 item 6). The scored order must also actually
     CHANGE the crawl under a binding budget (else the flag is dead):
@@ -113,7 +112,7 @@ def test_scored_crawl_deterministic_across_parallelism(spark, tmp_path, crawled)
 
 
 def test_fast_path_ordering_matches_one_pagerank_superstep(spark):
-    """frontier_scores is the OPIC-shaped in-link-mass fast
+    """opic_contributions is the OPIC-shaped in-link-mass fast
     path; its ORDERING must equal one true PageRank superstep:
     rank = PR_BASE + (85·inbox) div 100 is strictly monotone in inbox =
     fast_score, and URLs absent from the fast scores coalesce to 0 under
@@ -122,17 +121,13 @@ def test_fast_path_ordering_matches_one_pagerank_superstep(spark):
     from pyspark.sql import functions as F
 
     from swmaestro_crawler_spark.operators.graph import PR_BASE, pagerank
-    from swmaestro_crawler_spark.operators.politeness import (
-        frontier_scores,
-        url_graph,
-    )
 
     rows = [
         ("http://h/%d" % d, "http://h/%d" % s)
         for s, d in [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (3, 0), (4, 0), (4, 5)]
     ]
     df = spark.createDataFrame(rows, "url string, parent string")
-    fast = {r.url_hash: r.score for r in frontier_scores(df).collect()}
+    fast = {r.url_hash: r.score for r in opic_contributions(df).collect()}
     full = {
         r.node: r.rank for r in pagerank(url_graph(df), iters=1).collect()
     }

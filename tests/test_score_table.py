@@ -8,6 +8,7 @@ pure additions.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from swmaestro_crawler_spark.catalog import Catalog
@@ -24,7 +25,7 @@ from tests.conftest import small_cfg
 
 # the score-table crawl the end-to-end tests below share (binding budget)
 TABLE_CRAWL = dict(
-    per_host_cap=4, round_seconds=4.0, score_admission=True, score_table=True
+    per_host_cap=4, round_seconds=4.0, score_admission="table"
 )
 
 
@@ -92,6 +93,20 @@ def test_contributions_are_layout_independent(spark):
         for r in opic_contributions(_edges(spark, PAIRS + [(0, 1)])).collect()
     }
     assert c == a
+
+
+def test_score_admission_values_are_checked(tmp_path):
+    """One field picks the scheduler; a table-only option without the
+    table, or an unknown mode, is refused instead of silently ignored."""
+    wh = str(tmp_path / "wh")
+    for mode in (None, "round", "table"):
+        small_cfg(wh, score_admission=mode)
+    small_cfg(wh, score_admission="table", score_compact_every=2)
+    with pytest.raises(ValueError, match="score_admission must be"):
+        small_cfg(wh, score_admission=True)
+    for mode in (None, "round"):
+        with pytest.raises(ValueError, match="score_compact_every"):
+            small_cfg(wh, score_admission=mode, score_compact_every=1)
 
 
 def _table_crawl(crawled, spark, wh, par):
