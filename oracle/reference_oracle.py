@@ -78,7 +78,15 @@ def make_row(url: str, depth: int, seq: int, rnd: int, attempt: int, parent: str
     return Row(cu, xxhash64_str(cu), host, depth, seq, rnd, attempt, parent)
 
 
-def run_oracle(seeds: list[dict], cfg: CrawlConfig, rounds: int | None = None) -> OracleResult:
+def run_oracle(
+    seeds: list[dict],
+    cfg: CrawlConfig,
+    rounds: int | None = None,
+    playlist_cutoff: bool = True,
+) -> OracleResult:
+    """Sequential replay of the crawl. ``playlist_cutoff=False`` skips the
+    O5 pagination cutoff (always on in the engine), so a test can show
+    that the cutoff fires."""
     rounds = rounds if rounds is not None else cfg.max_rounds
     robots = {h: synth_web.robots_for_host(h, cfg) for h in synth_web.hosts(cfg.synth_n_hosts)}
     robots_epoch = 0  # TTL revalidation generation currently in force
@@ -183,7 +191,7 @@ def run_oracle(seeds: list[dict], cfg: CrawlConfig, rounds: int | None = None) -
                 # already-seen video item does not enqueue its /pl/
                 # next-page continuation (New_YouTube_Crawler.py:263-273)
                 drop_cont = False
-                if cfg.playlist_cutoff and _is_playlist(row.url):
+                if playlist_cutoff and _is_playlist(row.url):
                     for link in page["outlinks"]:
                         cu = canonicalize_one(link)
                         if not _is_playlist(cu) and xxhash64_str(cu) in seen_start:

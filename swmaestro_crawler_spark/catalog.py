@@ -464,8 +464,6 @@ class Catalog:
         postdating the file (only NULLs inside), the manifest min/max
         stats, and the manifest bloom (integer keys). Files without
         recorded evidence may always contain a match."""
-        from .functions.hashing import bloom_positions_py
-
         name = self._stat_name(m, f, col)
         if name is None:
             return lo is None and hi is None and keys is None
@@ -479,14 +477,14 @@ class Catalog:
                     return False
         b = m.get("file_blooms", {}).get(f, {}).get(name)
         if b is not None and keys is not None and all(isinstance(v, int) for v in keys):
-            buf = bytes.fromhex(b["hex"])
-            if all(
-                any(
-                    not (buf[p >> 3] >> (p & 7)) & 1
-                    for p in bloom_positions_py(int(v), b["k"], b["bits"])
-                )
-                for v in keys
-            ):
+            import numpy as np
+
+            from .operators.seen import _probe
+
+            # the inverse of _compute_blooms: little-endian bytes -> the
+            # seen tier's uint64 bitmap, probed by its numpy kernel
+            bitmap = np.frombuffer(bytes.fromhex(b["hex"]), dtype="<u8")
+            if not _probe(bitmap, np.asarray(keys, dtype=np.int64), b["k"]).any():
                 return False
         return True
 
@@ -1373,19 +1371,6 @@ class Catalog:
             return out
 
         return self._evolve(table, change)
-
-    def schema_version(self, table: str) -> int | None:
-        """Current schema version, or None for never-evolved tables."""
-        reg = self._load_manifest(table).get("schema")
-        return None if reg is None else reg["ver"]
-
-    def current_columns(self, table: str) -> list[str] | None:
-        """Column names of the current schema version (None = untracked)."""
-        m = self._load_manifest(table)
-        reg = m.get("schema")
-        if reg is None:
-            return None
-        return [f["name"] for f in self._ver_fields(m, reg["ver"])]
 
     @staticmethod
     def _ver_fields(m: dict, ver: int) -> list[dict]:

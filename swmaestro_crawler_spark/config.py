@@ -113,7 +113,8 @@ class CrawlConfig:
                                      # no retry — C6/P5 fatal classification)
     synth_watch_pool: int = 1 << 48  # id space for watch-page link targets;
                                      # small values make videos shared across
-                                     # playlists (exercises the O5 cutoff)
+                                     # playlists (exercises the O5 playlist
+                                     # cutoff, always on: plans/round.py)
 
     # 3xx redirects (sources/synth_web redirect section): a URL is a
     # permanent redirect source with this probability; same-host chains
@@ -146,11 +147,6 @@ class CrawlConfig:
     # sequential oracle re-derives the same drift independently.
     robots_ttl_rounds: int | None = None
 
-    # O5/V4: drop a playlist page's next-page continuation when any of its
-    # video items is already seen as of round start (the reference kills the
-    # whole pagination chain on the first seen video,
-    # New_YouTube_Crawler.py:263-273 keep_going=False)
-    playlist_cutoff: bool = True
     synth_work_iters: int = 0        # CPU stand-in for real fetch+parse cost
                                      # (see sources/synth_web.parse_work)
 

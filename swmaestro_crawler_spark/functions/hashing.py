@@ -156,7 +156,8 @@ def _splitmix64_py(x: int) -> int:
 
 
 def bloom_positions_py(url_hash: int, k: int, bits: int) -> list[int]:
-    """k bit positions for one signed-int64 hash (oracle path)."""
+    """k bit positions for one signed-int64 hash (the scalar reference
+    ``bloom_positions_np`` is tested against)."""
     u = url_hash & _M64
     h1 = _splitmix64_py(u)
     h2 = _splitmix64_py(u ^ 0xDEADBEEFCAFEF00D) | 1

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -82,22 +81,17 @@ def _by_host_sub_bucket(admitted: DataFrame, cfg: CrawlConfig) -> DataFrame:
 # batch transport: whole sorted partition -> (status codes, payload, links).
 # status: 200 ok; 403/413 fatal (straight to dead, reference
 # New_YouTube_Crawler_Comment.py:50-52 aborts with no retry); 500 transient
-# (bounded retry).
-# Two signatures, chosen by the ``arrow_native`` attribute on the callable:
-#   pandas (default, the custom/production seam): pd.DataFrame ->
-#     (pd.Series codes, pd.Series payload, pd.Series links)
-#   arrow_native=True (the synthetic sandbox web): pa.RecordBatch ->
-#     (np.int64 codes, pa.Array<string> payload, pa.Array<string> links)
-BatchTransport = Callable[[pd.DataFrame], tuple["pd.Series", "pd.Series", "pd.Series"]]
+# (bounded retry). One signature: pa.RecordBatch (the sorted partition) ->
+# (numpy int codes, pa.Array<string> payload, pa.Array<string> links) —
+# the batch never leaves Arrow/numpy buffers.
+BatchTransport = Callable[["pa.RecordBatch"], tuple["np.ndarray", "pa.Array", "pa.Array"]]
 
 
 def synth_transport(cfg: CrawlConfig) -> BatchTransport:
-    """Arrow-native synthetic transport: the whole batch stays in
-    contiguous Arrow/numpy buffers — no object-dtype pandas strings are
-    ever materialized on the hot path (they were the fetch stage's main
-    allocator/memory-bandwidth load; see synth_web.payload_arrays).
-    Receives the sorted Arrow batch, returns (status numpy int64,
-    payload pa.Array<string>, links pa.Array<string>)."""
+    """Synthetic transport: the whole batch stays in contiguous
+    Arrow/numpy buffers — no object-dtype pandas strings are ever
+    materialized on the hot path (they were the fetch stage's main
+    allocator/memory-bandwidth load; see synth_web.payload_arrays)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -136,7 +130,6 @@ def synth_transport(cfg: CrawlConfig) -> BatchTransport:
         synth_web.parse_work(hashes[ok], cfg.synth_work_iters)
         return code, payload, links
 
-    fetch.arrow_native = True
     return fetch
 
 
@@ -147,7 +140,6 @@ def fetch_stage(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
     pipelines write through ``fetch_stage_direct``. This is the JVM-side
     reference it is digest-pinned against (tests/test_direct_write.py)
     and the plan ``tools/gen_plans.py`` prints."""
-    import pyarrow as pa
 
     def run_partition(batches):
         yield from _fetched_batches(batches, transport_factory, cfg, round_no)
@@ -173,20 +165,11 @@ def _fetched_batches(batches, transport_factory, cfg: CrawlConfig, round_no: int
     import pyarrow.compute as pc
 
     transport = transport_factory(cfg)  # one session per partition
-    arrow_native = getattr(transport, "arrow_native", False)
     for b in batches:
         # the whole pass in Arrow: sort (unique url_hash key -> a total
         # order), fetch, extract — no object-string materialization
         b2 = b.take(pc.sort_indices(b, sort_keys=_SORT_KEYS))
-        if arrow_native:
-            code, payload, links = transport(b2)
-        else:
-            # pandas transports (the custom/production seam) convert at
-            # the boundary
-            code, payload, links = transport(b2.to_pandas())
-            code = np.asarray(code, dtype=np.int64)
-            payload = pa.array(payload, type=pa.string())
-            links = pa.array(links, type=pa.string())
+        code, payload, links = transport(b2)
         arrays = [b2.column(c) for c in _FLAT_COLS] + [
             pa.array(code == 200),
             pa.array(code.astype(np.int32)),

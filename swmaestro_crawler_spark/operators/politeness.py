@@ -110,20 +110,11 @@ def split_robots_excluded(
     a codegen'd FILTER/AGGREGATE over the translated arrays.
     ``joined`` is the shared parent both splits filter — the caller may
     persist it so the upstream dedup window materializes once.
-
-    A robots frame without an ``allow_prefixes`` column (pre-RFC-9309
-    checkpoints) degrades to pure disallow-prefix semantics, which this
-    operator reproduces exactly for wildcard-free patterns.
     """
-    allow_col = (
-        F.col("allow_prefixes")
-        if "allow_prefixes" in robots.columns
-        else F.array().cast("array<string>")
-    )
     dim = robots.select(
         "host",
         _robots_rules(F.col("disallow_prefixes")).alias("_dis_rules"),
-        _robots_rules(allow_col).alias("_allow_rules"),
+        _robots_rules(F.col("allow_prefixes")).alias("_allow_rules"),
     )
     path = F.regexp_replace(F.col("url"), r"^[a-z][a-z0-9+.\-]*://[^/]*", "")
     joined = frontier.join(F.broadcast(dim), "host", "left").withColumn(
@@ -318,7 +309,6 @@ def mine_trap_templates(
 def cap_per_template(
     frontier: DataFrame,
     cfg: CrawlConfig,
-    order: list | None = None,
     templates: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(kept, overflow): at most ``cfg.trap_template_cap`` frontier rows
@@ -339,8 +329,6 @@ def cap_per_template(
     (a left-semi/anti split on the broadcast flag table — the mined
     trap list is tiny by construction), so the steady-state cost of the
     guard is one broadcast probe, not a frontier-wide window."""
-    if order is None:
-        order = priority_order()
     cap = F.lit(int(cfg.trap_template_cap))
     tpl = url_template(F.col("url"))
     if templates is not None:
@@ -356,9 +344,9 @@ def cap_per_template(
             (keyed["host"] == flagged["host"]) & (keyed["_tpl"] == flagged["template"]),
             "left_anti",
         ).drop("_tpl")
-        kept, overflow = cap_per_template(guarded, cfg, order=order)
+        kept, overflow = cap_per_template(guarded, cfg)
         return bypass.unionByName(kept), overflow
-    return _top_k(frontier, [F.col("host"), tpl], order, cap)
+    return _top_k(frontier, [F.col("host"), tpl], priority_order(), cap)
 
 
 # ---------------------------------------------------------------------------

@@ -58,9 +58,8 @@ def _probe(bitmap: np.ndarray, hashes: np.ndarray, k: int) -> np.ndarray:
     return got.reshape(pos.shape).all(axis=1)
 
 
-def build_bloom_distributed(df: DataFrame, bits: int, k: int,
-                            hash_col: str = "url_hash") -> np.ndarray:
-    """Aggregate per-partition bitmaps into one bloom bitmap.
+def build_bloom_distributed(df: DataFrame, bits: int, k: int) -> np.ndarray:
+    """Aggregate per-partition ``url_hash`` bitmaps into one bloom bitmap.
 
     Bitmap OR is associative+commutative, so each partition builds its
     local bitmap (vectorized ``bloom_add``); the partitions are
@@ -77,7 +76,7 @@ def build_bloom_distributed(df: DataFrame, bits: int, k: int,
         bm = empty_bloom(bits)
         n = 0
         for b in batches:
-            bloom_add(bm, b[hash_col].to_numpy(dtype=np.int64), k)
+            bloom_add(bm, b["url_hash"].to_numpy(dtype=np.int64), k)
             n += len(b)
         if n:  # empty partitions contribute nothing
             yield pd.DataFrame({"bm": [bm.tobytes()]})
@@ -91,7 +90,7 @@ def build_bloom_distributed(df: DataFrame, bits: int, k: int,
     # than the broadcast bitmap either way.)
     agg_parts = 8
     tbl = (
-        df.select(hash_col)
+        df.select("url_hash")
         .coalesce(agg_parts)
         .mapInPandas(to_bitmaps, "bm binary")
         .toArrow()
@@ -102,10 +101,8 @@ def build_bloom_distributed(df: DataFrame, bits: int, k: int,
     return out
 
 
-def bloom_probe(df: DataFrame, bitmap_bc, k: int,
-                hash_col: str = "url_hash", out_col: str = "maybe_seen",
-                cuckoo_bc=None) -> DataFrame:
-    """Vectorized Arrow probe stage: adds a boolean ``out_col``, True where
+def bloom_probe(df: DataFrame, bitmap_bc, k: int, cuckoo_bc=None) -> DataFrame:
+    """Vectorized Arrow probe stage: adds a boolean ``maybe_seen``, True where
     every approximate tier says "maybe seen". With ``cuckoo_bc``
     (broadcast (P, B, S) cuckoo tables) the bloom positives are
     re-probed against the cuckoo in the SAME pass, so both tiers cost one
@@ -119,15 +116,17 @@ def bloom_probe(df: DataFrame, bitmap_bc, k: int,
 
             pc = PartitionedCuckoo(cuckoo_bc.value)
         for b in batches:
-            h = b[hash_col].to_numpy(dtype=np.int64)
+            h = b["url_hash"].to_numpy(dtype=np.int64)
             hit = _probe(bm, h, k)
             if cuckoo_bc is not None:
                 hit[hit] = pc.probe(h[hit])
-            b[out_col] = hit
+            b["maybe_seen"] = hit
             yield b
 
     # fresh StructType — df.schema is cached on the DataFrame and .add mutates
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, BooleanType(), False)])
+    out_schema = StructType(
+        list(df.schema.fields) + [StructField("maybe_seen", BooleanType(), False)]
+    )
     return df.mapInPandas(probe, out_schema)
 
 

@@ -479,7 +479,7 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact full-group p50 (error disclosure; same rank math): global
     # (v, h)-order rank via the two-phase range-partitioned prefix sum —
     # running count of ones — instead of a 5-reducer window
-    running, _handle = grouped_prefix_sum(
+    running, handle = grouped_prefix_sum(
         rows.withColumn("one", F.lit(1).cast("long")),
         "grp",
         ["v", "h"],
@@ -493,6 +493,12 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vr") == F.expr("(50 * n + 99) div 100"))
         .select("grp", "n", F.col("v").alias("p50_exact"))
     )
+    # one row per priority group: collect it, then release the prefix
+    # sum's persisted frame instead of leaving it in the cache
+    try:
+        exact = spark.createDataFrame(exact.collect(), exact.schema)
+    finally:
+        handle.unpersist()
     return est.join(exact, "grp").select(
         "grp",
         F.col("n").alias("n_rows"),

@@ -51,16 +51,19 @@ SESSION_SPACE = 100000
 TRAP_MIN_URLS = 80  # template cardinality at/above which it is flagged
 
 
-def _synth_url() -> Column:
+def _synth_host() -> Column:
+    return F.concat(
+        F.lit("h"), (F.col("user_id") % N_HOSTS).cast("string"), F.lit(".example.com")
+    )
+
+
+def _synth_url(host: Column) -> Column:
     """Deterministic URL synthesis over the events table — the contract
     corpus has no URL column, so both engines derive the same URL space
     from (event_id, user_id, event_type) with shared constants: 13
-    hosts, the event type as the path segment, the unique event id as
-    the leaf, and a session-id query string on every third URL (the
-    classic trap shape)."""
-    host = F.concat(
-        F.lit("h"), (F.col("user_id") % N_HOSTS).cast("string"), F.lit(".example.com")
-    )
+    hosts (``host`` = ``_synth_host()``), the event type as the path
+    segment, the unique event id as the leaf, and a session-id query
+    string on every third URL (the classic trap shape)."""
     sess = F.when(
         F.col("event_id") % SESSION_MOD == 0,
         F.concat(
@@ -97,17 +100,15 @@ def q_url_trap_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     template's share of the host's URL space; trap = cardinality at or
     above TRAP_MIN_URLS.
 
-    Plan shape: one codegen projection (URL synthesis + regexp
-    template), a two-phase distinct-count groupBy on (host, template),
-    and a host-total join on the host key — no text wider than the
-    collapsed template ever shuffles."""
+    Plan shape: codegen projections (host, URL built once over it,
+    regexp template over the URL), a two-phase distinct-count groupBy on
+    (host, template), and a host-total join on the host key — no text
+    wider than the collapsed template ever shuffles."""
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    urls = e.select(
-        url_template(_synth_url()).alias("template"),
-        F.concat(
-            F.lit("h"), (F.col("user_id") % N_HOSTS).cast("string"), F.lit(".example.com")
-        ).alias("host"),
-        _synth_url().alias("url"),
+    urls = (
+        e.withColumn("host", _synth_host())
+        .select("host", _synth_url(F.col("host")).alias("url"))
+        .withColumn("template", url_template(F.col("url")))
     )
     per_tpl = urls.groupBy("host", "template").agg(
         F.countDistinct("url").alias("n_urls")

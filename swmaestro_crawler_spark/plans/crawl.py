@@ -192,16 +192,13 @@ class Crawl:
     def bootstrap(
         self,
         seeds: DataFrame | None = None,
-        robots: DataFrame | None = None,
         frontier: DataFrame | None = None,
     ) -> None:
         """Initialize crawl state (round -1 checkpoint = empty-but-seeded).
         Either ``seeds`` (rank-ordered seed rows) or a pre-built FRONTIER
         DataFrame may be supplied (the latter for bulk synthetic frontiers
         generated JVM-side, e.g. the scaling bench)."""
-        self._overwrite_robots(
-            robots if robots is not None else synth_robots(self.spark, self.cfg)
-        )
+        self._overwrite_robots(synth_robots(self.spark, self.cfg))
         if frontier is None:
             frontier = seeds_to_frontier(seeds)
         self.cat.overwrite(

@@ -25,7 +25,7 @@ Crash safety: blobs commit BEFORE refs. A crash between the commits
 leaves orphan blobs (harmless; the re-run's ref sweep re-resolves and
 the blob anti-join skips them) — never a ref without its bytes.
 
-Scale shape — probe-then-fetch (default): resolving a reference to its
+Scale shape — probe-then-fetch: resolving a reference to its
 content fingerprint is cheap (an ETag/Content-MD5 HEAD probe, a CDX
 index lookup, or — as here — a hash the transport can compute without
 the body), while the body bytes are the expensive part. So the sweep
@@ -38,10 +38,7 @@ difference between downloading the corpus's reference count and its
 distinct-content count (the web reuses the same thumbnail under many
 URLs); blob bytes never appear on any corpus-sized path. The probe's
 fingerprint is verified against the fetched content (mismatch raises —
-a lying probe cannot corrupt the store). ``probe=None`` falls back to
-the single-phase fetch-everything path for transports that cannot
-fingerprint without downloading; both paths produce identical tables
-(pinned by tests).
+a lying probe cannot corrupt the store).
 
 References shuffle once as strings (distinct + anti-join, both
 hash-partitioned on the ref); the store-side anti-join is key-only.
@@ -94,6 +91,7 @@ MEDIA_BLOBS = StructType(
 # content space deliberately smaller than the reference space so
 # distinct refs share bytes and the content-addressed dedup is exercised
 CONTENT_SPACE = 1 << 12
+REF_PARTITIONS = 16  # partitions of each media_blobs / media_refs commit
 
 _BLOB_MEMO: dict = {}  # (content_key, kind) -> bytes, per worker process
 
@@ -166,18 +164,18 @@ def media_sweep(
     cat: Catalog,
     since_snapshot: int | None = None,
     transport: Callable[[pd.Series], pd.DataFrame] = synth_media_transport,
-    ref_partitions: int = 16,
-    probe: Callable[[pd.Series], pd.DataFrame] | None = synth_media_probe,
+    probe: Callable[[pd.Series], pd.DataFrame] = synth_media_probe,
 ) -> MediaSweepResult:
     """Resolve every not-yet-seen media reference in the spans table
     (or, with ``since_snapshot``, only in that snapshot's appended
     files) into the content-addressed store. Idempotent; commits blobs
     before refs (see module docstring).
 
-    With ``probe`` (default): two-phase probe-then-fetch — fingerprints
-    for every new ref, body bytes only for one representative ref per
-    not-yet-stored content. ``probe=None``: single-phase, ``transport``
-    downloads every new ref. Identical output tables either way."""
+    Two phases: ``probe`` fingerprints every new ref, and ``transport``
+    downloads body bytes only for one representative ref per
+    not-yet-stored content. A transport whose bytes disagree with the
+    probe's (content_key, kind) raises ``ValueError`` before anything
+    commits."""
     tm = _StepTimer()
     tm.step("refs_scan")
     # projected read: only the (kind, media_ref) span leaves + round are
@@ -205,105 +203,10 @@ def media_sweep(
         else cat.read_delta("spans", SPANS_DOC, since_snapshot, project=spans_proj)
     )
     # the groupBy inside _span_refs already hash-partitions by media_ref —
-    # no extra exchange before the fetch
+    # no extra exchange before the probe
     refs = _span_refs(spans).persist()
     seen = cat.read("media_refs", MEDIA_REFS).select("media_ref")
     new_refs = refs.join(seen, "media_ref", "left_anti")
-
-    if probe is not None:
-        return _sweep_probe(
-            cat, refs, new_refs, probe, transport, ref_partitions, tm
-        )
-
-    out_schema = StructType(
-        [StructField("media_ref", StringType(), False), StructField("round", IntegerType(), False)]
-        + list(MEDIA_BLOBS.fields)
-    )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if not len(b):
-                continue
-            got = transport(b["media_ref"])
-            got.insert(0, "round", b["round"].to_numpy())
-            got.insert(0, "media_ref", b["media_ref"].to_numpy())
-            yield got
-
-    fetched = new_refs.mapInPandas(fetch, out_schema)
-    fetched.persist()
-    try:
-        n_seen = refs.count()  # materializes the persisted ref scan
-        tm.step("fetch")
-        n_new = fetched.count()
-        if n_new == 0:
-            return MediaSweepResult(n_seen, 0, 0, 0, tm.rounded())
-        # one blob row per distinct NEW content key: smallest ref is the
-        # representative (deterministic). min_by is map-side combinable,
-        # so duplicate contents collapse BEFORE the shuffle — only
-        # ~|distinct contents| x cores combined rows cross the exchange,
-        # never the per-ref blob bytes (a window would shuffle them all).
-        tm.step("blob_dedup")
-        new_blobs = (
-            fetched.groupBy("content_key")
-            .agg(
-                F.min_by(
-                    F.struct("kind", "n_bytes", "blob"), "media_ref"
-                ).alias("r")
-            )
-            .join(
-                cat.read("media_blobs", MEDIA_BLOBS).select("content_key"),
-                "content_key",
-                "left_anti",
-            )
-            .select(
-                "content_key",
-                F.col("r.kind").alias("kind"),
-                F.col("r.n_bytes").alias("n_bytes"),
-                F.col("r.blob").alias("blob"),
-            )
-        )
-        new_blobs.persist()
-        st = new_blobs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("b"),
-        ).first()
-        n_blobs, total = int(st.n), int(st.b)
-        tm.step("blob_commit")
-        if n_blobs:
-            cat.append(
-                "media_blobs",
-                new_blobs.repartition(ref_partitions, "content_key"),
-                meta={"op": "media_blobs"},
-                stat_cols=["content_key"],
-                bloom_cols=["content_key"],
-            )
-        new_blobs.unpersist()
-        tm.step("refs_commit")
-        cat.append(
-            "media_refs",
-            fetched.select("media_ref", "content_key", "round").repartition(
-                ref_partitions, "media_ref"
-            ),
-            meta={"op": "media_refs"},
-        )
-        return MediaSweepResult(n_seen, n_new, n_blobs, total, tm.rounded())
-    finally:
-        fetched.unpersist()
-        refs.unpersist()
-
-
-def _sweep_probe(
-    cat: Catalog,
-    refs: DataFrame,
-    new_refs: DataFrame,
-    probe: Callable[[pd.Series], pd.DataFrame],
-    transport: Callable[[pd.Series], pd.DataFrame],
-    ref_partitions: int,
-    tm: _StepTimer,
-) -> MediaSweepResult:
-    """Probe-then-fetch sweep body (see module docstring): fingerprint
-    every new reference, download bytes only for one representative per
-    not-yet-stored content key."""
     probed_schema = StructType(
         [
             StructField("media_ref", StringType(), False),
@@ -331,8 +234,7 @@ def _sweep_probe(
             return MediaSweepResult(n_seen, 0, 0, 0, tm.rounded())
         tm.step("rep_fetch")
         # one representative ref per NEW content key: min media_ref
-        # (deterministic, same keeper rule as the single-phase path's
-        # min_by). The agg is map-side combinable — only
+        # (deterministic). The agg is map-side combinable — only
         # ~|distinct contents| x cores (key, ref) string rows cross the
         # exchange; body bytes exist only AFTER this collapse.
         reps = (
@@ -374,26 +276,28 @@ def _sweep_probe(
                 yield got
 
         new_blobs = reps.mapInPandas(fetch_fn, MEDIA_BLOBS).persist()
-        st = new_blobs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("b"),
-        ).first()
-        n_blobs, total = int(st.n), int(st.b)
-        tm.step("blob_commit")
-        if n_blobs:
-            cat.append(
-                "media_blobs",
-                new_blobs.repartition(ref_partitions, "content_key"),
-                meta={"op": "media_blobs"},
-                stat_cols=["content_key"],
-                bloom_cols=["content_key"],
-            )
-        new_blobs.unpersist()
+        try:
+            st = new_blobs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("b"),
+            ).first()
+            n_blobs, total = int(st.n), int(st.b)
+            tm.step("blob_commit")
+            if n_blobs:
+                cat.append(
+                    "media_blobs",
+                    new_blobs.repartition(REF_PARTITIONS, "content_key"),
+                    meta={"op": "media_blobs"},
+                    stat_cols=["content_key"],
+                    bloom_cols=["content_key"],
+                )
+        finally:
+            new_blobs.unpersist()
         tm.step("refs_commit")
         cat.append(
             "media_refs",
             probed.select("media_ref", "content_key", "round").repartition(
-                ref_partitions, "media_ref"
+                REF_PARTITIONS, "media_ref"
             ),
             meta={"op": "media_refs"},
         )

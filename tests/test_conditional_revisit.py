@@ -38,7 +38,6 @@ def mutating_transport(cfg):
             out.append(p)
         return code, pa.array(out, type=pa.string()), lk
 
-    fetch.arrow_native = True
     return fetch
 
 

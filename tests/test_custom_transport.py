@@ -1,14 +1,15 @@
 """The fetch stage's BatchTransport seam: production swaps the synthetic
 web for an HTTP client (or a rendering fetcher — the S9 capability) by
 passing a transport_factory; nothing else changes. These tests drive a
-custom pandas transport through the fused mapInArrow pass — both the
+custom Arrow transport through the fused mapInArrow pass — both the
 ``fetch_stage`` reference and the executor-direct writer the engine
 commits with (``fetch_stage_direct`` + ``Catalog.overwrite_stage``) — and
 check that statuses and span documents come through intact."""
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from swmaestro_crawler_spark.catalog import Catalog
@@ -25,19 +26,20 @@ def renderer_transport(cfg):
     """A stand-in 'rendered page' transport: odd url_hash fails with 503
     -> 500-class transient; even succeeds with a fixed two-span page."""
 
-    def fetch(pdf: pd.DataFrame):
-        ok = (pdf["url_hash"] % 2 == 0).to_numpy()
-        code = pd.Series([200 if o else 500 for o in ok])
-        payload = pd.Series(
+    def fetch(batch: pa.RecordBatch):
+        hashes = batch.column("url_hash").to_numpy()
+        ok = hashes % 2 == 0
+        code = np.where(ok, 200, 500)
+        payload = pa.array(
             [
                 f"stat{FIELD}rendered=1{FIELD}{SPANSEP}text{FIELD}hello {h}{FIELD}"
                 if o
                 else ""
-                for o, h in zip(ok, pdf["url_hash"])
+                for o, h in zip(ok, hashes)
             ],
-            dtype=object,
+            type=pa.string(),
         )
-        links = pd.Series([""] * len(pdf), dtype=object)
+        links = pa.array([""] * batch.num_rows, type=pa.string())
         return code, payload, links
 
     return fetch

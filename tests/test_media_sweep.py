@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import functions as F
+import pytest
 
 from swmaestro_crawler_spark.operators.multimodal import synth_blob
 from swmaestro_crawler_spark.plans.media import (
@@ -14,6 +14,7 @@ from swmaestro_crawler_spark.plans.media import (
     MEDIA_REFS,
     media_lookup,
     media_sweep,
+    synth_media_probe,
 )
 from swmaestro_crawler_spark.schema import SPANS_DOC
 
@@ -220,39 +221,35 @@ def test_export_interleaved_unswept_refs_null_not_dropped(spark, cfg):
     assert media.filter(F.col("s.blob").isNotNull()).count() == 0
 
 
-def test_probe_mode_equals_legacy_fetch_all(spark, tmp_path, crawled):
-    """Probe-then-fetch (default) and the single-phase fetch-everything
-    path (probe=None) must produce byte-identical MEDIA_REFS and
-    MEDIA_BLOBS tables on the same warehouse."""
-    import shutil
+def _probe_lying_about_key(refs):
+    got = synth_media_probe(refs)
+    got["content_key"] = (got["content_key"] + 1) % CONTENT_SPACE
+    return got
 
-    from swmaestro_crawler_spark.catalog import Catalog
 
+def _probe_lying_about_kind(refs):
+    got = synth_media_probe(refs)
+    got["kind"] = "binary"  # every synthetic media ref is an image
+    return got
+
+
+@pytest.mark.parametrize(
+    "probe,field",
+    [(_probe_lying_about_key, "fingerprint"), (_probe_lying_about_kind, "kind")],
+)
+def test_lying_probe_raises_and_commits_nothing(spark, tmp_path, crawled, probe, field):
+    """A probe whose (content_key, kind) disagrees with the downloaded
+    bytes fails the sweep with the transport check's ValueError before
+    any commit: both media tables stay at their prior snapshots, and the
+    sweep leaves nothing cached."""
     c = _crawl(crawled, tmp_path)
-    wh2 = str(tmp_path / "wh_legacy")
-    shutil.copytree(c.cat.warehouse, wh2)
-    cat2 = Catalog(spark, wh2)
-
-    res_probe = media_sweep(spark, c.cat)  # default: probe-then-fetch
-    res_legacy = media_sweep(spark, cat2, probe=None)
-    assert (res_probe.refs_seen, res_probe.refs_new, res_probe.blobs_new) == (
-        res_legacy.refs_seen,
-        res_legacy.refs_new,
-        res_legacy.blobs_new,
-    )
-    assert res_probe.blobs_bytes == res_legacy.blobs_bytes
-    a_refs = sorted(map(tuple, c.cat.read("media_refs", MEDIA_REFS).collect()))
-    b_refs = sorted(map(tuple, cat2.read("media_refs", MEDIA_REFS).collect()))
-    assert a_refs == b_refs
-    a_blobs = sorted(
-        (r.content_key, r.kind, r.n_bytes, bytes(r.blob))
-        for r in c.cat.read("media_blobs", MEDIA_BLOBS).collect()
-    )
-    b_blobs = sorted(
-        (r.content_key, r.kind, r.n_bytes, bytes(r.blob))
-        for r in cat2.read("media_blobs", MEDIA_BLOBS).collect()
-    )
-    assert a_blobs == b_blobs
-    # the probe path downloaded one body per distinct new content only;
-    # the legacy path downloaded every ref — same store either way
-    assert res_probe.blobs_new <= res_probe.refs_new
+    before = [c.cat.current_snapshot(t) for t in ("media_blobs", "media_refs")]
+    spark.catalog.clearCache()
+    with pytest.raises(
+        Exception, match=f"ValueError: media probe {field} does not match fetched content"
+    ):
+        media_sweep(spark, c.cat, probe=probe)
+    assert [c.cat.current_snapshot(t) for t in ("media_blobs", "media_refs")] == before
+    assert c.cat.read("media_blobs", MEDIA_BLOBS).count() == 0
+    assert c.cat.read("media_refs", MEDIA_REFS).count() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

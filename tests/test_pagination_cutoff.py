@@ -12,8 +12,6 @@ failure probability (fully deterministic counts)."""
 
 from __future__ import annotations
 
-import dataclasses
-
 import pytest
 
 from oracle.reference_oracle import run_oracle
@@ -48,10 +46,9 @@ def cutoff_runs(spark, tmp_path_factory):
         synth_fail_prob=0.0,
         synth_fatal_prob=0.0,
     )
-    cfg_off = dataclasses.replace(cfg_on, playlist_cutoff=False)
     seeds = playlist_seeds(cfg_on, 16)
     oracle_on = run_oracle(seeds, cfg_on)
-    oracle_off = run_oracle(seeds, cfg_off)
+    oracle_off = run_oracle(seeds, cfg_on, playlist_cutoff=False)
     engine = Crawl(spark, cfg_on)
     engine.run(spark.createDataFrame(seeds), rounds=cfg_on.max_rounds)
     return oracle_on, oracle_off, engine

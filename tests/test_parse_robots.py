@@ -186,22 +186,3 @@ def test_rfc9309_wildcards_and_anchor(spark):
         "/fish_y/100%/salmon": True,
         "/salmon": False,
     }
-
-
-def test_allow_absent_column_degrades_to_prefix_semantics(spark):
-    """A pre-RFC-9309 robots frame (no allow_prefixes column) must give
-    byte-identical verdicts to the original startswith semantics."""
-    from swmaestro_crawler_spark.operators.politeness import split_robots_excluded
-
-    robots = spark.createDataFrame(
-        [("h", 1.0, ["/p/3"], 0)],
-        "host string, crawl_delay_s double, disallow_prefixes array<string>, "
-        "fetched_round int",
-    )
-    frontier = spark.createDataFrame(
-        [("http://h/p/3abc", "h"), ("http://h/p/4abc", "h"), ("http://h/q/3", "h")],
-        "url string, host string",
-    )
-    allowed, excluded, _ = split_robots_excluded(frontier, robots)
-    assert {r.url for r in excluded.collect()} == {"http://h/p/3abc"}
-    assert {r.url for r in allowed.collect()} == {"http://h/p/4abc", "http://h/q/3"}

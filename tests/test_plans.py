@@ -79,22 +79,23 @@ def test_global_ord_has_no_single_partition_exchange(spark):
 
 
 @pytest.mark.parametrize(
-    "in_parts,n_parts,batch,layout",
+    "in_parts,n_parts,batch,presorted",
     [
         (1, 8, 10_000, False),
         (8, 8, 7, False),
         (3, 8, 7, True),
         # more range partitions requested than rows: the partitions past
         # the sampled range bounds receive no rows, and most of the
-        # deterministic-layout exchange's partitions are empty
+        # final ord-block exchange's partitions are empty
         (5, 256, 7, True),
     ],
 )
-def test_global_ord_is_invariant_and_python_free(spark, in_parts, n_parts, batch, layout):
+def test_global_ord_is_invariant_and_python_free(spark, in_parts, n_parts, batch, presorted):
     """The rank equals a driver-side sort of the same rows whatever the
-    input partitioning, the Arrow batch size or the number of empty
-    partitions, stays a non-null long, and is computed without a Python
-    worker (a JVM projection over the persisted range sort)."""
+    input partitioning, the input row order (``presorted``: each input
+    partition already in key order), the Arrow batch size or the number
+    of empty partitions, stays a non-null long, and is computed without
+    a Python worker (a JVM projection over the persisted range sort)."""
     from pyspark.sql.types import LongType, StructField
 
     from swmaestro_crawler_spark.plans.round import with_global_ord
@@ -110,10 +111,12 @@ def test_global_ord_is_invariant_and_python_free(spark, in_parts, n_parts, batch
         .repartition(in_parts, "seq")
     )
     keys = [F.col("depth").desc(), F.col("seq").asc(), F.col("url_hash").asc()]
+    if presorted:
+        df = df.sortWithinPartitions(*keys)
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
     try:
-        ranked, handle = with_global_ord(df, keys, n_parts, deterministic_layout=layout)
+        ranked, handle = with_global_ord(df, keys, n_parts)
         plan = plan_of(ranked)
         got = {r.url_hash: r.ord for r in ranked.collect()}
         handle.unpersist()

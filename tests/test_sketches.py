@@ -107,3 +107,14 @@ def test_kmv_set_ops_estimates_track_exact(spark):
     assert abs(row.est_intersect - exact_inter) <= max(
         0.75 * exact_inter, exact_union * 3 // 64
     )
+
+
+def test_quantile_sketch_leaves_nothing_cached(spark):
+    """The exact-p50 side persists a range-sorted frame
+    (``grouped_prefix_sum``); the query must release it, so running the
+    query leaves Spark's cache manager as it found it."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = sketches.q_quantile_sketch(spark, SF).collect()
+    assert rows
+    assert cache.isEmpty()

@@ -373,8 +373,8 @@ CHECKS = {
             "~2.28M refs probed, 4,096 bodies fetched). Digests of both "
             "tables identical across core counts and repeats AND "
             "unchanged from the pre-probe single-phase record (the two "
-            "paths are output-identical, pinned by "
-            "tests/test_media_sweep.py); the immediate second sweep "
+            "paths were output-identical; the single-phase path is "
+            "since deleted); the immediate second sweep "
             "fetches and stores nothing (idempotence at frontier "
             "scale). Residual 2->8 inefficiency is the HOST's "
             "data-movement ceiling, not the plan: the remaining work is "
