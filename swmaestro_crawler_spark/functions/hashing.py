@@ -266,3 +266,30 @@ def xxhash64_np_fixed(mat: np.ndarray, seed: int = SPARK_HASH_SEED) -> np.ndarra
         h *= p3
         h ^= h >> np.uint64(32)
     return h.view(np.int64)
+
+
+def xxhash64_utf8(strings) -> np.ndarray:
+    """``F.xxhash64`` of every string of a non-null Arrow string array,
+    computed in the worker: rows are grouped by UTF-8 byte length and
+    each group is one fixed-width matrix for ``xxhash64_np_fixed``, so
+    no row is hashed in Python."""
+    import pyarrow as pa
+
+    if isinstance(strings, pa.ChunkedArray):
+        strings = strings.combine_chunks()
+    strings = strings.cast(pa.string())
+    _, offs_buf, data_buf = strings.buffers()
+    offs = np.frombuffer(offs_buf, dtype=np.int32)[
+        strings.offset : strings.offset + len(strings) + 1
+    ]
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8)
+        if data_buf is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
+    starts, lens = offs[:-1], np.diff(offs)
+    out = np.empty(len(strings), dtype=np.int64)
+    for n in np.unique(lens):
+        rows = np.flatnonzero(lens == n)
+        out[rows] = xxhash64_np_fixed(data[starts[rows, None] + np.arange(n)])
+    return out

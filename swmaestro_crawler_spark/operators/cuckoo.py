@@ -386,15 +386,12 @@ class PartitionedCuckoo:
         return out
 
 
-def build_cuckoo_increment(
-    df: DataFrame,
-    current: PartitionedCuckoo,
-    hash_col: str = "url_hash",
-) -> PartitionedCuckoo:
-    """Distributed increment: repartition the delta's hashes to their
-    key shard, update each shard's table in ITS OWN task (the previous
-    state arrives by broadcast; disjoint shards never interact), and
-    concatenate the P returned tables on the driver — the cuckoo
+def build_cuckoo_increment(df: DataFrame, current: PartitionedCuckoo) -> PartitionedCuckoo:
+    """Distributed increment: repartition the delta's ``url_hash``
+    values to their key shard, update each shard's table in ITS OWN
+    task (the previous state arrives by broadcast; disjoint shards
+    never interact), and concatenate the P returned tables on the
+    driver — the cuckoo
     analogue of the bloom's per-partition OR-reduce. The driver sees P
     fixed-size tables, never per-URL hashes. Shards with no delta rows
     are carried over unchanged (no task, no network)."""
@@ -412,7 +409,7 @@ def build_cuckoo_increment(
         # the final word — but byte-determinism is the engine rule)
         pending: dict[int, list[np.ndarray]] = {}
         for b in batches:
-            h = b[hash_col].to_numpy(dtype=np.int64)
+            h = b["url_hash"].to_numpy(dtype=np.int64)
             shard = np.mod(h, parts)  # == F.pmod, keeps shard<->task 1:1
             for p in np.unique(shard):
                 p = int(p)
@@ -430,8 +427,8 @@ def build_cuckoo_increment(
             yield pd.DataFrame({"part": out_parts, "tbl": out_tbls})
 
     rows = (
-        df.select(F.col(hash_col).alias(hash_col))
-        .repartition(parts, F.pmod(F.col(hash_col), F.lit(parts)))
+        df.select("url_hash")
+        .repartition(parts, F.pmod(F.col("url_hash"), F.lit(parts)))
         .mapInPandas(upd, "part int, tbl binary")
         .toArrow()
     )

@@ -760,7 +760,12 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_picks") > 0)
         .select("doc_id", "w", "n_picks")
     )
-    return picked
+    # at most PPS_K rows: collect them, then release the prefix sum's
+    # persisted frame instead of leaving it in the cache
+    try:
+        return spark.createDataFrame(picked.collect(), picked.schema)
+    finally:
+        handle.unpersist()
 
 
 SQL_PPS_SAMPLE = f"""

@@ -34,13 +34,17 @@ coalescing the stage below the cluster's parallelism (axis B).
 
 from __future__ import annotations
 
+import os
+from dataclasses import dataclass, field
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     IntegerType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -61,6 +65,21 @@ FETCHED = StructType(
         StructField("links", StringType(), True),
         StructField("spans", ArrayType(SPAN, False), False),
         StructField("fetch_round", IntegerType(), False),
+    ]
+)
+
+# one row per outlink of a row the round's fetch pass resolved (ok, or a
+# 301 handoff) at depth < max_depth: ``seq`` is the link's position in
+# the page's links, ``url`` its canonical form, ``url_hash`` its
+# F.xxhash64 and ``maybe_seen`` the round-start bloom probe of it
+OUTLINKS = StructType(
+    [
+        StructField("parent", StringType(), False),
+        StructField("parent_depth", IntegerType(), False),
+        StructField("seq", IntegerType(), False),
+        StructField("url", StringType(), False),
+        StructField("url_hash", LongType(), False),
+        StructField("maybe_seen", BooleanType(), False),
     ]
 )
 
@@ -180,6 +199,115 @@ def _fetched_batches(batches, transport_factory, cfg: CrawlConfig, round_no: int
         yield pa.RecordBatch.from_arrays(arrays, names=_OUT_NAMES)
 
 
+def resolved(ok, status_code):
+    """Rows the fetch resolved: ok pages and cross-host 301 handoffs (the
+    URL never needs refetching; its one outlink, the redirect target,
+    enters the frontier). Works on Spark Columns and numpy arrays alike,
+    so the round's JVM filters and the fetch workers share it."""
+    return ok | (status_code == synth_web.REDIRECT_CODE)
+
+
+@dataclass(frozen=True)
+class RoundOutputs:
+    """What a crawl round's fetch pass writes besides the fetched rows,
+    from the rows it resolved (ok, or a 301 handoff): each task's bloom
+    increment as a sidecar next to its fetched file
+    (``stage_bloom_words`` collects them), and its ``OUTLINKS`` rows as
+    ``links_dir/part-{pid:05d}.parquet``. ``bloom_bc`` holds the bytes of
+    the round-start bloom; ``bloom_bits`` is derived from them where this
+    is built, on the driver, so the increment's bit positions always
+    match the bloom it is ORed into. Only a task with outlinks to probe
+    reads ``bloom_bc``."""
+
+    bloom_bc: object
+    links_dir: str
+    bloom_bits: int = field(init=False)
+
+    def __post_init__(self):
+        object.__setattr__(self, "bloom_bits", len(self.bloom_bc.value) * 8)
+
+
+_BLOOM_SIDECAR = "bloom-part-"  # + f"{pid:05d}.npy", one per task
+
+
+def _write_atomic(path: str, write) -> None:
+    """``write(tmp)`` to a hidden temporary in ``path``'s directory, then
+    rename into place: a task killed mid-write leaves only the dot-file,
+    and a retried task rewrites the same name with the same bytes."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".tmp-{name}")
+    write(tmp)
+    os.replace(tmp, path)
+
+
+def _write_round_outputs(tbl, cfg: CrawlConfig, out: RoundOutputs, stage_dir: str, pid: int) -> None:
+    """``RoundOutputs`` of one task's sorted fetched table."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ..functions.canonical import canonicalize_series
+    from ..functions.hashing import xxhash64_utf8
+    from .seen import _probe, bloom_words
+
+    done = resolved(tbl.column("ok").to_numpy(), tbl.column("status_code").to_numpy())
+    words = bloom_words(
+        tbl.column("url_hash").to_numpy()[done], cfg.bloom_hashes, out.bloom_bits
+    )
+
+    def save_words(tmp):
+        with open(tmp, "wb") as f:
+            np.save(f, words)
+
+    _write_atomic(os.path.join(stage_dir, f"{_BLOOM_SIDECAR}{pid:05d}.npy"), save_words)
+
+    expand = done & (tbl.column("depth").to_numpy() < cfg.max_depth)
+    if not expand.any():
+        return
+    parents = tbl.filter(pa.array(expand))
+    links = parents.column("links").combine_chunks()
+    # a page without links carries "", which yields no outlink
+    lists = pc.split_pattern(
+        pc.if_else(pc.equal(links, ""), pa.scalar(None, pa.string()), links),
+        synth_web.SPANSEP,
+    )
+    n_links = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+    if not n_links.sum():
+        return
+    parent = pa.array(np.repeat(np.arange(len(parents)), n_links))
+    seq = np.arange(n_links.sum()) - np.repeat(np.cumsum(n_links) - n_links, n_links)
+    url = pa.array(canonicalize_series(pc.list_flatten(lists).to_pandas()), type=pa.string())
+    url_hash = xxhash64_utf8(url)
+    seen_bm = np.frombuffer(out.bloom_bc.value, dtype=np.uint64)
+    rows = pa.table(
+        {
+            "parent": parents.column("url").take(parent),
+            "parent_depth": parents.column("depth").take(parent),
+            "seq": pa.array(seq.astype(np.int32)),
+            "url": url,
+            "url_hash": pa.array(url_hash),
+            "maybe_seen": pa.array(_probe(seen_bm, url_hash, cfg.bloom_hashes)),
+        }
+    )
+    _write_atomic(
+        os.path.join(out.links_dir, f"part-{pid:05d}.parquet"),
+        lambda tmp: pq.write_table(rows, tmp, compression="snappy"),
+    )
+
+
+def stage_bloom_words(stage_dir: str) -> np.ndarray:
+    """The bloom increment a fetch pass with ``RoundOutputs`` left in
+    ``stage_dir``: every task's sidecar words side by side, a (2, m)
+    array for ``seen.or_words`` (a word index may repeat across tasks).
+    Read it before ``Catalog.overwrite_stage`` adopts the stage."""
+    parts = [
+        np.load(os.path.join(stage_dir, name))
+        for name in sorted(os.listdir(stage_dir))
+        if name.startswith(_BLOOM_SIDECAR)
+    ]
+    return np.concatenate(parts, axis=1) if parts else np.zeros((2, 0), dtype=np.uint64)
+
+
 FETCH_STATS = StructType(
     [
         StructField("part", IntegerType(), False),
@@ -190,7 +318,8 @@ FETCH_STATS = StructType(
 
 def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
                        stage_dir: str,
-                       transport_factory: Callable[[CrawlConfig], BatchTransport] = synth_transport) -> DataFrame:
+                       transport_factory: Callable[[CrawlConfig], BatchTransport] = synth_transport,
+                       round_outputs: RoundOutputs | None = None) -> DataFrame:
     """``fetch_stage`` with EXECUTOR-DIRECT parquet writes: each task
     writes its partition's FETCHED rows straight from the Arrow batches
     to ``stage_dir/part-{pid:05d}.parquet`` (pyarrow C++ writer) and only
@@ -217,6 +346,10 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
     schema Spark's writer would produce, so the committed table is
     content- AND layout-identical (tests/test_direct_write.py pins the
     content digest against ``fetch_stage`` + ``df.write``).
+
+    ``round_outputs`` makes the same pass write a crawl round's bloom
+    increment and outlinks (``RoundOutputs``), so the round runs no
+    further Python stage over the fetched rows.
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -238,9 +371,6 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
     )
 
     def run_partition(batches):
-        import os
-
-        import numpy as np
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark import TaskContext
@@ -255,9 +385,12 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
             tbl = pa.Table.from_batches(out, schema=out[0].schema)
             tbl = tbl.take(pc.sort_indices(tbl, sort_keys=_SORT_KEYS))
             tbl = tbl.cast(arrow_schema).combine_chunks()
-            tmp = os.path.join(stage_dir, f".tmp-part-{pid:05d}.parquet")
-            pq.write_table(tbl, tmp, compression="snappy")
-            os.replace(tmp, os.path.join(stage_dir, f"part-{pid:05d}.parquet"))
+            _write_atomic(
+                os.path.join(stage_dir, f"part-{pid:05d}.parquet"),
+                lambda tmp: pq.write_table(tbl, tmp, compression="snappy"),
+            )
+            if round_outputs is not None:
+                _write_round_outputs(tbl, cfg, round_outputs, stage_dir, pid)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array([pid], type=pa.int32()),

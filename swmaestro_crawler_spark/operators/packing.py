@@ -102,14 +102,17 @@ def grouped_prefix_sum(
     return s.mapInPandas(add_running, out_schema), s
 
 
-def shard_pack(docs: DataFrame, n_parts: int = 32) -> DataFrame:
+def shard_pack(docs: DataFrame, n_parts: int = 32) -> tuple[DataFrame, DataFrame]:
     """(doc_id, split, n_tokens) -> (doc_id, split, n_tokens, shard):
-    greedy fixed-budget packing in md5-hash document order per split."""
+    greedy fixed-budget packing in md5-hash document order per split.
+    Returns (packed, persisted_handle), like ``grouped_prefix_sum``: the
+    lazy ``packed`` reads the persisted range-sorted frame, so the caller
+    unpersists the handle once ``packed`` is consumed."""
     keyed = docs.withColumn("hkey", word_hash(F.col("doc_id").cast("string")))
     running, handle = grouped_prefix_sum(
         keyed, "split", ["hkey", "doc_id"], "n_tokens", n_parts
     )
-    out = running.select(
+    packed = running.select(
         "doc_id",
         "split",
         "n_tokens",
@@ -117,30 +120,39 @@ def shard_pack(docs: DataFrame, n_parts: int = 32) -> DataFrame:
         .cast("long")
         .alias("shard"),
     )
-    # the persisted range-sorted frame backs `out` lazily; it stays
-    # cached for the consuming action and is evicted LRU afterwards
-    # (long-lived pipelines call grouped_prefix_sum directly and
-    # unpersist the handle once consumed, as plans/round.job_order does
-    # with with_global_ord)
-    return out
+    return packed, handle
 
 
-def q_corpus_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract query: token counts from the shared word splitter, split
-    from the engine's deterministic 80/10/10 hash split, shards packed at
-    SHARD_TOKENS. Oracle is the per-split window cumsum — semantically
-    identical; only the PLAN differs (the oracle's window is the
-    single-reducer shape this operator exists to avoid)."""
+def corpus_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``shard_pack``'s input over the corpus: token counts from the
+    shared word splitter, split from the engine's deterministic 80/10/10
+    hash split."""
     h = word_hash(F.col("doc_id").cast("string")) % 10
     split = (
         F.when(h < 8, F.lit("train")).when(h < 9, F.lit("valid")).otherwise(F.lit("test"))
     )
-    docs = load(spark, sf_dir, "documents").select(
+    return load(spark, sf_dir, "documents").select(
         "doc_id",
         split.alias("split"),
         F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
     )
-    return shard_pack(docs)
+
+
+def q_corpus_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contract query: ``shard_pack`` over ``corpus_docs``, shards packed
+    at SHARD_TOKENS. Oracle is the per-split window cumsum — semantically
+    identical; only the PLAN differs (the oracle's window is the
+    single-reducer shape this operator exists to avoid).
+
+    The packed rows (one per document) are checkpointed into executor
+    block storage, not collected to the driver, and the prefix sum's
+    persisted frame is released: the returned frame owns its blocks
+    (freed with it), and nothing stays in Spark's cache manager."""
+    packed, handle = shard_pack(corpus_docs(spark, sf_dir))
+    try:
+        return packed.localCheckpoint(eager=True)
+    finally:
+        handle.unpersist()
 
 
 _WS = SQL_WORDS.format(c="text")

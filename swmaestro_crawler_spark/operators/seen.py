@@ -40,11 +40,27 @@ def empty_bloom(bits: int) -> np.ndarray:
 
 def bloom_add(bitmap: np.ndarray, hashes: np.ndarray, k: int) -> np.ndarray:
     """Set bits for an int64 hash array (numpy, vectorized)."""
+    return or_words(bitmap, bloom_words(hashes, k, bitmap.shape[0] * 64))
+
+
+def bloom_words(hashes: np.ndarray, k: int, bits: int) -> np.ndarray:
+    """The bloom increment of ``hashes`` as its non-zero words: a (2, m)
+    uint64 array of (word index, word) columns, m <= k * len(hashes)
+    whatever ``bits`` is, so a fetch task can ship its rows' increment
+    without a bitmap-sized buffer."""
     if len(hashes) == 0:
-        return bitmap
-    bits = bitmap.shape[0] * 64
+        return np.zeros((2, 0), dtype=np.uint64)
     pos = bloom_positions_np(np.asarray(hashes, dtype=np.int64), k, bits).ravel()
-    np.bitwise_or.at(bitmap, pos >> np.uint64(6), np.uint64(1) << (pos & np.uint64(63)))
+    pos.sort()
+    idx = pos >> np.uint64(6)
+    first = np.flatnonzero(np.r_[True, idx[1:] != idx[:-1]])
+    bit = np.uint64(1) << (pos & np.uint64(63))
+    return np.stack([idx[first], np.bitwise_or.reduceat(bit, first)])
+
+
+def or_words(bitmap: np.ndarray, words: np.ndarray) -> np.ndarray:
+    """OR ``bloom_words`` output (word indices may repeat) into ``bitmap``."""
+    np.bitwise_or.at(bitmap, words[0].astype(np.intp), words[1])
     return bitmap
 
 
@@ -70,8 +86,10 @@ def build_bloom_distributed(df: DataFrame, bits: int, k: int) -> np.ndarray:
     driver-safe at 10^10 URLs. (An executor-side ``treeAggregate`` would
     merge down to ONE bitmap before collect; with <= 8 bitmaps of a few
     MB each, the driver-side OR is the same cost without an extra
-    shuffle stage.) Used both for rebuilding from the seen table and for
-    per-round increments."""
+    shuffle stage.) Serves only rebuilds from a set of hashes (a seen
+    table, a benchmark's earlier crawl): a crawl round's increment comes
+    out of its fetch pass (``operators/fetch.RoundOutputs``), bit for
+    bit the bitmap this builds over the round's resolved rows."""
     def to_bitmaps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bm = empty_bloom(bits)
         n = 0

@@ -192,7 +192,7 @@ def run_revisit(
     allowed, _excluded, _ = split_robots_excluded(frontier, robots)
     admitted, deferred = split_admitted(allowed.select(*FRONTIER_COLS), robots, cfg)
     meta = {"round": int(now_round), "revisit": True}
-    sid = fetch_and_commit(cat, admitted, cfg, now_round, meta, transport_factory)
+    sid = fetch_and_commit(cat, admitted, cfg, now_round, meta, transport_factory).sid
     ok = cat.read("fetched", FETCHED, snapshot=sid).filter(F.col("ok"))
     tm.step("counts")
     res = {

@@ -4,17 +4,31 @@ The reference's round is a supervisor-gated stage sequence — seed the
 queue, spawn workers, poll queue depth to zero (supervisor.py:38-196).
 Here a round is:
 
-    pending --dedup--> --bloom(+cuckoo) probe--> --robots-->
+    pending --bloom(+cuckoo) probe--> --dedup--> --robots-->
             [persisted: robots_joined] --anti-join probe positives-->
-            --politeness admit--> --salted-bucket fetch-->
-            --span docs / seen / crawl-order / retries / outlinks-->
+            --politeness admit--> --salted-bucket fetch (+ bloom increment,
+            outlinks)--> --span docs / seen / crawl-order / retries /
+            next pending-->
 
-A row crosses into Python once per kind of work per round: the
-seen-tier probe runs inside the persisted dedup+robots node, so both
-branches of the unseen filter read its cached ``maybe_seen``; outlinks
-are exploded and canonicalized once into a persisted frame that every
-pending branch reads. The crawl-order rank is a JVM projection, and an
-empty table reads as a JVM ``LocalRelation`` (``Catalog._scan``).
+A round runs exactly two Python stages, the probe and the fetch; every
+other job is JVM-side. Each Python task pays a fixed setup cost before
+it touches a row (PySpark re-reads its zip imports on every task), so
+the count of Python tasks, not only rows, sets the round's Python CPU.
+
+- The seen-tier probe runs on the scan side, one task per pending scan
+  split, inside the persisted probe+dedup+robots node: both branches of
+  the unseen filter read its cached ``maybe_seen``.
+- The fused fetch pass also writes each task's bloom increment (a
+  sidecar the driver ORs in) and the round's outlinks: canonical, with
+  their XXH64 ``url_hash`` and the round-start bloom probe
+  (``fetch.RoundOutputs``). The round reads the outlinks back as a
+  round-scoped catalog table (``OUTLINKS_TABLE``); with no row able to
+  expand it is empty and the optimizer drops the outlink branch.
+- The crawl-order rank is a JVM projection, and an empty table reads as
+  a JVM ``LocalRelation`` (``Catalog._scan``).
+
+The cuckoo increment (opt-in) stays a job of its own: its table bytes
+depend on insertion order, which one task per key shard fixes.
 
 ``run_round_critical`` runs the round up to its last data commit: the
 bookkeeping commits run concurrently on driver threads and are joined
@@ -40,8 +54,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import Catalog
 from ..config import CrawlConfig
-from ..functions.canonical import with_canonical
-from ..operators.fetch import FETCHED, fetch_stage_direct, synth_transport
+from ..functions.canonical import host_of
+from ..operators.fetch import (
+    FETCHED,
+    OUTLINKS,
+    RoundOutputs,
+    fetch_stage_direct,
+    resolved as is_resolved,
+    stage_bloom_words,
+    synth_transport,
+)
 from ..operators.politeness import (
     cap_per_template,
     priority_order,
@@ -49,13 +71,12 @@ from ..operators.politeness import (
     split_admitted,
     split_robots_excluded,
 )
-from ..operators.seen import (
-    as_seen_rows,
-    bloom_probe,
-    build_bloom_distributed,
-    unseen_of_probed,
-)
-from ..sources.synth_web import SPANSEP as SPANSEP_LIT
+from ..operators.seen import as_seen_rows, bloom_probe, or_words, unseen_of_probed
+
+# The round takes its bloom increment from the fetch pass; the rebuild
+# path stays importable here because tracers patch it by this name
+# (crawlbench/tracing.py times it as ``seen.bloom_build``).
+from ..operators.seen import build_bloom_distributed  # noqa: F401
 from ..schema import FRONTIER, HOST_STATS, LINEAGE, METRICS, SEEN
 
 FRONTIER_COLS = [f.name for f in FRONTIER.fields]
@@ -89,6 +110,24 @@ def adopt_spans(cat: Catalog, sid: int, meta: dict) -> int:
     )
 
 
+# the round's outlinks (operators/fetch.OUTLINKS): a round-scoped scratch
+# table, dropped and written again by every round's fetch (nothing reads
+# an earlier round's outlinks) and left out of the crawl checkpoint
+# (plans/crawl.TABLES) — a resumed round writes it again
+OUTLINKS_TABLE = "outlinks"
+
+
+@dataclass
+class FetchCommit:
+    """What ``fetch_and_commit`` committed: the fetched snapshot and, when
+    the pass wrote a round's outputs, the resolved rows' bloom increment
+    (``seen.bloom_words`` form) and the outlinks snapshot."""
+
+    sid: int
+    bloom_words: np.ndarray | None = None
+    outlinks_sid: int | None = None
+
+
 def fetch_and_commit(
     cat: Catalog,
     admitted: DataFrame,
@@ -96,24 +135,41 @@ def fetch_and_commit(
     r: int,
     meta: dict,
     transport_factory=synth_transport,
-) -> int:
-    """Fetch ``admitted`` into the fetched scratch table; returns the
-    committed snapshot id. One fused Arrow pass fetches AND extracts
-    spans and writes the span/link bytes Arrow -> parquet inside the
-    Python workers: the JVM sees one stats row per partition
-    (operators/fetch.fetch_stage_direct — content- and layout-identical
-    to the mapInArrow->df.write reference, digest-pinned). The sort
-    inside the pass makes the files deterministic regardless of shuffle
-    arrival order (byte-identical resume, N-vs-4N equality)."""
+    bloom_bc=None,
+) -> FetchCommit:
+    """Fetch ``admitted`` into the fetched scratch table. One fused Arrow
+    pass fetches AND extracts spans and writes the span/link bytes
+    Arrow -> parquet inside the Python workers: the JVM sees one stats
+    row per partition (operators/fetch.fetch_stage_direct — content- and
+    layout-identical to the mapInArrow->df.write reference,
+    digest-pinned). The sort inside the pass makes the files
+    deterministic regardless of shuffle arrival order (byte-identical
+    resume, N-vs-4N equality).
+
+    With ``bloom_bc`` (the broadcast bytes of the round-start bloom) the
+    same pass also yields the round's bloom increment and its outlinks
+    (``fetch.RoundOutputs``), committed as ``OUTLINKS_TABLE``."""
     stage = cat.new_stage("fetched")
+    outputs = None
+    if bloom_bc is not None:
+        cat.drop(OUTLINKS_TABLE)
+        outputs = RoundOutputs(bloom_bc, cat.new_stage(OUTLINKS_TABLE))
     fetch_stage_direct(
         admitted.withColumn("fingerprint", F.hash(F.col("url"))),
         cfg,
         r,
         stage,
         transport_factory,
+        outputs,
     ).agg(F.sum("rows")).first()
-    return cat.overwrite_stage("fetched", stage, meta=meta)
+    if outputs is None:
+        return FetchCommit(cat.overwrite_stage("fetched", stage, meta=meta))
+    words = stage_bloom_words(stage)
+    return FetchCommit(
+        cat.overwrite_stage("fetched", stage, meta=meta),
+        words,
+        cat.overwrite_stage(OUTLINKS_TABLE, outputs.links_dir, meta=meta),
+    )
 
 
 def append_seen(
@@ -188,6 +244,44 @@ def with_global_ord(df: DataFrame, sort_cols, n_parts: int):
     return ranked, s
 
 
+def frontier_links(outlinks: DataFrame, seen: DataFrame, r: int) -> DataFrame:
+    """Round ``r``'s outlinks (``fetch.OUTLINKS`` rows) -> round r+1's
+    FRONTIER rows, after the pagination cutoff.
+
+    O5/V4 pagination cutoff: the reference kills a playlist's whole
+    pagination chain on the first already-seen video
+    (New_YouTube_Crawler.py:263-273, keep_going=False). Batch
+    adaptation: a playlist page whose video items include a URL seen AS
+    OF ROUND START does not enqueue its next-page continuation.
+    Membership reuses the two-tier structure: the fetch pass's
+    round-start bloom probe (``maybe_seen``) filters to the maybe-seen
+    slice, an exact SEMI join against the round-start ``seen`` confirms
+    — no seen-set shuffle for the overwhelmingly-unseen case. Every
+    expression here is JVM-side."""
+    is_pl_parent = F.col("parent").rlike("://[^/]*/pl/")
+    is_pl_child = F.col("url").rlike("://[^/]*/pl/")
+    cut_parents = (
+        outlinks.filter(is_pl_parent & ~is_pl_child & F.col("maybe_seen"))
+        .join(seen.select("url_hash"), "url_hash", "left_semi")
+        .select("parent")
+        .distinct()
+    )
+    kept_cont = outlinks.filter(is_pl_parent & is_pl_child).join(
+        cut_parents, "parent", "left_anti"
+    )
+    links = outlinks.filter(~(is_pl_parent & is_pl_child)).unionByName(kept_cont)
+    return links.select(
+        "url",
+        "url_hash",
+        host_of(F.col("url")).alias("host"),
+        (F.col("parent_depth") + 1).cast("int").alias("depth"),
+        F.col("seq").cast("long").alias("seq"),
+        F.lit(r + 1).cast("int").alias("round"),
+        F.lit(0).cast("int").alias("attempt"),
+        "parent",
+    )
+
+
 def unseen_frontier(
     pending: DataFrame,
     robots: DataFrame,
@@ -198,19 +292,23 @@ def unseen_frontier(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Steps 1-3 of a round: (unseen, excluded, robots_joined).
 
-    1. frontier dedup (window, one row per url_hash);
-    2. seen-tier probe: one Arrow pass adds ``maybe_seen`` (bloom, then
-       the cuckoo re-probe of the bloom positives when ``cuckoo_bc`` is
-       given), then the robots exclusion (broadcast dim join);
+    1. seen-tier probe on the scan side: one Arrow pass adds
+       ``maybe_seen`` (bloom, then the cuckoo re-probe of the bloom
+       positives when ``cuckoo_bc`` is given) in one task per pending
+       scan split, before any shuffle;
+    2. frontier dedup (window, one row per url_hash — ``maybe_seen`` is a
+       function of url_hash, so the kept rows carry the same flags as a
+       probe after the dedup would give them), then the robots exclusion
+       (broadcast dim join);
     3. exact confirm: probe positives anti-join ``seen``.
 
-    ``robots_joined`` is the dedup+probe+robots node, returned PERSISTED
+    ``robots_joined`` is the probe+dedup+robots node, returned PERSISTED
     (the caller releases it): the allowed chain (-> fetch), the excluded
     chain (-> dead letters) and both branches of the unseen filter
     (probe negatives, anti-join of probe positives) read the one cached
-    copy, so the dedup window shuffle and the probe each run once per
+    copy, so the probe and the dedup window shuffle each run once per
     round, not once per consumer."""
-    probed = bloom_probe(dedup_frontier(pending), bitmap_bc, k, cuckoo_bc=cuckoo_bc)
+    probed = dedup_frontier(bloom_probe(pending, bitmap_bc, k, cuckoo_bc=cuckoo_bc))
     allowed, excluded, robots_joined = split_robots_excluded(probed, robots)
     robots_joined.persist()
     return unseen_of_probed(allowed, seen), excluded, robots_joined
@@ -293,12 +391,13 @@ def run_round_critical(
     cuckoo=None,
 ) -> RoundHandle:
     """Round ``r`` up to its last data commit: fetch + span commit, then
-    every bookkeeping job (seen, bloom and cuckoo increments, pending,
-    crawl_order, dead letters, counts, host stats, scores) run
-    concurrently and joined here, in one place. The round's persisted
-    frames are released before this returns, also when any step fails;
-    ``finish_round`` then derives metrics + lineage from the committed
-    snapshots.
+    every bookkeeping job (seen, cuckoo increment, pending, crawl_order,
+    dead letters, counts, host stats, scores) run concurrently and
+    joined here, in one place. The bloom increment and the outlinks come
+    out of the fetch pass itself (``fetch_and_commit``). The round's
+    persisted frames are released before this returns, also when any
+    step fails; ``finish_round`` then derives metrics + lineage from the
+    committed snapshots.
 
     ``bloom`` (and ``cuckoo``) are merged IN PLACE once every job has
     succeeded; the driver checkpoints them after ``finish_round``
@@ -317,8 +416,8 @@ def run_round_critical(
 
         backoff = host_backoff_factors(cat.read("host_stats", HOST_STATS))
 
-    # 1-3. frontier dedup, seen-tier probe (bloom, then cuckoo on its
-    #    positives) and robots exclusion in ONE persisted node
+    # 1-3. seen-tier probe (bloom, then cuckoo on its positives),
+    #    frontier dedup and robots exclusion in ONE persisted node
     #    (robots_joined); the exact anti-join confirms only the probe
     #    positives (unseen_frontier). ``unseen`` is persisted too: both
     #    the admitted chain (fetch) and the deferred chain (next-round
@@ -330,9 +429,8 @@ def run_round_critical(
     unseen, excluded, robots_joined = unseen_frontier(
         pending, robots, seen, bitmap_bc, cfg.bloom_hashes, cuckoo_bc
     )
-    # the round's persisted frames (robots_joined, unseen and, once built,
-    # the canonical outlinks) are released however the round ends
-    links_exploded = None
+    # the round's persisted frames (robots_joined, unseen) are released
+    # however the round ends
     try:
         unseen.persist()
 
@@ -384,18 +482,25 @@ def run_round_critical(
 
         # 5. salted-bucket batch fetch -> ROUND SCRATCH TABLE, written ONCE
         #    to parquet (fetch_and_commit); every downstream consumer reads it
-        #    back column-pruned.
+        #    back column-pruned. The same pass yields the resolved rows'
+        #    bloom increment and the canonical, hashed, probed outlinks, so
+        #    no later job of the round crosses into Python.
         tm.step("fetch_scratch_write")
-        sid_fetch = fetch_and_commit(cat, admitted_df, cfg, r, {"round": r})
+        fc = fetch_and_commit(
+            cat,
+            admitted_df,
+            cfg,
+            r,
+            {"round": r},
+            bloom_bc=bitmap_bc,
+        )
+        sid_fetch = fc.sid
         fetched = cat.read("fetched", FETCHED)
         failed = fetched.filter(~F.col("ok"))
-        # "resolved" = conclusively fetched: ok pages PLUS cross-host 301
-        # handoffs (the URL itself never needs refetching — its single
-        # outlink, the redirect target, re-enters the frontier below and the
-        # target host's politeness budget applies there). With redirects off
-        # (synth_redirect_prob=0, the reference-parity default) no 301 rows
-        # exist and resolved == ok, so every pinned digest is unchanged.
-        resolved = fetched.filter(F.col("ok") | (F.col("status_code") == 301))
+        # ok pages plus cross-host 301 handoffs (fetch.resolved). With
+        # redirects off (synth_redirect_prob=0, the reference-parity
+        # default) no 301 rows exist and resolved == ok.
+        resolved = fetched.filter(is_resolved(F.col("ok"), F.col("status_code")))
 
         # 6. span documents (the interleaved text+media payload): a ZERO-COPY
         #    manifest append — the spans table commits the scratch snapshot's
@@ -419,13 +524,6 @@ def run_round_critical(
             # rows_delta IS ok_n (no separate count job)
             return append_seen(cat, resolved, cfg, r, {"round": r})
 
-        def job_bloom() -> np.ndarray:
-            # bloom increment: per-partition bitmaps over a url_hash-only
-            # scan — the driver never sees individual hashes
-            return build_bloom_distributed(
-                resolved.select("url_hash"), bloom.shape[0] * 64, cfg.bloom_hashes
-            )
-
         def job_cuckoo() -> np.ndarray:
             # cuckoo increment: each key shard's table updates in its own
             # task (disjoint shards — the cuckoo analogue of the bloom's
@@ -448,65 +546,16 @@ def run_round_critical(
         )
         retries = retry_base.filter(F.col("attempt") < cfg.max_attempts).select(*FRONTIER_COLS)
 
-        # frontier expansion: outlinks -> next round's pending rows (LAZY —
-        # built here so job_pending and the optional job_scores share one
-        # definition; nothing executes until those jobs run). The exploded,
-        # canonicalized outlinks are PERSISTED (released once the
-        # bookkeeping is joined):
-        # the cut-parent, continuation and rest branches of job_pending and
-        # job_scores all read that one copy, so the canonicalization UDF
-        # runs once per outlink per round.
-        # O5/V4 pagination cutoff: the reference kills a playlist's whole
-        # pagination chain on the first already-seen video
-        # (New_YouTube_Crawler.py:263-273, keep_going=False). Batch
-        # adaptation: a playlist page whose video items include a URL
-        # seen AS OF ROUND START does not enqueue its next-page
-        # continuation. Membership reuses the two-tier structure:
-        # round-start bloom probe (bitmap_bc) filters to the maybe-seen
-        # slice, an exact SEMI join against the round-start seen table
-        # confirms — no seen-set shuffle for the overwhelmingly-unseen
-        # case. ``seen`` was bound to the round-start snapshot at step 1
-        # (catalog.read resolves files eagerly), so the concurrent
-        # job_seen append is invisible here by construction.
-        links_exploded = (
-            resolved.filter(F.col("depth") < cfg.max_depth)
-            .select(
-                F.col("url").alias("parent"),
-                F.col("depth").alias("parent_depth"),
-                F.posexplode(
-                    F.when(F.col("links") == "", F.array().cast("array<string>"))
-                    .otherwise(F.split(F.col("links"), SPANSEP_LIT))
-                ).alias("seq", "url"),
-            )
-            .transform(with_canonical)
-            .drop("fingerprint")
-            .persist()
-        )
-        is_pl_parent = F.col("parent").rlike("://[^/]*/pl/")
-        is_pl_child = F.col("url").rlike("://[^/]*/pl/")
-        watch_children = links_exploded.filter(is_pl_parent & ~is_pl_child).select(
-            "parent", "url_hash"
-        )
-        cut_parents = (
-            bloom_probe(watch_children, bitmap_bc, cfg.bloom_hashes)
-            .filter(F.col("maybe_seen"))
-            .join(seen.select("url_hash"), "url_hash", "left_semi")
-            .select("parent")
-            .distinct()
-        )
-        cont = links_exploded.filter(is_pl_parent & is_pl_child)
-        rest = links_exploded.filter(~(is_pl_parent & is_pl_child))
-        kept_cont = cont.join(cut_parents, "parent", "left_anti")
-        links = rest.unionByName(kept_cont)
-        new_links = links.select(
-            "url",
-            "url_hash",
-            "host",
-            (F.col("parent_depth") + 1).cast("int").alias("depth"),
-            F.col("seq").cast("long").alias("seq"),
-            F.lit(r + 1).cast("int").alias("round"),
-            F.lit(0).cast("int").alias("attempt"),
-            "parent",
+        # frontier expansion: the fetch pass's outlinks -> next round's
+        # pending rows (LAZY — built here so job_pending and the optional
+        # job_scores share one definition). Each branch re-reads the
+        # outlink files, a JVM scan; when no row could expand the table is
+        # empty, reads as a LocalRelation, and the optimizer drops the
+        # whole branch. ``seen`` was bound to the round-start snapshot at
+        # step 1 (catalog.read resolves files eagerly), so the concurrent
+        # job_seen append is invisible to the cutoff by construction.
+        new_links = frontier_links(
+            cat.read(OUTLINKS_TABLE, OUTLINKS, snapshot=fc.outlinks_sid), seen, r
         )
 
         def job_pending() -> int:
@@ -610,7 +659,6 @@ def run_round_critical(
         tm.step("bookkeeping")
         jobs = {
             "seen": job_seen,
-            "bloom": job_bloom,
             "pending": job_pending,
             "order": job_order,
             "dead": job_dead,
@@ -633,10 +681,9 @@ def run_round_critical(
             futs = {n: ex.submit(tm.timed(f"bk_{n}", fn)) for n, fn in jobs.items()}
         out = {n: f.result() for n, f in futs.items()}
     finally:
-        for handle in (robots_joined, unseen, links_exploded):
-            if handle is not None:
-                handle.unpersist()
-    bloom |= out["bloom"]
+        for handle in (robots_joined, unseen):
+            handle.unpersist()
+    or_words(bloom, fc.bloom_words)
     if cuckoo is not None:
         # merged in place like the bloom: round r+1 probes the caller's
         # object, and the driver checkpoints it after finish_round

@@ -387,28 +387,118 @@ def test_quantile_sketch_sample_is_salted_two_phase(spark):
     )
 
 
-def _executed_nodes(df) -> list:
-    """Every distinct physical node an action over ``df`` ran, walking into
-    AQE query stages and the cached plans behind ``InMemoryTableScan``.
-    A cached plan read by several branches is the same JVM object, so it
-    is listed once."""
+def _walk_executed(df) -> list:
+    """(node, cached) for every distinct physical node an action over
+    ``df`` runs, walking into AQE query stages and the cached plans
+    behind ``InMemoryTableScan``; ``cached`` marks the nodes of a cached
+    plan. A cached plan read by several branches is the same JVM object,
+    so it is listed once."""
     jvm = df._sc._jvm
-    todo, ids, out = [df._jdf.queryExecution().executedPlan()], set(), []
+    todo, ids, out = [(df._jdf.queryExecution().executedPlan(), False)], set(), []
     while todo:
-        node = todo.pop()
+        node, cached = todo.pop()
         key = jvm.System.identityHashCode(node)
         if key in ids:
             continue
         ids.add(key)
-        out.append(node)
-        for seq in (node.children(), node.innerChildren()):
-            todo.extend(seq.apply(i) for i in range(seq.size()))
+        out.append((node, cached))
         kind = node.getClass().getSimpleName()
+        inner = cached or kind == "InMemoryRelation"
+        for seq in (node.children(), node.innerChildren()):
+            todo.extend((seq.apply(i), inner) for i in range(seq.size()))
         if kind == "AdaptiveSparkPlanExec":
-            todo.append(node.executedPlan())
+            todo.append((node.executedPlan(), cached))
         elif kind.endswith("QueryStageExec"):
-            todo.append(node.plan())
+            todo.append((node.plan(), cached))
     return out
+
+
+def _executed_nodes(df) -> list:
+    """Every distinct physical node an action over ``df`` runs."""
+    return [node for node, _ in _walk_executed(df)]
+
+
+def _runs_python(node) -> bool:
+    """A node that hands rows to a Python worker (Arrow/pandas map
+    stages, Python UDF evaluation)."""
+    name = node.nodeName()
+    return any(k in name for k in ("Python", "Pandas", "MapInArrow")) or (
+        "pythonUDF" in node.simpleString(1000)
+    )
+
+
+def _round_commits(spark, monkeypatch, cfg, frontier):
+    """Bootstrap ``frontier`` under ``cfg``, run one round and return
+    {table: [(node, cached), ...]} for every frame the round commits
+    through ``Catalog.append``/``Catalog.overwrite``, walked at commit
+    time (while the round's persisted frames are cached)."""
+    from swmaestro_crawler_spark.catalog import Catalog
+    from swmaestro_crawler_spark.plans.crawl import Crawl
+
+    crawl = Crawl(spark, cfg)
+    crawl.bootstrap(frontier=frontier)
+    got: dict = {}
+
+    def spy(orig):
+        def commit(self, table, df, *args, **kwargs):
+            got.setdefault(table, []).extend(_walk_executed(df))
+            return orig(self, table, df, *args, **kwargs)
+
+        return commit
+
+    monkeypatch.setattr(Catalog, "append", spy(Catalog.append))
+    monkeypatch.setattr(Catalog, "overwrite", spy(Catalog.overwrite))
+    assert len(crawl.run(None, rounds=1)) == 1
+    monkeypatch.undo()
+    return got
+
+
+def test_round_python_stage_budget(spark, tmp_path, monkeypatch):
+    """A round crosses into Python only in the seen-tier probe and the
+    fused fetch pass (which commits through ``overwrite_stage``, not a
+    frame). Of every frame a round commits, the only Python node is the
+    probe, and it runs inside the cached probe+dedup+robots node; the
+    outlinks reach the next pending snapshot through JVM nodes only."""
+    from swmaestro_crawler_spark.plans.crawl import seeds_to_frontier
+    from swmaestro_crawler_spark.sources.synth_web import make_seeds
+
+    from .conftest import small_cfg
+
+    cfg = small_cfg(str(tmp_path / "wh"))
+    frontier = seeds_to_frontier(spark.createDataFrame(make_seeds(cfg, 40)))
+    commits = _round_commits(spark, monkeypatch, cfg, frontier)
+    assert {"seen", "pending", "crawl_order", "dead"} <= set(commits)
+    python = {
+        (table, node.nodeName(), cached, "maybe_seen" in node.simpleString(1000))
+        for table, nodes in commits.items()
+        for node, cached in nodes
+        if _runs_python(node)
+    }
+    assert {p[1:] for p in python} == {("MapInPandas", True, True)}, python
+    assert not all(cached for nodes in commits.values() for _, cached in nodes)
+    pending = " ".join(node.toString() for node, _ in commits["pending"])
+    assert "parent_depth" in pending  # the outlink branch is there ...
+    assert "canonicalize" not in pending  # ... canonical already
+
+
+def test_round_without_expansion_plans_no_outlink_branch(spark, tmp_path, monkeypatch):
+    """At ``max_depth=1`` over a depth-1 frontier no row can expand: the
+    fetch pass writes no outlinks, the empty table reads as a
+    LocalRelation, and the optimizer drops the whole outlink branch
+    from the next pending snapshot's plan."""
+    from swmaestro_crawler_spark.plans.crawl import seeds_to_frontier
+    from swmaestro_crawler_spark.sources.synth_web import make_seeds
+
+    from .conftest import small_cfg
+
+    cfg = small_cfg(str(tmp_path / "wh"), max_depth=1)
+    frontier = seeds_to_frontier(
+        spark.createDataFrame(make_seeds(cfg, 40))
+    ).withColumn("depth", F.lit(1))
+    commits = _round_commits(spark, monkeypatch, cfg, frontier)
+    pending = " ".join(node.toString() for node, _ in commits["pending"])
+    assert "parent_depth" not in pending and "/pl/" not in pending
+    assert "status_code" in pending  # the retries branch is still planned
 
 
 @pytest.mark.parametrize("with_cuckoo", [False, True])

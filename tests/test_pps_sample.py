@@ -23,6 +23,17 @@ def test_pps_exactly_k_picks_and_weight_proportionality(spark):
         assert abs(r.n_picks - ideal) <= 1.0
 
 
+def test_pps_sample_leaves_nothing_cached(spark):
+    """The cumulative weight line persists a range-sorted frame
+    (``grouped_prefix_sum``); the query must release it, so running the
+    query leaves Spark's cache manager as it found it."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = q_pps_sample(spark, SF_DIR).collect()
+    assert sum(r.n_picks for r in rows) == PPS_K
+    assert cache.isEmpty()
+
+
 def test_pps_deterministic_across_parallelism(spark):
     a = sorted(map(tuple, q_pps_sample(spark, SF_DIR).collect()))
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 
 from swmaestro_crawler_spark.operators.packing import (
     SHARD_TOKENS,
+    corpus_docs,
     grouped_prefix_sum,
     q_corpus_shard_pack,
+    shard_pack,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -30,13 +32,22 @@ def test_grouped_prefix_sum_matches_pandas(spark):
 def test_shard_pack_no_single_reducer(spark):
     """The whole point: no Exchange SinglePartition anywhere in the
     physical plan (the oracle's window-cumsum shape would have one)."""
-    plan = (
-        q_corpus_shard_pack(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    packed, handle = shard_pack(corpus_docs(spark, SF_DIR))
+    plan = packed._jdf.queryExecution().executedPlan().toString()
+    handle.unpersist()
+    assert "MapInPandas" in plan  # the prefix sum's running-total pass
     assert "Exchange SinglePartition" not in plan
+
+
+def test_corpus_shard_pack_leaves_nothing_cached(spark):
+    """``shard_pack`` persists the prefix sum's range-sorted frame; the
+    contract query must release it, so running the query leaves Spark's
+    cache manager as it found it."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = q_corpus_shard_pack(spark, SF_DIR).collect()
+    assert len(rows) == 500
+    assert cache.isEmpty()
 
 
 def test_shard_pack_greedy_budget(spark):

@@ -39,7 +39,7 @@ def main() -> None:
         q_ann_ivf_topk,
         q_semantic_dedup,
     )
-    from swmaestro_crawler_spark.operators.packing import q_corpus_shard_pack
+    from swmaestro_crawler_spark.operators.packing import corpus_docs, shard_pack
     from swmaestro_crawler_spark.operators.relational import QUERIES as REL_Q
     from swmaestro_crawler_spark.operators.scoretable import q_opic_score_table
     from swmaestro_crawler_spark.operators.similarity import q_embedding_neardup_pairs
@@ -99,8 +99,8 @@ def main() -> None:
         ),
         (
             "Token-budget shard packing (grouped prefix sum; no single-reducer window)",
-            "`operators/packing.py q_corpus_shard_pack`",
-            q_corpus_shard_pack(spark, SF),
+            "`operators/packing.py shard_pack`",
+            shard_pack(corpus_docs(spark, SF))[0],
         ),
         (
             "As-of join (tagged union -> one user-keyed sort -> last-non-null carry)",
