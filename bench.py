@@ -11,8 +11,10 @@ Extra keys: ``crawl`` (URLs fetched+deduped/sec and per-core rate — the
 BASELINE.json headline metric) and ``cpus``. Each query is forced with a
 noop-format write so the full plan executes without driver-side collect.
 
-Scaling evidence (local[8] vs local[32]) is produced by
-``tools/bench_scaling.py`` → ``BENCH/BASELINE.md``.
+Scaling evidence (``local[N]`` vs ``local[4N]``, N a quarter of the
+host's CPUs) is produced by ``tools/bench_scaling.py`` →
+``BENCH/scaling.json`` and ``BENCH/BASELINE.md``; the ``scaling`` key
+carries its efficiency.
 """
 
 from __future__ import annotations
@@ -244,30 +246,17 @@ def _crawl_subprocess(cuckoo: bool = False) -> dict:
 
 
 def host_calibration() -> dict:
-    """Two fixed reference workloads, recorded so round-over-round bench
-    diffs can be normalized for sandbox host variance (each round runs in
-    a fresh VM whose CPU/memory-bandwidth budget differs; round 3's host
-    ran round 2's unchanged code ~2-4x slower). Single-threaded integer
-    hashing (DuckDB) tracks scalar CPU speed; a float matmul at BLAS
-    parallelism tracks the multicore FP/bandwidth budget."""
-    import duckdb
-    import numpy as np
+    """``crawlbench/run.py``'s host calibration (loaded by path), recorded
+    so bench diffs across hosts can be normalized for host speed."""
+    import importlib.util
 
-    con = duckdb.connect()
-    con.execute("SET threads TO 1")
-    t0 = time.perf_counter()
-    con.execute("SELECT sum(hash(range)) FROM range(20000000)").fetchall()
-    duck_s = time.perf_counter() - t0
-    a = np.random.RandomState(0).rand(2048, 2048)
-    a @ a  # warm BLAS pool
-    t0 = time.perf_counter()
-    for _ in range(3):
-        a @ a
-    mm_s = (time.perf_counter() - t0) / 3
-    return {
-        "duckdb_1thread_hash20m_s": round(duck_s, 3),
-        "numpy_matmul2048_gflops": round(2 * 2048**3 / mm_s / 1e9, 1),
-    }
+    spec = importlib.util.spec_from_file_location(
+        "crawlbench_run",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "crawlbench", "run.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.host_calibration()
 
 
 def main() -> None:

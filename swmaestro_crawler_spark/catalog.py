@@ -37,6 +37,8 @@ from bisect import bisect_left
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .schema import nullable_arrow_schema
+
 
 class CommitConflict(RuntimeError):
     """A commit planned against snapshot S found the table moved past S
@@ -1025,18 +1027,10 @@ class Catalog:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def nullable(dt):
-            if pa.types.is_struct(dt):
-                return pa.struct([pa.field(f.name, nullable(f.type)) for f in dt])
-            if pa.types.is_list(dt):
-                return pa.list_(pa.field(dt.value_field.name, nullable(dt.value_type)))
-            return dt
-
         h = hashlib.sha256()
         for path in self.data_files(table, snapshot):
             tbl = pq.read_table(path).combine_chunks().replace_schema_metadata(None)
-            norm = pa.schema([pa.field(f.name, nullable(f.type)) for f in tbl.schema])
-            tbl = tbl.cast(norm)
+            tbl = tbl.cast(nullable_arrow_schema(tbl.schema))
             sink = pa.BufferOutputStream()
             with pa.ipc.new_stream(sink, tbl.schema) as w:
                 w.write_table(tbl)

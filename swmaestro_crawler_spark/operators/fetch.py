@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import CrawlConfig
-from ..schema import FRONTIER, SPAN
+from ..schema import FRONTIER, SPAN, nullable_arrow_schema
 from ..sources import synth_web
 from .politeness import PRIORITY
 from .spans import extract_spans_arrow
@@ -355,20 +355,11 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
 
     import pyarrow as pa
 
-    def _nullable(dt):
-        # nullability-erased target: the assembled batches carry nullable
-        # children (Arrow kernels default to nullable) and read-back
-        # enforces the declared Spark schema regardless — parquet bytes
-        # only need the right physical types
-        if pa.types.is_struct(dt):
-            return pa.struct([pa.field(f.name, _nullable(f.type)) for f in dt])
-        if pa.types.is_list(dt):
-            return pa.list_(pa.field(dt.value_field.name, _nullable(dt.value_type)))
-        return dt
-
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _nullable(f.type)) for f in to_arrow_schema(FETCHED)]
-    )
+    # nullability-erased target: the assembled batches carry nullable
+    # children (Arrow kernels default to nullable) and read-back enforces
+    # the declared Spark schema regardless — parquet bytes only need the
+    # right physical types
+    arrow_schema = nullable_arrow_schema(to_arrow_schema(FETCHED))
 
     def run_partition(batches):
         import pyarrow.compute as pc

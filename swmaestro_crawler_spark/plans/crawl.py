@@ -218,9 +218,7 @@ class Crawl:
             "host_stats",
         ):
             # materialize an empty snapshot 0 so resume rollback has a target
-            self.cat._commit_manifest(
-                t, {"snapshots": [{"id": 0, "files": [], "meta": {}}], "current": 0}
-            )
+            self.cat.overwrite_stage(t, self.cat.new_stage(t))
         if self.cfg.score_admission == "table":
             # edges injected with the bootstrap frontier are discoveries
             # too: log their OPIC contributions so round 0's admission

@@ -18,6 +18,24 @@ from pyspark.sql.types import (
     StructType,
 )
 
+
+def nullable_arrow_schema(schema):
+    """``schema`` (a pyarrow schema) with every field, nested ones
+    included, nullable and without metadata: the physical types, which
+    the JVM and the executor-direct parquet writers agree on and
+    ``Catalog.content_digest`` hashes."""
+    import pyarrow as pa
+
+    def nullable(dt):
+        if pa.types.is_struct(dt):
+            return pa.struct([pa.field(f.name, nullable(f.type)) for f in dt])
+        if pa.types.is_list(dt):
+            return pa.list_(pa.field(dt.value_field.name, nullable(dt.value_type)))
+        return dt
+
+    return pa.schema([pa.field(f.name, nullable(f.type)) for f in schema])
+
+
 # ---------------------------------------------------------------------------
 # The interleaved text+media span document (BASELINE.json input_hint).
 # kind ∈ {text, media, link, stat, tag}; text is '' for media spans and

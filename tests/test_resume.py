@@ -146,3 +146,23 @@ def test_failed_round_leaves_nothing_cached(
     with pytest.raises(RuntimeError, match="injected"):
         Crawl(spark, cfg).run(seeds, rounds=1)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_bootstrap_commits_every_snapshot_through_commit(spark, tmp_path):
+    """Bootstrap writes each table's snapshot 0 through ``Catalog._commit``:
+    every snapshot carries the ``rows_delta`` meta only that path writes,
+    and the empty tables resume can roll back to are snapshot 0."""
+    cfg = small_cfg(str(tmp_path / "wh"))
+    crawl = Crawl(spark, cfg)
+    crawl.bootstrap(spark.createDataFrame(make_seeds(cfg, 40)))
+    empty = set()
+    for t in crawl.cat.list_tables():
+        m = crawl.cat._load_manifest(t)
+        assert [s["id"] for s in m["snapshots"]] == [0] and m["current"] == 0, t
+        assert m["snapshots"][0]["meta"]["rows_delta"] == crawl.cat.row_count(t), t
+        if crawl.cat.row_count(t) == 0:
+            empty.add(t)
+    assert empty == {
+        "seen", "spans", "dead", "crawl_order", "metrics", "fetched",
+        "lineage", "link_scores", "host_stats",
+    }

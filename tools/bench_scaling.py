@@ -1,52 +1,88 @@
 """N vs 4N scaling-efficiency benchmark (BASELINE.json criterion).
 
-The rule: ≥0.8 throughput scaling efficiency from N to 4N executors with
-exact crawl-order + URL-seen match. No real cluster exists in the
-sandbox, so the evidence protocol is the same job at two parallelism
-levels — ``local[8]`` (N) vs ``local[32]`` (4N) — on the SAME input:
-one steady-state crawl round over a bulk synthetic frontier generated
-entirely JVM-side (codegen expressions, no Python), politeness + bloom +
-fetch + span extraction all live.
+The rule: ≥0.8 throughput scaling efficiency from N to 4N executors, with
+crawl order and the URL-seen set identical at both sizes. No real cluster
+exists here, so one box stands in for it: the same job runs at
+``local[N]`` and ``local[4N]`` (``host_pair``: N is a quarter of the CPUs
+this process may run on) over the SAME input, one steady-state crawl
+round over a bulk synthetic frontier generated entirely JVM-side
+(codegen expressions, no Python), politeness + bloom + fetch + span
+extraction all live.
 
-Each level runs in its own subprocess (fresh JVM, honest cold state).
-The worker prints one JSON line: wall seconds, URLs processed, and
-order-independent content digests of the crawl_order and seen tables.
-The parent checks digest equality across levels (the correctness half of
-the criterion: crawl order is data-derived, so core count must not change
-it) and writes ``BENCH/BASELINE.md`` + ``BENCH/scaling.json``
-(``bench.py`` embeds the latter in its output line).
+Each run is a fresh process (own JVM, cold state). The worker prints one
+JSON line: its wall, the URLs processed, the round's stage walls
+(``RoundResult.timings``) and ``Catalog.logical_digest`` of the
+crawl_order and seen tables. The parent runs REPEATS runs per level,
+reports each level's median and every wall, asserts the digests equal
+across every run, and writes ``BENCH/scaling.json`` (``bench.py`` embeds
+its efficiency in its output line) and ``BENCH/BASELINE.md``.
 
 Usage:
-    python tools/bench_scaling.py                # full: 8 then 32, report
-    python tools/bench_scaling.py --worker 8     # one level (internal)
-    python tools/bench_scaling.py --revisit-check  # post-round checks at 2 and 8
+    python tools/bench_scaling.py                  # N then 4N, then report
+    python tools/bench_scaling.py --worker CORES   # one run (internal)
+    python tools/bench_scaling.py --revisit-check  # post-round checks at N and 4N
     python tools/bench_scaling.py --media-check
-    python tools/bench_scaling.py --render       # BASELINE.md from scaling.json
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import math
 import os
+import shutil
 import subprocess
 import sys
 import time
+from statistics import median
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 N_URLS = int(os.environ.get("SCALING_URLS", 1_000_000))
 # CPU stand-in for real fetch+parse cost (~3.4us/URL per 1000 iters;
-# 50k ~= 170us/URL, conservative vs parsing a real ~100KB watch page).
-# 0 = raw synthetic transport. Both are reported.
+# 100k ~= 340us/URL, conservative vs parsing a real ~100KB watch page).
+# 0 = raw synthetic transport.
 WORK_ITERS = int(os.environ.get("SCALING_WORK_ITERS", 100_000))
 N_HOSTS = 5000
-# N and 4N cores (task protocol: "e.g. local[8] and local[32], or N and 4N
-# cores"). Primary pair 2->8; 8->32 reported as a secondary data point —
-# on this single box, >8 concurrent Spark tasks start contending on
-# memory bandwidth/stage latency rather than CPU, which a real 4N-node
-# cluster does not (each node brings its own memory + disk).
-LEVELS = tuple(int(x) for x in os.environ.get("SCALING_LEVELS", "2,8,32").split(","))
+REPEATS = int(os.environ.get("SCALING_REPEATS", 2))
+SCALING_JSON = os.path.join(REPO, "BENCH", "scaling.json")
+BASELINE_MD = os.path.join(REPO, "BENCH", "BASELINE.md")
+# the keys of the primary record; every other key of scaling.json is a
+# block another check or tool wrote
+PRIMARY = (
+    "n_urls",
+    "work_iters",
+    "repeats",
+    "levels",
+    "all_walls",
+    "scaling_efficiency",
+    "efficiencies",
+    "stage_efficiencies",
+    "crawl_order_match",
+    "seen_match",
+    "passes",
+    "host_calibration",
+)
+
+
+def host_pair() -> tuple[int, int]:
+    """(N, 4N) cores for this host, N a quarter of the CPUs this process
+    may run on; exits on a host with fewer than 4."""
+    n = len(os.sched_getaffinity(0)) // 4
+    if n < 1:
+        raise SystemExit("an N -> 4N pair needs at least 4 CPUs on this host")
+    return n, 4 * n
+
+
+def host_calibration() -> dict:
+    """``crawlbench/run.py``'s host calibration (loaded by path)."""
+    spec = importlib.util.spec_from_file_location(
+        "crawlbench_run", os.path.join(REPO, "crawlbench", "run.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.host_calibration()
 
 
 def synth_frontier(spark, n_urls: int, n_hosts: int, parts: int):
@@ -61,7 +97,7 @@ def synth_frontier(spark, n_urls: int, n_hosts: int, parts: int):
     )
     hidx = F.least(
         F.lit(n_hosts - 1),
-        (F.floor(F.exp(u * float(__import__("math").log(n_hosts)))) - 1).cast("long"),
+        (F.floor(F.exp(u * math.log(n_hosts))) - 1).cast("long"),
     ).cast("int")
     host = F.concat_ws(
         "", F.lit("host"), F.lpad(hidx.cast("string"), 4, "0"), F.lit(".example.com")
@@ -81,29 +117,24 @@ def synth_frontier(spark, n_urls: int, n_hosts: int, parts: int):
     )
 
 
-def worker(cores: int) -> None:
-    from pyspark.sql import functions as F
-
+def start_crawl(cores: int, wh: str, scratch: str):
+    """Spark at ``local[cores]`` with its shuffle scratch in ``scratch``,
+    and a ``Crawl`` of the scaling config over warehouse ``wh``: one round
+    over the whole frontier, admission bounded by the frontier, not the
+    budget. Returns (spark, crawl)."""
     from swmaestro_crawler_spark.config import CrawlConfig, spark_builder
     from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.schema import CRAWL_ORDER, SEEN
 
-    # Shuffle dirs + warehouse on tmpfs: a real 4N-executor cluster has 4N
-    # nodes' worth of disk bandwidth, but this single box has ONE disk —
-    # tmpfs emulates per-node I/O so the measurement isolates the engine's
-    # compute/shuffle scaling (disclosed in BENCH/BASELINE.md).
-    shm = f"/dev/shm/scaling-{cores}"
-    os.makedirs(shm, exist_ok=True)
-    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(shm, "local")
-    spark = spark_builder(
-        f"scaling-{cores}", master=f"local[{cores}]", shuffle_partitions=32
-    ).config("spark.local.dir", os.path.join(shm, "local")).getOrCreate()
+    os.environ["SPARK_LOCAL_DIRS"] = scratch
+    spark = (
+        spark_builder(f"scaling-{cores}", master=f"local[{cores}]", shuffle_partitions=32)
+        .config("spark.local.dir", scratch)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("ERROR")
-
-    wh = os.path.join(shm, "wh")
     cfg = CrawlConfig(
-        round_seconds=1e6,          # huge budget window: admission bounded by
-        per_host_cap=10_000_000,    # the frontier, not the budget
+        round_seconds=1e6,
+        per_host_cap=10_000_000,
         max_rounds=1,
         max_depth=1,                # no expansion: one steady-state round
         frontier_partitions=32,
@@ -113,199 +144,122 @@ def worker(cores: int) -> None:
         synth_work_iters=WORK_ITERS,
         warehouse=wh,
     )
-    crawl = Crawl(spark, cfg)
-    frontier = synth_frontier(spark, N_URLS, N_HOSTS, 32)
-    crawl.bootstrap(frontier=frontier)
+    return spark, Crawl(spark, cfg)
 
+
+def revisit(spark, crawl) -> dict:
+    """One conditional revisit sweep over the full span history
+    (everything due at round 1000)."""
+    from swmaestro_crawler_spark.plans.revisit import run_revisit
+
+    cat = crawl.cat
+    spans_before = cat.logical_digest("spans")
     t0 = time.perf_counter()
-    results = crawl.run(None, rounds=1)
+    res = run_revisit(spark, cat, crawl.cfg, now_round=1000, conditional=True)
+    return {
+        "wall_s": round(time.perf_counter() - t0, 3),
+        "stages": res.get("timings", {}),
+        "refetched_ok": res["refetched_ok"],
+        "modified": res["modified"],
+        "not_modified": res["not_modified"],
+        "observations_digest": cat.logical_digest("observations"),
+        "spans_digest_unchanged": cat.logical_digest("spans") == spans_before,
+    }
+
+
+def media(spark, crawl) -> dict:
+    """``media_sweep`` over the span history, then a second sweep."""
+    from swmaestro_crawler_spark.plans.media import media_sweep
+
+    cat = crawl.cat
+    t0 = time.perf_counter()
+    ms = media_sweep(spark, cat)
     wall = time.perf_counter() - t0
+    out = {
+        "wall_s": round(wall, 3),
+        "stages": ms.timings,
+        "refs_seen": ms.refs_seen,
+        "refs_new": ms.refs_new,
+        "blobs_new": ms.blobs_new,
+        "blob_bytes": ms.blobs_bytes,
+        "refs_digest": cat.logical_digest("media_refs"),
+        "blobs_digest": cat.logical_digest("media_blobs"),
+    }
+    second = media_sweep(spark, cat)
+    out["second_sweep_noop"] = second.refs_new == 0 and second.blobs_new == 0
+    return out
 
-    # SCALING_REVISIT=1: after the crawl round, one CONDITIONAL revisit
-    # sweep over the full span history (everything due at round 1000).
-    # The deterministic web means every refetch revalidates unchanged —
-    # the sweep must commit ZERO span rows and one observation row per
-    # refetched page, identically at every core count.
-    revisit_block = None
-    if os.environ.get("SCALING_REVISIT") == "1":
-        from swmaestro_crawler_spark.plans.revisit import run_revisit
-        from swmaestro_crawler_spark.schema import OBSERVATIONS
 
-        spans_before = crawl.cat.logical_digest("spans")
-        t1 = time.perf_counter()
-        res = run_revisit(spark, crawl.cat, cfg, now_round=1000, conditional=True)
-        rv_wall = time.perf_counter() - t1
-        obs_dig = (
-            crawl.cat.read("observations", OBSERVATIONS)
-            .agg(
-                F.sum(
-                    F.xxhash64("doc_id", "host", "round", "content_fp").cast(
-                        "decimal(38,0)"
-                    )
-                ).alias("h"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .first()
-        )
-        revisit_block = {
-            "wall_s": round(rv_wall, 3),
-            "stages": res.get("timings", {}),
-            "refetched_ok": res["refetched_ok"],
-            "modified": res["modified"],
-            "not_modified": res["not_modified"],
-            "revisits_per_sec": round(res["refetched_ok"] / rv_wall, 1),
-            "observations_digest": [str(obs_dig.h), int(obs_dig.n)],
-            "spans_digest_unchanged": crawl.cat.logical_digest("spans")
-            == spans_before,
-        }
-
-    # SCALING_MEDIA=1: after the crawl round, resolve every media_ref in
-    # the span history into the content-addressed blob store, then prove
-    # the second sweep is a no-op. Digests of both tables must be
-    # identical across core counts (the mapping and the blob bytes are
-    # pure functions of the reference set).
-    media_block = None
-    if os.environ.get("SCALING_MEDIA") == "1":
-        from swmaestro_crawler_spark.plans.media import (
-            MEDIA_BLOBS,
-            MEDIA_REFS,
-            media_sweep,
-        )
-
-        t1 = time.perf_counter()
-        ms = media_sweep(spark, crawl.cat)
-        md_wall = time.perf_counter() - t1
-        refs_dig = (
-            crawl.cat.read("media_refs", MEDIA_REFS)
-            .agg(
-                F.sum(
-                    F.xxhash64("media_ref", "content_key", "round").cast(
-                        "decimal(38,0)"
-                    )
-                ).alias("h"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .first()
-        )
-        blobs_dig = (
-            crawl.cat.read("media_blobs", MEDIA_BLOBS)
-            .agg(
-                F.sum(
-                    F.xxhash64("content_key", "kind", "n_bytes", "blob").cast(
-                        "decimal(38,0)"
-                    )
-                ).alias("h"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .first()
-        )
-        second = media_sweep(spark, crawl.cat)
-        media_block = {
-            "wall_s": round(md_wall, 3),
-            "stages": ms.timings,
-            "refs_seen": ms.refs_seen,
-            "refs_new": ms.refs_new,
-            "blobs_new": ms.blobs_new,
-            "blob_bytes": ms.blobs_bytes,
-            "refs_per_sec": round(ms.refs_new / md_wall, 1),
-            "refs_digest": [str(refs_dig.h), int(refs_dig.n)],
-            "blobs_digest": [str(blobs_dig.h), int(blobs_dig.n)],
-            "second_sweep_noop": second.refs_new == 0 and second.blobs_new == 0,
-        }
-
-    r = results[0]
-    stages = {k: round(v, 3) for k, v in (r.timings or {}).items()}
-    processed = r.admitted + r.excluded + r.deferred
-    order_dig = (
-        crawl.cat.read("crawl_order", CRAWL_ORDER)
-        .agg(
-            F.sum(F.xxhash64("round", "ord", "url", "host", "depth", "ok").cast("decimal(38,0)")).alias("h"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .first()
-    )
-    seen_dig = (
-        crawl.cat.read("seen", SEEN)
-        .agg(F.sum(F.xxhash64("url_hash", "fingerprint").cast("decimal(38,0)")).alias("h"), F.count(F.lit(1)).alias("n"))
-        .first()
-    )
-    print(
-        "WORKER_RESULT "
-        + json.dumps(
-            {
-                "cores": cores,
-                "wall_s": round(wall, 3),
-                "admitted": r.admitted,
-                "fetched_ok": r.fetched_ok,
-                "processed": processed,
-                "urls_per_sec": round(processed / wall, 1),
-                "urls_per_sec_per_core": round(processed / wall / cores, 1),
-                "stages": stages,
-                "crawl_order_digest": [str(order_dig.h), int(order_dig.n)],
-                "seen_digest": [str(seen_dig.h), int(seen_dig.n)],
-                **({"revisit": revisit_block} if revisit_block else {}),
-                **({"media": media_block} if media_block else {}),
-            }
+# Post-round checks at frontier scale: what the worker runs after the
+# round, the digests that must agree across every run, and what every
+# run must show.
+CHECKS = {
+    "revisit": dict(
+        run=revisit,
+        digests=("observations_digest",),
+        holds=lambda b: b["modified"] == 0 and b["spans_digest_unchanged"],
+        failure="revalidation stored spans on an unchanged web",
+        note=(
+            "After the crawl round, run_revisit conditional=True sweeps "
+            "everything due. On the deterministic web every page "
+            "revalidates unchanged: no span row is committed (spans "
+            "logical digest equal before and after) and each refetched "
+            "page adds one observation row."
         ),
-        flush=True,
-    )
-    spark.stop()
-    import shutil
+    ),
+    "media": dict(
+        run=media,
+        digests=("refs_digest", "blobs_digest"),
+        holds=lambda b: b["second_sweep_noop"],
+        failure="media re-sweep not idempotent",
+        note=(
+            "After the crawl round, media_sweep resolves every span "
+            "media_ref into the content-addressed store (MEDIA_REFS "
+            "mapping, one MEDIA_BLOBS row per content); a second sweep "
+            "must resolve and store nothing."
+        ),
+    ),
+}
 
+
+def worker(cores: int, check: str | None = None) -> None:
+    # shuffle dirs + warehouse on tmpfs: a real 4N-executor cluster has 4N
+    # nodes' worth of disk bandwidth, this box has one disk
+    shm = f"/dev/shm/scaling-{cores}"
+    spark, crawl = start_crawl(cores, os.path.join(shm, "wh"), os.path.join(shm, "local"))
+    crawl.bootstrap(frontier=synth_frontier(spark, N_URLS, N_HOSTS, 32))
+    t0 = time.perf_counter()
+    r = crawl.run(None, rounds=1)[0]
+    rec = {
+        "cores": cores,
+        "wall_s": round(time.perf_counter() - t0, 3),
+        "admitted": r.admitted,
+        "fetched_ok": r.fetched_ok,
+        "processed": r.admitted + r.excluded + r.deferred,
+        "stages": r.timings or {},
+        "crawl_order_digest": crawl.cat.logical_digest("crawl_order"),
+        "seen_digest": crawl.cat.logical_digest("seen"),
+    }
+    if check:
+        rec[check] = CHECKS[check]["run"](spark, crawl)
+    print("WORKER_RESULT " + json.dumps(rec), flush=True)
+    spark.stop()
     shutil.rmtree(shm, ignore_errors=True)
 
 
-REPEATS = int(os.environ.get("SCALING_REPEATS", 2))
-SCALING_JSON = os.path.join(REPO, "BENCH", "scaling.json")
-# Test that now pins each property a deleted frontier-scale check showed;
-# the check's block stays in scaling.json as its historical record.
-HISTORICAL = {
-    "cuckoo_digest_check": (
-        "cuckoo tier on: crawl_order and seen digests equal to tier off",
-        "tests/test_cuckoo.py::test_crawl_digests_identical_with_cuckoo_on and "
-        "::test_no_false_negatives_up_to_high_load",
-    ),
-    "score_admission_check": (
-        "scored crawl order identical across parallelism",
-        "tests/test_score_admission.py::test_scored_crawl_deterministic_across_parallelism "
-        "(shuffle parallelism 3 vs 8)",
-    ),
-    "score_table_check": (
-        "score-table crawl identical to the recompute scheduler and across parallelism",
-        "tests/test_score_table.py::test_table_backed_crawl_deterministic_and_consistent "
-        "(3 vs 8) and ::test_incremental_equals_batch",
-    ),
-    "redirect_digest_check": (
-        "redirect crawl order identical across parallelism",
-        "tests/test_redirects.py::test_redirect_crawl_order_identical "
-        "(against the sequential oracle)",
-    ),
-}
-# blocks a primary re-measure keeps: the checks below, the blocks other
-# tools write, and the historical records
-CARRY_FORWARD = (
-    "revisit_check",
-    "media_check",
-    "cuckoo_pressure_check",
-    "kill_resume_check",
-    "host_probe",
-    *HISTORICAL,
-)
-
-
-def run_worker(cores: int, label: str, i: int, env: dict | None = None) -> dict:
-    """Run ``i`` of REPEATS of ``--worker cores`` in a fresh process, with
-    ``env`` added to the environment; its WORKER_RESULT record."""
+def run_worker(cores: int, i: int, check: str | None = None) -> dict:
+    """Run ``i`` of REPEATS of ``--worker cores [check]`` in a fresh
+    process; its WORKER_RESULT record."""
+    label = check or "scaling"
     print(
         f"== {label} run local[{cores}] over {N_URLS:,} URLs (run {i + 1}/{REPEATS}) ==",
         flush=True,
     )
     p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
+        [sys.executable, os.path.abspath(__file__), "--worker", str(cores), *([check] if check else [])],
         capture_output=True,
         text=True,
         cwd=REPO,
-        env=dict(os.environ, **(env or {})),
     )
     line = next(
         (ln for ln in p.stdout.splitlines() if ln.startswith("WORKER_RESULT ")), None
@@ -318,541 +272,173 @@ def run_worker(cores: int, label: str, i: int, env: dict | None = None) -> dict:
     return res
 
 
-def merge_scaling(blocks: dict, keep: tuple | None = None) -> dict:
-    """Write ``blocks`` into BENCH/scaling.json over its current record (of
-    which only the ``keep`` keys survive, when given); returns the record."""
-    prior = {}
-    if os.path.exists(SCALING_JSON):
-        with open(SCALING_JSON) as f:
-            prior = json.load(f)
-    if keep is None:
-        summary = {**prior, **blocks}
-    else:
-        summary = {**blocks, **{k: prior[k] for k in keep if k in prior}}
-    os.makedirs(os.path.dirname(SCALING_JSON), exist_ok=True)
-    with open(SCALING_JSON, "w") as f:
-        json.dump(summary, f, indent=1)
-    return summary
+def summarize(runs: dict[int, list[dict]], digests: tuple[str, ...]) -> dict:
+    """The N -> 4N summary of ``runs`` (cores -> run records with
+    ``wall_s``, ``stages`` and the ``digests`` keys). Per level: the first
+    run's record with its wall and stage walls replaced by their medians
+    over the level's runs, and every wall. The efficiency of a wall (the
+    work is the same at both levels) is (wall_N / wall_4N) / (4N / N),
+    from those medians; ``digests_match`` says, per digest key, whether
+    every run of both levels agrees."""
+    a, b = sorted(runs)
+    levels = {}
+    for n, rs in runs.items():
+        stages = {
+            k: round(median(r["stages"].get(k, 0.0) for r in rs), 3) for k in rs[0]["stages"]
+        }
+        levels[n] = {**rs[0], "wall_s": round(median(r["wall_s"] for r in rs), 3), "stages": stages}
 
+    def eff(wall_a: float, wall_b: float) -> float:
+        return round(wall_a / wall_b / (b / a), 3)
 
-# Post-round checks at frontier scale, each switched on in the worker by
-# its env var: the rate its efficiency is computed on, the digests that
-# must not vary across repeats and levels, and what every run must show.
-CHECKS = {
-    "revisit": dict(
-        env="SCALING_REVISIT",
-        rate="revisits_per_sec",
-        digests=("observations_digest",),
-        holds=lambda b: b["modified"] == 0 and b["spans_digest_unchanged"],
-        failure="revalidation stored spans on an unchanged web",
-        note=(
-            "SCALING_REVISIT=1: after the crawl round, run_revisit "
-            "conditional=True sweeps everything due. Deterministic web -> "
-            "every page revalidates unchanged: zero span rows committed "
-            "(logical digest pinned pre/post), one 4-column observation "
-            "row per refetched page, observation digests identical across "
-            "core counts and repeats."
-        ),
-    ),
-    "media": dict(
-        env="SCALING_MEDIA",
-        rate="refs_per_sec",
-        digests=("refs_digest", "blobs_digest"),
-        holds=lambda b: b["second_sweep_noop"],
-        failure="media re-sweep not idempotent",
-        note=(
-            "SCALING_MEDIA=1: after the crawl round, media_sweep resolves "
-            "every span media_ref into the content-addressed store "
-            "(MEDIA_REFS mapping + MEDIA_BLOBS one-row-per-content) via "
-            "the two-phase probe-then-fetch path: phase 1 fingerprints "
-            "every new reference to (content_key, kind) — strings and "
-            "int64s only, a stand-in for an ETag/Content-MD5 HEAD probe "
-            "or CDX lookup; phase 2 downloads body bytes for ONE "
-            "representative reference per not-yet-stored content, so "
-            "blob bytes never appear on a corpus-sized path (at 2M URLs: "
-            "~2.28M refs probed, 4,096 bodies fetched). Digests of both "
-            "tables identical across core counts and repeats AND "
-            "unchanged from the pre-probe single-phase record (the two "
-            "paths were output-identical; the single-phase path is "
-            "since deleted); the immediate second sweep "
-            "fetches and stores nothing (idempotence at frontier "
-            "scale). Residual 2->8 inefficiency is the HOST's "
-            "data-movement ceiling, not the plan: the remaining work is "
-            "a distinct + anti-join over millions of unique ref STRINGS "
-            "and one Arrow probe pass, and this box's own engine-free "
-            "probes cap 2->8 at 0.77 for ALU and lower for "
-            "allocation/random-access-heavy work (the crawl round "
-            "reaches 0.92 because its per-URL work is L2-resident "
-            "compute); per-node DRAM on a real 2-vs-8-executor cluster "
-            "is what this one-box emulation cannot grant."
-        ),
-    ),
-}
-
-
-def run_check(kind: str, levels=(2, 8)) -> dict:
-    """The ``kind`` post-round check (CHECKS) at N and 4N cores, REPEATS
-    runs each: every run must show its property and the digests must be
-    identical across repeats; best-of walls per level. Merges a
-    ``<kind>_check`` block into BENCH/scaling.json."""
-    c = CHECKS[kind]
-    best, all_walls = {}, {}
-    for cores in levels:
-        runs = [run_worker(cores, kind, i, {c["env"]: "1"})[kind] for i in range(REPEATS)]
-        for r in runs:
-            if not c["holds"](r):
-                raise SystemExit(f"{c['failure']} at local[{cores}]")
-        for key in c["digests"]:
-            if len({tuple(r[key]) for r in runs}) != 1:
-                raise SystemExit(f"nondeterministic {kind} {key} at local[{cores}]")
-        best[cores] = min(runs, key=lambda r: r["wall_s"])
-        all_walls[cores] = [r["wall_s"] for r in runs]
-    a, b = levels
-    rate = c["rate"]
-    block = {
-        "n_urls": N_URLS,
-        "levels": {str(n): best[n] for n in levels},
-        "all_walls": {str(n): all_walls[n] for n in levels},
-        "efficiency": {f"{a}->{b}": round(best[b][rate] / best[a][rate] / (b / a), 3)},
-        "digests_match_across_levels": all(best[a][k] == best[b][k] for k in c["digests"]),
-        "note": c["note"],
+    sa, sb = levels[a]["stages"], levels[b]["stages"]
+    return {
+        "levels": {str(n): lv for n, lv in levels.items()},
+        "all_walls": {str(n): [r["wall_s"] for r in rs] for n, rs in runs.items()},
+        "efficiencies": {f"{a}->{b}": eff(levels[a]["wall_s"], levels[b]["wall_s"])},
+        "stage_efficiencies": {k: eff(sa[k], sb[k]) for k in sa if sb.get(k, 0) > 0.05},
+        "digests_match": {
+            k: len({r[k] for rs in runs.values() for r in rs}) == 1 for k in digests
+        },
     }
+
+
+def merge_scaling(blocks: dict) -> dict:
+    """Write ``blocks`` into BENCH/scaling.json over its current record,
+    render BENCH/BASELINE.md from the result; returns the record."""
+    with open(SCALING_JSON) as f:
+        record = {**json.load(f), **blocks}
+    with open(SCALING_JSON, "w") as f:
+        json.dump(record, f, indent=1)
+    with open(BASELINE_MD, "w") as f:
+        f.write(render(record))
+    return record
+
+
+def run_check(kind: str) -> dict:
+    """The ``kind`` post-round check (CHECKS) at N and 4N cores, REPEATS
+    runs each: every run must show its property and the digests must
+    agree across every run. Merges a ``<kind>_check`` block into
+    BENCH/scaling.json."""
+    c = CHECKS[kind]
+    runs = {n: [run_worker(n, i, kind)[kind] for i in range(REPEATS)] for n in host_pair()}
+    for n, rs in runs.items():
+        if not all(c["holds"](r) for r in rs):
+            raise SystemExit(f"{c['failure']} at local[{n}]")
+    block = {"n_urls": N_URLS, "repeats": REPEATS, **summarize(runs, c["digests"]), "note": c["note"]}
     merge_scaling({f"{kind}_check": block})
     print(json.dumps(block, indent=1))
+    if not all(block["digests_match"].values()):
+        raise SystemExit(f"{kind} digests differ across runs: {block['digests_match']}")
     return block
 
 
-def main() -> None:
-    results, all_walls = {}, {}
-    for cores in LEVELS:
-        runs = [run_worker(cores, "scaling", i) for i in range(REPEATS)]
-        # digests must agree across repeats too (determinism within level)
-        if len({tuple(r["crawl_order_digest"]) for r in runs}) != 1:
-            raise SystemExit(f"nondeterministic crawl order at local[{cores}]")
-        # best-of-N wall per level: this host's wall times vary +-20-30%
-        # run-to-run (shared hypervisor); the FASTEST run is the least
-        # contended measurement of the engine itself (disclosed in the md)
-        results[cores] = min(runs, key=lambda r: r["wall_s"])
-        all_walls[cores] = [r["wall_s"] for r in runs]
-
-    # SCALING_MERGE_PRIOR=1: accumulate best-of across harness
-    # invocations. Walls from the prior official record merge into this
-    # invocation's ONLY when the prior run measured the same frontier
-    # (n_urls, work_iters) AND produced byte-identical digests at that
-    # level — i.e. identical engine output, the guard against merging
-    # walls from different code or input. All merged walls stay listed
-    # in all_walls so the best-of-N population is fully disclosed.
-    if os.environ.get("SCALING_MERGE_PRIOR") == "1" and os.path.exists(SCALING_JSON):
-        with open(SCALING_JSON) as f:
-            prior_rec = json.load(f)
-        # the fresh runs' digests (identical across levels — asserted
-        # below) are the guard for EVERY prior level, including levels
-        # not re-run this invocation: a prior level merges only when its
-        # output digests byte-match this invocation's engine output.
-        fresh = results[LEVELS[0]]
-        if (
-            prior_rec.get("n_urls") == N_URLS
-            and prior_rec.get("work_iters") == WORK_ITERS
-        ):
-            for c_str, p in prior_rec.get("levels", {}).items():
-                c = int(c_str)
-                if (
-                    p.get("crawl_order_digest") != fresh["crawl_order_digest"]
-                    or p.get("seen_digest") != fresh["seen_digest"]
-                ):
-                    continue
-                prior_walls = prior_rec.get("all_walls", {}).get(c_str, [])
-                if c in results:
-                    all_walls[c] = prior_walls + all_walls[c]
-                    if p["wall_s"] < results[c]["wall_s"]:
-                        results[c] = p
-                else:
-                    all_walls[c] = prior_walls
-                    results[c] = p
-
-    levels_all = tuple(sorted(results))
-    pairs = [
-        (a, b)
-        for a in levels_all
-        for b in levels_all
-        if b == 4 * a and a in results and b in results
-    ]
-    effs = {
-        f"{a}->{b}": round(
-            (results[b]["urls_per_sec"] / results[a]["urls_per_sec"]) / (b / a), 3
-        )
-        for a, b in pairs
-    }
-    order_match = all(
-        results[c]["crawl_order_digest"] == results[levels_all[0]]["crawl_order_digest"]
-        for c in levels_all
-    )
-    seen_match = all(
-        results[c]["seen_digest"] == results[levels_all[0]]["seen_digest"]
-        for c in levels_all
-    )
-    primary = effs.get(f"{levels_all[0]}->{levels_all[0]*4}")
-    # per-stage decomposition of the primary pair: stage efficiency
-    # (T_N / T_4N) / 4 from the best run's recorded stage walls. The
-    # per-round FIXED driver latency (job scheduling, manifest commits)
-    # is constant in cores AND in frontier size — it amortizes with round
-    # size, so it is reported separately rather than hidden.
-    stage_effs = {}
-    a, b = levels_all[0], levels_all[0] * 4
-    if a in results and b in results:
-        sa, sb = results[a].get("stages", {}), results[b].get("stages", {})
-        for k in sa:
-            if k in sb and sb[k] > 0.05:
-                stage_effs[k] = round((sa[k] / sb[k]) / (b / a), 3)
-    summary = {
+def scaling_summary(runs: dict[int, list[dict]], calibration: dict) -> dict:
+    """The primary record of the crawl ``runs`` (cores -> worker records):
+    ``summarize``'s, the one efficiency, whether the crawl_order and seen
+    digests agree across every run, and ``passes``."""
+    s = summarize(runs, ("crawl_order_digest", "seen_digest"))
+    match = s.pop("digests_match")
+    eff = next(iter(s["efficiencies"].values()))
+    return {
         "n_urls": N_URLS,
         "work_iters": WORK_ITERS,
         "repeats": REPEATS,
-        "all_walls": {str(k): v for k, v in all_walls.items()},
-        "levels": {str(k): v for k, v in results.items()},
-        "scaling_efficiency": primary,
-        "efficiencies": effs,
-        "stage_efficiencies": stage_effs,
-        "crawl_order_match": order_match,
-        "seen_match": seen_match,
-        "passes": bool(primary is not None and primary >= 0.8 and order_match and seen_match),
+        **s,
+        "scaling_efficiency": eff,
+        "crawl_order_match": match["crawl_order_digest"],
+        "seen_match": match["seen_digest"],
+        "passes": eff >= 0.8 and all(match.values()),
+        "host_calibration": calibration,
     }
-    # a primary re-measure keeps the auxiliary blocks; re-run their checks
-    # after engine changes to refresh their walls
-    summary = merge_scaling(summary, keep=CARRY_FORWARD)
-    write_baseline_md(summary)
+
+
+def main() -> None:
+    calibration = host_calibration()
+    runs = {n: [run_worker(n, i) for i in range(REPEATS)] for n in host_pair()}
+    summary = scaling_summary(runs, calibration)
+    merge_scaling(summary)
     print(json.dumps(summary))
+    if not (summary["crawl_order_match"] and summary["seen_match"]):
+        raise SystemExit("crawl digests differ across runs")
 
 
+def _leaves(block: dict, prefix: str = ""):
+    for k, v in block.items():
+        if isinstance(v, dict) and v:
+            yield from _leaves(v, f"{prefix}{k}.")
+        else:
+            yield f"{prefix}{k}", v
 
-def write_baseline_md(summary: dict) -> None:
-    """Render BENCH/BASELINE.md from the official scaling.json summary —
-    also reachable as ``--render`` so auxiliary checks (kill/resume,
-    revisit, media) can refresh the md without re-measuring the sweep."""
-    results = {int(k): v for k, v in summary["levels"].items()}
-    all_walls = {int(k): v for k, v in summary["all_walls"].items()}
-    levels_all = tuple(sorted(results))
-    effs = summary["efficiencies"]
-    stage_effs = summary["stage_efficiencies"]
-    order_match = summary["crawl_order_match"]
-    seen_match = summary["seen_match"]
-    N_URLS = summary["n_urls"]
-    WORK_ITERS = summary["work_iters"]
-    a = levels_all[0]
-    b = a * 4
 
-    rows = "\n".join(
-        f"| local[{c}] | {results[c]['wall_s']} | {results[c]['processed']:,} "
-        f"| {results[c]['urls_per_sec']:,} | {results[c]['urls_per_sec_per_core']:,} |"
-        for c in levels_all
-    )
-    sa = results.get(a, {}).get("stages", {})
-    sb = results.get(b, {}).get("stages", {})
-    stage_rows = "\n".join(
-        f"| {k} | {sa[k]} | {sb.get(k, '—')} | {stage_effs.get(k, '—')} |"
-        for k in sa
-        if sa[k] >= 0.05
-    )
-    eff_rows = "\n".join(
-        f"- **{k} cores: efficiency {v:.3f}** ({'PASS' if v >= 0.8 else 'below 0.8'})"
-        for k, v in effs.items()
-    )
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(
-            f"""# BENCH — N vs 4N scaling evidence
-
-One steady-state crawl round (frontier dedup → bloom+anti-join seen →
-politeness admission → salted-bucket fetch → span extraction → all table
-commits) over the SAME {N_URLS:,}-URL synthetic frontier
-({N_HOSTS:,} hosts, log-uniform ~zipf(1) skew — one hot domain holding
->10% of the frontier), run at several parallelism levels in separate
-JVMs. Sandbox proxy for N vs 4N executors per the task protocol (no
-real cluster available).
-
-Measurement conditions (all disclosed, identical at every level):
-
-1. **Per-page parse-cost stand-in**: the sandbox's synthetic pages are
-   ~1 KB — ~100× lighter than the real ~100 KB watch pages the reference
-   parses with regex byte-scans + lxml (view_count_crawler.py:41-118,
-   milliseconds per page). The transport adds {WORK_ITERS:,}
-   deterministic splitmix64 passes ≈ {WORK_ITERS * 34 // 10000} µs of
-   cache-resident CPU per fetched URL (sources/synth_web.parse_work;
-   output-invariant), so the measurement reflects the engine's
-   orchestration at realistic per-page compute. Raw-transport numbers
-   (SCALING_WORK_ITERS=0) reproduce with the same script.
-2. **Best of {max(len(w) for w in all_walls.values())} disclosed runs per
-   level** (all walls: {all_walls}; accumulated across harness
-   invocations only when n_urls/work_iters AND the level's output
-   digests are identical): this host's wall times vary ±20-30%
-   run-to-run (shared hypervisor); the fastest run is the
-   least-contended measurement of the engine itself. Crawl-order/seen
-   digests are asserted identical across every repeat AND every level.
-3. Shuffle dirs + warehouse are on tmpfs: a real 4N-executor cluster
-   brings 4N nodes of disk/memory bandwidth, while this box has ONE
-   disk — tmpfs isolates the engine's compute/shuffle scaling from the
-   single shared device.
-
-| level | wall s | URLs processed | URLs/s | URLs/s/core |
-|---|---|---|---|---|
-{rows}
-
-Scaling efficiency (throughput_4N / throughput_N) / 4:
-
-{eff_rows}
-
-Per-stage decomposition of the primary {a}→{b} pair
-(best run per level; stage walls recorded by the engine's step timer;
-bookkeeping = rank + crawl_order/seen/dead/pending commits + bloom agg,
-all run as CONCURRENT Spark jobs so their fixed driver latencies
-overlap instead of adding):
-
-| stage | local[{a}] s | local[{b}] s | efficiency |
-|---|---|---|---|
-{stage_rows}
-
-The 8→32 pair under-reports the engine's scalability on this host: the
-engine-free host probe below (`tools/host_probe.py`, recorded in
-`BENCH/scaling.json host_probe`) measures the box's OWN 8→32 ceilings —
-aggregate DRAM bandwidth scales at ~0.50 efficiency and even pure
-register/L2 ALU work at only ~0.64 (the 32 vCPUs are not 4× of 8 under
-this hypervisor), so no engine stage can exceed those bounds at 8→32
-regardless of plan shape. Both resources scale WITH nodes on a real
-cluster (each executor brings its own cores and memory controllers).
-The 2→8 pair — where the same probe shows the host nearly linear — is
-the faithful proxy for adding executors.
-
-Correctness half of the criterion — identical results across ALL
-parallelism levels (crawl order is data-derived, never timing-derived):
-
-- crawl_order digest (order-independent xxhash64 sum + count):
-  {"MATCH" if order_match else "MISMATCH"} {results[levels_all[0]]['crawl_order_digest']}
-- URL-seen digest: {"MATCH" if seen_match else "MISMATCH"} {results[levels_all[0]]['seen_digest']}
-
-Reference comparison: the reference crawler's implied peak whole-system
-rate is ~15 pages/s (15 proxy workers × ~1 page/s, BASELINE.md); this
-engine fetches {results[levels_all[-1]]['fetched_ok']:,} pages in
-{results[levels_all[-1]]['wall_s']} s on one node — ~{int(results[levels_all[-1]]['urls_per_sec'] / 15)}×
-the reference's whole-system throughput, while honoring the same
-politeness semantics (budget-based, not sleep-based).
-"""
-        )
-        ck = summary.get("cuckoo_digest_check")
-        if ck:
-            f.write(
-                f"""
-## Cuckoo seen-tier digest check at frontier scale
-
-The same {ck['n_urls']:,}-URL frontier run once more at
-local[{ck['cores']}] with the optional cuckoo tier ON
-(bloom → 32-shard cuckoo filter → exact anti-join; a historical record,
-see below):
-crawl_order and URL-seen digests are
-{"IDENTICAL" if ck['digests_match_tier_off'] else "DIFFERENT (BUG)"} to
-every tier-off level and repeat above
-(`BENCH/scaling.json cuckoo_digest_check`) — the probabilistic tiers
-are false-negative-free at frontier scale, not just in unit tests.
-Wall {ck['wall_s']} s (tier-on; on this all-unseen frontier the cuckoo
-only adds probe cost — its win is the anti-join work it removes when
-revisit/duplicate pressure is high).
-
-**Crossover guidance (measured, not assumed):** the tier's cost is a
-~constant per-round filter increment + fused-fetch probe; its payoff is
-the avoided exact-confirm shuffle of BLOOM FALSE POSITIVES, which is
-frontier_rows × bloom_FP_rate × per-row confirm cost and grows with
-|seen|. At 2M URLs the tier costs +42% wall here and +~2.4 s at 30k
-(`BENCH/cuckoo_ab.json`, historical); with the default ~1% FP bloom the
-avoided work does not exceed the fixed cost until the exact seen side stops
-being a cheap local/broadcast join — around 10^8-10^9 seen URLs.
-Leave `cuckoo_buckets` unset below ~10^8 seen URLs (the guidance sits
-on that field in `config.py`); output is digest-identical either way,
-only wall differs.
-"""
-            )
-        cp = summary.get("cuckoo_pressure_check")
-        if cp:
-            prow = "\n".join(
-                f"| {r['n_seen']:,} | {r['bloom_fp_rate']:.1%} "
-                f"| {r['confirm_rows_off']:,} | {r['confirm_rows_on']:,} "
-                f"| {r['wall_off_s']} | {r['wall_on_s']} |"
-                for r in cp["rows"]
-            )
-            f.write(
-                f"""
-## Cuckoo-tier duplicate-pressure sweep (measured crossover evidence)
-
-`tools/cuckoo_pressure.py`: the regime the all-unseen benches cannot
-show — a FIXED 4 MiB broadcast bloom while the seen set outgrows it
-(FP rate rises), a 2M-URL frontier with 20% true duplicates, the
-engine's own `filter_unseen` path, arms interleaved, best-of walls,
-result counts asserted equal across arms:
-
-| seen keys | bloom FP | confirm rows (off) | confirm rows (on) | wall off s | wall on s |
-|---|---|---|---|---|---|
-{prow}
-
-Reading: the tier does exactly what it claims — at 62% bloom FP it
-removes ~71% of the confirm-join input (987k of 1.39M rows; at design
-FP rates the removal is >99.9%) — yet on ONE node it still never wins,
-because a 16M-row page-cache-resident anti-join is cheaper than the
-extra 1.4M-row broadcast-table probe. The single-box crossover is
-therefore HIGHER than the 10^8 config guard, which stands as a lower
-bound: the tier pays only where each confirm row costs network shuffle
-against an executor-sharded multi-billion-row seen table, a regime one
-box cannot reproduce. The row-reduction column is the scale-transfer
-number; the walls are the honest single-node disclosure.
-"""
-            )
-        hist = [k for k in HISTORICAL if k in summary]
-        if hist:
-            items = "\n".join(
-                f"- `{k}`, {HISTORICAL[k][0]} (recorded: "
-                + ("held" if all(v for n, v in summary[k].items() if n.startswith("digests_match"))
-                   else "FAILED")
-                + f"): {HISTORICAL[k][1]}."
-                for k in hist
-            )
-            f.write(
-                f"""
-## Historical records of deleted checks
-
-These `BENCH/scaling.json` blocks record frontier-scale digest checks
-that this script no longer runs. A tier-1 test now pins each property:
-
-{items}
-
-Likewise, `BENCH/crawl_ab.json` and `BENCH/cuckoo_ab.json` record the
-deleted `tools/crawl_ab.py` and `tools/cuckoo_ab.py`. An interleaved A/B
-of two revisions now runs through `tools/ab.py`.
-"""
-            )
-        kr = summary.get("kill_resume_check")
-        if kr:
-            f.write(
-                f"""
-## SIGKILL/resume check at frontier scale (byte-identical recovery)
-
-`tools/kill_resume_check.py`: the same steady-state round at
-local[{kr['cores']}] is SIGKILLed {kr['kill_after_s']} s into the fetch
-(whole process group — driver, JVM, Python workers), then a fresh
-process resumes on the surviving warehouse. `resume_or_bootstrap` rolls
-back partial commits and re-runs the round; content digests of
-{", ".join(kr['tables_match'])} all
-{"MATCH the uninterrupted run byte-for-byte" if kr['all_match'] else "DIVERGE (BUG)"}
-(uninterrupted {kr['ref_wall_s']} s; kill+resume {kr['resume_wall_s']} s;
-{kr['rounds_rerun']} round re-run).
-"""
-            )
-        rv = summary.get("revisit_check")
-        if rv:
-            lv = sorted(rv["levels"], key=int)
-            rv_pair, rv_eff = next(iter(rv["efficiency"].items()))
-            vrows = "\n".join(
-                f"| local[{c}] | {rv['levels'][c]['wall_s']} "
-                f"| {rv['levels'][c]['refetched_ok']:,} "
-                f"| {rv['levels'][c]['not_modified']:,} "
-                f"| {rv['levels'][c]['revisits_per_sec']:,} |"
-                for c in lv
-            )
-            f.write(
-                f"""
-## Conditional-revalidation check at frontier scale
-
-After the {rv['n_urls']:,}-URL crawl round, one `run_revisit
-conditional=True` sweep over the full span history (`SCALING_REVISIT=1`).
-The deterministic web means every refetch revalidates UNCHANGED — the
-engine's If-None-Match path must turn the whole sweep into 4-column
-observation rows. Best of {len(rv['all_walls'][lv[0]])} runs per level
-(all walls: {rv['all_walls']}):
-
-| level | revisit wall s | refetched | revalidated 304 | revisits/s |
-|---|---|---|---|---|
-{vrows}
-
-- **{rv_pair} cores: efficiency {rv_eff}**
-  ({"PASS" if rv_eff >= 0.8 else "below"} ≥0.8).
-- ZERO span rows committed at every level (spans logical digest pinned
-  pre/post); observation digests
-  {"IDENTICAL" if rv['digests_match_across_levels'] else "DIFFERENT (BUG)"}
-  across levels and repeats.
-"""
-            )
-        md = summary.get("media_check")
-        if md:
-            lv = sorted(md["levels"], key=int)
-            md_pair, md_eff = next(iter(md["efficiency"].items()))
-            mrows = "\n".join(
-                f"| local[{c}] | {md['levels'][c]['wall_s']} "
-                f"| {md['levels'][c]['refs_new']:,} "
-                f"| {md['levels'][c]['blobs_new']:,} "
-                f"| {md['levels'][c]['refs_per_sec']:,} "
-                f"| {md['levels'][c].get('stages', {})} |"
-                for c in lv
-            )
-            f.write(
-                f"""
-## Media-pipeline check at frontier scale
-
-After the {md['n_urls']:,}-URL crawl round, `media_sweep` resolves
-every span media_ref into the content-addressed store
-(`SCALING_MEDIA=1`): the MEDIA_REFS mapping plus one MEDIA_BLOBS row
-per distinct content hash. Best of {len(md['all_walls'][lv[0]])} runs
-per level (all walls: {md['all_walls']}):
-
-| level | sweep wall s | refs resolved | distinct blobs | refs/s | stage walls s |
-|---|---|---|---|---|---|
-{mrows}
-
-- **{md_pair} cores: efficiency {md_eff}**
-  ({"PASS" if md_eff >= 0.8 else "host-capped (attributed below)"} vs ≥0.8).
-- Mapping and blob digests
-  {"IDENTICAL" if md['digests_match_across_levels'] else "DIFFERENT (BUG)"}
-  across levels and repeats; the immediate second sweep resolved and
-  stored NOTHING (idempotence at frontier scale).
-- {md['note']}
-"""
-            )
-        hp = summary.get("host_probe")
-        if hp:
-            hrows = "\n".join(
-                f"| {lv['procs']} | {lv['triad_agg_gbps']} | {lv['compute_agg_mops']:,} |"
-                for _, lv in sorted(hp["levels"].items(), key=lambda kv: int(kv[0]))
-            )
-            te, ce = hp["triad_efficiency"], hp["compute_efficiency"]
-            f.write(
-                f"""
-## Host scaling probe (engine-free 8→32 ceiling attribution)
-
-`tools/host_probe.py` (`BENCH/scaling.json host_probe`): two primitive
-kernels run in P barrier-started OS processes, engine code nowhere in
-the loop — STREAM-style triad over 3×64 MiB/worker (pure DRAM-bandwidth
-demand, {hp['triad_bytes_per_elem']} B/element convention) and the
-crawl's own splitmix64 pass on an L2-resident buffer (pure ALU demand).
-Best-of per level, all walls disclosed in the record:
-
-| procs | triad aggregate GB/s | splitmix64 aggregate Mops/s |
-|---|---|---|
-{hrows}
-
-Efficiencies: triad {te}; compute {ce}. The box itself caps 8→32 at
-~{te.get('8->32', '—')} for memory-streaming work and
-~{ce.get('8->32', '—')} for pure compute — these engine-independent
-ceilings bracket the crawl's observed 8→32 figure, while at 2→8 the
-host is near-linear (triad {te.get('2->8', '—')}), which is why 2→8 is
-the N-vs-4N pair the record stands on.
-"""
-            )
-
+def render(rec: dict) -> str:
+    """BENCH/BASELINE.md for the scaling.json record ``rec``: the primary
+    N -> 4N record, then every other block as its key, its ``note`` or
+    ``protocol`` text and its numbers."""
+    (a, la), (b, lb) = sorted((int(n), lv) for n, lv in rec["levels"].items())
+    eff = rec["scaling_efficiency"]
+    stage_effs = rec["stage_efficiencies"]
+    stages = [k for k in la["stages"] if max(la["stages"][k], lb["stages"].get(k, 0)) >= 0.05]
+    out = [
+        "# BENCH — N vs 4N scaling evidence",
+        "",
+        f"Written by `tools/bench_scaling.py` from `BENCH/scaling.json`. One "
+        f"steady-state crawl round over the same {rec['n_urls']:,}-URL synthetic "
+        f"frontier ({N_HOSTS:,} hosts, log-uniform skew; {rec['work_iters']:,} "
+        f"splitmix64 passes per fetched URL stand in for page parsing) at "
+        f"local[{a}] and local[{b}], {rec['repeats']} fresh-process runs each, "
+        f"shuffle scratch and warehouse on tmpfs. One box stands in for N and "
+        f"4N executors: the levels share its memory system and hypervisor. "
+        f"Each level's wall and stage walls are the medians of its runs.",
+        "",
+        "| level | median wall s | all walls s | URLs processed | URLs/s |",
+        "|---|---|---|---|---|",
+        *(
+            f"| local[{n}] | {lv['wall_s']} | {rec['all_walls'][str(n)]} "
+            f"| {lv['processed']:,} | {lv['processed'] / lv['wall_s']:,.0f} |"
+            for n, lv in ((a, la), (b, lb))
+        ),
+        "",
+        f"Scaling efficiency (wall_{a} / wall_{b}) / {b // a}: **{eff}** "
+        f"({'PASS' if eff >= 0.8 else 'below 0.8'}).",
+        "",
+        "Per stage (`RoundResult.timings`, stages of at least 0.05 s):",
+        "",
+        f"| stage | local[{a}] s | local[{b}] s | efficiency |",
+        "|---|---|---|---|",
+        *(
+            f"| {k} | {la['stages'][k]} | {lb['stages'].get(k, '—')} | {stage_effs.get(k, '—')} |"
+            for k in stages
+        ),
+        "",
+        f"- crawl_order digest across every run: "
+        f"{'MATCH' if rec['crawl_order_match'] else 'MISMATCH'} `{la['crawl_order_digest']}`",
+        f"- URL-seen digest across every run: "
+        f"{'MATCH' if rec['seen_match'] else 'MISMATCH'} `{la['seen_digest']}`",
+        "- host calibration: "
+        + ", ".join(f"{k} {v}" for k, v in rec["host_calibration"].items()),
+    ]
+    for key, block in rec.items():
+        if key in PRIMARY:
+            continue
+        out += ["", f"## {key}", ""]
+        text = block.get("note") or block.get("protocol")
+        if text:
+            out += [text, ""]
+        out += [
+            f"- `{k}`: {v}" for k, v in _leaves(block) if k not in ("note", "protocol")
+        ]
+    return "\n".join(out) + "\n"
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--worker":
-        worker(int(sys.argv[2]))
+        worker(int(sys.argv[2]), *sys.argv[3:])
     elif len(sys.argv) > 1 and sys.argv[1] == "--revisit-check":
         run_check("revisit")
     elif len(sys.argv) > 1 and sys.argv[1] == "--media-check":
         run_check("media")
-    elif len(sys.argv) > 1 and sys.argv[1] == "--render":
-        with open(SCALING_JSON) as fh:
-            write_baseline_md(json.load(fh))
-    else:
+    elif len(sys.argv) == 1:
         main()
+    else:
+        raise SystemExit(__doc__)

@@ -27,8 +27,8 @@ the OTHER regime directly:
   cost (paid on the delta in a real crawl, on the full set here,
   disclosed as the upper bound).
 
-Results merge into BENCH/scaling.json as ``cuckoo_pressure_check`` and
-render into BASELINE.md via ``tools/bench_scaling.py --render``.
+Results merge into BENCH/scaling.json as ``cuckoo_pressure_check``,
+and BENCH/BASELINE.md is rendered again from the merged record.
 
 Protocol note: arms run interleaved inside one Spark session (the
 measured stage is a single count job over broadcast-resident structures;

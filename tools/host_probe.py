@@ -1,13 +1,11 @@
-"""Host scaling probe: measured evidence for the 8->32 efficiency ceiling.
+"""Host scaling probe: the host's own N -> 4N ceilings, engine-free.
 
-Rounds 2-4 attribute the crawl's 8->32-core efficiency (~0.34-0.40,
-BENCH/scaling.json) to the sandbox host rather than the engine: a single
-box's DRAM bandwidth does not grow with worker count, while a real
-4N-executor cluster brings 4x memory systems along with 4x cores. The
-judge has twice marked that attribution "unverifiable here". This tool
-makes it verifiable: it measures, on THIS host, how two primitive
-kernels scale across the same process counts the crawl uses (2/8/32),
-engine code nowhere in the loop.
+One box stands in for N and 4N executors in tools/bench_scaling.py, but
+the levels share its memory system, while a real cluster brings 4x
+memory systems along with 4x cores. This tool measures how two
+primitive kernels scale on THIS host across the same pair of process
+counts the crawl uses (``bench_scaling.host_pair``), engine code nowhere
+in the loop, so the crawl's efficiency can be read against the host's.
 
 Two kernels, each run in P concurrent OS processes (barrier-started,
 fork; no GIL interaction — the same isolation Spark's Python workers
@@ -21,18 +19,12 @@ have):
   stand-in on an L2-resident 64 Ki-element buffer: register/ALU demand
   with negligible DRAM traffic.
 
-If ``compute`` scales ~linearly 8->32 while ``triad`` aggregate GB/s
-saturates near its 8-process level, the host has ~32 usable cores but a
-fixed-bandwidth memory system — and any stage that streams large
-buffers (parquet encode, Arrow string assembly of ~1 KB payloads,
-shuffle spill) inherits exactly the crawl's observed 8->32 ceiling.
-The block lands in ``BENCH/scaling.json`` as ``host_probe`` and is
-rendered into BENCH/BASELINE.md next to the efficiency table it
-explains.
+Each level reports the median of its REPEATS walls and every wall. The
+block lands in ``BENCH/scaling.json`` as ``host_probe``.
 
 Usage:
     python tools/host_probe.py            # measure + merge into scaling.json
-    HOST_PROBE_LEVELS=2,8,32 HOST_PROBE_REPEATS=3 python tools/host_probe.py
+    HOST_PROBE_REPEATS=3 python tools/host_probe.py
 """
 
 from __future__ import annotations
@@ -40,16 +32,19 @@ from __future__ import annotations
 import json
 import multiprocessing as mp
 import os
+import sys
 import time
+from statistics import median
 
 import numpy as np
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-LEVELS = tuple(int(x) for x in os.environ.get("HOST_PROBE_LEVELS", "1,2,8,32").split(","))
+from bench_scaling import host_pair, merge_scaling  # noqa: E402
+
 REPEATS = int(os.environ.get("HOST_PROBE_REPEATS", "3"))
 
-# triad: 3 arrays x 64 MiB each per worker; 32 workers -> 6 GiB total,
-# comfortably inside the 128 GiB box but >>LLC per worker
+# triad: 3 arrays x 64 MiB each per worker, >>LLC per worker
 TRIAD_ELEMS = 8 * 1024 * 1024  # 64 MiB of float64
 TRIAD_PASSES = 40
 TRIAD_BYTES_PER_ELEM = 24  # read b + read c + write a (STREAM convention)
@@ -105,15 +100,13 @@ def _run_level(target, nproc: int) -> float:
 
 def measure() -> dict:
     levels = {}
-    for nproc in LEVELS:
+    for nproc in host_pair():
         triad_walls, compute_walls = [], []
         for _ in range(REPEATS):
             triad_walls.append(_run_level(_triad_worker, nproc))
             compute_walls.append(_run_level(_compute_worker, nproc))
-        # best-of (least-contended measurement), same protocol as the
-        # scaling record; all walls disclosed
-        tw, cw = min(triad_walls), min(compute_walls)
-        levels[str(nproc)] = {
+        tw, cw = median(triad_walls), median(compute_walls)
+        levels[nproc] = {
             "procs": nproc,
             "triad_agg_gbps": round(
                 nproc * TRIAD_PASSES * TRIAD_ELEMS * TRIAD_BYTES_PER_ELEM / tw / 1e9, 2
@@ -124,40 +117,31 @@ def measure() -> dict:
             "triad_walls": [round(w, 3) for w in triad_walls],
             "compute_walls": [round(w, 3) for w in compute_walls],
         }
-        print(json.dumps({"level": nproc, **levels[str(nproc)]}), flush=True)
+        print(json.dumps(levels[nproc]), flush=True)
 
-    def eff(metric, a, b):
-        la, lb = levels.get(str(a)), levels.get(str(b))
-        if not la or not lb:
-            return None
-        return round((lb[metric] / la[metric]) / (b / a), 3)
-
-    pairs = [(a, b) for a in LEVELS for b in LEVELS if b == 4 * a]
-    summary = {
-        "levels": levels,
-        "triad_efficiency": {f"{a}->{b}": eff("triad_agg_gbps", a, b) for a, b in pairs},
+    (a, la), (b, lb) = levels.items()
+    pair = f"{a}->{b}"
+    return {
+        "levels": {str(n): lv for n, lv in levels.items()},
+        "triad_efficiency": {pair: round(lb["triad_agg_gbps"] / la["triad_agg_gbps"] / (b / a), 3)},
         "compute_efficiency": {
-            f"{a}->{b}": eff("compute_agg_mops", a, b) for a, b in pairs
+            pair: round(lb["compute_agg_mops"] / la["compute_agg_mops"] / (b / a), 3)
         },
         "triad_bytes_per_elem": TRIAD_BYTES_PER_ELEM,
         "note": (
-            "engine-free host characterization: per-level aggregate STREAM-triad "
-            "bandwidth (3x64MiB/worker, beyond LLC) and splitmix64 ALU throughput "
-            "(L2-resident) across barrier-started process counts; best-of-"
-            f"{REPEATS}, all walls disclosed. If compute scales and triad does "
-            "not, the 8->32 crawl ceiling is the host's fixed memory system, "
-            "not the engine."
+            "Engine-free host characterization: aggregate STREAM-triad "
+            "bandwidth (3x64MiB/worker, beyond LLC) and splitmix64 ALU "
+            "throughput (L2-resident) in barrier-started processes at the "
+            f"crawl's N and 4N; median of {REPEATS} walls per level, all "
+            "walls listed. These are the host's own ceilings for "
+            "memory-streaming and compute-bound stages at that pair."
         ),
     }
-    return summary
 
 
 def main() -> None:
-    from bench_scaling import merge_scaling
-
     summary = measure()
     merge_scaling({"host_probe": summary})
-    print("merged host_probe into BENCH/scaling.json", flush=True)
     print(json.dumps(summary))
 
 

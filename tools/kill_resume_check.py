@@ -3,30 +3,29 @@
 The rule: a killed job resumes mid-round and the resulting tables are
 byte-identical to an uninterrupted run. tests/test_resume.py proves the
 rollback logic at unit scale by simulating a partial round inside one
-process; this tool proves the PROCESS-level claim at frontier scale —
-the same 2,000,000-URL steady-state round tools/bench_scaling.py
-measures:
+process; this tool proves the PROCESS-level claim at frontier scale, on
+the steady-state round tools/bench_scaling.py measures, at that tool's
+4N cores (``bench_scaling.host_pair``):
 
-1. an UNINTERRUPTED reference run in its own subprocess records
-   ``Catalog.content_digest`` for every round-written table;
+1. an UNINTERRUPTED reference run in its own subprocess records its
+   round wall and ``Catalog.content_digest`` for every round-written
+   table;
 2. a VICTIM subprocess bootstraps the same frontier into a persistent
-   warehouse and is SIGKILLed mid-fetch (the parent waits for the
-   post-bootstrap marker, then a configurable delay into the round);
+   warehouse and is SIGKILLed mid-round: the parent waits for the
+   post-bootstrap marker, then half the reference run's round wall;
 3. a RESUME subprocess opens the victim's warehouse and runs to
    completion — ``Crawl.resume_or_bootstrap`` must roll back any
    partially committed appends and re-run the round deterministically.
 
 The check asserts that the resume-run table digests equal the
 uninterrupted-run digests for every table. Results merge into
-BENCH/scaling.json as ``kill_resume_check``; nothing there is compared
-with the primary scaling record (that record holds xxhash64-sum digests,
-not ``content_digest``).
+BENCH/scaling.json as ``kill_resume_check``.
 
 Usage:
-    python tools/kill_resume_check.py               # full check (local[32])
-    python tools/kill_resume_check.py --ref 32 DIR  # internal: reference run
-    python tools/kill_resume_check.py --victim 32 DIR
-    python tools/kill_resume_check.py --finish 32 DIR
+    python tools/kill_resume_check.py                  # full check
+    python tools/kill_resume_check.py --ref CORES DIR  # internal: reference run
+    python tools/kill_resume_check.py --victim CORES DIR
+    python tools/kill_resume_check.py --finish CORES DIR
 """
 
 from __future__ import annotations
@@ -39,48 +38,27 @@ import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-CORES = int(os.environ.get("KILLRES_CORES", 32))
-# seconds into the round before SIGKILL — mid-fetch at local[32]
-# (uninterrupted round ≈ 75-100 s), after bootstrap's checkpoint exists
-KILL_AFTER = float(os.environ.get("KILLRES_KILL_AFTER", 30.0))
+from bench_scaling import (  # noqa: E402
+    N_HOSTS,
+    N_URLS,
+    REPO,
+    host_pair,
+    merge_scaling,
+    start_crawl,
+    synth_frontier,
+)
+
 TABLES = ("spans", "seen", "crawl_order", "dead", "pending", "fetched")
 
 
 def _crawl(cores: int, wh: str):
-    """The primary scaling-run config over its frontier
-    (bench_scaling.synth_frontier)."""
-    from bench_scaling import N_HOSTS, N_URLS, WORK_ITERS, synth_frontier
-
-    from swmaestro_crawler_spark.config import CrawlConfig, spark_builder
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-
     # scratch name derived from the warehouse (not the pid) so the
     # parent can clean up a SIGKILLed worker's shuffle dirs
     scratch = os.path.join(os.path.dirname(wh), f"local-{os.path.basename(wh)}")
-    os.environ["SPARK_LOCAL_DIRS"] = scratch
-    spark = (
-        spark_builder(f"killres-{cores}", master=f"local[{cores}]", shuffle_partitions=32)
-        .config("spark.local.dir", scratch)
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    cfg = CrawlConfig(
-        round_seconds=1e6,
-        per_host_cap=10_000_000,
-        max_rounds=1,
-        max_depth=1,
-        frontier_partitions=32,
-        seen_buckets=64,
-        bloom_bits=1 << 26,
-        synth_n_hosts=N_HOSTS,
-        synth_work_iters=WORK_ITERS,
-        warehouse=wh,
-    )
-    return spark, Crawl(spark, cfg), lambda: synth_frontier(spark, N_URLS, N_HOSTS, 32)
+    spark, crawl = start_crawl(cores, wh, scratch)
+    return spark, crawl, lambda: synth_frontier(spark, N_URLS, N_HOSTS, 32)
 
 
 def _digests(crawl) -> dict[str, str]:
@@ -130,12 +108,12 @@ def finish_run(cores: int, wh: str) -> None:
     spark.stop()
 
 
-def _spawn(mode: str, base: str, **popen) -> subprocess.Popen:
+def _spawn(mode: str, cores: int, base: str, **popen) -> subprocess.Popen:
     # own session: the SIGKILL goes to the whole process GROUP, so the
     # driver, its JVM, and every Python fetch worker die together — a
     # real crash, not a tidy driver-only exit
     return subprocess.Popen(
-        [sys.executable, os.path.abspath(__file__), mode, str(CORES), base],
+        [sys.executable, os.path.abspath(__file__), mode, str(cores), base],
         cwd=REPO,
         text=True,
         start_new_session=True,
@@ -158,10 +136,11 @@ def main() -> None:
     base = "/dev/shm/killres"
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
+    cores = host_pair()[1]
     try:
-        print(f"== reference run local[{CORES}] ==", flush=True)
+        print(f"== reference run local[{cores}] ==", flush=True)
         ref = _result(
-            _spawn("--ref", os.path.join(base, "ref-wh"), stdout=subprocess.PIPE,
+            _spawn("--ref", cores, os.path.join(base, "ref-wh"), stdout=subprocess.PIPE,
                    stderr=subprocess.PIPE),
             "reference",
         )
@@ -171,9 +150,11 @@ def main() -> None:
         shutil.rmtree(os.path.join(base, "ref-wh"), ignore_errors=True)
         shutil.rmtree(os.path.join(base, "local-ref-wh"), ignore_errors=True)
 
-        print(f"== victim run (SIGKILL {KILL_AFTER}s into the round) ==", flush=True)
+        # half the reference round: mid-round, whatever the host's speed
+        kill_after = round(ref["wall_s"] / 2, 3)
+        print(f"== victim run (SIGKILL {kill_after}s into the round) ==", flush=True)
         vwh = os.path.join(base, "victim-wh")
-        v = _spawn("--victim", vwh, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
+        v = _spawn("--victim", cores, vwh, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
         # wait for the post-bootstrap marker so the kill lands mid-ROUND,
         # not mid-bootstrap (resume from a missing checkpoint is a
         # different, unsupported state — bootstrap is atomic-by-marker)
@@ -182,7 +163,7 @@ def main() -> None:
                 break
         else:
             raise SystemExit("victim died before bootstrap completed")
-        time.sleep(KILL_AFTER)
+        time.sleep(kill_after)
         os.killpg(os.getpgid(v.pid), signal.SIGKILL)
         v.wait()
         # anything the victim wrote before dying is still in the pipe —
@@ -195,15 +176,15 @@ def main() -> None:
 
         print("== resume run on the victim warehouse ==", flush=True)
         res = _result(
-            _spawn("--finish", vwh, stdout=subprocess.PIPE, stderr=subprocess.PIPE),
+            _spawn("--finish", cores, vwh, stdout=subprocess.PIPE, stderr=subprocess.PIPE),
             "resume",
         )
         print(json.dumps(res), flush=True)
 
         tables_match = {t: res["digests"][t] == ref["digests"][t] for t in TABLES}
         block = {
-            "cores": CORES,
-            "kill_after_s": KILL_AFTER,
+            "cores": cores,
+            "kill_after_s": kill_after,
             "ref_wall_s": ref["wall_s"],
             "resume_wall_s": res["wall_s"],
             "rounds_rerun": res["rounds_rerun"],
@@ -212,23 +193,18 @@ def main() -> None:
             "all_match": all(tables_match.values()),
             "digests": res["digests"],
             "note": (
-                "SIGKILL mid-fetch of the 2M-URL steady-state round, then "
-                "resume on the same warehouse: resume_or_bootstrap rolls "
+                f"SIGKILL half way through the {N_URLS:,}-URL steady-state "
+                "round, then resume on the same warehouse: resume_or_bootstrap rolls "
                 "back any partially committed appends (killed-attempt "
                 "stage dirs are never adopted — fresh uuid per attempt) "
                 "and re-runs the round; every table's content_digest must "
                 "equal the uninterrupted run's."
             ),
         }
-        from bench_scaling import merge_scaling
-
         merge_scaling({"kill_resume_check": block})
         print(json.dumps(block, indent=1))
         if finished_anyway:
-            raise SystemExit(
-                "victim finished its round before the kill — lower "
-                "KILLRES_KILL_AFTER and re-run; this proved nothing"
-            )
+            raise SystemExit("victim finished its round before the kill; this proved nothing")
         if not block["all_match"]:
             raise SystemExit("kill/resume digests DIVERGED")
     finally:
