@@ -1,15 +1,26 @@
 """Benchmark harness (driver contract).
 
-Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32),
-plus the flagship crawl pipeline (3 rounds over the deterministic
-synthetic web), and prints ONE JSON line::
+Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 test tables) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+CPUs this process may run on), plus the flagship crawl, and prints ONE
+JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Extra keys: ``crawl`` (URLs fetched+deduped/sec and per-core rate — the
-BASELINE.json headline metric) and ``cpus``. Each query is forced with a
-noop-format write so the full plan executes without driver-side collect.
+Each query is forced with a noop-format write so the full plan executes
+without driver-side collect; its time is the median of
+``$SPARK_GRAFT_BENCH_REPEATS`` (default 3) runs.
+
+The flagship crawl is crawlbench's ``crawl_3round`` at seed 42 (3 rounds
+over the deterministic synthetic web; each run checks the logical digests
+of crawl_order, seen, spans and dead against the recorded ones), run
+three times, each in a fresh process, through ``tools/ab.py``'s
+``run_once``. Each run also writes
+``.crawlbench/out/crawl_3round-seed42-trace0.json``. A failed run exits
+non-zero before the queries. ``queries["crawl_3round"]`` is the median of
+the three walls; the ``crawl`` key carries every wall and the medians of
+crawlbench's ``urls_per_s``, ``fetched_per_s``, ``setup_s`` and
+``peak_rss_mb``.
 
 Scaling evidence (``local[N]`` vs ``local[4N]``, N a quarter of the
 host's CPUs) is produced by ``tools/bench_scaling.py`` →
@@ -19,17 +30,38 @@ carries its efficiency.
 
 from __future__ import annotations
 
+import contextlib
+import importlib.util
 import json
 import os
 import re
-import shutil
 import sys
-import tempfile
 import time
+from statistics import median
 
 import pandas as pd  # noqa: F401  (resolves PEP 563 hints in the warmup UDF)
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+CRAWL_RUNS = 3
+CRAWL_SEED = 42
+
+
+def _load(name: str, path: str):
+    """The module at ``path`` (a script, not a package module)."""
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+ab = _load("ab", os.path.join(REPO, "tools", "ab.py"))
+
+
+def cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def _force(df) -> int:
@@ -48,32 +80,15 @@ def _reset_session_state(spark) -> None:
       that ``clearCache`` does not see),
     - the kmeans incremental fit memo (repeats must refit, not replay).
     """
+    from swmaestro_crawler_spark.operators import kmeans as _km
+    from swmaestro_crawler_spark.operators import pq as _pq
+
     spark.catalog.clearCache()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()  # java.util.Map
     for jrdd in list(jmap.values()):
-        try:
-            jrdd.unpersist()
-        except Exception:
-            pass
-    try:
-        from swmaestro_crawler_spark.operators import kmeans as _km
-
-        _km._FIT_CACHE.clear()
-    except Exception:
-        pass
-    try:
-        from swmaestro_crawler_spark.operators import pq as _pq
-
-        _pq._PQ_CACHE.clear()  # PQ codebook memo: repeats must refit
-    except Exception:
-        pass
-
-
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    mid = s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-    return round(mid, 3)
+        jrdd.unpersist()
+    _km._FIT_CACHE.clear()
+    _pq._PQ_CACHE.clear()  # PQ codebook memo: repeats must refit
 
 
 def run_queries(spark, sf_dir: str, repeats: int) -> tuple[dict[str, float], dict[str, list[float]]]:
@@ -85,10 +100,7 @@ def run_queries(spark, sf_dir: str, repeats: int) -> tuple[dict[str, float], dic
 
     spark.range(1000).selectExpr("sum(id)").collect()
     for t in TABLES:
-        try:
-            _force(load(spark, sf_dir, t).limit(1))
-        except Exception:
-            pass
+        _force(load(spark, sf_dir, t).limit(1))
     qs = entrymod.queries()
     # one full UNMEASURED query completes whole-stage-codegen/JIT warmup
     # (a limit(1) scan does not); without it the first measured query is
@@ -120,7 +132,7 @@ def run_queries(spark, sf_dir: str, repeats: int) -> tuple[dict[str, float], dic
             t0 = time.perf_counter()
             _force(fn(spark, sf_dir))
             walls[name].append(round(time.perf_counter() - t0, 3))
-    medians = {name: _median(ws) for name, ws in walls.items()}
+    medians = {name: round(median(ws), 3) for name, ws in walls.items()}
     return medians, walls
 
 
@@ -145,168 +157,53 @@ def run_oracles(sf_dir: str) -> dict[str, float]:
     return out
 
 
-def run_crawl(spark, *, seeds: int = 2000, rounds: int = 3, cuckoo: bool = False) -> dict:
-    """Flagship crawl at bench scale; returns throughput facts.
-
-    "URLs fetched+deduped/sec" counts every URL the round pipeline
-    disposed of: fetched ok, failed (retry-scheduled), robots-excluded,
-    and bloom/anti-join deduplicated frontier candidates.
-
-    ``cuckoo=True`` turns the seen stack's cuckoo tier on (bloom ->
-    cuckoo -> exact anti-join) for the on-vs-off comparison recorded as
-    ``crawl_cuckoo`` — digests must be identical (FN-free tiers)."""
-    from swmaestro_crawler_spark.config import CrawlConfig
-    from swmaestro_crawler_spark.plans.crawl import Crawl
-    from swmaestro_crawler_spark.sources.synth_web import make_seeds
-
-    wh = tempfile.mkdtemp(prefix="bench_crawl_")
-    cfg = CrawlConfig(
-        round_seconds=120.0,
-        max_rounds=rounds,
-        max_depth=4,
-        per_host_cap=2000,
-        frontier_partitions=32,
-        seen_buckets=64,
-        bloom_bits=1 << 24,
-        synth_n_hosts=500,
-        warehouse=wh,
-        cuckoo_buckets=(1 << 12) if cuckoo else None,
-    )
-    try:
-        crawl = Crawl(spark, cfg)
-        t0 = time.perf_counter()
-        results = crawl.run(spark.createDataFrame(make_seeds(cfg, seeds)), rounds=rounds)
-        wall = time.perf_counter() - t0
-        fetched = sum(r.fetched_ok for r in results)
-        processed = sum(
-            r.admitted + r.excluded + r.deferred for r in results
-        )  # every URL the scheduler disposed of this round
-        return {
-            "wall_s": round(wall, 3),
-            "rounds": len(results),
-            "fetched_ok": fetched,
-            "processed": processed,
-            "urls_per_sec": round(processed / wall, 1),
-            "fetched_per_sec": round(fetched / wall, 1),
-            "digests": {
-                t: crawl.cat.content_digest(t) for t in ("crawl_order", "seen")
-            },
-            # layout-invariant VALUE digests — the round-over-round
-            # comparable ones (content digests shift when a writer
-            # change reshapes file boundaries, e.g. the r4 executor-
-            # direct scratch writer; sorted-row data was identical)
-            "logical_digests": {
-                t: crawl.cat.logical_digest(t) for t in ("crawl_order", "seen")
-            },
-        }
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
-
-
-def crawl_worker(cuckoo: bool) -> None:
-    """One flagship crawl in THIS process (spawned fresh by main() — own
-    JVM, tmpfs scratch). Round 3 proved the shared bench session degrades
-    position-dependently, and the crawl ran last, after 79 queries: its
-    recorded wall hit 76-170 s while the same job in a fresh process runs
-    ~35-80 s (historical record BENCH/crawl_ab.json). Isolation protocol
-    matches tools/bench_scaling.py."""
-    from swmaestro_crawler_spark.config import spark_builder
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shm = tempfile.mkdtemp(prefix="bench-crawl-", dir="/dev/shm")
-    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(shm, "local")
-    spark = (
-        spark_builder("bench-crawl", master=f"local[{cpus}]", shuffle_partitions=32)
-        .config("spark.local.dir", os.path.join(shm, "local"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t0 = time.perf_counter()
-    c = run_crawl(spark, cuckoo=cuckoo)
-    c["measured_wall_s"] = round(time.perf_counter() - t0, 3)
-    print("CRAWL_RESULT " + json.dumps(c), flush=True)
-    spark.stop()
-    shutil.rmtree(shm, ignore_errors=True)
-
-
-def _crawl_subprocess(cuckoo: bool = False) -> dict:
-    import subprocess
-
-    argv = [sys.executable, os.path.abspath(__file__), "--crawl-worker"]
-    if cuckoo:
-        argv.append("cuckoo")
-    p = subprocess.run(
-        argv, capture_output=True, text=True, cwd=os.path.dirname(os.path.abspath(__file__))
-    )
-    line = next((ln for ln in p.stdout.splitlines() if ln.startswith("CRAWL_RESULT ")), None)
-    if line is None:
-        sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-        raise SystemExit("bench crawl worker failed")
-    return json.loads(line[len("CRAWL_RESULT "):])
-
-
-def host_calibration() -> dict:
-    """``crawlbench/run.py``'s host calibration (loaded by path), recorded
-    so bench diffs across hosts can be normalized for host speed."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "crawlbench_run",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "crawlbench", "run.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.host_calibration()
+def run_crawl() -> dict:
+    """The flagship crawl: ``CRAWL_RUNS`` fresh-process runs of crawlbench's
+    ``crawl_3round`` at ``CRAWL_SEED`` in this checkout. Their echo goes
+    to stderr (stdout carries only the result line); exits non-zero if a
+    run or its digest check failed."""
+    with contextlib.redirect_stdout(sys.stderr):
+        runs = [ab.run_once(REPO, CRAWL_SEED, "crawl_3round", 0) for _ in range(CRAWL_RUNS)]
+    if None in runs:
+        raise SystemExit(f"crawl_3round failed in {runs.count(None)} of {CRAWL_RUNS} runs")
+    walls = [round(r["wall_s"], 3) for r in runs]
+    return {
+        "wall_s": median(walls),
+        "all_walls": walls,
+        **{
+            k: round(median(r[k] for r in runs), 3)
+            for k in ("urls_per_s", "fetched_per_s", "setup_s", "peak_rss_mb")
+        },
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_cpus = cpus()
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # crawl measurements run FIRST, in FRESH subprocesses (own JVM +
-    # tmpfs scratch), BEFORE this parent process starts any JVM: round 3
-    # proved the shared query session degrades position-dependently, and
-    # round 4 additionally measured that even a STOPPED parent session
-    # (its JVM keeps the post-240-measurement heap resident) doubles the
-    # crawl workers' walls (61-163 s in-bench vs 33-39 s on a bare host
-    # with the identical worker). best-of-3: at this tiny (30k-URL)
-    # scale the wall is dominated by fixed per-round/job latency and
-    # swings ±40% run-to-run on this host (all walls recorded;
-    # scale-representative numbers are the 1M/10M rounds in
-    # BENCH/BASELINE.md)
-    # BOTH arms best-of-3 in fresh subprocesses, interleaved off/on so
-    # host drift hits both equally (VERDICT r4 #3: the r4 headline ran
-    # the cuckoo arm as a single sample under a weaker protocol and
-    # disagreed with BENCH/cuckoo_ab.json by +27 s; protocol now
-    # identical for both arms)
-    runs, ck_runs = [], []
-    for _ in range(3):
-        runs.append(_crawl_subprocess())
-        ck_runs.append(_crawl_subprocess(cuckoo=True))
-    crawl = min(runs, key=lambda c: c["measured_wall_s"])
-    crawl["all_walls"] = [c["measured_wall_s"] for c in runs]
-    ck = min(ck_runs, key=lambda c: c["measured_wall_s"])
-    # digests MUST equal the tier-off run on EVERY repeat (every seen
-    # tier is FN-free) — asserted, not assumed
-    for c in ck_runs:
-        assert c["digests"] == crawl["digests"], "cuckoo tier changed crawl output!"
-        assert c.get("logical_digests") == crawl.get("logical_digests")
-    crawl["cuckoo_wall_s"] = ck["measured_wall_s"]
-    crawl["cuckoo_all_walls"] = [c["measured_wall_s"] for c in ck_runs]
-    crawl["cuckoo_digests_match"] = True
+    # the crawl runs FIRST, in FRESH processes (own JVM), BEFORE this
+    # parent process starts any JVM: round 3 proved the shared query
+    # session degrades position-dependently, and round 4 additionally
+    # measured that even a STOPPED parent session (its JVM keeps the
+    # post-240-measurement heap resident) doubles the crawl's walls
+    # (61-163 s in-bench vs 33-39 s on a bare host with the identical
+    # crawl). Median of 3: at this tiny (30k-URL) scale the wall is
+    # dominated by fixed per-round/job latency and swings run-to-run
+    # (all walls recorded; scale-representative numbers are the 1M-URL
+    # round in BENCH/BASELINE.md)
+    crawl = run_crawl()
 
     from swmaestro_crawler_spark.config import spark_builder
 
-    spark = spark_builder("bench", master=f"local[{cpus}]", shuffle_partitions=32).getOrCreate()
+    spark = spark_builder("bench", master=f"local[{n_cpus}]", shuffle_partitions=32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     queries, query_walls = run_queries(spark, sf_dir, repeats)
     spark.stop()
-    queries["crawl_3round"] = crawl["measured_wall_s"]
-    queries["crawl_3round_cuckoo"] = ck["measured_wall_s"]
+    queries["crawl_3round"] = crawl["wall_s"]
 
     oracle = run_oracles(sf_dir)
     ratios = {
@@ -323,14 +220,16 @@ def main() -> None:
         "queries_walls": query_walls,
         "repeats": repeats,
         "sf": sf,
-        "cpus": cpus,
+        "cpus": n_cpus,
         "crawl": crawl,
         "oracle_queries": oracle,
         "spark_vs_duckdb": ratios,
         "spark_vs_duckdb_median": rs[len(rs) // 2] if rs else None,
-        "host_calibration": host_calibration(),
+        "host_calibration": _load(
+            "crawlbench_run", os.path.join(REPO, "crawlbench", "run.py")
+        ).host_calibration(),
     }
-    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+    bench_dir = os.path.join(REPO, "BENCH")
     scaling_path = os.path.join(bench_dir, "scaling.json")
     if os.path.exists(scaling_path):
         with open(scaling_path) as f:
@@ -356,30 +255,20 @@ def main() -> None:
         "streaming_stream_join",
         "pagerank_purchase_graph",
         "crawl_3round",
-        "crawl_3round_cuckoo",
     ]
     qsec = sorted(queries.values())
-    crawl_line = {
-        k: crawl.get(k)
-        for k in ("wall_s", "processed", "fetched_ok", "urls_per_sec", "cuckoo_digests_match")
-    }
-    crawl_line["digests12"] = {
-        k: v[:12] for k, v in crawl.get("digests", {}).items()
-    }
-    # layout-invariant value digests — compare THESE across rounds
-    crawl_line["ldigests"] = crawl.get("logical_digests")
     line = {
         "metric": "headline_suite_seconds",
         "value": total,
         "unit": "sec",
         "queries": {k: queries[k] for k in headline_queries if k in queries},
         "n_queries": len(queries),
-        "suite_median_s": _median(qsec),
-        "suite_p90_s": qsec[int(len(qsec) * 0.9)] if qsec else None,
+        "suite_median_s": round(median(qsec), 3),
+        "suite_p90_s": qsec[int(len(qsec) * 0.9)],
         "repeats": repeats,
         "sf": sf,
-        "cpus": cpus,
-        "crawl": crawl_line,
+        "cpus": n_cpus,
+        "crawl": crawl,
         "spark_vs_duckdb_median": out["spark_vs_duckdb_median"],
         "host_calibration": out["host_calibration"],
         "queries_detail": "BENCH/bench.json",
@@ -396,7 +285,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--crawl-worker":
-        crawl_worker(cuckoo="cuckoo" in sys.argv[2:])
-    else:
-        main()
+    main()

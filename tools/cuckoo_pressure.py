@@ -46,12 +46,15 @@ import json
 import math
 import os
 import sys
+import tempfile
 import time
-
-import numpy as np
+from statistics import median
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench_scaling import host_pair, merge_scaling  # noqa: E402
+from swmaestro_crawler_spark.operators.cuckoo import CUCKOO_PARTS  # noqa: E402
 
 SIZES = tuple(
     int(x)
@@ -63,7 +66,6 @@ FRONTIER = int(os.environ.get("CUCKOO_PRESSURE_FRONTIER", 2_000_000))
 DUP_FRAC = 0.2
 BLOOM_BITS = 1 << 25
 BLOOM_K = 5
-CUCKOO_PARTS = 32
 CUCKOO_SLOTS = 4
 REPEATS = int(os.environ.get("CUCKOO_PRESSURE_REPEATS", 3))
 
@@ -89,25 +91,24 @@ def main() -> None:
     )
 
     spark = spark_builder(
-        "cuckoo_pressure", master="local[32]", shuffle_partitions=32
+        "cuckoo_pressure", master=f"local[{host_pair()[1]}]", shuffle_partitions=32
     ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    tmp = tempfile.TemporaryDirectory(prefix="cuckoo_pressure-")
 
     rows = []
     for n_seen in SIZES:
-        seen_path = f"/tmp/cp_seen_{n_seen}"
-        if not os.path.exists(seen_path):
-            (
-                spark.range(n_seen)
-                .select(
-                    _hash_expr("id").alias("url_hash"),
-                    F.hash(F.col("id").cast("string")).alias("fingerprint"),
-                    F.pmod(_hash_expr("id"), F.lit(64)).cast("int").alias("bucket"),
-                    F.lit(0).cast("int").alias("round_seen"),
-                )
-                .write.mode("overwrite")
-                .parquet(seen_path)
+        seen_path = os.path.join(tmp.name, f"seen_{n_seen}")
+        (
+            spark.range(n_seen)
+            .select(
+                _hash_expr("id").alias("url_hash"),
+                F.hash(F.col("id").cast("string")).alias("fingerprint"),
+                F.pmod(_hash_expr("id"), F.lit(64)).cast("int").alias("bucket"),
+                F.lit(0).cast("int").alias("round_seen"),
             )
+            .write.parquet(seen_path)
+        )
         seen = spark.read.parquet(seen_path)
 
         t0 = time.perf_counter()
@@ -168,8 +169,8 @@ def main() -> None:
             "bloom_fp_rate": fp_rate,
             "confirm_rows_off": bloom_pos,
             "confirm_rows_on": cuckoo_pos,
-            "wall_off_s": min(walls["off"]),
-            "wall_on_s": min(walls["on"]),
+            "wall_off_s": median(walls["off"]),
+            "wall_on_s": median(walls["on"]),
             "all_walls": walls,
             "bloom_build_s": bloom_build_s,
             "cuckoo_build_s": cuckoo_build_s,
@@ -182,13 +183,12 @@ def main() -> None:
         "protocol": (
             f"fixed {BLOOM_BITS}-bit bloom, frontier {FRONTIER} rows with "
             f"{DUP_FRAC:.0%} true duplicates, seen set swept over SIZES; "
-            f"filter_unseen off/on interleaved x{REPEATS}, best-of walls; "
+            f"filter_unseen off/on interleaved x{REPEATS}, median walls; "
             "result counts asserted equal across arms"
         ),
         "rows": rows,
     }
-    from bench_scaling import merge_scaling
-
+    tmp.cleanup()
     merge_scaling({"cuckoo_pressure_check": summary})
     print("merged into BENCH/scaling.json cuckoo_pressure_check")
 
