@@ -27,17 +27,29 @@ New_YouTube_Crawler.py:210,275, New_YouTube_Crawler_Comment.py:386,439).
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
-import time
 import uuid
 from bisect import bisect_left
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from .schema import nullable_arrow_schema
+
+
+def write_atomic(path: str, write) -> None:
+    """``write(tmp)`` to a hidden temporary in ``path``'s directory, then
+    ``os.replace`` it into place (atomic on POSIX): a writer killed
+    mid-write leaves only the dot-file (``_adopt_stage`` skips those), and
+    a retry rewrites the same name."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".tmp-{name}")
+    write(tmp)
+    os.replace(tmp, path)
 
 
 class CommitConflict(RuntimeError):
@@ -61,43 +73,22 @@ class Catalog:
     # rebase for free (their data files are already on disk; only the
     # manifest entry moves), while read-dependent commits (merge) instead
     # verify their planned base is still current and raise CommitConflict.
-    # The lock is an O_CREAT|O_EXCL file carrying the holder pid — atomic on
-    # POSIX, reclaimable when the holder died mid-commit (resume path). On a
-    # real cluster this CAS lives in the metastore; the file stands in for
-    # it with identical semantics on one node.
-    LOCK_TIMEOUT_S = 60.0
-
+    # The lock is an exclusive ``flock`` on the table's directory: the
+    # kernel drops it when the holder dies mid-commit (resume path), and
+    # separate ``os.open``s exclude each other, so threads of one process
+    # serialize too. Locking the directory leaves no lock file behind (an
+    # unlinked lock file would let a waiter lock an orphaned inode). On a
+    # real cluster this CAS lives in the metastore; the directory stands
+    # in for it with identical semantics on one node.
     @contextlib.contextmanager
     def _commit_lock(self, table: str):
         os.makedirs(self._dir(table), exist_ok=True)
-        path = os.path.join(self._dir(table), "_commit.lock")
-        deadline = time.monotonic() + self.LOCK_TIMEOUT_S
-        while True:
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                break
-            except FileExistsError:
-                try:
-                    holder = int(open(path).read() or -1)
-                except (OSError, ValueError):
-                    holder = -1
-                if holder > 0 and holder != os.getpid():
-                    try:
-                        os.kill(holder, 0)
-                    except ProcessLookupError:  # holder died mid-commit
-                        with contextlib.suppress(OSError):
-                            os.unlink(path)
-                        continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock on {table} held by {holder}")
-                time.sleep(0.01)
+        fd = os.open(self._dir(table), os.O_RDONLY)
         try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
             yield
         finally:
             os.close(fd)
-            with contextlib.suppress(OSError):
-                os.unlink(path)
 
     def _locked_commit(self, table: str, mutate) -> int:
         """Run ``mutate(manifest) -> sid`` against freshly-loaded manifest
@@ -124,10 +115,10 @@ class Catalog:
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
         os.makedirs(self._dir(table), exist_ok=True)
-        tmp = self._manifest_path(table) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(table))  # atomic commit point
+        write_atomic(  # the commit point
+            self._manifest_path(table),
+            lambda tmp: Path(tmp).write_text(json.dumps(manifest, indent=1, sort_keys=True)),
+        )
 
     @staticmethod
     def _snapshot(m: dict, sid: int) -> dict | None:
@@ -162,16 +153,12 @@ class Catalog:
             raise KeyError(f"unknown branch {branch!r}")
         return refs[branch]
 
-    def create_branch(
-        self, table: str, name: str, at_snapshot: int | None = None
-    ) -> int:
-        """Create (or reset) a named branch pointing at ``at_snapshot``
-        (default: current main)."""
+    def create_branch(self, table: str, name: str) -> int:
+        """Create (or reset) a named branch pointing at current main."""
 
         def mutate(m: dict) -> int:
-            at = m["current"] if at_snapshot is None else at_snapshot
-            m.setdefault("refs", {})[name] = at
-            return at
+            m.setdefault("refs", {})[name] = m["current"]
+            return m["current"]
 
         return self._locked_commit(table, mutate)
 
@@ -363,14 +350,7 @@ class Catalog:
 
         return self._locked_commit(table, mutate)
 
-    def overwrite_stage(
-        self,
-        table: str,
-        stage: str,
-        meta: dict | None = None,
-        stat_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
-    ) -> int:
+    def overwrite_stage(self, table: str, stage: str, meta: dict | None = None) -> int:
         """``overwrite`` over files already staged by executor-side
         writers (no driver-side ``df.write``): adopt the stage's parquet
         files as the table's next snapshot. Same commit/locking path as
@@ -381,8 +361,6 @@ class Catalog:
             files,
             dict(meta or {}, rows_delta=sum(file_rows), file_rows=file_rows),
             carry=[],
-            stat_cols=stat_cols,
-            bloom_cols=bloom_cols,
         )
 
     def _compute_stats(
@@ -598,7 +576,6 @@ class Catalog:
         df: DataFrame,
         meta: dict | None = None,
         stat_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
     ) -> int:
         """Replace table contents as a new snapshot (old files retained for
         time travel / resume)."""
@@ -610,7 +587,6 @@ class Catalog:
             carry=[],
             cols=list(df.columns),
             stat_cols=stat_cols,
-            bloom_cols=bloom_cols,
         )
 
     def merge(

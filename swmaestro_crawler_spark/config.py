@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Literal
+from typing import ClassVar, Literal
 
 
 @dataclass(frozen=True)
@@ -43,7 +43,7 @@ class CrawlConfig:
 
     # bloom tier
     bloom_bits: int = 1 << 22        # 4 Mi bits (test scale); size for n at prod
-    bloom_hashes: int = 5
+    bloom_hashes: ClassVar[int] = 5  # hash functions per key (not a knob)
 
     # cuckoo tier (optional middle tier of the seen stack: bloom ->
     # cuckoo -> exact anti-join; None = off). 16-bit fingerprints at
@@ -83,8 +83,6 @@ class CrawlConfig:
             raise ValueError("max_attempts must be >= 1 (reference retries=5)")
         if self.bloom_bits < 64 or self.bloom_bits % 64:
             raise ValueError("bloom_bits must be a positive multiple of 64")
-        if self.bloom_hashes < 1:
-            raise ValueError("bloom_hashes must be >= 1")
         if self.trap_template_cap is not None and self.trap_template_cap < 1:
             raise ValueError("trap_template_cap must be >= 1 (or None to disable)")
         if self.cuckoo_buckets is not None:

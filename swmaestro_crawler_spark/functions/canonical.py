@@ -60,15 +60,15 @@ def host_of(url_col):
     return F.regexp_extract(url_col, r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1)
 
 
-def with_canonical(df, url_col: str = "url"):
+def with_canonical(df):
     """url -> canonical url + host + url_hash (xxhash64) + fingerprint.
 
     Hashing is Spark-native (whole-stage codegen); only the
     canonicalization string kernel crosses into Arrow.
     """
     return (
-        df.withColumn(url_col, canonicalize_udf(F.col(url_col)))
-        .withColumn("host", host_of(F.col(url_col)))
-        .withColumn("url_hash", F.xxhash64(F.col(url_col)))
-        .withColumn("fingerprint", F.hash(F.col(url_col)))
+        df.withColumn("url", canonicalize_udf(F.col("url")))
+        .withColumn("host", host_of(F.col("url")))
+        .withColumn("url_hash", F.xxhash64(F.col("url")))
+        .withColumn("fingerprint", F.hash(F.col("url")))
     )

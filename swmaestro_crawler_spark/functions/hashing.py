@@ -138,8 +138,8 @@ def murmur3_32(data: bytes, seed: int = SPARK_HASH_SEED) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
-def murmur3_32_str(s: str, seed: int = SPARK_HASH_SEED) -> int:
-    return murmur3_32(s.encode("utf-8"), seed)
+def murmur3_32_str(s: str) -> int:
+    return murmur3_32(s.encode("utf-8"), SPARK_HASH_SEED)
 
 
 # ---------------------------------------------------------------------------
@@ -213,9 +213,9 @@ def _rotl64_np(x: np.ndarray, r: int) -> np.ndarray:
     return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
 
 
-def xxhash64_np_fixed(mat: np.ndarray, seed: int = SPARK_HASH_SEED) -> np.ndarray:
+def xxhash64_np_fixed(mat: np.ndarray) -> np.ndarray:
     """XXH64 of every row of an (n, L) uint8 matrix -> signed int64 array,
-    bit-identical to ``xxhash64(row.tobytes(), seed)`` / Spark's
+    bit-identical to ``xxhash64(row.tobytes())`` / Spark's
     ``F.xxhash64`` over the same bytes (pinned by tests/test_redirects).
     Assumes a little-endian host (x86/arm; asserted)."""
     assert mat.dtype == np.uint8 and mat.ndim == 2
@@ -227,7 +227,7 @@ def xxhash64_np_fixed(mat: np.ndarray, seed: int = SPARK_HASH_SEED) -> np.ndarra
         np.uint64(_P64_1), np.uint64(_P64_2), np.uint64(_P64_3),
         np.uint64(_P64_4), np.uint64(_P64_5),
     )
-    sd = np.uint64(seed & _M64)
+    sd = np.uint64(SPARK_HASH_SEED & _M64)
     i = 0
     with np.errstate(over="ignore"):
         if L >= 32:

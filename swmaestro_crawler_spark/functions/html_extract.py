@@ -60,10 +60,10 @@ def find_value(html: Column, key: str, num_chars: int = 2, separator: str = '"')
     return F.when((pos > 0) & (end > 0), F.substring(tail, 1, end - 1))
 
 
-def marker_first_token(html: Column, marker: str, stop: str = '"') -> Column:
+def marker_first_token(html: Column, marker: str) -> Column:
     """``html.split(marker)[1].split(" ")[0]`` — first space-token after a
-    marker (view_count_crawler.py:77-88)."""
-    return F.substring_index(find_value(html, marker, 0, stop), " ", 1)
+    marker, within its quoted value (view_count_crawler.py:77-88)."""
+    return F.substring_index(find_value(html, marker, 0), " ", 1)
 
 
 def parse_label_count(token: Column) -> Column:
@@ -103,69 +103,24 @@ def normalize_date_label(label: Column) -> Column:
 
 
 def extract_comments(html: Column) -> Column:
-    """Array of top-level comment texts in page order: harvest
-    ``data-cid``/text pairs and SKIP replies — a '.' in the cid
-    (New_YouTube_Crawler_Comment.py:332). Returns array<string>."""
-    cids = F.regexp_extract_all(
-        html, F.lit('<div class="comment-item" data-cid="([^"]*)">'), F.lit(1)
+    """Array of top-level comment texts in page order: split the page on
+    the ``data-cid`` item marker, SKIP replies — a '.' in the cid
+    (New_YouTube_Crawler_Comment.py:332) — and items without a text span,
+    and take each kept item's OWN text: after its text marker, up to
+    ``</span>``. Returns array<string>. (Both markers are regex-safe
+    literals for ``split``.)"""
+    items = F.filter(
+        F.split(html, '<div class="comment-item" data-cid="'), lambda _, i: i > 0
     )
-    texts = F.regexp_extract_all(
-        html, F.lit('<span class="comment-text-content">([^<]*)</span>'), F.lit(1)
+    text_marker = '<span class="comment-text-content">'
+    kept = F.filter(
+        items,
+        lambda it: ~F.substring_index(it, '"', 1).contains(".")
+        & it.contains(text_marker),
     )
-    paired = F.zip_with(cids, texts, lambda c, t: F.when(~c.contains("."), t))
-    return F.filter(paired, lambda t: t.isNotNull())
-
-
-# ---------------------------------------------------------------------------
-# Arrow C-kernel variant of the comment harvest — the BULK physical path
-# for running the X4 extraction inside a fetch stage's mapInArrow pass
-# (same contract as extract_comments; proven equal in
-# tests/test_html_extract.py). Pure pyarrow.compute split/match kernels +
-# numpy offset surgery: no per-row Python, no Python string objects.
-# ---------------------------------------------------------------------------
-
-_ITEM_MARKER = '<div class="comment-item" data-cid="'
-_TEXT_MARKER = '<span class="comment-text-content">'
-
-
-def extract_comments_arrow(html):
-    """pyarrow StringArray of pages -> ListArray<string> of top-level
-    comment texts (replies — '.' in data-cid — skipped), page order
-    preserved."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if isinstance(html, pa.ChunkedArray):
-        html = html.combine_chunks()
-    n = len(html)
-    if n == 0:
-        return pa.ListArray.from_arrays(
-            pa.array([0], type=pa.int32()), pa.array([], type=pa.string())
-        )
-    frags = pc.split_pattern(html, _ITEM_MARKER)
-    offsets = frags.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    counts = np.diff(offsets)
-    flat = pc.list_flatten(frags)
-    # the first fragment of every page precedes any comment item
-    within = np.arange(len(flat), dtype=np.int64) - np.repeat(offsets[:-1], counts)
-    item_mask = within > 0
-    item_rows = np.repeat(np.arange(n, dtype=np.int64), counts)[item_mask]
-
-    items = flat.filter(pa.array(item_mask))
-    cid = pc.list_element(pc.split_pattern(items, '"'), 0)
-    after = pc.split_pattern(items, _TEXT_MARKER)
-    has_text = pc.greater(pc.list_value_length(after), 1).to_numpy(zero_copy_only=False)
-    is_reply = pc.match_substring(cid, ".").to_numpy(zero_copy_only=False)
-    keep = np.asarray(has_text, dtype=bool) & ~np.asarray(is_reply, dtype=bool)
-
-    kept = after.filter(pa.array(keep))
-    text = pc.list_element(
-        pc.split_pattern(pc.list_element(kept, 1), "</span>"), 0
+    return F.transform(
+        kept, lambda it: F.substring_index(F.split(it, text_marker)[1], "</span>", 1)
     )
-    kept_per_row = np.bincount(item_rows[keep], minlength=n).astype(np.int64)
-    new_offsets = np.concatenate([[0], np.cumsum(kept_per_row)]).astype(np.int32)
-    return pa.ListArray.from_arrays(pa.array(new_offsets, type=pa.int32()), text)
 
 
 # ---------------------------------------------------------------------------

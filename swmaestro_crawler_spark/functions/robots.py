@@ -111,7 +111,7 @@ def parse_robots_udf(bodies: pd.Series) -> pd.DataFrame:
 SITEMAP_RE = r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)"
 
 
-def sitemaps_from_robots_bodies(df, host_col: str = "host", body_col: str = "body"):
+def sitemaps_from_robots_bodies(df):
     """(host, robots.txt body) -> (host, sitemap_url): every ``Sitemap:``
     directive, which per the robots spec is section-independent (it
     applies regardless of User-agent groups — why it is NOT part of the
@@ -122,17 +122,13 @@ def sitemaps_from_robots_bodies(df, host_col: str = "host", body_col: str = "bod
     # DSL form, not F.expr: the pattern's backslash classes must reach
     # the Java regex engine verbatim, not pass through SQL-literal
     # escape parsing
-    locs = F.regexp_extract_all(F.col(body_col), F.lit(SITEMAP_RE), 1)
-    return df.select(
-        F.col(host_col).alias("host"), F.explode(locs).alias("sitemap_url")
-    )
+    locs = F.regexp_extract_all(F.col("body"), F.lit(SITEMAP_RE), 1)
+    return df.select("host", F.explode(locs).alias("sitemap_url"))
 
 
-def robots_table_from_bodies(df, host_col: str = "host", body_col: str = "body"):
+def robots_table_from_bodies(df):
     """(host, robots.txt body) rows -> ROBOTS-schema DataFrame."""
-    parsed = df.select(
-        F.col(host_col).alias("host"), parse_robots_udf(F.col(body_col)).alias("p")
-    )
+    parsed = df.select("host", parse_robots_udf(F.col("body")).alias("p"))
     return parsed.select(
         "host",
         F.col("p.crawl_delay_s").alias("crawl_delay_s"),

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..catalog import write_atomic
 from ..config import CrawlConfig
 from ..schema import FRONTIER, SPAN, nullable_arrow_schema
 from ..sources import synth_web
@@ -230,16 +231,6 @@ class RoundOutputs:
 _BLOOM_SIDECAR = "bloom-part-"  # + f"{pid:05d}.npy", one per task
 
 
-def _write_atomic(path: str, write) -> None:
-    """``write(tmp)`` to a hidden temporary in ``path``'s directory, then
-    rename into place: a task killed mid-write leaves only the dot-file,
-    and a retried task rewrites the same name with the same bytes."""
-    d, name = os.path.split(path)
-    tmp = os.path.join(d, f".tmp-{name}")
-    write(tmp)
-    os.replace(tmp, path)
-
-
 def _write_round_outputs(tbl, cfg: CrawlConfig, out: RoundOutputs, stage_dir: str, pid: int) -> None:
     """``RoundOutputs`` of one task's sorted fetched table."""
     import pyarrow as pa
@@ -259,7 +250,7 @@ def _write_round_outputs(tbl, cfg: CrawlConfig, out: RoundOutputs, stage_dir: st
         with open(tmp, "wb") as f:
             np.save(f, words)
 
-    _write_atomic(os.path.join(stage_dir, f"{_BLOOM_SIDECAR}{pid:05d}.npy"), save_words)
+    write_atomic(os.path.join(stage_dir, f"{_BLOOM_SIDECAR}{pid:05d}.npy"), save_words)
 
     expand = done & (tbl.column("depth").to_numpy() < cfg.max_depth)
     if not expand.any():
@@ -289,7 +280,7 @@ def _write_round_outputs(tbl, cfg: CrawlConfig, out: RoundOutputs, stage_dir: st
             "maybe_seen": pa.array(_probe(seen_bm, url_hash, cfg.bloom_hashes)),
         }
     )
-    _write_atomic(
+    write_atomic(
         os.path.join(out.links_dir, f"part-{pid:05d}.parquet"),
         lambda tmp: pq.write_table(rows, tmp, compression="snappy"),
     )
@@ -376,7 +367,7 @@ def fetch_stage_direct(admitted: DataFrame, cfg: CrawlConfig, round_no: int,
             tbl = pa.Table.from_batches(out, schema=out[0].schema)
             tbl = tbl.take(pc.sort_indices(tbl, sort_keys=_SORT_KEYS))
             tbl = tbl.cast(arrow_schema).combine_chunks()
-            _write_atomic(
+            write_atomic(
                 os.path.join(stage_dir, f"part-{pid:05d}.parquet"),
                 lambda tmp: pq.write_table(tbl, tmp, compression="snappy"),
             )

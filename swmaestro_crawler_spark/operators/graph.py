@@ -228,8 +228,8 @@ HITS_SCALE = 1_000_000_000
 HITS_ITERS = 4
 
 
-def hits(edges: DataFrame, iters: int = HITS_ITERS) -> tuple[DataFrame, DataFrame]:
-    """``iters`` rounds of mutual reinforcement a = A^T h, h = A a over a
+def hits(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``HITS_ITERS`` rounds of mutual reinforcement a = A^T h, h = A a over a
     directed edge list (src = hub side, dst = authority side); returns
     (hubs, auths) as (node, score) in HITS_SCALE L1 fixed-point units.
 
@@ -285,7 +285,7 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> tuple[DataFrame, DataFram
             F.expr(f"(raw * {HITS_SCALE}) div tot").alias("score"),
         )
 
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         auths = _half(hubs, "src", "dst")
         hubs = _half(auths, "dst", "src").localCheckpoint(eager=True)
     auths = auths.localCheckpoint(eager=True)
@@ -378,8 +378,8 @@ SQL_HITS_PURCHASE = _sql_hits_purchase()
 LPA_ITERS = 3
 
 
-def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
-    """(node, label) after ``iters`` synchronous supersteps from
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """(node, label) after ``LPA_ITERS`` synchronous supersteps from
     label = node id. ``edges`` must be symmetrized (src<->dst).
 
     Same Pregel hygiene as pagerank/hits: the edge table is persisted
@@ -396,7 +396,7 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         nbr = edges.join(
             labels.withColumnRenamed("node", "dst"), "dst"
         ).select(F.col("src").alias("node"), "label")

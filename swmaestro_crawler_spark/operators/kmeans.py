@@ -207,25 +207,23 @@ def kmeans_fit(
 # caching cannot change any result — only drop repeated identical jobs.
 # The cache is INCREMENTAL per Lloyd iteration: a consumer needing
 # iteration i+1 resumes from the cached iteration i instead of refitting.
-_FIT_CACHE: dict[tuple[str, int, int], list[tuple[int, list[int], int]]] = {}
+_FIT_CACHE: dict[tuple[str, int], list[tuple[int, list[int], int]]] = {}
 
 
 def fit_for(
-    spark: SparkSession, sf_dir: str, k: int = KMEANS_K, iters: int = KMEANS_ITERS
+    spark: SparkSession, sf_dir: str, iters: int = KMEANS_ITERS
 ) -> list[tuple[int, list[int], int]]:
-    done = max(
-        (i for i in range(iters + 1) if (sf_dir, k, i) in _FIT_CACHE), default=-1
-    )
+    """KMEANS_K centroids after ``iters`` Lloyd iterations."""
+    done = max((i for i in range(iters + 1) if (sf_dir, i) in _FIT_CACHE), default=-1)
     if done < 0:
         vecs = _qvecs(spark, sf_dir).select("vec_id", "qv")
-        _FIT_CACHE[(sf_dir, k, 0)] = seed_centroids(vecs, k)
+        _FIT_CACHE[(sf_dir, 0)] = seed_centroids(vecs, KMEANS_K)
         done = 0
     if done < iters:
         vecs = _qvecs(spark, sf_dir).select("vec_id", "qv")
         for i in range(done, iters):
-            cent = _update(assign_to(vecs, _FIT_CACHE[(sf_dir, k, i)]))
-            _FIT_CACHE[(sf_dir, k, i + 1)] = cent
-    return _FIT_CACHE[(sf_dir, k, iters)]
+            _FIT_CACHE[(sf_dir, i + 1)] = _update(assign_to(vecs, _FIT_CACHE[(sf_dir, i)]))
+    return _FIT_CACHE[(sf_dir, iters)]
 
 
 def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,10 +324,8 @@ FROM cent{KMEANS_ITERS} c
 # cluster key (corpus and probes both hash-partition by cell — the
 # bucket-join shape).
 # --------------------------------------------------------------------------
-def ivf_probes(
-    queries: DataFrame, cent: list[tuple[int, list[int], int]], nprobe: int = IVF_NPROBE
-) -> DataFrame:
-    """(query_id, qq) -> (query_id, qq, cluster): the nprobe nearest
+def ivf_probes(queries: DataFrame, cent: list[tuple[int, list[int], int]]) -> DataFrame:
+    """(query_id, qq) -> (query_id, qq, cluster): the IVF_NPROBE nearest
     trained cells per query. Same Arrow-batched distance matrix as
     `assign_to`; the (dist asc, cid asc) sort of the Column form's
     array_sort is replayed with a stable argsort over cid-ascending
@@ -346,7 +342,7 @@ def ivf_probes(
             return pd.Series([], dtype=object)
         x = np.stack(qq.to_numpy()).astype(np.int64)
         dist = _dist_matrix(x, cids, C, ns, ssc)
-        order = np.argsort(dist, axis=1, kind="stable")[:, :nprobe]
+        order = np.argsort(dist, axis=1, kind="stable")[:, :IVF_NPROBE]
         return pd.Series(list(cids[order]))
 
     return queries.select(
@@ -358,15 +354,13 @@ def ivf_search(
     corpus: DataFrame,
     cent: list[tuple[int, list[int], int]],
     queries: DataFrame,
-    nprobe: int = IVF_NPROBE,
-    topk: int = TOPK,
     broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """IVF search against a trained index. ``corpus`` is (vec_id, qv,
     cluster) — assignment already folded in as an expression; ``queries``
     is (query_id, qq). broadcast_queries=None auto-picks by query count
     vs IVF_BROADCAST_QUERY_LIMIT."""
-    probes = ivf_probes(queries, cent, nprobe)
+    probes = ivf_probes(queries, cent)
     if broadcast_queries is None:
         broadcast_queries = queries.count() <= IVF_BROADCAST_QUERY_LIMIT
     probe_side = F.broadcast(probes) if broadcast_queries else probes.hint("shuffle_hash")
@@ -379,7 +373,7 @@ def ivf_search(
             _int_cosine(F.col("qq"), F.col("qv")).alias("cos"),
         )
         .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= topk)
+        .filter(F.col("rnk") <= TOPK)
         .select("query_id", "neighbor_id", "rnk")
     )
 

@@ -126,14 +126,14 @@ def decode_image_meta(blob: bytes) -> tuple[int | None, int | None]:
     )
 
 
-def media_table(spark: SparkSession, sf_dir: str, n: int = 200) -> DataFrame:
+def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic media table derived from the documents ids (stand-in for
-    the crawl's media_ref spans). Selection is ``doc_id < n`` — a
+    the crawl's media_ref spans). Selection is ``doc_id < 200`` — a
     DETERMINISTIC predicate (an unordered ``limit`` picks
     partition-arrival-order rows, which would make the oracle comparison
     flaky)."""
     kinds = ["image", "audio", "video"]
-    docs = load(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < n)
+    docs = load(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 200)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -489,11 +489,11 @@ def decode_av_meta(blob: bytes) -> tuple[str, int | None, int | None, int, int]:
     raise NotImplementedError("unknown A/V container (RIFF/WAV and ISO-BMFF/MP4 parse natively)")
 
 
-def media_av_table(spark: SparkSession, sf_dir: str, n: int = 200) -> DataFrame:
+def media_av_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic A/V media table: even ids carry a real WAV, odd ids a
     real MP4 (both pure functions of the id, so the oracle recomputes
     the parsed fields analytically)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < n)
+    docs = load(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 200)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

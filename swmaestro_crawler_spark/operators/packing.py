@@ -33,6 +33,7 @@ from ..functions.text import SQL_WORD_HASH, SQL_WORDS, word_hash, words
 from ..sources.testdata import load
 
 SHARD_TOKENS = 2048  # shard budget (tokens); contract-scale constant
+PACK_PARTITIONS = 32  # range partitions of shard_pack's prefix sum
 
 
 def grouped_prefix_sum(
@@ -102,7 +103,7 @@ def grouped_prefix_sum(
     return s.mapInPandas(add_running, out_schema), s
 
 
-def shard_pack(docs: DataFrame, n_parts: int = 32) -> tuple[DataFrame, DataFrame]:
+def shard_pack(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(doc_id, split, n_tokens) -> (doc_id, split, n_tokens, shard):
     greedy fixed-budget packing in md5-hash document order per split.
     Returns (packed, persisted_handle), like ``grouped_prefix_sum``: the
@@ -110,7 +111,7 @@ def shard_pack(docs: DataFrame, n_parts: int = 32) -> tuple[DataFrame, DataFrame
     unpersists the handle once ``packed`` is consumed."""
     keyed = docs.withColumn("hkey", word_hash(F.col("doc_id").cast("string")))
     running, handle = grouped_prefix_sum(
-        keyed, "split", ["hkey", "doc_id"], "n_tokens", n_parts
+        keyed, "split", ["hkey", "doc_id"], "n_tokens", PACK_PARTITIONS
     )
     packed = running.select(
         "doc_id",

@@ -26,7 +26,7 @@ footprint); no joins, no driver state, integer-only math end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..sources.testdata import load
 
@@ -38,44 +38,63 @@ MAX_INTERVAL_US = 604_800_000_000  # 7 days
 REF_US = 1_767_225_600_000_000
 
 
-def q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    obs = ev.select(
-        "user_id",
-        us.alias("t_us"),
-        "event_id",
-        (~F.col("value").eqNullSafe(F.lag("value").over(w)))
-        .cast("int")
-        .alias("chg"),
+def change_interval(
+    obs: DataFrame,
+    key: str,
+    order: list[str],
+    t: str,
+    value: str,
+    min_interval: int,
+    max_interval: int,
+    *extra: Column,
+) -> DataFrame:
+    """The change-rate estimator over an observation history: one window
+    on ``key`` in ``order`` (a total order), then one aggregation on the
+    same key. Returns (key, *extra, n_obs, n_changes, t_first, t_last,
+    interval): ``interval`` is ``(t_last - t_first) div n_changes``
+    clamped to [min_interval, max_interval], or ``max_interval`` when
+    ``value`` never changed. ``extra`` are further aggregates."""
+    w = Window.partitionBy(key).orderBy(*order)
+    hist = obs.select(
+        "*",
+        (~F.col(value).eqNullSafe(F.lag(value).over(w))).cast("int").alias("chg"),
         F.row_number().over(w).alias("rn"),
     )
-    agg = obs.groupBy("user_id").agg(
+    agg = hist.groupBy(key).agg(
+        *extra,
         F.count("*").alias("n_obs"),
         # the first observation is baseline, not a change
         F.sum(F.when(F.col("rn") > 1, F.col("chg")).otherwise(0)).alias("n_changes"),
-        F.min("t_us").alias("first_us"),
-        F.max("t_us").alias("last_us"),
+        F.min(t).alias("t_first"),
+        F.max(t).alias("t_last"),
     )
-    span = F.col("last_us") - F.col("first_us")
-    est = F.when(F.col("n_changes") == 0, F.lit(MAX_INTERVAL_US)).otherwise(
+    interval = F.when(F.col("n_changes") == 0, F.lit(max_interval)).otherwise(
         F.least(
             F.greatest(
-                F.expr("(last_us - first_us) div greatest(n_changes, 1)"),
-                F.lit(MIN_INTERVAL_US),
+                F.expr("(t_last - t_first) div greatest(n_changes, 1)"),
+                F.lit(min_interval),
             ),
-            F.lit(MAX_INTERVAL_US),
+            F.lit(max_interval),
         )
     )
+    return agg.withColumn("interval", interval)
+
+
+def q_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
+    obs = ev.withColumn("t_us", F.unix_micros(F.col("ts").cast("timestamp")))
+    agg = change_interval(
+        obs, "user_id", ["ts", "event_id"], "t_us", "value", MIN_INTERVAL_US, MAX_INTERVAL_US
+    )
+    due = F.col("t_last") + F.col("interval")
     return agg.select(
         "user_id",
         "n_obs",
         "n_changes",
-        span.alias("span_us"),
-        est.alias("interval_us"),
-        (F.col("last_us") + est).alias("next_due_us"),
-        ((F.col("last_us") + est) <= F.lit(REF_US)).cast("int").alias("due_now"),
+        (F.col("t_last") - F.col("t_first")).alias("span_us"),
+        F.col("interval").alias("interval_us"),
+        due.alias("next_due_us"),
+        (due <= F.lit(REF_US)).cast("int").alias("due_now"),
     )
 
 

@@ -113,13 +113,13 @@ def append_contributions(cat, links: DataFrame, round_no: int) -> int:
     )
 
 
-def read_scores(cat, snapshot: int | None = None) -> DataFrame:
+def read_scores(cat) -> DataFrame:
     """Merge-on-read view: the standing score per URL is the SUM of its
     logged contributions across every append so far. One groupBy over
     the log; admission joins the result (coalescing absent URLs to 0,
     operators/politeness.score_admitted)."""
     return (
-        cat.read(SCORES_TABLE, SCORES, snapshot=snapshot)
+        cat.read(SCORES_TABLE, SCORES)
         .groupBy("url_hash")
         .agg(F.sum("score").alias("score"))
     )

@@ -152,7 +152,6 @@ def lsh_hyperplanes(
     r_tables: int = NEARDUP_TABLES,
     bits: int = NEARDUP_BITS,
     dim: int = 64,
-    namespace: str = _LSH_NAMESPACE,
 ) -> list[list[list[int]]]:
     """[table][bit] -> ±1 hyperplane, bit i of sha256(ns:t:b) MSB-first."""
     import hashlib
@@ -161,7 +160,7 @@ def lsh_hyperplanes(
     for t in range(r_tables):
         tbl = []
         for b in range(bits):
-            d = hashlib.sha256(f"{namespace}:{t}:{b}".encode()).digest()
+            d = hashlib.sha256(f"{_LSH_NAMESPACE}:{t}:{b}".encode()).digest()
             tbl.append(
                 [1 if (d[i // 8] >> (7 - i % 8)) & 1 else -1 for i in range(dim)]
             )
@@ -180,7 +179,7 @@ def _lsh_bucket(qv: Column, planes_t: list[list[int]]) -> Column:
     return out.cast("int")
 
 
-def lsh_keys(vecs: DataFrame, planes: list[list[list[int]]] | None = None) -> DataFrame:
+def lsh_keys(vecs: DataFrame) -> DataFrame:
     """(vec_id, qv, ...) -> (vec_id, tbl, bucket): one row per hash
     table. Only ids and two small ints leave this projection — vectors
     never enter the candidate shuffle.
@@ -196,8 +195,7 @@ def lsh_keys(vecs: DataFrame, planes: list[list[list[int]]] | None = None) -> Da
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
 
-    planes = planes or lsh_hyperplanes()
-    P = np.array(planes, dtype=np.int64)  # (R, B, dim)
+    P = np.array(lsh_hyperplanes(), dtype=np.int64)  # (R, B, dim)
     r_tables, bits, dim = P.shape
     M = P.reshape(r_tables * bits, dim)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))

@@ -24,11 +24,12 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import Catalog
+from ..catalog import Catalog, write_atomic
 from ..config import CrawlConfig
 from ..functions.canonical import with_canonical
 from ..operators.politeness import synth_robots
@@ -152,10 +153,10 @@ class Crawl:
 
     def _replace_checkpoint(self, ckpt: dict) -> None:
         """Atomically replace the checkpoint JSON with ``ckpt``."""
-        tmp = self._ckpt_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ckpt, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._ckpt_path)
+        write_atomic(
+            self._ckpt_path,
+            lambda tmp: Path(tmp).write_text(json.dumps(ckpt, indent=1, sort_keys=True)),
+        )
 
     def _load_checkpoint(self) -> dict | None:
         if not os.path.exists(self._ckpt_path):
@@ -289,17 +290,18 @@ class Crawl:
                 )
         return ckpt["round"] + 1, bloom, cuckoo
 
-    def requeue_dead(self, reason: str = "max_attempts") -> int:
+    def requeue_dead(self) -> int:
         """Drain the dead-letter table back into the frontier — the
         reference's dead-queue drainers republish failed ids for another
         pass (channel_updater_dead at
         New_YouTube_Crawler_Channel_Updater_Error.py:31-56,
         video_crawler_dead at New_YouTube_Crawler_proxy_APP_Error.py:26-51).
-        Requeued rows restart with attempt=0; the dead table keeps only
-        the other reasons. Returns rows requeued."""
+        Only ``max_attempts`` rows are requeued; they restart with
+        attempt=0, and the dead table keeps the other reasons. Returns rows
+        requeued."""
         dead = self.cat.read("dead", DEAD)
-        requeue = dead.filter(F.col("reason") == reason)
-        keep = dead.filter(F.col("reason") != reason)
+        requeue = dead.filter(F.col("reason") == "max_attempts")
+        keep = dead.filter(F.col("reason") != "max_attempts")
         pending = self.cat.read("pending", FRONTIER)
         revived = requeue.select(*FRONTIER_COLS).withColumn(
             "attempt", F.lit(0).cast("int")

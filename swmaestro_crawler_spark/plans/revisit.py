@@ -7,9 +7,9 @@ Utils/Nox_Crawler.py / New_YouTube_Crawler.py). At 10^10 URLs a crawler
 estimates each page's change rate from its OWN fetch history instead
 (Cho & Garcia-Molina's refresh policies); the engine already has the
 history — the spans table accumulates one observation row per (url,
-round) — so the estimator is the same window + aggregation as
-``operators/scheduling.q_recrawl_schedule``, with the crawl round as the
-clock and ``xxhash64(to_json(spans))`` as the content fingerprint.
+round) — so the estimator is ``operators/scheduling.change_interval``,
+the one ``q_recrawl_schedule`` runs, with the crawl round as the clock
+and ``xxhash64(to_json(spans))`` as the content fingerprint.
 
 ``run_revisit`` is an auxiliary flow BETWEEN crawls, deliberately not
 wired into the main round loop (whose stop-on-seen semantics are
@@ -41,6 +41,7 @@ from ..operators.politeness import (
     split_admitted,
     split_robots_excluded,
 )
+from ..operators.scheduling import change_interval
 from ..schema import OBSERVATIONS, ROBOTS, SPANS_DOC
 from .round import (
     FRONTIER_COLS,
@@ -83,40 +84,25 @@ def revisit_schedule(
         obs = obs.unionByName(
             observations.select("doc_id", "host", "round", "content_fp")
         )
-    w = Window.partitionBy("doc_id").orderBy("round")
-    hist = obs.select(
+    agg = change_interval(
+        obs,
         "doc_id",
-        "host",
+        ["round"],
         "round",
-        (~F.col("content_fp").eqNullSafe(F.lag("content_fp").over(w)))
-        .cast("int")
-        .alias("chg"),
-        F.row_number().over(w).alias("rn"),
-    )
-    agg = hist.groupBy("doc_id").agg(
-        F.min("host").alias("host"),  # functionally dependent on doc_id; min is order-stable
-        F.count("*").alias("n_obs"),
-        F.sum(F.when(F.col("rn") > 1, F.col("chg")).otherwise(0)).alias("n_changes"),
-        F.min("round").alias("first_round"),
-        F.max("round").alias("last_round"),
-    )
-    est = F.when(F.col("n_changes") == 0, F.lit(MAX_INTERVAL_ROUNDS)).otherwise(
-        F.least(
-            F.greatest(
-                F.expr("(last_round - first_round) div greatest(n_changes, 1)"),
-                F.lit(MIN_INTERVAL_ROUNDS),
-            ),
-            F.lit(MAX_INTERVAL_ROUNDS),
-        )
+        "content_fp",
+        MIN_INTERVAL_ROUNDS,
+        MAX_INTERVAL_ROUNDS,
+        # functionally dependent on doc_id; min is order-stable
+        F.min("host").alias("host"),
     )
     return agg.select(
         "doc_id",
         "host",
         "n_obs",
         "n_changes",
-        "last_round",
-        est.cast("int").alias("interval_rounds"),
-        (F.col("last_round") + est).cast("int").alias("due_round"),
+        F.col("t_last").alias("last_round"),
+        F.col("interval").cast("int").alias("interval_rounds"),
+        (F.col("t_last") + F.col("interval")).cast("int").alias("due_round"),
     )
 
 

@@ -3,17 +3,20 @@
 A page is a PURE function of the canonical URL's xxhash64 (the same
 ``url_hash`` the engine already carries): the same URL always yields the
 same interleaved span document and outlinks. Both the engine's batch
-fetcher and the reference oracle call exactly this module, so crawl
-results are comparable byte-for-byte without a network.
+fetcher and the reference oracle build pages with the same generator,
+``payload_arrays`` (the oracle on one-element arrays, via ``page_for``),
+so both crawl one web and results are comparable byte-for-byte without
+a network.
 
 The page is materialized as a flat PAYLOAD string — span segments joined
 by ``\\x02``, each segment ``kind\\x01text\\x01media_ref`` — generated
-fully vectorized (numpy splitmix64 chains + pandas string kernels, no
-per-row Python). The ENGINE never parses it row-at-a-time in Python:
-span extraction runs as pure Arrow C compute kernels inside the fused
-``mapInArrow`` fetch stage (operators/spans.extract_spans_arrow —
-chosen over Spark HOF ``transform``, which is interpreted per element);
-only the oracle uses the scalar ``parse_payload``.
+fully vectorized (numpy splitmix64 chains + pyarrow.compute string
+kernels, no per-row Python). The ENGINE never parses it row-at-a-time
+in Python: span extraction runs as pure Arrow C compute kernels inside
+the fused ``mapInArrow`` fetch stage (operators/spans.extract_spans_arrow
+— chosen over Spark HOF ``transform``, which is interpreted per
+element); only the oracle uses the scalar ``parse_payload``, so span
+extraction stays checked by two independent implementations.
 
 Page shape mirrors what the reference harvests from one watch page:
 stats first (view/like counts yielded before comments,
@@ -32,7 +35,6 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 
 from ..config import CrawlConfig
 from ..functions.hashing import _splitmix64_np, stable64, xxhash64_str
@@ -44,7 +46,6 @@ VOCAB = [f"lorem{i:03d}" for i in range(64)] + [
     "crawl", "frontier", "span", "media", "video", "channel", "comment",
     "politeness", "robots", "bloom", "cuckoo", "shard", "replica", "quorum",
 ]
-_VOCAB_ARR = np.array(VOCAB)
 
 _MAX_TEXT = 5   # 1..5 text spans, each optionally followed by a media span
 _MAX_TAG = 2    # 0..2 tag spans
@@ -58,17 +59,6 @@ _MAX_LINK = 8   # 2..8 link spans
 # comments, tags and cross-host related links. Any other path (e.g. /p/)
 # uses the watch template.
 KIND_CHANNEL, KIND_PLAYLIST, KIND_WATCH = 0, 1, 2
-_KIND_PREFIX = {KIND_CHANNEL: "/ch/", KIND_PLAYLIST: "/pl/", KIND_WATCH: "/w/"}
-
-
-def kind_codes(urls: pd.Series) -> np.ndarray:
-    """Vectorized page-kind from the URL path prefix."""
-    path_kind = urls.str.extract(r"://[^/]*/(ch|pl|w)/", expand=False)
-    return (
-        path_kind.map({"ch": KIND_CHANNEL, "pl": KIND_PLAYLIST, "w": KIND_WATCH})
-        .fillna(KIND_WATCH)
-        .to_numpy(dtype=np.int64)
-    )
 
 
 @lru_cache(maxsize=8)
@@ -108,10 +98,6 @@ def _u01(x: np.ndarray) -> np.ndarray:
 
 def _uh(url_hash) -> np.ndarray:
     return np.asarray(url_hash, dtype=np.int64).view(np.uint64)
-
-
-def _hexcol(x: np.ndarray, width: int) -> pd.Series:
-    return pd.Series(np.char.mod(f"%0{width}x", x))
 
 
 FATAL_CODES = (403, 413)  # reference: ajax_request returns {} immediately
@@ -180,146 +166,6 @@ def parse_work(url_hash, iters: int) -> int:
     return int(x[0] & np.uint64(1))
 
 
-def payload_series(
-    url_hash, own_host, cfg: CrawlConfig, kind_code=None
-) -> tuple[pd.Series, pd.Series]:
-    """url_hash + own host (+ page kind) -> (payload, links) strings,
-    fully vectorized.
-
-    Span order within a page: stat, then (text, media?)*, tags, links —
-    the reference's stats-before-content document order. ``links`` is the
-    outlink targets alone (SPANSEP-joined), pre-extracted so frontier
-    expansion reads a flat column instead of re-parsing the payload.
-
-    Kind templates (see KIND_* above): channel = subscriber stat, 2 text
-    spans, avatar media, 2-4 own-host playlist links; playlist = item
-    stat, 1 text span, 4-8 own-host watch links + a 50% next-page
-    continuation (the reference's LIFO pagination, O2); watch = the
-    view/like stat, 1-5 text spans with thumbnails, tags, 2-8 related
-    watch links (cross-host 50%)."""
-    h = _uh(url_hash)
-    n = len(h)
-    if n == 0:
-        return pd.Series([], dtype=object), pd.Series([], dtype=object)
-    kc = (
-        np.full(n, KIND_WATCH, dtype=np.int64)
-        if kind_code is None
-        else np.asarray(kind_code, dtype=np.int64)
-    )
-    is_ch, is_pl = kc == KIND_CHANNEL, kc == KIND_PLAYLIST
-
-    slots: list[pd.Series] = []
-
-    views = _mix(h, 1) % np.uint64(1_000_000)
-    likes = _mix(h, 2) % np.uint64(10_000)
-    dislikes = _mix(h, 3) % np.uint64(1_000)
-    watch_stat = (
-        "views=" + pd.Series(views.astype(str))
-        + " likes=" + pd.Series(likes.astype(str))
-        + " dislikes=" + pd.Series(dislikes.astype(str))
-    )
-    ch_stat = (
-        "subscribers=" + pd.Series(views.astype(str))
-        + " videos=" + pd.Series(likes.astype(str))
-    )
-    pl_stat = "items=" + pd.Series(likes.astype(str))
-    stat = "stat" + FIELD + watch_stat.where(~is_ch, ch_stat).where(~is_pl, pl_stat) + FIELD
-    slots.append(stat)
-
-    n_text = (_mix(h, 4) % np.uint64(_MAX_TEXT)).astype(np.int64) + 1  # 1..5
-    n_text = np.where(is_ch, 2, np.where(is_pl, 1, n_text))
-    cdf = _zipf_cdf(cfg.synth_n_hosts, ZIPF_S)
-    host_arr = np.asarray(hosts(cfg.synth_n_hosts))
-    for j in range(_MAX_TEXT):
-        w0 = _VOCAB_ARR[(_mix(h, 10 + 4 * j) % np.uint64(len(VOCAB))).astype(np.int64)]
-        w1 = _VOCAB_ARR[(_mix(h, 11 + 4 * j) % np.uint64(len(VOCAB))).astype(np.int64)]
-        w2 = _VOCAB_ARR[(_mix(h, 12 + 4 * j) % np.uint64(len(VOCAB))).astype(np.int64)]
-        tok = _hexcol(_mix(h, 13 + 4 * j) % np.uint64(1 << 32), 8)
-        text = (
-            "text" + FIELD + pd.Series(w0) + " " + pd.Series(w1) + " " + pd.Series(w2)
-            + " w" + tok + FIELD
-        )
-        slots.append(text.where(j < n_text, ""))
-
-        media = (
-            "media" + FIELD + FIELD + "http://cdn.example.com/img/"
-            + _hexcol(_mix(h, 30 + j) % np.uint64(1 << 40), 10) + ".jpg"
-        )
-        # watch: 40% thumbnail per text span; channel: avatar after the
-        # first text span; playlist: no media
-        has_media = (j < n_text) & np.where(
-            is_ch, j == 0, np.where(is_pl, False, _u01(_mix(h, 80 + j)) < 0.4)
-        )
-        slots.append(media.where(has_media, ""))
-
-    n_tag = (_mix(h, 5) % np.uint64(_MAX_TAG + 1)).astype(np.int64)  # 0..2
-    n_tag = np.where(kc == KIND_WATCH, n_tag, 0)  # og:video:tag on watch only
-    for j in range(_MAX_TAG):
-        tag = "tag" + FIELD + pd.Series(
-            _VOCAB_ARR[(_mix(h, 40 + j) % np.uint64(len(VOCAB))).astype(np.int64)]
-        ) + FIELD
-        slots.append(tag.where(j < n_tag, ""))
-
-    n_link = (_mix(h, 6) % np.uint64(_MAX_LINK - 1)).astype(np.int64) + 2  # 2..8
-    n_link = np.where(
-        is_ch,
-        (_mix(h, 7) % np.uint64(3)).astype(np.int64) + 2,   # 2..4 playlists
-        np.where(is_pl, (_mix(h, 8) % np.uint64(5)).astype(np.int64) + 4, n_link),
-    )
-    own = pd.Series(np.asarray(own_host, dtype=object))
-    link_targets: list[pd.Series] = []
-    for j in range(_MAX_LINK):
-        # cross-host related links exist only on watch pages
-        cross = (kc == KIND_WATCH) & (_u01(_mix(h, 50 + j)) >= 0.5)
-        tgt_host = own.where(
-            ~cross,
-            pd.Series(host_arr[np.searchsorted(cdf, _u01(_mix(h, 60 + j)))]),
-        )
-        # target path prefix by page kind: channels link to playlists;
-        # playlists link to watches except a 50% last-slot next-page
-        # continuation (/pl/); watches link to watches
-        is_next_page = is_pl & (j == (n_link - 1)) & (_u01(_mix(h, 9)) < 0.5)
-        prefix = pd.Series(np.where(is_ch, "/pl/", np.where(is_next_page, "/pl/", "/w/")))
-        # watch targets draw from a (possibly small) per-host id POOL so the
-        # same video appears in many playlists/pages — the sharing that makes
-        # the reference's stop-on-seen pagination cutoff meaningful;
-        # playlist targets stay in the wide space (chains are unique)
-        tgt_space = np.where(
-            is_ch | is_next_page, np.uint64(1 << 48), np.uint64(cfg.synth_watch_pool)
-        )
-        target = (
-            "http://" + tgt_host + prefix
-            + _hexcol(_mix(h, 70 + j) % tgt_space, 12)
-        )
-        target = target.where(j < n_link, "")
-        link_targets.append(target)
-        link = "link" + FIELD + FIELD + target
-        slots.append(link.where(j < n_link, ""))
-
-    def _collapse(s: pd.Series) -> pd.Series:
-        # collapse absent slots: runs of the separator -> one, strip ends
-        return s.str.replace(f"{SPANSEP}+", SPANSEP, regex=True).str.strip(SPANSEP)
-
-    payload = _collapse(slots[0].str.cat(slots[1:], sep=SPANSEP))
-    links = _collapse(link_targets[0].str.cat(link_targets[1:], sep=SPANSEP))
-    return payload, links
-
-
-# ---------------------------------------------------------------------------
-# Arrow fast path: the same page function over contiguous Arrow buffers.
-#
-# ``payload_series`` above builds ~45 object-dtype pandas Series by
-# per-row Python string concatenation — ~10M PyUnicode allocations per
-# 62.5k-row batch. Single-threaded that is merely slow (~125 us/URL);
-# under 32 concurrent Python workers the allocator/heap traffic is pure
-# memory-bandwidth pressure, which on a shared box is the resource that
-# does NOT scale with cores (BENCH/BASELINE.md bandwidth attribution).
-# ``payload_arrays`` produces byte-identical strings with pyarrow.compute
-# kernels (binary_join_element_wise / if_else / take over contiguous
-# string buffers), keeping the fetch hot path entirely out of the Python
-# object heap. Parity with the pandas reference implementation is pinned
-# by tests/test_synth_web.py::test_payload_arrays_parity.
-# ---------------------------------------------------------------------------
 _HEX_TAB = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
 
 
@@ -352,8 +198,8 @@ def _vocab_pa():
 
 
 def kind_codes_pa(urls) -> np.ndarray:
-    """Vectorized page-kind over an Arrow string array (same mapping as
-    ``kind_codes`` but no object-string materialization)."""
+    """Vectorized page-kind from the URL path prefix of an Arrow string
+    array; any other path uses the watch template."""
     import pyarrow.compute as pc
 
     m = pc.struct_field(pc.extract_regex(urls, r"://[^/]*/(?P<k>ch|pl|w)/"), 0)
@@ -365,9 +211,23 @@ def kind_codes_pa(urls) -> np.ndarray:
 
 
 def payload_arrays(url_hash, own_host, cfg: CrawlConfig, kind_code=None):
-    """Arrow-native ``payload_series``: identical (payload, links) strings
-    as pa.Array<string>. ``own_host`` may be a pa string array (zero-copy
-    from the fetch batch) or any object-string sequence."""
+    """url_hash + own host (+ page kind) -> (payload, links) as
+    pa.Array<string>, built with pyarrow.compute kernels over contiguous
+    string buffers (no per-row Python strings). ``own_host`` may be a pa
+    string array (zero-copy from the fetch batch) or any object-string
+    sequence.
+
+    Span order within a page: stat, then (text, media?)*, tags, links —
+    the reference's stats-before-content document order. ``links`` is the
+    outlink targets alone (SPANSEP-joined), pre-extracted so frontier
+    expansion reads a flat column instead of re-parsing the payload.
+
+    Kind templates (see KIND_* above): channel = subscriber stat, 2 text
+    spans, avatar media, 2-4 own-host playlist links; playlist = item
+    stat, 1 text span, 4-8 own-host watch links + a 50% next-page
+    continuation (the reference's LIFO pagination, O2); watch = the
+    view/like stat, 1-5 text spans with thumbnails, tags, 2-8 related
+    watch links (cross-host 50%)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -383,9 +243,8 @@ def payload_arrays(url_hash, own_host, cfg: CrawlConfig, kind_code=None):
     )
     is_ch, is_pl = kc == KIND_CHANNEL, kc == KIND_PLAYLIST
     is_ch_pa, is_pl_pa = pa.array(is_ch), pa.array(is_pl)
-    # absent slots become NULL and the final join skips them — exactly the
-    # pandas path's collapse-runs-of-separator + strip semantics (a present
-    # slot is never the empty string), without the extra regex+trim passes
+    # absent slots become NULL and the final join skips them (a present
+    # slot is never the empty string, so no separator runs form)
     empty = pa.scalar(None, type=pa.string())
     nv = np.uint64(len(VOCAB))
     vocab = _vocab_pa()
@@ -427,13 +286,15 @@ def payload_arrays(url_hash, own_host, cfg: CrawlConfig, kind_code=None):
             _hex_pa(_mix(h, 30 + j) % np.uint64(1 << 40), 10),
             ".jpg",
         )
+        # watch: 40% thumbnail per text span; channel: avatar after the
+        # first text span; playlist: no media
         has_media = (j < n_text) & np.where(
             is_ch, j == 0, np.where(is_pl, False, _u01(_mix(h, 80 + j)) < 0.4)
         )
         slots.append(pc.if_else(pa.array(has_media), media, empty))
 
     n_tag = (_mix(h, 5) % np.uint64(_MAX_TAG + 1)).astype(np.int64)  # 0..2
-    n_tag = np.where(kc == KIND_WATCH, n_tag, 0)
+    n_tag = np.where(kc == KIND_WATCH, n_tag, 0)  # og:video:tag on watch only
     for j in range(_MAX_TAG):
         tag = cat("tag" + FIELD, vtake(_mix(h, 40 + j) % nv), FIELD)
         slots.append(pc.if_else(pa.array(j < n_tag), tag, empty))
@@ -452,6 +313,7 @@ def payload_arrays(url_hash, own_host, cfg: CrawlConfig, kind_code=None):
     next_roll = _u01(_mix(h, 9)) < 0.5
     link_targets = []
     for j in range(_MAX_LINK):
+        # cross-host related links exist only on watch pages
         cross = (kc == KIND_WATCH) & (_u01(_mix(h, 50 + j)) >= 0.5)
         tgt_host = pc.if_else(
             pa.array(cross),
@@ -461,8 +323,15 @@ def payload_arrays(url_hash, own_host, cfg: CrawlConfig, kind_code=None):
             ),
             own_pa,
         )
+        # target path prefix by page kind: channels link to playlists;
+        # playlists link to watches except a 50% last-slot next-page
+        # continuation (/pl/); watches link to watches
         is_next_page = is_pl & (j == (n_link - 1)) & next_roll
         prefix = pc.if_else(pa.array(is_ch | is_next_page), pa.scalar("/pl/"), pa.scalar("/w/"))
+        # watch targets draw from a (possibly small) per-host id POOL so the
+        # same video appears in many playlists/pages — the sharing that makes
+        # the reference's stop-on-seen pagination cutoff meaningful;
+        # playlist targets stay in the wide space (chains are unique)
         tgt_space = np.where(
             is_ch | is_next_page, np.uint64(1 << 48), np.uint64(cfg.synth_watch_pool)
         )
@@ -502,14 +371,15 @@ def _host_of(url: str) -> str:
 
 def page_for(url: str, cfg: CrawlConfig) -> dict:
     """Pure URL -> parsed page (scalar path for the oracle/tests)."""
-    h = np.array([xxhash64_str(url)], dtype=np.int64)
-    payload, _ = payload_series(
-        h,
-        np.array([_host_of(url)], dtype=object),
+    import pyarrow as pa
+
+    payload, _ = payload_arrays(
+        np.array([xxhash64_str(url)], dtype=np.int64),
+        [_host_of(url)],
         cfg,
-        kind_codes(pd.Series([url])),
+        kind_codes_pa(pa.array([url], type=pa.string())),
     )
-    return parse_payload(payload.iloc[0])
+    return parse_payload(payload[0].as_py())
 
 
 def status_code(url: str, attempt: int, cfg: CrawlConfig) -> int:

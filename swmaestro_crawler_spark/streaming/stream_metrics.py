@@ -39,21 +39,21 @@ STREAM_STATE_PARTITIONS = 8
 
 
 @contextmanager
-def drain_confs(spark: SparkSession, state_partitions: int = STREAM_STATE_PARTITIONS,
-                skip_no_data_batch: bool = True):
+def drain_confs(spark: SparkSession):
     """Session confs for a bounded availableNow drain, restored on exit.
 
-    ``skip_no_data_batch`` disables the trailing empty micro-batch
-    (``noDataMicroBatches``). That batch exists to advance the watermark
-    for state EVICTION and timeout processing; none of the drains here
+    ``STREAM_STATE_PARTITIONS`` state partitions, and no trailing empty
+    micro-batch (``noDataMicroBatches``). That batch exists to advance
+    the watermark for state EVICTION and timeout processing; none of the drains here
     need it for OUTPUT — inner interval joins and append-mode
     dropDuplicates emit in the data batch itself, complete-mode
     aggregations re-emit per data batch, and the sessionizer uses
     NoTimeout — so skipping it saves a full per-instance state commit
     round (~5 s at 128 instances) without changing a row."""
-    confs = {"spark.sql.shuffle.partitions": str(state_partitions)}
-    if skip_no_data_batch:
-        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    confs = {
+        "spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
     saved: dict[str, str | None] = {}
     for k, v in confs.items():
         try:

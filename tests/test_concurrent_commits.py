@@ -5,7 +5,11 @@ reclaimed (the resume path after kill -9 mid-commit)."""
 
 from __future__ import annotations
 
+import fcntl
 import os
+import signal
+import subprocess
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -102,12 +106,35 @@ def test_merge_conflict_raises(spark, tmp_path):
 
 
 def test_dead_holder_lock_is_reclaimed(spark, tmp_path):
+    """A holder SIGKILLed while it holds the commit lock does not block
+    the next commit: the kernel drops its flock."""
     cat = Catalog(spark, str(tmp_path / "wh"))
-    os.makedirs(cat._dir("t"), exist_ok=True)
-    lock = os.path.join(cat._dir("t"), "_commit.lock")
-    with open(lock, "w") as f:
-        f.write("999999999")  # pid that cannot exist
+    lock = cat._dir("t")  # the lock is a flock on the table directory
+    os.makedirs(lock, exist_ok=True)
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import fcntl, os, sys, time\n"
+            "fcntl.flock(os.open(sys.argv[1], os.O_RDONLY), fcntl.LOCK_EX)\n"
+            "print('locked', flush=True)\n"
+            "time.sleep(600)\n",
+            lock,
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        fd = os.open(lock, os.O_RDONLY)
+        try:
+            with pytest.raises(BlockingIOError):  # really held
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        finally:
+            os.close(fd)
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait(timeout=30)
     df = spark.range(5).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    cat.append("t", df)  # must not TimeoutError
+    cat.append("t", df)
     assert cat.read("t", SCHEMA).count() == 5
-    assert not os.path.exists(lock)

@@ -114,37 +114,6 @@ def test_date_label_normalization(spark):
     ]
 
 
-def test_arrow_comment_kernel_equals_codegen(spark):
-    """The Arrow C-kernel bulk path (extract_comments_arrow, for use
-    inside mapInArrow fetch stages) must produce exactly what the
-    codegen extract_comments expression produces — on the literal
-    fixture AND on the full synthetic page corpus."""
-    import pyarrow as pa
-
-    from swmaestro_crawler_spark.functions.html_extract import (
-        build_watch_html,
-        extract_comments_arrow,
-    )
-
-    # literal fixture
-    got = extract_comments_arrow(pa.array([PAGE, "", "<html>no comments</html>"]))
-    assert got.to_pylist() == [["great video", "nice one (edited)"], [], []]
-
-    # corpus: codegen vs Arrow on the same built pages
-    df = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", build_watch_html(F.col("doc_id")).alias("html"))
-        .orderBy("doc_id")
-    )
-    codegen = [
-        r.c for r in df.select(extract_comments(F.col("html")).alias("c")).collect()
-    ]
-    arrow = extract_comments_arrow(
-        pa.array([r.html for r in df.select("html").collect()])
-    ).to_pylist()
-    assert arrow == codegen
-
-
 def test_kernels_are_codegen_not_python(spark):
     """The whole extraction must stay JVM-side: no BatchEvalPython /
     ArrowEvalPython nodes in the plan."""

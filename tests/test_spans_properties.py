@@ -55,9 +55,10 @@ def test_kernel_empty_batch_and_empty_payloads():
 
 
 # ---------------------------------------------------------------------------
-# same treatment for the Arrow HTML comment kernel: random pages with
-# replies, missing text spans, and junk between items, against a scalar
-# mirror of the extraction semantics
+# same treatment for the codegen HTML comment harvest
+# (functions/html_extract.extract_comments): random pages with replies,
+# missing text spans, and junk between items, against a scalar mirror of
+# the extraction semantics
 # ---------------------------------------------------------------------------
 
 _ITEM = '<div class="comment-item" data-cid="'
@@ -96,8 +97,15 @@ def comment_pages(draw):
 
 @settings(max_examples=150, deadline=None)
 @given(st.lists(comment_pages(), min_size=1, max_size=6))
-def test_arrow_comment_kernel_matches_scalar_mirror(batch):
-    from swmaestro_crawler_spark.functions.html_extract import extract_comments_arrow
+def test_comment_harvest_matches_scalar_mirror(spark, batch):
+    from pyspark.sql import functions as F
 
-    got = extract_comments_arrow(pa.array(batch, type=pa.string())).to_pylist()
+    from swmaestro_crawler_spark.functions.html_extract import extract_comments
+
+    rows = (
+        spark.createDataFrame(list(enumerate(batch)), "i int, html string")
+        .select("i", extract_comments(F.col("html")).alias("c"))
+        .collect()
+    )
+    got = [r.c for r in sorted(rows, key=lambda r: r.i)]
     assert got == [_scalar_comments(h) for h in batch], batch
