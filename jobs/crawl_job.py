@@ -32,14 +32,11 @@ def main() -> None:
     ap.add_argument("--n-hosts", type=int, default=200)
     ap.add_argument("--local-cores", type=int, default=None,
                     help="run on local[N] (omit under a real cluster master)")
-    ap.add_argument("--score-admission", choices=("round", "table"), default=None,
+    ap.add_argument("--score-admission", action="store_true",
                     help="spend each host's budget on the highest "
-                    "link-scored URLs first (OPIC in-link mass) instead of "
-                    "LIFO: recomputed each round, or kept as the standing "
-                    "O(delta) contribution log")
-    ap.add_argument("--score-compact-every", type=int, default=0,
-                    help="with --score-admission table: auto-compact the "
-                    "score log every N rounds (0=never)")
+                    "link-scored URLs first (OPIC in-link mass, kept as a "
+                    "standing O(delta) contribution log that compacts "
+                    "itself) instead of LIFO")
     ap.add_argument("--cuckoo-buckets", type=int, default=None,
                     help="enable the cuckoo seen tier with 2^k buckets/shard "
                     "(pass the bucket count, e.g. 32768)")
@@ -96,7 +93,6 @@ def main() -> None:
         synth_n_hosts=args.n_hosts,
         warehouse=args.warehouse,
         score_admission=args.score_admission,
-        score_compact_every=args.score_compact_every,
         cuckoo_buckets=args.cuckoo_buckets,
         synth_redirect_prob=args.redirect_prob,
         adaptive_backoff=args.adaptive_backoff,

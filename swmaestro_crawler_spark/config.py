@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import ClassVar, Literal
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
@@ -98,10 +98,8 @@ class CrawlConfig:
             raise ValueError("synth_redirect_same must be in [0, 1]")
         if self.max_redirect_hops < 1:
             raise ValueError("max_redirect_hops must be >= 1")
-        if self.score_admission not in (None, "round", "table"):
-            raise ValueError("score_admission must be None, 'round' or 'table'")
-        if self.score_compact_every > 0 and self.score_admission != "table":
-            raise ValueError("score_compact_every needs score_admission='table'")
+        if not isinstance(self.score_admission, bool):
+            raise ValueError("score_admission must be a bool")
 
     # synthetic web (sandbox transport; swap for an HTTP fetcher in prod)
     synth_n_hosts: int = 200
@@ -150,31 +148,19 @@ class CrawlConfig:
 
     # importance-first admission: spend each host's politeness budget on
     # the most-linked pending URLs first (OPIC in-link mass,
-    # operators/scoretable.opic_contributions, which orders URLs as one
-    # PageRank superstep does) instead of the reference's LIFO order.
-    # None (default) keeps LIFO — crawl-order parity vs the reference
-    # oracle is a correctness criterion; the scored order is int64-exact
-    # and therefore still deterministic at any parallelism (pinned by
-    # tests/test_score_admission.py and tests/test_score_table.py).
-    #   "round": recompute the score from the round's pending parent->url
-    #            edges.
-    #   "table": standing score table (operators/scoretable): OPIC
-    #            contributions append per round (O(delta) — outdeg(parent)
-    #            is final at emission because a parent is fetched exactly
-    #            once), read merge-on-read (groupBy sum), compacted on
-    #            demand. A deferred URL keeps the in-link mass frontier
-    #            dedup would otherwise drop with its duplicate rows.
-    score_admission: Literal["round", "table"] | None = None
-
-    # Auto-compact the score-contribution log every N rounds (0 = only
-    # on demand via scoretable.compact_scores; > 0 needs
-    # score_admission="table"). The log otherwise grows one snapshot per
-    # round forever; compaction collapses it to one pre-summed row per
-    # URL. Read-invariant (sum is associative), so any admission decision
-    # — and therefore every crawl digest other than the link_scores file
-    # bytes themselves — is unchanged at any setting (pinned by
+    # operators/scoretable, which orders URLs as one PageRank superstep
+    # does) instead of the reference's LIFO order. Admission reads the
+    # standing score table: OPIC contributions append per round (O(delta)
+    # — outdeg(parent) is final at emission because a parent is fetched
+    # exactly once), read merge-on-read (groupBy sum), so a deferred URL
+    # keeps the in-link mass frontier dedup drops with its duplicate
+    # rows. The round's scores job compacts the log itself, before the
+    # round's checkpoint (scoretable.append_contributions). False
+    # (default) keeps LIFO — crawl-order parity vs the reference oracle
+    # is a correctness criterion; the scored order is int64-exact and
+    # therefore still deterministic at any parallelism (pinned by
     # tests/test_score_table.py).
-    score_compact_every: int = 0
+    score_admission: bool = False
 
 
 def spark_builder(app: str, master: str | None = None, shuffle_partitions: int = 32):

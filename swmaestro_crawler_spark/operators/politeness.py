@@ -284,68 +284,26 @@ def url_template(url):
     """Digit runs collapsed to a placeholder — calendar pages, session-id
     query strings, and paginated facets all collapse onto one template
     (the offline analytics in operators/urlspace.py template with it
-    too, so the trap flags mined on the standing crawl_order table apply
-    directly to admission)."""
+    too, so its trap telemetry names the templates the guard caps)."""
     return F.regexp_replace(url, "[0-9]+", TEMPLATE_PLACEHOLDER)
 
 
-def mine_trap_templates(
-    crawled: DataFrame, min_urls: int = 1000
-) -> DataFrame:
-    """(host, template) pairs whose standing URL cardinality crossed
-    ``min_urls`` — mined from any frame carrying (host, url), typically
-    the crawl_order table (the engine's own history; the offline twin
-    with share/trap telemetry is operators/urlspace.q_url_trap_templates).
-    Feed the result to ``cap_per_template(templates=...)`` to throttle
-    ONLY proven traps while every other template admits freely."""
-    return (
-        crawled.groupBy("host", url_template(F.col("url")).alias("template"))
-        .agg(F.countDistinct("url").alias("n_urls"))
-        .filter(F.col("n_urls") >= min_urls)
-        .select("host", "template")
-    )
-
-
 def cap_per_template(
-    frontier: DataFrame,
-    cfg: CrawlConfig,
-    templates: DataFrame | None = None,
+    frontier: DataFrame, cfg: CrawlConfig
 ) -> tuple[DataFrame, DataFrame]:
     """(kept, overflow): at most ``cfg.trap_template_cap`` frontier rows
     per (host, URL template) proceed to politeness admission per round;
     the overflow stays pending (it is re-considered next round, so a
-    mis-flagged template is throttled, never dropped — and a true trap
+    template that is no trap is throttled, never dropped — and a true trap
     is bounded to cap x rounds URLs instead of devouring the frontier).
 
     Skew-safety is the same two-phase top-k as admission (``_top_k``):
     a trap template IS the hot key by definition, so phase 1 spreads it
     over ``ADMISSION_SALTS`` reducers and phase 2 ranks only the bounded
     survivors exactly. Ordering is the engine priority key, so the kept
-    set is deterministic at any cluster size.
-
-    With ``templates`` (a (host, template) frame, e.g. from
-    ``mine_trap_templates`` over the crawl history), ONLY flagged
-    templates are capped: unflagged rows bypass both windows entirely
-    (a left-semi/anti split on the broadcast flag table — the mined
-    trap list is tiny by construction), so the steady-state cost of the
-    guard is one broadcast probe, not a frontier-wide window."""
+    set is deterministic at any cluster size."""
     cap = F.lit(int(cfg.trap_template_cap))
     tpl = url_template(F.col("url"))
-    if templates is not None:
-        flagged = F.broadcast(templates.select("host", F.col("template")))
-        keyed = frontier.withColumn("_tpl", tpl)
-        guarded = keyed.join(
-            flagged,
-            (keyed["host"] == flagged["host"]) & (keyed["_tpl"] == flagged["template"]),
-            "left_semi",
-        ).drop("_tpl")
-        bypass = keyed.join(
-            flagged,
-            (keyed["host"] == flagged["host"]) & (keyed["_tpl"] == flagged["template"]),
-            "left_anti",
-        ).drop("_tpl")
-        kept, overflow = cap_per_template(guarded, cfg)
-        return bypass.unionByName(kept), overflow
     return _top_k(frontier, [F.col("host"), tpl], priority_order(), cap)
 
 

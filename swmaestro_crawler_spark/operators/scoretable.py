@@ -1,19 +1,20 @@
-"""Incremental link-score maintenance: the frontier scheduler's state as
-a merge-on-read catalog table.
+"""Incremental link-score maintenance: the importance-first scheduler's
+state as a merge-on-read catalog table.
 
 The OPIC score is score(url) = Σ_{p->url} PR_SCALE div outdeg(p), the
 outdegree-normalized in-link mass (``opic_contributions``). With
-``score_admission="round"`` the round recomputes it from the pending
-table every round. That has two limits at 10^10-URL scale:
+``CrawlConfig.score_admission`` each round's admission reads the
+standing sum (``read_scores``) and the round's scores job appends the
+round's delta (``append_contributions``). A standing table, not a
+per-round recompute from the pending table, because:
 
-1. **Deferral loses mass.** Admission dedups the frontier to one row per
-   URL (plans/round.dedup_frontier), so a URL that defers re-enters the
-   next round's pending with ONE surviving parent edge — its other
-   inlinks stop counting. The standing table accumulates every
-   discovered edge's contribution exactly once, so a much-linked URL
-   keeps its full rank however long the politeness budget defers it.
-2. **Recompute scales with the graph, not the delta.** Per-round work
-   should be proportional to the round's discoveries.
+1. **Deferral keeps its mass.** Admission dedups the frontier to one row
+   per URL (plans/round.dedup_frontier), so a URL that defers re-enters
+   the next round's pending with ONE surviving parent edge. The table
+   accumulates every discovered edge's contribution exactly once, so a
+   much-linked URL keeps its full rank however long the politeness
+   budget defers it.
+2. **Per-round work scales with the delta, not the graph.**
 
 The increment is exact, not approximate, because of a crawl invariant:
 **a parent's outlinks are all emitted in the single round it was
@@ -28,9 +29,14 @@ copy-on-write MERGE would rewrite essentially every file every round
 (min/max pruning is useless on uniform keys — the same reason the seen
 table uses per-file blooms, catalog.py read_point). Instead the table is
 an APPEND-ONLY contribution log read merge-on-read (groupBy sum at
-read), with ``compact_scores`` collapsing the log to one row per URL
-when it grows — the LSM/Iceberg-aggregate pattern: O(delta) writes per
-round, rewrite amortized into compaction.
+read). The append compacts the log itself by the LSM doubling rule:
+once the log holds at least twice the rows its last rewrite wrote,
+``compact_scores`` collapses it to one row per URL. At least half of
+what a compaction rewrites was appended since the previous one, so
+compaction writes total <= 2x the appended rows, and no round ends with
+the log at twice its compacted rows. Both commits land in the round's
+scores job, before its checkpoint: a crash rolls back both, and the
+re-run repeats both (the rule reads only footers and snapshot meta).
 
 Reference anchor: the reference has no link-importance scheduling at all
 (LIFO frontier pop, New_YouTube_Crawler.py frontier handling); this is
@@ -90,7 +96,7 @@ def url_graph(crawled: DataFrame) -> DataFrame:
 def opic_contributions(links: DataFrame) -> DataFrame:
     """(url_hash, score): ``opic_contributions_keyed`` over the
     ``url_graph`` of discovered ``(url, parent)`` pairs. Over one round's
-    pending table this is the per-round admission score. Its ORDERING is
+    new outlinks this is the round's contribution delta. Its ORDERING is
     that of one full PageRank superstep (rank = PR_BASE + (85·inbox)
     div 100 is monotone in inbox, and unscored URLs coalesce to 0 below
     every scored one in score_admitted), in 3 shuffles of the edge list
@@ -100,17 +106,27 @@ def opic_contributions(links: DataFrame) -> DataFrame:
 
 def append_contributions(cat, links: DataFrame, round_no: int) -> int:
     """Append one round's contribution delta as a snapshot (O(delta)
-    write; no existing file touched). One file, sorted on the (unique)
-    url_hash: the aggregate's own output order follows its physical plan
-    — AQE's runtime choices, and whether the round's persisted outlinks
-    were already cached when the plan was made — so only an explicit
-    order makes the written bytes a function of the rows (byte-identical
-    resume, like every other bookkeeping write)."""
-    return cat.append(
+    write; no existing file touched), then compact the log if it now
+    holds at least twice its last rewrite's rows (module docstring).
+    Returns the last snapshot id. The append is one file sorted on the
+    (unique) url_hash: the aggregate's own output order follows its
+    physical plan — AQE's runtime choices, and whether the round's
+    persisted outlinks were already cached when the plan was made — so
+    only an explicit order makes the written bytes a function of the
+    rows (byte-identical resume, like every other bookkeeping write)."""
+    # the last rewrite's rows, 0 before the first: a rewrite snapshot (a
+    # compaction, the crawl's empty bootstrap snapshot) records them as
+    # its rows_delta, every append carries them forward as base_rows
+    sid = cat.current_snapshot(SCORES_TABLE)
+    meta = cat.snapshot_meta(SCORES_TABLE, sid) if sid >= 0 else {}
+    base = meta.get("base_rows", meta.get("rows_delta", 0))
+    sid = cat.append(
         SCORES_TABLE,
         opic_contributions(links).repartition(1).sortWithinPartitions("url_hash"),
-        meta={"round": round_no},
+        meta={"round": round_no, "base_rows": base},
     )
+    rows = cat.row_count(SCORES_TABLE)  # footer counts, no Spark job
+    return compact_scores(cat, round_no) if rows and rows >= 2 * base else sid
 
 
 def read_scores(cat) -> DataFrame:
@@ -125,15 +141,16 @@ def read_scores(cat) -> DataFrame:
     )
 
 
-def compact_scores(cat) -> int:
+def compact_scores(cat, round_no: int) -> int:
     """Collapse the contribution log to one pre-summed row per URL (a new
-    snapshot; old ones stay time-travelable). Read results are identical
-    before and after — sum is associative — so compaction can run
-    whenever the log's read amplification warrants it."""
+    ``op: compact`` snapshot of round ``round_no``; old ones stay
+    time-travelable). Read results are identical before and after — sum
+    is associative."""
     compacted = read_scores(cat).repartition("url_hash").sortWithinPartitions(
         "url_hash"
     )
-    return cat.overwrite(SCORES_TABLE, compacted, stat_cols=["url_hash"])
+    meta = {"op": "compact", "round": round_no}
+    return cat.overwrite(SCORES_TABLE, compacted, meta, stat_cols=["url_hash"])
 
 
 def q_opic_score_table(spark, sf_dir: str) -> DataFrame:
@@ -190,7 +207,7 @@ def q_opic_score_table(spark, sf_dir: str) -> DataFrame:
             meta={"round": yr},
         )
         if i == len(years) // 2:
-            compact_scores(cat)
+            compact_scores(cat, yr)
     pre.unpersist()
     return read_scores(cat)
 

@@ -220,7 +220,7 @@ class Crawl:
         ):
             # materialize an empty snapshot 0 so resume rollback has a target
             self.cat.overwrite_stage(t, self.cat.new_stage(t))
-        if self.cfg.score_admission == "table":
+        if self.cfg.score_admission:
             # edges injected with the bootstrap frontier are discoveries
             # too: log their OPIC contributions so round 0's admission
             # already ranks by them (operators/scoretable)
@@ -366,16 +366,4 @@ class Crawl:
             self._write_checkpoint(
                 r, bloom, cuckoo.tables if cuckoo is not None else None
             )
-            if (
-                self.cfg.score_compact_every
-                and (r + 1) % self.cfg.score_compact_every == 0
-            ):
-                # After the checkpoint, so it records the pre-compaction
-                # snapshot. The compacted snapshot is read-identical, so a
-                # crash before the next checkpoint merely rolls current
-                # back to the pre-compaction snapshot — compaction
-                # re-runs, nothing is lost (scoretable docstring).
-                from ..operators.scoretable import compact_scores
-
-                compact_scores(self.cat)
         return results

@@ -445,29 +445,21 @@ def run_round_critical(
         else:
             unseen_capped = unseen
         if cfg.score_admission:
-            # importance-first scheduler: OPIC in-link mass over this round's
-            # parent->url edges ranks the budgeted slots (config.py
-            # score_admission). Same two-phase skew-safe top-k underneath.
-            # The score vector is materialized exactly once here:
-            # admitted/deferred feed several downstream jobs (fetch,
-            # seen/pending/crawl_order commits), and without this cut each
-            # of them would re-execute the scoring subplan
+            # importance-first scheduler: the standing OPIC in-link mass
+            # (operators/scoretable, read at the round-start snapshot like
+            # seen/pending) ranks the budgeted slots. Same two-phase
+            # skew-safe top-k underneath. The score vector is materialized
+            # exactly once here: admitted/deferred feed several downstream
+            # jobs (fetch, seen/pending/crawl_order commits), and without
+            # this cut each of them would re-execute the scoring subplan
             # (measured: bookkeeping 33.5 s -> 91.6 s at local[2]/2M URLs).
             # One row per scored URL — small next to the fetch; the RDD is
             # released by the ContextCleaner when the round's frames drop.
             from ..operators.politeness import score_admitted
-            from ..operators.scoretable import opic_contributions, read_scores
+            from ..operators.scoretable import read_scores
 
             tm.step("admission_scores")
-            if cfg.score_admission == "table":
-                # standing merge-on-read score table (operators/scoretable):
-                # accumulated over every discovered edge, bound to the
-                # round-start snapshot (this round's job_scores append is
-                # invisible here by construction, like seen/pending)
-                scores_src = read_scores(cat)
-            else:
-                scores_src = opic_contributions(pending)
-            scores = scores_src.localCheckpoint(eager=True)
+            scores = read_scores(cat).localCheckpoint(eager=True)
             tm.step("read+plan")
             admitted_df, deferred_df = score_admitted(
                 unseen_capped, scores, robots, cfg, backoff=backoff
@@ -668,8 +660,9 @@ def run_round_critical(
             jobs["cuckoo"] = job_cuckoo
         if cfg.adaptive_backoff:
             jobs["hoststats"] = job_hoststats
-        if cfg.score_admission == "table":
-            # O(delta) contribution append — round r+1's admission reads it
+        if cfg.score_admission:
+            # O(delta) contribution append, then the log's own compaction —
+            # both before the checkpoint; round r+1's admission reads them
             from ..operators.scoretable import append_contributions
 
             jobs["scores"] = lambda: append_contributions(cat, new_links, r)

@@ -21,12 +21,11 @@ from swmaestro_crawler_spark.operators.scoretable import (
     read_scores,
 )
 from tests.conftest import small_cfg
+from tests.test_score_admission import _scored_crawl
 
 
 # the score-table crawl the end-to-end tests below share (binding budget)
-TABLE_CRAWL = dict(
-    per_host_cap=4, round_seconds=4.0, score_admission="table"
-)
+TABLE_CRAWL = dict(per_host_cap=4, round_seconds=4.0, score_admission=True)
 
 
 def _edges(spark, pairs):
@@ -63,7 +62,7 @@ def test_incremental_equals_batch(spark, tmp_path):
     }
     assert inc == batch and len(inc) > 0
     log_rows = cat.read(SCORES_TABLE, SCORES).count()
-    compact_scores(cat)
+    compact_scores(cat, len(by_parent))
     assert {r.url_hash: r.score for r in read_scores(cat).collect()} == batch
     assert cat.read(SCORES_TABLE, SCORES).count() <= log_rows
     # appends keep composing after a compaction
@@ -96,39 +95,32 @@ def test_contributions_are_layout_independent(spark):
 
 
 def test_score_admission_values_are_checked(tmp_path):
-    """One field picks the scheduler; a table-only option without the
-    table, or an unknown mode, is refused instead of silently ignored."""
+    """score_admission is a bool: a value of the retired modes ("round",
+    "table", None) is refused instead of silently read as on or off."""
     wh = str(tmp_path / "wh")
-    for mode in (None, "round", "table"):
-        small_cfg(wh, score_admission=mode)
-    small_cfg(wh, score_admission="table", score_compact_every=2)
-    with pytest.raises(ValueError, match="score_admission must be"):
-        small_cfg(wh, score_admission=True)
-    for mode in (None, "round"):
-        with pytest.raises(ValueError, match="score_compact_every"):
-            small_cfg(wh, score_admission=mode, score_compact_every=1)
+    for on in (False, True):
+        assert small_cfg(wh, score_admission=on).score_admission is on
+    for bad in (None, "round", "table", 1):
+        with pytest.raises(ValueError, match="score_admission must be a bool"):
+            small_cfg(wh, score_admission=bad)
 
 
-def _table_crawl(crawled, spark, wh, par):
-    from tests.test_resume import TABLES, table_digest
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(par))
-        _, c, _ = crawled(wh, 30, 3, **TABLE_CRAWL)
-        return [table_digest(c, t) for t in TABLES], c
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+def _compactions(cat) -> list[dict]:
+    """Manifest entries of the log's compaction snapshots, oldest first."""
+    return [
+        s
+        for s in cat._load_manifest(SCORES_TABLE)["snapshots"]
+        if s["meta"].get("op") == "compact"
+    ]
 
 
 def test_table_backed_crawl_deterministic_and_consistent(spark, tmp_path, crawled):
     """End-to-end crawl on the standing score table: digest-identical
-    across shuffle parallelism 3 vs 8 (including the link_scores table
-    itself), the log's merged view is internally consistent, and the
+    across shuffle parallelism 3 vs 8, the log's merged view is internally consistent, and the
     ranking provably changes the crawl vs LIFO under the binding
     budget."""
-    d3, _ = _table_crawl(crawled, spark, str(tmp_path / "p3"), 3)
-    d8, c = _table_crawl(crawled, spark, str(tmp_path / "p8"), 8)
+    d3, _ = _scored_crawl(crawled, spark, str(tmp_path / "p3"), 3)
+    d8, c = _scored_crawl(crawled, spark, str(tmp_path / "p8"), 8)
     assert d3 == d8
     # internal consistency: merge-on-read equals the sum of the per-round
     # deltas (every snapshot's rows), i.e. no append was lost or doubled
@@ -143,61 +135,64 @@ def test_table_backed_crawl_deterministic_and_consistent(spark, tmp_path, crawle
     assert merged == log and len(merged) > 0
     # the budget binds (cap=4), so table-backed ranking must actually
     # change the crawl vs plain LIFO on the same seeds
-    from tests.test_score_admission import _scored_crawl
-
     lifo, _ = _scored_crawl(crawled, spark, str(tmp_path / "lifo"), 8, score=False)
     assert d8 != lifo
 
 
-def test_resume_rolls_back_score_table(spark, tmp_path, crawled):
-    """A killed-after-commit round must roll link_scores back with the
-    other tables: resume from the round-1 checkpoint replays round 2's
-    append exactly once (same final digests as the uninterrupted run)."""
+def test_resume_rolls_back_score_table(spark, tmp_path, crawled, monkeypatch):
+    """A round killed after its commits must roll link_scores back with
+    the other tables. The log compacts inside the round's scores job,
+    before the checkpoint, so a crash in the round after a compaction
+    rolls back that round's append and any compaction together: resume
+    from the round-1 checkpoint replays round 2 exactly once (same final
+    digests as the uninterrupted run)."""
+    from swmaestro_crawler_spark.plans import crawl as crawl_mod
     from swmaestro_crawler_spark.plans.crawl import Crawl
     from swmaestro_crawler_spark.sources.synth_web import make_seeds
-    from tests.test_resume import table_digest
+    from tests.test_resume import TABLES, table_digest
 
-    cfg, c, _ = crawled(tmp_path / "wh", 30, 3, **TABLE_CRAWL)
-    seeds = spark.createDataFrame(make_seeds(cfg, 30))
-    uninterrupted = table_digest(c, SCORES_TABLE)
+    _, c, _ = crawled(tmp_path / "wh", 30, 3, **TABLE_CRAWL)
+    # the uninterrupted run compacted before the round the crash hits
+    assert [s for s in _compactions(c.cat) if s["meta"]["round"] < 2]
+    uninterrupted = [table_digest(c, t) for t in (*TABLES, SCORES_TABLE)]
 
-    cfg2 = small_cfg(str(tmp_path / "wh2"), **TABLE_CRAWL)
-    c2 = Crawl(spark, cfg2)
-    c2.run(seeds, rounds=2)
-    # simulate a crash AFTER round 2's link_scores append but BEFORE its
-    # checkpoint: append garbage the rollback must discard
-    append_contributions(
-        c2.cat, _edges(spark, [(100, 101), (100, 102)]), 999
-    )
+    cfg2, c2, _ = crawled(tmp_path / "wh2", 30, 2, **TABLE_CRAWL)
+    ckpt_sid = c2._load_checkpoint()["snapshots"][SCORES_TABLE]
+
+    def crash(*_):
+        raise RuntimeError("injected crash before round 2's checkpoint")
+
+    # round 2 runs every commit, then dies before its checkpoint
+    monkeypatch.setattr(crawl_mod, "finish_round", crash)
+    seeds = spark.createDataFrame(make_seeds(cfg2, 30))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        Crawl(spark, cfg2).run(seeds, rounds=3)
+    assert c2.cat.current_snapshot(SCORES_TABLE) > ckpt_sid
+    monkeypatch.undo()
     c3 = Crawl(spark, cfg2)
     c3.run(seeds, rounds=3)
-    assert table_digest(c3, SCORES_TABLE) == uninterrupted
+    assert [table_digest(c3, t) for t in (*TABLES, SCORES_TABLE)] == uninterrupted
 
 
 def test_auto_compaction_is_read_invisible(tmp_path, crawled):
-    """cfg.score_compact_every: a crawl that compacts the contribution
-    log every round must produce identical crawl_order/seen/spans (and
-    every other table) digests as the compact-never crawl, an equal
-    merged score view, and a strictly smaller contribution log."""
-    from tests.test_resume import TABLES, table_digest
+    """A table crawl compacts its contribution log at least once, and
+    every compaction is read-invisible: the merged view at the compacted
+    snapshot equals the view summed at the snapshot before it, and the
+    compacted log holds exactly one pre-summed row per URL."""
+    _, c, _ = crawled(tmp_path / "wh", 30, 3, **TABLE_CRAWL)
 
-    def crawl(wh, every):
-        return crawled(wh, 30, 3, score_compact_every=every, **TABLE_CRAWL)[1]
+    def view(sid):
+        return {
+            r.url_hash: r.score
+            for r in c.cat.read(SCORES_TABLE, SCORES, snapshot=sid)
+            .groupBy("url_hash")
+            .agg(F.sum("score").alias("score"))
+            .collect()
+        }
 
-    c_off = crawl(str(tmp_path / "off"), 0)
-    c_on = crawl(str(tmp_path / "on"), 1)
-    for t in TABLES:
-        if t == SCORES_TABLE:
-            continue  # log layout differs by design; the VIEW must not
-        assert table_digest(c_on, t) == table_digest(c_off, t), t
-    merged_on = {r.url_hash: r.score for r in read_scores(c_on.cat).collect()}
-    merged_off = {r.url_hash: r.score for r in read_scores(c_off.cat).collect()}
-    assert merged_on == merged_off and len(merged_on) > 0
-    # compaction really ran (one extra overwrite commit per round) and
-    # left the log fully collapsed: exactly one pre-summed row per URL
-    assert c_on.cat.current_snapshot(SCORES_TABLE) > c_off.cat.current_snapshot(
-        SCORES_TABLE
-    )
-    on_log = c_on.cat.read(SCORES_TABLE, SCORES)
-    assert on_log.count() == on_log.select("url_hash").distinct().count()
-    assert on_log.count() == len(merged_on)
+    compactions = _compactions(c.cat)
+    assert compactions
+    for s in compactions:
+        merged = view(s["id"])
+        assert merged == view(s["parent"]) and len(merged) > 0
+        assert c.cat.row_count(SCORES_TABLE, s["id"]) == len(merged)

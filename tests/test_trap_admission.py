@@ -7,11 +7,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from swmaestro_crawler_spark.operators.politeness import (
-    cap_per_template,
-    synth_robots,
-)
-from swmaestro_crawler_spark.schema import FRONTIER, SPANS_DOC
+from swmaestro_crawler_spark.operators.politeness import cap_per_template
+from swmaestro_crawler_spark.schema import FRONTIER
 from tests.conftest import small_cfg
 
 
@@ -84,36 +81,6 @@ def test_trap_guard_end_to_end_bounds_admissions(tmp_path, crawled):
         .collect()[0][0]
     )
     assert per <= 2
-
-
-def test_mined_templates_target_the_guard(spark, tmp_path):
-    """mine_trap_templates flags only the exploding template, and the
-    targeted guard caps ONLY flagged templates — unflagged ones admit
-    fully even past the cap."""
-    from swmaestro_crawler_spark.operators.politeness import mine_trap_templates
-
-    from swmaestro_crawler_spark.schema import FRONTIER
-
-    cfg = small_cfg(str(tmp_path / "wh"), trap_template_cap=3)
-    # /p/{i} on h1: ONE digit template with 10 rows — above the cap but
-    # below the mining threshold, so it must admit fully
-    extra = spark.createDataFrame(
-        [(f"https://h1.test/p/{i}", 0, "h1.test", 1, 200 + i, 0, 0, None) for i in range(10)],
-        FRONTIER,
-    ).withColumn("url_hash", F.xxhash64("url"))
-    fr = _frontier(spark, trap_n=60, normal_n=8).unionByName(extra)
-    mined = mine_trap_templates(fr.select("host", "url"), min_urls=20)
-    flagged = [(r.host, r.template) for r in mined.collect()]
-    assert flagged == [("h0.test", "https://hN.test/cal?day=N")]
-
-    kept, overflow = cap_per_template(fr, cfg, templates=mined)
-    trap_kept = kept.filter(F.col("url").contains("cal?day")).count()
-    assert trap_kept == 3 and overflow.count() == 57
-    # unflagged templates bypass the cap entirely — including the
-    # 10-row /p/N template that exceeds the cap
-    assert kept.filter(F.col("url").contains("/p/")).count() == 10
-    assert kept.filter(F.col("host") == "h1.test").count() == 18
-    assert kept.count() + overflow.count() == fr.count()
 
 
 def test_cap_off_matches_reference_path(spark, tmp_path):
